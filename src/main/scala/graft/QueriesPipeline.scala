@@ -254,7 +254,7 @@ object QueriesPipeline {
     // is wall-clock bookkeeping, dropped for the deterministic hash)
     "q_job_quarantine" -> ((s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft_jq").toString
-      graft.pipeline.Job.runJson(s, jobQuarantineJson(dir, tmp))
+      graft.pipeline.Job.runJson(s, jobQuarantineJson(dir, tmp)).close()
       s.read.parquet(s"$tmp/run_id=jq1").drop("quarantined_at")
     }),
 

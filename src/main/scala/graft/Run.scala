@@ -145,9 +145,11 @@ object Run {
                   case None => Job.runJson(spark, json)
                 }
                 // a sink-less document still needs its plan to RUN —
-                // Job defers the output frame when no sink fires an action
+                // Job defers the output frame when no sink fires an action.
+                // The count is the output's last reader: release the cache
                 val rows =
-                  if (result.output.isStreaming) -1L else result.output.count()
+                  try { if (result.output.isStreaming) -1L else result.output.count() }
+                  finally result.close()
                 out.println(s"job succeeded: $rows output row(s)")
                 0
               }

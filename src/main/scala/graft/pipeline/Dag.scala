@@ -30,7 +30,8 @@ object Dag {
 
   /** Per-node outcome: `succeeded`, `failed` (error carried), or
     * `skipped_upstream` (an upstream failed or was itself skipped —
-    * names carried in `error`).
+    * names carried in `error`). A succeeded node's `result` is already
+    * closed: its frames are lazy and re-derive when read.
     */
   final case class NodeResult(id: String, status: String,
                               error: Option[String],
@@ -86,6 +87,8 @@ object Dag {
               Job.runWithHistory(spark, node.jobJson, dir, s"${runId}__$id")
             case None => Job.runJson(spark, node.jobJson)
           }
+          // the node is done: a long DAG must not pin every node's output
+          r.close()
           results(id) = NodeResult(id, "succeeded", None, Some(r))
         } catch {
           case scala.util.control.NonFatal(e) =>

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.Catalog
 import graft.quality.{Anomaly, DQ}
@@ -36,6 +37,16 @@ import graft.quality.{Anomaly, DQ}
   * gate on the OUTPUT (one fused agg; throws below min_score) →
   * anomaly screen as a side output → optional idempotent sink write.
   * Unknown top-level keys are a config error, not silently ignored.
+  *
+  * Reuse: when the document declares a consumer beyond the caller (DQ
+  * rules, quarantine, anomaly or sink), [[run]] persists the pipeline
+  * output at Spark's default level (MEMORY_AND_DISK) so the gate agg,
+  * the split, the screen and the sink all read one materialization. At
+  * scale this writes the output once to executor memory or disk
+  * instead of re-deriving it through every shuffle per consumer; the
+  * cost is the cached blocks' footprint for the job's lifetime. The
+  * cache belongs to the returned [[Result]]: `close()` releases it, and
+  * a failed run releases it before rethrowing.
   */
 object Job {
 
@@ -70,9 +81,20 @@ object Job {
                                    sourceId: String, column: String,
                                    strategy: String)
 
+  /** A run's frames. `cached` is the persisted pipeline output this
+    * result owns (None when the job had a single consumer, or the plan
+    * was already cached by someone else); `close()` unpersists it, once.
+    * The frames stay valid after close — they re-derive when read.
+    */
   final case class Result(output: DataFrame,
                           dqReport: Option[DataFrame],
-                          anomalies: Option[DataFrame])
+                          anomalies: Option[DataFrame])(
+                          cached: Option[DataFrame])
+      extends AutoCloseable {
+    private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def close(): Unit =
+      if (closed.compareAndSet(false, true)) cached.foreach(_.unpersist(blocking = false))
+  }
 
   private val mapper = new ObjectMapper()
   private val knownKeys =
@@ -217,72 +239,76 @@ object Job {
     }
     require(sources.contains(spec.pipeline.primary),
       s"pipeline primary '${spec.pipeline.primary}' is not a declared dataset")
-    // the output frame is consumed by up to three downstream actions
-    // (the DQ gate's fused agg, the quarantine/anomaly split, the
-    // sink/caller) — persistIfSmall caches it at gate SFs so they do
-    // not each re-run the whole pipeline; no-op past the small-frame
-    // budget (nothing corpus-sized cached at 100 TB, consumers
-    // re-derive map-side as before).
-    // Consumer count is STATIC in the spec: with no dq rules,
-    // quarantine, anomaly section or sink, the only consumer is the
-    // caller — a cache there pays materialization for zero reuse
-    // (r20 verdict: q_job_screen, the one touched path that regressed
-    // in the driver bench, is exactly this single-consumer shape), so
-    // the cache engages only when a second consumer exists.
-    val pipelineOut = Pipeline.run(spark, sources, spec.pipeline)
+    // Consumer count is STATIC in the spec: DQ gate agg, quarantine
+    // split, anomaly screen and sink each re-run the whole pipeline
+    // unless its output is cached, so any of them alongside the caller
+    // makes a second consumer and the output is persisted — no size
+    // estimate, so the plan shape does not depend on the host heap.
+    // With none of them the caller is the only consumer and a cache
+    // pays materialization for zero reuse (r20 verdict: q_job_screen
+    // regressed on exactly this shape). The returned Result owns the
+    // cache; a failure below releases it before rethrowing. A plan that
+    // is already cached (by the caller or another open Result) is read
+    // but not owned, so close() never drops someone else's cache.
+    val out = Pipeline.run(spark, sources, spec.pipeline)
     val multiConsumer = spec.dqRules.nonEmpty || spec.quarantine.isDefined ||
       spec.anomalyJson.isDefined || spec.sink.isDefined
-    val out =
-      if (multiConsumer) graft.GraftSession.persistIfSmall(pipelineOut)
-      else pipelineOut
-
-    // DQ gate on the OUTPUT frame (the reference's dq profile runs
-    // post-transform). ONE fused-agg action evaluates the rules; the
-    // gate decides from those collected results (no second pass) and
-    // the same report frame is returned for the caller
-    val dqReport = if (spec.dqRules.isEmpty) None else {
-      val report = DQ.check(out, spec.dqRules)
-      spec.minScore.foreach(ms => DQ.gateFromResults(report.collect(), ms))
-      Some(report)
+    val owned =
+      if (multiConsumer && out.storageLevel == StorageLevel.NONE) Some(out.persist())
+      else None
+    try {
+      // DQ gate on the OUTPUT frame (the reference's dq profile runs
+      // post-transform). ONE fused-agg action evaluates the rules; the
+      // gate decides from those collected results (no second pass) and
+      // the same report frame is returned for the caller
+      val dqReport = if (spec.dqRules.isEmpty) None else {
+        val report = DQ.check(out, spec.dqRules)
+        spec.minScore.foreach(ms => DQ.gateFromResults(report.collect(), ms))
+        Some(report)
+      }
+      // quarantine mode: failing rows route to the per-run quarantine
+      // slice and the job CONTINUES with the clean side (the
+      // ErrorRecovery workflow, error_recovery.py:345, in config) —
+      // orthogonal to min_score, which judges the WHOLE output first
+      val result = spec.quarantine match {
+        case None => out
+        case Some((dir, runId)) =>
+          val (clean, bad) = DQ.split(out, spec.dqRules)
+          graft.Recovery.quarantine(bad, dir, runId)
+          clean
+      }
+      val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(result, a))
+      spec.sink.foreach { case (format, path, modeOpt) =>
+        val mode = modeOpt.getOrElse("overwrite")
+        if (mode == "atomic") graft.Recovery.idempotentWrite(result, path, format)
+        else graft.sources.FileSink.write(result, format, path, mode)
+      }
+      // the ledger advances LAST, only on a fully successful run (gate
+      // passed, sink written): a failed run never moves the watermark,
+      // so its data re-extracts on the retry — and an EMPTY batch leaves
+      // the ledger untouched (advanceFrom's contract). This re-evaluates
+      // max(column) over the extraction frame — safe because the frame
+      // is pinned: a file frame's LISTING was pinned when Catalog.load
+      // built it (Spark's InMemoryFileIndex lists once at plan time;
+      // files landing mid-run are invisible to THIS run and belong to
+      // the next), and a jdbc delta batch was persisted above (rows
+      // committing mid-run are invisible the same way), and cheap
+      // because the aggregate prunes to the one watermark column with
+      // the range filter still pushed — not a second pass over the
+      // pipeline's working set
+      spec.incremental.foreach { inc =>
+        graft.incremental.WatermarkStore.advanceFrom(spark, inc.storeDir,
+          inc.pipelineId, inc.sourceId, inc.column,
+          sources(inc.sourceId), inc.strategy)
+        // release the pinned jdbc delta batch (no-op for file frames)
+        sources(inc.sourceId).unpersist(blocking = false)
+      }
+      Result(result, dqReport, anomalies)(owned)
+    } catch {
+      case e: Throwable =>
+        owned.foreach(_.unpersist(blocking = false))
+        throw e
     }
-    // quarantine mode: failing rows route to the per-run quarantine
-    // slice and the job CONTINUES with the clean side (the
-    // ErrorRecovery workflow, error_recovery.py:345, in config) —
-    // orthogonal to min_score, which judges the WHOLE output first
-    val result = spec.quarantine match {
-      case None => out
-      case Some((dir, runId)) =>
-        val (clean, bad) = DQ.split(out, spec.dqRules)
-        graft.Recovery.quarantine(bad, dir, runId)
-        clean
-    }
-    val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(result, a))
-    spec.sink.foreach { case (format, path, modeOpt) =>
-      val mode = modeOpt.getOrElse("overwrite")
-      if (mode == "atomic") graft.Recovery.idempotentWrite(result, path, format)
-      else graft.sources.FileSink.write(result, format, path, mode)
-    }
-    // the ledger advances LAST, only on a fully successful run (gate
-    // passed, sink written): a failed run never moves the watermark,
-    // so its data re-extracts on the retry — and an EMPTY batch leaves
-    // the ledger untouched (advanceFrom's contract). This re-evaluates
-    // max(column) over the extraction frame — safe because the frame
-    // is pinned: a file frame's LISTING was pinned when Catalog.load
-    // built it (Spark's InMemoryFileIndex lists once at plan time;
-    // files landing mid-run are invisible to THIS run and belong to
-    // the next), and a jdbc delta batch was persisted above (rows
-    // committing mid-run are invisible the same way), and cheap
-    // because the aggregate prunes to the one watermark column with
-    // the range filter still pushed — not a second pass over the
-    // pipeline's working set
-    spec.incremental.foreach { inc =>
-      graft.incremental.WatermarkStore.advanceFrom(spark, inc.storeDir,
-        inc.pipelineId, inc.sourceId, inc.column,
-        sources(inc.sourceId), inc.strategy)
-      // release the pinned jdbc delta batch (no-op for file frames)
-      sources(inc.sourceId).unpersist(blocking = false)
-    }
-    Result(result, dqReport, anomalies)
   }
 
   def runJson(spark: SparkSession, json: String): Result =

@@ -469,8 +469,11 @@ class PipelineSourcesSpec extends SparkSpec {
       Job.runJson(spark, doc(minScore = 100.0)))
     assert(gateErr.failed == Seq("st_allowed"))
     // same rules ungated (min 0): report returned, run succeeds,
-    // sink written atomically, anomaly side output produced
-    val res = Job.runJson(spark, doc(0.0, withSink = true, withAnomaly = true))
+    // sink written atomically, anomaly side output produced. Run under
+    // a 1-byte small-frame budget: the output cache must not depend on it
+    spark.conf.set("spark.graft.smallPersistBytes", "1")
+    val res = try Job.runJson(spark, doc(0.0, withSink = true, withAnomaly = true))
+      finally spark.conf.unset("spark.graft.smallPersistBytes")
     assert(res.output.columns.toSeq ==
       Seq("o_orderkey", "o_totalprice", "o_orderstatus"))
     assert(res.dqReport.get.filter(!col("passed")).count() == 1)
@@ -489,7 +492,8 @@ class PipelineSourcesSpec extends SparkSpec {
       org.apache.spark.storage.StorageLevel.NONE,
       "single-consumer job output must not be cached")
     assert(res.output.storageLevel.useMemory,
-      "multi-consumer small job output should stay cached at gate SFs")
+      "multi-consumer job output should stay cached whatever the small-frame budget")
+    res.close()
     // config validation: unknown keys and missing sections fail fast
     assert(intercept[IllegalArgumentException](
       Job.parse("""{"datasets": [], "pipelines": {}}"""))
@@ -549,6 +553,137 @@ class PipelineSourcesSpec extends SparkSpec {
       !col("failed")).count() == 1)
     assert(h.filter(col("run_id") === "job_gated" && col("query") === "job" &&
       col("failed")).count() == 1)
+  }
+
+  // a multi-consumer document over the sf tables: lineitem (the
+  // primary) joined with orders, aggregated per order, gated, split,
+  // screened and sunk
+  private def multiConsumerJob(base: String, minScore: Double = 0.0,
+                               quarantine: Boolean = true): String = {
+    val dir = TestSession.sfDir
+    s"""{
+       |  "datasets": [
+       |    {"name": "mc_li", "format": "parquet", "path": "$dir/lineitem.parquet"},
+       |    {"name": "mc_orders", "format": "parquet", "path": "$dir/orders.parquet"}
+       |  ],
+       |  "pipeline": {"primary": "mc_li", "steps": [
+       |    {"type": "filter", "column": "l_quantity", "op": ">=", "value": 5},
+       |    {"type": "rename", "mapping": {"l_orderkey": "o_orderkey"}},
+       |    {"type": "join", "right": "mc_orders", "on": ["o_orderkey"]},
+       |    {"type": "aggregate", "groupBy": ["o_orderkey", "o_orderpriority"],
+       |     "aggs": [{"col": "l_extendedprice", "fn": "sum_money", "as": "net"},
+       |              {"col": "l_linenumber", "fn": "count", "as": "n_lines"}]}
+       |  ]},
+       |  "quality": {"rules": [
+       |    {"rule_id": "lines_range", "type": "range", "column": "n_lines",
+       |     "min": 1, "max": 3}
+       |  ], "min_score": $minScore
+       |  ${if (quarantine) s""", "quarantine_dir": "$base/quarantine", "run_id": "mc1"""" else ""}},
+       |  "anomaly": {"method": "isolation_forest", "columns": ["net", "n_lines"],
+       |              "threshold": 0.62},
+       |  "sink": {"format": "parquet", "path": "$base/out", "mode": "atomic"}
+       |}""".stripMargin
+  }
+
+  test("Job: a multi-consumer job scans its primary once, whatever the small-frame budget") {
+    import graft.pipeline.Job
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val primary = s"${TestSession.sfDir}/lineitem.parquet"
+    // executed scans of the primary: direct file scans, plus the scans
+    // inside a cached relation the first time an action meets it (later
+    // reads of the same cache re-derive nothing)
+    final class ScanCounter extends QueryExecutionListener with AdaptiveSparkPlanHelper {
+      private val seen = scala.collection.mutable.Set.empty[AnyRef]
+      @volatile var scans = 0L
+      private def count(plan: SparkPlan): Long = collectWithSubqueries(plan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(primary)) => 1L
+        case m: InMemoryTableScanExec if seen.add(m.relation.cacheBuilder) =>
+          count(m.relation.cacheBuilder.cachedPlan)
+      }.sum
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        synchronized { scans += count(qe.executedPlan) }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        synchronized { scans += count(qe.executedPlan) }
+    }
+    def primaryScans(budget: Option[String]): Long = {
+      GraftSession.releaseAll(spark)
+      val base = Files.createTempDirectory("graft_mc").toString
+      val counter = new ScanCounter
+      budget.foreach(spark.conf.set("spark.graft.smallPersistBytes", _))
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(counter)
+      try {
+        val res = Job.runJson(spark, multiConsumerJob(base))
+        try {
+          // the anomaly side output is a fifth consumer of the cache
+          Recovery.idempotentWrite(res.anomalies.get, s"$base/anomalies")
+          assert(spark.read.parquet(s"$base/out").count() > 0)
+        } finally res.close()
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        counter.scans
+      } finally {
+        spark.listenerManager.unregister(counter)
+        spark.conf.unset("spark.graft.smallPersistBytes")
+      }
+    }
+    assert(primaryScans(Some("1")) == 1, "1-byte budget")
+    assert(primaryScans(None) == 1, "default budget")
+  }
+
+  test("Job.Result owns the output cache: close, a failed gate, Dag and Run release it") {
+    import graft.pipeline.{Dag, Job}
+    val sc = spark.sparkContext
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def pinned(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    GraftSession.releaseAll(spark)
+    val before = pinned()
+    val base = Files.createTempDirectory("graft_own").toString
+
+    // no quarantine: the output IS the cached frame
+    val res = Job.runJson(spark, multiConsumerJob(base, quarantine = false))
+    assert(res.output.storageLevel.useMemory)
+    assert((pinned() -- before).nonEmpty, "the gate action materializes the cache")
+    res.close()
+    assert(res.output.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(cacheManager.isEmpty && (pinned() -- before).isEmpty)
+    // a second close is a no-op: it does not drop a cache the caller took since
+    res.output.persist()
+    res.close()
+    assert(res.output.storageLevel.useMemory)
+    // ...and a plan the caller already cached is read, not owned
+    val reused = Job.runJson(spark, multiConsumerJob(s"$base/reused", quarantine = false))
+    assert(reused.output.storageLevel.useMemory)
+    reused.close()
+    assert(res.output.storageLevel.useMemory, "close must not drop a cache it did not take")
+    res.output.unpersist(blocking = true)
+    assert(cacheManager.isEmpty)
+
+    // a failed gate releases the cache before the exception escapes
+    intercept[graft.quality.DQ.QualityGateException](
+      Job.runJson(spark, multiConsumerJob(s"$base/gated", minScore = 101.0)))
+    assert(cacheManager.isEmpty && (pinned() -- before).isEmpty)
+
+    // Dag closes each node's result once the node is done
+    val dag =
+      s"""{"jobs": [
+         | {"id": "a", "job": ${multiConsumerJob(s"$base/dag_a")}},
+         | {"id": "b", "depends_on": ["a"], "job": ${multiConsumerJob(s"$base/dag_b")}}
+         |]}""".stripMargin
+    assert(Dag.runJson(spark, dag).forall(_.status == "succeeded"))
+    assert(cacheManager.isEmpty && (pinned() -- before).isEmpty)
+
+    // graft.Run closes after its row count
+    val doc = Files.createTempFile("graft_own", ".json")
+    Files.write(doc, multiConsumerJob(s"$base/run").getBytes("UTF-8"))
+    val buf = new java.io.ByteArrayOutputStream()
+    assert(Run.execute(spark, Seq("run", doc.toString),
+      new java.io.PrintStream(buf, true, "UTF-8")) == 0, buf.toString("UTF-8"))
+    assert(cacheManager.isEmpty && (pinned() -- before).isEmpty)
   }
 
   test("screen step: parse validation, family dispatch == library screens, cold start, semantic version check") {
