@@ -112,9 +112,10 @@ object QueriesRelational {
         .select(col("str_a").as("name_a"), col("str_b").as("name_b"), col("dist"))
     }),
 
-    // near-dup clustering: fuzzy pairs -> connected components via the
-    // default large-star/small-star path (no diameter bound; identical
-    // labelling to min-label propagation once converged — the oracle
+    // near-dup clustering: fuzzy pairs -> connected components via
+    // componentLabelsStar (a driver union-find pass on a pair graph this
+    // small, star rounds past its edge limit; identical labelling to
+    // min-label propagation on either path — the oracle
     // unrolls propagation to a fixed depth, equal on these
     // tiny-diameter clusters)
     "q_dedup_cluster" -> ((s, dir) => {

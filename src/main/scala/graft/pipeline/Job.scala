@@ -226,7 +226,10 @@ object Job {
     // pipeline consumed (the reference holds the batch in memory for
     // the same reason). A delta batch is bounded by change volume,
     // not corpus size, so caching it is the scale-safe choice.
-    val sources = spec.incremental.fold(loaded) { inc =>
+    // The run owns the pinned batch and releases it however it ends:
+    // after the ledger advance on success, before rethrowing on failure.
+    val (sources, pinnedDelta) = spec.incremental.fold(
+        (loaded, Option.empty[DataFrame])) { inc =>
       val wm = graft.incremental.WatermarkStore.last(spark, inc.storeDir,
         inc.pipelineId, inc.sourceId, Some(inc.column))
       val cut = wm.fold(loaded(inc.sourceId))(w =>
@@ -234,81 +237,82 @@ object Job {
           loaded(inc.sourceId), inc.column, w.value))
       val isJdbc = spec.datasets.find(_.name == inc.sourceId)
         .exists(d => Catalog.connector(d).exists(_.isLeft))
-      val pinned = if (!isJdbc) cut else { val p = cut.persist(); p.count(); p }
-      loaded + (inc.sourceId -> pinned)
+      val pinned = if (isJdbc) Some(cut.persist()) else None
+      (loaded + (inc.sourceId -> pinned.getOrElse(cut)), pinned)
     }
-    require(sources.contains(spec.pipeline.primary),
-      s"pipeline primary '${spec.pipeline.primary}' is not a declared dataset")
-    // Consumer count is STATIC in the spec: DQ gate agg, quarantine
-    // split, anomaly screen and sink each re-run the whole pipeline
-    // unless its output is cached, so any of them alongside the caller
-    // makes a second consumer and the output is persisted — no size
-    // estimate, so the plan shape does not depend on the host heap.
-    // With none of them the caller is the only consumer and a cache
-    // pays materialization for zero reuse (r20 verdict: q_job_screen
-    // regressed on exactly this shape). The returned Result owns the
-    // cache; a failure below releases it before rethrowing. A plan that
-    // is already cached (by the caller or another open Result) is read
-    // but not owned, so close() never drops someone else's cache.
-    val out = Pipeline.run(spark, sources, spec.pipeline)
-    val multiConsumer = spec.dqRules.nonEmpty || spec.quarantine.isDefined ||
-      spec.anomalyJson.isDefined || spec.sink.isDefined
-    val owned =
-      if (multiConsumer && out.storageLevel == StorageLevel.NONE) Some(out.persist())
-      else None
     try {
-      // DQ gate on the OUTPUT frame (the reference's dq profile runs
-      // post-transform). ONE fused-agg action evaluates the rules; the
-      // gate decides from those collected results (no second pass) and
-      // the same report frame is returned for the caller
-      val dqReport = if (spec.dqRules.isEmpty) None else {
-        val report = DQ.check(out, spec.dqRules)
-        spec.minScore.foreach(ms => DQ.gateFromResults(report.collect(), ms))
-        Some(report)
+      pinnedDelta.foreach(_.count())
+      require(sources.contains(spec.pipeline.primary),
+        s"pipeline primary '${spec.pipeline.primary}' is not a declared dataset")
+      // Consumer count is STATIC in the spec: DQ gate agg, quarantine
+      // split, anomaly screen and sink each re-run the whole pipeline
+      // unless its output is cached, so any of them alongside the caller
+      // makes a second consumer and the output is persisted — no size
+      // estimate, so the plan shape does not depend on the host heap.
+      // With none of them the caller is the only consumer and a cache
+      // pays materialization for zero reuse (r20 verdict: q_job_screen
+      // regressed on exactly this shape). The returned Result owns the
+      // cache; a failure below releases it before rethrowing. A plan that
+      // is already cached (by the caller or another open Result) is read
+      // but not owned, so close() never drops someone else's cache.
+      val out = Pipeline.run(spark, sources, spec.pipeline)
+      val multiConsumer = spec.dqRules.nonEmpty || spec.quarantine.isDefined ||
+        spec.anomalyJson.isDefined || spec.sink.isDefined
+      val owned =
+        if (multiConsumer && out.storageLevel == StorageLevel.NONE) Some(out.persist())
+        else None
+      try {
+        // DQ gate on the OUTPUT frame (the reference's dq profile runs
+        // post-transform). ONE fused-agg action evaluates the rules; the
+        // gate decides from those collected results (no second pass) and
+        // the same report frame is returned for the caller
+        val dqReport = if (spec.dqRules.isEmpty) None else {
+          val report = DQ.check(out, spec.dqRules)
+          spec.minScore.foreach(ms => DQ.gateFromResults(report.collect(), ms))
+          Some(report)
+        }
+        // quarantine mode: failing rows route to the per-run quarantine
+        // slice and the job CONTINUES with the clean side (the
+        // ErrorRecovery workflow, error_recovery.py:345, in config) —
+        // orthogonal to min_score, which judges the WHOLE output first
+        val result = spec.quarantine match {
+          case None => out
+          case Some((dir, runId)) =>
+            val (clean, bad) = DQ.split(out, spec.dqRules)
+            graft.Recovery.quarantine(bad, dir, runId)
+            clean
+        }
+        val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(result, a))
+        spec.sink.foreach { case (format, path, modeOpt) =>
+          val mode = modeOpt.getOrElse("overwrite")
+          if (mode == "atomic") graft.Recovery.idempotentWrite(result, path, format)
+          else graft.sources.FileSink.write(result, format, path, mode)
+        }
+        // the ledger advances LAST, only on a fully successful run (gate
+        // passed, sink written): a failed run never moves the watermark,
+        // so its data re-extracts on the retry — and an EMPTY batch leaves
+        // the ledger untouched (advanceFrom's contract). This re-evaluates
+        // max(column) over the extraction frame — safe because the frame
+        // is pinned: a file frame's LISTING was pinned when Catalog.load
+        // built it (Spark's InMemoryFileIndex lists once at plan time;
+        // files landing mid-run are invisible to THIS run and belong to
+        // the next), and a jdbc delta batch was persisted above (rows
+        // committing mid-run are invisible the same way), and cheap
+        // because the aggregate prunes to the one watermark column with
+        // the range filter still pushed — not a second pass over the
+        // pipeline's working set
+        spec.incremental.foreach { inc =>
+          graft.incremental.WatermarkStore.advanceFrom(spark, inc.storeDir,
+            inc.pipelineId, inc.sourceId, inc.column,
+            sources(inc.sourceId), inc.strategy)
+        }
+        Result(result, dqReport, anomalies)(owned)
+      } catch {
+        case e: Throwable =>
+          owned.foreach(_.unpersist(blocking = false))
+          throw e
       }
-      // quarantine mode: failing rows route to the per-run quarantine
-      // slice and the job CONTINUES with the clean side (the
-      // ErrorRecovery workflow, error_recovery.py:345, in config) —
-      // orthogonal to min_score, which judges the WHOLE output first
-      val result = spec.quarantine match {
-        case None => out
-        case Some((dir, runId)) =>
-          val (clean, bad) = DQ.split(out, spec.dqRules)
-          graft.Recovery.quarantine(bad, dir, runId)
-          clean
-      }
-      val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(result, a))
-      spec.sink.foreach { case (format, path, modeOpt) =>
-        val mode = modeOpt.getOrElse("overwrite")
-        if (mode == "atomic") graft.Recovery.idempotentWrite(result, path, format)
-        else graft.sources.FileSink.write(result, format, path, mode)
-      }
-      // the ledger advances LAST, only on a fully successful run (gate
-      // passed, sink written): a failed run never moves the watermark,
-      // so its data re-extracts on the retry — and an EMPTY batch leaves
-      // the ledger untouched (advanceFrom's contract). This re-evaluates
-      // max(column) over the extraction frame — safe because the frame
-      // is pinned: a file frame's LISTING was pinned when Catalog.load
-      // built it (Spark's InMemoryFileIndex lists once at plan time;
-      // files landing mid-run are invisible to THIS run and belong to
-      // the next), and a jdbc delta batch was persisted above (rows
-      // committing mid-run are invisible the same way), and cheap
-      // because the aggregate prunes to the one watermark column with
-      // the range filter still pushed — not a second pass over the
-      // pipeline's working set
-      spec.incremental.foreach { inc =>
-        graft.incremental.WatermarkStore.advanceFrom(spark, inc.storeDir,
-          inc.pipelineId, inc.sourceId, inc.column,
-          sources(inc.sourceId), inc.strategy)
-        // release the pinned jdbc delta batch (no-op for file frames)
-        sources(inc.sourceId).unpersist(blocking = false)
-      }
-      Result(result, dqReport, anomalies)(owned)
-    } catch {
-      case e: Throwable =>
-        owned.foreach(_.unpersist(blocking = false))
-        throw e
-    }
+    } finally pinnedDelta.foreach(_.unpersist(blocking = false))
   }
 
   def runJson(spark: SparkSession, json: String): Result =

@@ -767,6 +767,47 @@ class IncrementalSpec extends SparkSpec {
       .getMessage.contains("NoSQL"))
   }
 
+  test("Job with a jdbc dataset: a failed run releases its pinned delta batch") {
+    import graft.pipeline.Job
+    import graft.sources.JdbcSink
+    System.setProperty("derby.system.home", "/tmp/graft-derby")
+    val url = "jdbc:derby:memory:graftjobfail;create=true"
+    val drv = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+    val store = java.nio.file.Files.createTempDirectory("graft_jobfail")
+      .toString + "/wm"
+    JdbcSink.write(table("orders").select($"o_orderkey", $"o_orderstatus"),
+      url, "ORDERS_FAIL", "overwrite", Map("driver" -> drv))
+    // an impossible rule behind min_score 100: the gate throws after
+    // the delta batch was pinned and the output cached
+    val doc =
+      s"""{
+         |  "datasets": [
+         |    {"name": "jf", "format": "jdbc", "path": "$url",
+         |     "options": {"dbtable": "ORDERS_FAIL", "driver": "$drv"}}
+         |  ],
+         |  "pipeline": {"primary": "jf", "steps": [
+         |    {"type": "select", "columns": ["o_orderkey", "o_orderstatus"]}
+         |  ]},
+         |  "quality": {"rules": [
+         |    {"rule_id": "never", "type": "allowed_values",
+         |     "column": "o_orderstatus", "values": ["zzz"]}
+         |  ], "min_score": 100.0},
+         |  "incremental": {"watermark_store": "$store", "pipeline_id": "pf",
+         |    "source_id": "jf", "column": "o_orderkey",
+         |    "strategy": "sequence"}
+         |}""".stripMargin
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    GraftSession.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[graft.quality.DQ.QualityGateException](Job.runJson(spark, doc))
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "a failed jdbc incremental run must release its pinned delta batch")
+    assert(cacheManager.isEmpty)
+    // the failed run left the ledger untouched
+    assert(graft.incremental.WatermarkStore.last(spark, store, "pf", "jf").isEmpty)
+  }
+
   test("distinctSketch/rollupDistinct: incremental union, overlap-idempotent, bounded error") {
     val events = table("events").withColumn("day", to_date(col("ts")))
     val exact = events.groupBy("event_type")

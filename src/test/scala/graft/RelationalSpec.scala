@@ -238,7 +238,7 @@ class RelationalSpec extends SparkSpec {
     // propagation at default maxIters=20 would refuse this graph; the
     // alternating star algorithm needs only O(log n) rounds
     val edges = (0 until 100).map(i => (i.toLong, i + 1L)).toDF("s", "d")
-    val r = graft.llm.Dedup.componentLabelsStar(edges, "s", "d")
+    val r = graft.llm.Dedup.componentLabelsStarRounds(edges, "s", "d")
       .as[(Long, Long)].collect()
     assert(r.length == 101 && r.forall(_._2 == 0L))
   }
@@ -250,7 +250,7 @@ class RelationalSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.toDF("s", "d")
     val prop = graft.llm.Dedup.componentLabels(edges, "s", "d")
       .as[(Long, Long)].collect().toMap
-    val star = graft.llm.Dedup.componentLabelsStar(edges, "s", "d")
+    val star = graft.llm.Dedup.componentLabelsStarRounds(edges, "s", "d")
       .as[(Long, Long)].collect().toMap
     assert(star == prop)
   }
@@ -258,13 +258,84 @@ class RelationalSpec extends SparkSpec {
   test("componentLabelsStar handles self-loops, singleton pairs, and releases checkpoints") {
     GraftSession.releaseAll(spark)
     val edges = Seq((5L, 5L), (1L, 2L), (7L, 7L)).toDF("s", "d")
-    val r = graft.llm.Dedup.componentLabelsStar(edges, "s", "d")
+    val r = graft.llm.Dedup.componentLabelsStarRounds(edges, "s", "d")
     val got = r.as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 5L, 1L -> 1L, 2L -> 1L, 7L -> 7L))
     // superseded rounds released eagerly; only the final frame may live
     assert(spark.sparkContext.getPersistentRDDs.size <= 1,
       s"leaked checkpoints: ${spark.sparkContext.getPersistentRDDs.size}")
     GraftSession.releaseAll(spark)
+  }
+
+  // the routed componentLabelsStar (a driver pass on graphs this
+  // small) against the distributed round loop, schema included
+  private def routedEqualsRounds(edges: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] = {
+    val routed = graft.llm.Dedup.componentLabelsStar(edges, "s", "d")
+    val rounds = graft.llm.Dedup.componentLabelsStarRounds(edges, "s", "d")
+    assert(routed.schema == rounds.schema)
+    val got = routed.collect().toSeq
+    assert(got.size == got.toSet.size, "one row per node")
+    assert(got.toSet == rounds.collect().toSet)
+    got.toSet
+  }
+
+  test("componentLabelsStar driver pass equals the star rounds on seeded random Long graphs") {
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val n = 10 + rnd.nextInt(60)
+      // self-loops and repeated pairs stay in: both paths must absorb them
+      val edges = Seq.fill(20 + rnd.nextInt(80))(
+        (rnd.nextInt(n).toLong - n / 2, rnd.nextInt(n).toLong - n / 2)).toDF("s", "d")
+      assert(routedEqualsRounds(edges).nonEmpty, s"seed $seed")
+    }
+    GraftSession.releaseAll(spark)
+  }
+
+  test("componentLabelsStar driver pass orders String ids as Spark does, not as Java does") {
+    // U+FFFF is EF BF BF in UTF-8, U+1F600 is F0 9F 98 80: Spark's byte
+    // order puts U+FFFF first, String.compareTo (UTF-16 units, the
+    // surrogate 0xD83D < 0xFFFF) puts the emoji first
+    val (bmp, emoji) = ("\uFFFF", "\uD83D\uDE00")
+    assert(emoji.compareTo(bmp) < 0)
+    val edges = Seq((emoji, bmp), ("b", "a"), (emoji, bmp + "x"), ("c", "c")).toDF("s", "d")
+    val got = routedEqualsRounds(edges)
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map(bmp -> bmp, emoji -> bmp, (bmp + "x") -> bmp,
+      "a" -> "a", "b" -> "a", "c" -> "c"))
+    GraftSession.releaseAll(spark)
+  }
+
+  test("componentLabelsStar driver pass handles null ids, self-loops and duplicate edges like the rounds") {
+    val edges = Seq[(Option[Long], Option[Long])](
+      (None, None), (None, None), // all-null pair: one (null, null) row
+      (Some(3L), None),           // one null id: a self-loop of the other
+      (Some(5L), Some(5L)),       // self-loop
+      (Some(2L), Some(1L)), (Some(1L), Some(2L)), (Some(2L), Some(1L)),
+      (Some(4L), Some(2L))
+    ).toDF("s", "d")
+    val got = routedEqualsRounds(edges)
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    assert(got == Map[Option[Any], Option[Any]](None -> None,
+      Some(3L) -> Some(3L), Some(5L) -> Some(5L),
+      Some(1L) -> Some(1L), Some(2L) -> Some(1L), Some(4L) -> Some(1L)))
+    GraftSession.releaseAll(spark)
+  }
+
+  test("componentLabelsStar driver pass leaves no persistent RDD or cache entry behind") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    GraftSession.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val edges = (0 until 30).map(i => (i.toLong, (i / 3).toLong)).toDF("s", "d")
+    val r = graft.llm.Dedup.componentLabelsStar(edges, "s", "d")
+    val kept = graft.llm.Dedup.collapseNearDups(
+      (0 until 40).map(i => (i.toLong, s"doc$i")).toDF("id", "v"), "id",
+      edges.toDF("id_a", "id_b"))
+    assert(kept.count() == 11L) // component 0 plus ids 30..39
+    assert(r.count() == 30L)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "a driver-path call must release its edge checkpoint")
+    assert(cacheManager.isEmpty)
   }
 
   test("collapseNearDups keeps singletons and one representative per cluster") {
@@ -338,7 +409,7 @@ class RelationalSpec extends SparkSpec {
       graft.llm.Dedup.componentLabels(pairs, "name_a", "name_b")
         .as[(String, String)].collect().toSet)
     val (star, tStar) = timed(
-      graft.llm.Dedup.componentLabelsStar(pairs, "name_a", "name_b")
+      graft.llm.Dedup.componentLabelsStarRounds(pairs, "name_a", "name_b")
         .as[(String, String)].collect().toSet)
     assert(star == prop && star.nonEmpty)
     assert(tStar <= tProp * 3,
