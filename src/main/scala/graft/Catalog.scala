@@ -75,18 +75,30 @@ object Catalog {
     * the declaration back, and a mismatch would otherwise surface as a
     * mid-job read error at first action). The data is then read with
     * the declared schema pinned.
+    *
+    * On parquet the intrinsic schema comes from one footer read on the
+    * driver ([[sources.SmallParquet.inferSchema]]), not from Spark's
+    * inference job, and an undeclared dataset is read with it pinned:
+    * the same frame, no job. Where one footer cannot reproduce Spark's
+    * inference (options, schema merging, partition directories,
+    * summary files) Spark infers as before.
     */
   def load(spark: SparkSession, spec: DatasetSpec): DataFrame = {
-    val schema = schemaOf(spec)
-    schema.filter(_ => selfDescribing(spec.format)).foreach { s =>
-      val observed = sources.FileSource
-        .read(spark, spec.format, spec.path, None, spec.options)
-      val v = Schemas.validate(observed, s)
+    val declared = schemaOf(spec)
+    lazy val footer =
+      if (spec.format.equalsIgnoreCase("parquet"))
+        sources.SmallParquet.inferSchema(spark, spec.path, spec.options)
+      else None
+    declared.filter(_ => selfDescribing(spec.format)).foreach { s =>
+      val observed = footer.getOrElse(sources.FileSource
+        .read(spark, spec.format, spec.path, None, spec.options).schema)
+      val v = Schemas.validate(observed, s, strict = false)
       require(v.passed,
         s"catalog dataset '${spec.name}' failed schema validation: " +
           s"missing=${v.missing.mkString(",")} mismatched=${v.typeMismatches.mkString(",")}")
     }
-    sources.FileSource.read(spark, spec.format, spec.path, schema, spec.options)
+    sources.FileSource.read(spark, spec.format, spec.path,
+      declared.orElse(footer), spec.options)
   }
 
   /** Connector-backed catalog entries (format "jdbc" or a NoSQL kind)

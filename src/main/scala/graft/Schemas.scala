@@ -19,11 +19,14 @@ object Schemas {
     * on extra columns (the reference's table-structure check flags
     * both missing and unexpected).
     */
-  def validate(df: DataFrame, expected: StructType, strict: Boolean = false): Validation = {
-    val actual = df.schema.fields.map(f => f.name -> f).toMap
+  def validate(df: DataFrame, expected: StructType, strict: Boolean = false): Validation =
+    validate(df.schema, expected, strict)
+
+  def validate(observed: StructType, expected: StructType, strict: Boolean): Validation = {
+    val actual = observed.fields.map(f => f.name -> f).toMap
     val expectedNames = expected.fields.map(_.name).toSet
     val missing = expected.fields.map(_.name).filterNot(actual.contains).toSeq
-    val extra = df.schema.fields.map(_.name).filterNot(expectedNames.contains).toSeq
+    val extra = observed.fields.map(_.name).filterNot(expectedNames.contains).toSeq
     val mismatches = expected.fields.toSeq.flatMap { ef =>
       actual.get(ef.name).collect {
         case af if af.dataType != ef.dataType =>

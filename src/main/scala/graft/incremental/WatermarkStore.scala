@@ -1,7 +1,9 @@
 package graft.incremental
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.SmallParquet
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Durable watermark ledger — the reference's WATERMARKS table
   * (reference: src/utils/incremental_load_manager.py:103
@@ -53,9 +55,18 @@ import org.apache.spark.sql.functions._
   * pushed-down range filter directly.
   *
   * Scale note: this dataset holds ORCHESTRATION STATE (a few rows per
-  * pipeline run), never data — driver-side collect of one key's
-  * events is bounded by run count, and `compact` folds a long ledger
-  * back to one file per key when it grows.
+  * pipeline run), never data, so its hot paths run on the driver, not
+  * as Spark jobs ([[graft.sources.SmallParquet]], Spark's own parquet
+  * reader and writer):
+  *  - APPENDS always write their one event row on the driver into the
+  *    private staging dir, then publish it with the one rename above;
+  *  - [[last]] lists the key's leaf and folds its events on the
+  *    driver in one pass, holding one row and one timestamp whatever
+  *    the ledger's size (no size limit: the crossover in [[driverLast]]
+  *    finds the driver faster at every size);
+  *  - [[compact]] streams a leaf's files into one combined file on the
+  *    driver, published by the same staged rename.
+  * [[events]] and [[history]] stay DataFrames.
   */
 object WatermarkStore {
 
@@ -76,6 +87,15 @@ object WatermarkStore {
 
   private val schemaDdl =
     "pipeline_id STRING, source_id STRING, " + eventSchemaDdl
+
+  private val eventSchema = StructType.fromDDL(eventSchemaDdl)
+
+  /** What an append writes: the event columns with `update_time`
+    * required, the nullability a DataFrame write of the event row
+    * (string tuple plus a timestamp literal) has always produced.
+    */
+  private val eventFileSchema = StructType(eventSchema.fields.map(f =>
+    if (f.name == "update_time") f.copy(nullable = false) else f))
 
   /** Encode a watermark value as (string, type tag). Loud on types the
     * ledger can't round-trip — a silently stringified value would
@@ -126,7 +146,6 @@ object WatermarkStore {
                      sourceId: String, column: String, value: Option[Any],
                      strategy: String, op: String,
                      at: Option[java.sql.Timestamp]): Unit = {
-    import spark.implicits._
     val (v, vt) = value.map(encode).getOrElse((null: String, null: String))
     // the stamp doubles as the event's identity: [[events]] collapses
     // duplicates on it, so the SAME physical event seen through two
@@ -134,32 +153,16 @@ object WatermarkStore {
     // two distinct appends that happen to carry identical payloads
     // (two retried runs of different jobs) each keep their history row
     val stamp = java.util.UUID.randomUUID().toString
-    val event = Seq((column, v, vt, strategy, op, stamp))
-      .toDF("watermark_column", "watermark_value", "value_type",
-        "strategy", "op", "event_id")
-      .withColumn("update_time",
-        at.fold(current_timestamp())(ts => lit(ts)))
-      .select(col("watermark_column"), col("watermark_value"),
-        col("value_type"), col("strategy"), col("op"),
-        col("update_time"), col("event_id"))
+    val updateTime = at.getOrElse(java.sql.Timestamp.from(java.time.Instant.now()))
     // one bookkeeping row: stage into a PRIVATE hidden dir, then move
     // the single data file into the leaf under a unique name — no
-    // shared _temporary staging between concurrent appenders, and the
-    // event appears atomically (one rename) or not at all
-    val staging = new org.apache.hadoop.fs.Path(dir, s".__wm_append_$stamp")
-    val fs = fsOf(spark, staging)
-    event.coalesce(1).write.parquet(staging.toString)
-    try {
-      val part = fs.listStatus(staging)
-        .find(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .getOrElse(throw new java.io.IOException(
-          s"staged watermark event produced no data file under $staging"))
-      val leaf = leafPath(dir, pipelineId, sourceId)
-      fs.mkdirs(leaf)
-      val target = new org.apache.hadoop.fs.Path(leaf, s"event-$stamp.parquet")
-      if (!fs.rename(part.getPath, target))
-        throw new java.io.IOException(s"could not publish watermark event: $target")
-    } finally fs.delete(staging, true)
+    // shared staging between concurrent appenders, and the event
+    // appears atomically (one rename) or not at all; a failed write
+    // leaves no staging dir behind
+    SmallParquet.publish(spark, new org.apache.hadoop.fs.Path(dir, s".__wm_append_$stamp"),
+      eventFileSchema, _ => new org.apache.hadoop.fs.Path(
+        leafPath(dir, pipelineId, sourceId), s"event-$stamp.parquet"))(
+      put => put(Row(column, v, vt, strategy, op, updateTime, stamp)))
   }
 
   /** Record a new watermark — ref :141 update_watermark. `at` defaults
@@ -235,9 +238,96 @@ object WatermarkStore {
     * its NATIVE ordering, so replayed appends stay deterministic).
     * None when the ledger is empty, the key unknown, or a reset is
     * the newest word.
+    *
+    * Path: the key's leaf directory is listed and its events folded
+    * on the driver in one pass ([[driverLast]]), with no Spark job.
     */
   def last(spark: SparkSession, dir: String, pipelineId: String,
-           sourceId: String, column: Option[String] = None): Option[Watermark] = {
+           sourceId: String, column: Option[String] = None): Option[Watermark] =
+    driverLast(spark, SmallParquet.list(spark, leafPath(dir, pipelineId, sourceId)),
+      pipelineId, sourceId, column)
+
+  /** [[last]] over the listed leaf `files`: one pass holding the best
+    * in-scope update so far and the newest in-scope reset time, so the
+    * driver holds one row and one timestamp whatever the ledger's size.
+    * The answer is the Spark query's ([[sparkLast]]):
+    *  - [[events]]' duplicate collapse is skipped: a duplicate of an
+    *    event cannot change which event is newest;
+    *  - the best update under the query's order is live iff it is
+    *    strictly after the newest reset (every other update is no newer);
+    *  - order: update_time desc, the typed double key desc (Spark's
+    *    order: -0.0 equals 0.0, NaN above everything), watermark_value
+    *    desc in UTF-8 byte order as Spark compares strings; nulls last
+    *    throughout.
+    *
+    * Crossover against [[sparkLast]] on one host (4 cores, local[4],
+    * 3 GB heap; median of 3 calls after warm-up; N events of one column,
+    * appended one by one, then folded to one file by two compacts):
+    *
+    * {{{
+    * events  layout   files   bytes    driver    spark
+    * 10      N files     10    23 KB    57 ms   615 ms
+    * 10      1 file       1   2.8 KB    21 ms   508 ms
+    * 10^2    N files    100   231 KB   268 ms   1.00 s
+    * 10^2    1 file       1   7.2 KB    21 ms   483 ms
+    * 10^3    N files   1000   2.3 MB   2.21 s   4.45 s
+    * 10^3    1 file       1    51 KB    17 ms   401 ms
+    * 10^4    N files  10000    23 MB   10.4 s   20.9 s
+    * 10^4    1 file       1   498 KB    28 ms   397 ms
+    * }}}
+    *
+    * The driver path wins at every size measured and its memory does
+    * not grow with the ledger, so it has no size limit.
+    */
+  private[graft] def driverLast(spark: SparkSession,
+                                files: Seq[org.apache.hadoop.fs.FileStatus],
+                                pipelineId: String, sourceId: String,
+                                column: Option[String]): Option[Watermark] = {
+    def at(r: Row) = r.getTimestamp(5)
+    // typedValueKey: a double for numeric values, else null
+    def typedKey(r: Row): java.lang.Double =
+      if (r.isNullAt(1) || !Set("long", "double").contains(r.getString(2))) null
+      else java.lang.Double.parseDouble(r.getString(1))
+    def desc[T](a: T, b: T)(cmp: (T, T) => Int): Int =
+      if (a == null && b == null) 0 else if (a == null) 1 else if (b == null) -1
+      else cmp(b, a)
+    def utf8(a: String, b: String): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    def dbl(a: java.lang.Double, b: java.lang.Double): Int =
+      if (a.doubleValue == b.doubleValue) 0 else java.lang.Double.compare(a, b)
+    // x strictly before y in the query's order
+    def before(x: Row, xKey: java.lang.Double, y: Row, yKey: java.lang.Double): Boolean = {
+      val t = desc(at(x), at(y))(_ compareTo _)
+      val k = if (t != 0) t else desc(xKey, yKey)(dbl)
+      (if (k != 0) k else desc(x.getString(1), y.getString(1))(utf8)) < 0
+    }
+    var best: Row = null
+    var bestKey: java.lang.Double = null
+    var resetAt: java.sql.Timestamp = null
+    SmallParquet.foreach(spark, files, eventSchema) { r =>
+      val wc = r.getString(0)
+      val op = r.getString(4)
+      // the column scope honours unscoped resets, as [[events]] does
+      if (column.forall(c => wc == c || (op == "reset" && wc == ""))) op match {
+        case "reset" =>
+          if (at(r) != null && (resetAt == null || at(r).after(resetAt))) resetAt = at(r)
+        case "update" =>
+          val key = typedKey(r)
+          if (best == null || before(r, key, best, bestKey)) { best = r; bestKey = key }
+        case _ =>
+      }
+    }
+    Option(best)
+      .filter(b => resetAt == null || (at(b) != null && at(b).after(resetAt)))
+      .map(r => Watermark(pipelineId, sourceId, r.getString(0),
+        decode(r.getString(1), r.getString(2)), r.getString(3), at(r)))
+  }
+
+  /** [[last]] as a Spark query over [[events]]: the reference the
+    * driver fold is checked against.
+    */
+  private[graft] def sparkLast(spark: SparkSession, dir: String, pipelineId: String,
+                               sourceId: String, column: Option[String]): Option[Watermark] = {
     val ev = events(spark, dir, pipelineId, sourceId, column)
     val resetAt = ev.filter(col("op") === "reset")
       .agg(max(col("update_time"))).head().getTimestamp(0)
@@ -295,9 +385,11 @@ object WatermarkStore {
     *     merged (recorded in hidden retirement manifests). Their
     *     combined replacement has been visible since that compact, so
     *     no current listing can reference them without it.
-    *  2. FOLD: per leaf with more than one visible file, merge the
-    *     pinned file list into one new uniquely-named combined file,
-    *     publish it, and write a manifest retiring the merged
+    *  2. FOLD: per leaf with more than one visible file, stream the
+    *     pinned file list's rows on the driver into one new
+    *     uniquely-named combined file, publish it by the append
+    *     protocol (private staging dir, one rename, staging deleted
+    *     however the write ends), and write a manifest retiring the merged
     *     originals — WITHOUT deleting them (readers mid-query still
     *     hold them in their listings; until the next compact they are
     *     exact duplicates, which [[events]] collapses).
@@ -305,7 +397,9 @@ object WatermarkStore {
     * A crash at any point leaves at worst duplicate rows or an
     * unreaped manifest — both healed by the next run. An event
     * appended mid-fold is neither merged nor retired; it survives
-    * alongside the combined file.
+    * alongside the combined file. An original that vanishes mid-fold
+    * (a racing compact reaped it) is skipped: its events are in the
+    * combined file that retired it.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -344,28 +438,20 @@ object WatermarkStore {
         !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
       if (originals.size > 1) {
         val stamp = java.util.UUID.randomUUID().toString
-        val staging = new org.apache.hadoop.fs.Path(leaf, s".__wm_compact_$stamp")
-        spark.read.schema(eventSchemaDdl)
-          .parquet(originals.map(_.getPath.toString): _*)
-          .coalesce(1).write.parquet(staging.toString)
-        try {
-          val part = fs.listStatus(staging)
-            .find(st => st.isFile && st.getPath.getName.startsWith("part-"))
-            .getOrElse(throw new java.io.IOException(
-              s"compact produced no data file under $staging"))
-          val combined =
-            new org.apache.hadoop.fs.Path(leaf, s"compact-$stamp.parquet")
-          if (!fs.rename(part.getPath, combined))
-            throw new java.io.IOException(s"could not publish $combined")
-          // combined file is visible from here on; retire (don't
-          // delete) the merged originals for the next run's reap
-          val rels = originals.map(st => rootUri.relativize(
-            fs.makeQualified(st.getPath).toUri).getPath)
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(retiredDir, s"$stamp.list"), false)
-          try out.write(rels.mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-        } finally fs.delete(staging, true)
+        // the append protocol: stream the originals' rows into a private
+        // staging dir, publish the combined file with one rename
+        SmallParquet.publish(spark,
+          new org.apache.hadoop.fs.Path(leaf, s".__wm_compact_$stamp"), eventSchema,
+          _ => new org.apache.hadoop.fs.Path(leaf, s"compact-$stamp.parquet"))(
+          put => SmallParquet.foreach(spark, originals, eventSchema)(put))
+        // combined file is visible from here on; retire (don't
+        // delete) the merged originals for the next run's reap
+        val rels = originals.map(st => rootUri.relativize(
+          fs.makeQualified(st.getPath).toUri).getPath)
+        val out = fs.create(
+          new org.apache.hadoop.fs.Path(retiredDir, s"$stamp.list"), false)
+        try out.write(rels.mkString("\n").getBytes("UTF-8"))
+        finally out.close()
       }
     }
   }

@@ -1,7 +1,8 @@
 package graft.monitoring
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.sources.SmallParquet
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Durable run history, Spark-style: the reference's
   * `PerformanceMonitor` + audit tables (reference:
@@ -18,6 +19,16 @@ import org.apache.spark.sql.functions._
   * grouBy(query) over the history — the reference's regression check
   * (performance_monitor.py `detect_performance_regression`) expressed
   * as a query instead of bookkeeping code.
+  *
+  * Writes run on the driver, never as Spark jobs: a call holds a
+  * handful of rows by construction, so each [[append]] or
+  * [[appendMetrics]] writes ONE parquet file with Spark's own parquet
+  * writer ([[graft.sources.SmallParquet.publish]]) into a private hidden
+  * staging dir under the history root, then publishes it with one
+  * rename into `run_id=<escaped id>/`. Concurrent appenders (threads or
+  * applications) share no staging state, and a run's rows appear all at
+  * once or not at all. Reads ([[load]], [[loadMetrics]]) stay Spark
+  * queries over the whole dataset.
   */
 object RunHistory {
 
@@ -26,9 +37,11 @@ object RunHistory {
                          planHash: Option[String] = None,
                          failed: Boolean = false)
 
-  /** Append one run's entries under `dir/run_id=<id>`. Plain append —
-    * a run id reused across calls accumulates (multiple actions per
-    * run); use a fresh run id per run for replace-free history.
+  /** Append one run's entries under `dir/run_id=<id>` as one new file,
+    * written on the driver and published with one rename (see the
+    * object doc). A run id reused across calls accumulates (multiple
+    * actions per run); use a fresh run id per run for replace-free
+    * history.
     * `recordedAt` defaults to the wall clock; pass it explicitly when
     * backfilling or replaying history (and in specs — deterministic
     * freshness/compliance-window queries need a planted clock).
@@ -37,18 +50,40 @@ object RunHistory {
              entries: Seq[Entry],
              recordedAt: Option[java.sql.Timestamp] = None): Unit = {
     require(entries.nonEmpty, "no entries to record")
-    import spark.implicits._
-    entries.toDF()
-      .select(
-        lit(runId).as("run_id"),
-        col("query"),
-        col("durationMs").as("duration_ms"),
-        col("rows"),
-        col("planHash").as("plan_hash"),
-        col("failed"),
-        recordedAt.fold(current_timestamp())(ts => lit(ts)).as("recorded_at"))
-      .coalesce(1) // a handful of bookkeeping rows — one file per call
-      .write.mode("append").partitionBy("run_id").parquet(dir)
+    val at = recordedAt.getOrElse(now())
+    publish(spark, dir, runId, entrySchema, entries.map(e => Row(e.query,
+      e.durationMs, e.rows.map(Long.box).orNull, e.planHash.orNull, e.failed, at)))
+  }
+
+  /** File columns of one history append (run_id lives in the directory),
+    * with the nullability a DataFrame write of [[Entry]] rows produced.
+    */
+  private val entrySchema = StructType(Seq(
+    StructField("query", StringType),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("rows", LongType),
+    StructField("plan_hash", StringType),
+    StructField("failed", BooleanType, nullable = false),
+    StructField("recorded_at", TimestampType, nullable = false)))
+
+  private val metricSchema = StructType(Seq(
+    StructField("metric", StringType),
+    StructField("value", DoubleType, nullable = false),
+    StructField("recorded_at", TimestampType, nullable = false)))
+
+  private def now() = java.sql.Timestamp.from(java.time.Instant.now())
+
+  /** One file into the run's partition, by the staged-rename protocol
+    * of [[SmallParquet.publish]].
+    */
+  private def publish(spark: SparkSession, dir: String, runId: String,
+                      schema: StructType, rows: Seq[Row]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val partition = new Path(dir, org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.getPartitionPathString("run_id", runId))
+    SmallParquet.publish(spark,
+      new Path(dir, s".__hist_append_${java.util.UUID.randomUUID()}"), schema,
+      file => new Path(partition, file.getName))(put => rows.foreach(put))
   }
 
   /** One entry per recorded action of a [[Metrics.Recorder]] snapshot
@@ -81,13 +116,9 @@ object RunHistory {
                     values: Map[String, Double],
                     recordedAt: Option[java.sql.Timestamp] = None): Unit = {
     require(values.nonEmpty, "no metrics to record")
-    import spark.implicits._
-    values.toSeq.toDF("metric", "value")
-      .select(
-        lit(runId).as("run_id"), col("metric"), col("value"),
-        recordedAt.fold(current_timestamp())(ts => lit(ts)).as("recorded_at"))
-      .coalesce(1)
-      .write.mode("append").partitionBy("run_id").parquet(dir)
+    val at = recordedAt.getOrElse(now())
+    publish(spark, dir, runId, metricSchema,
+      values.toSeq.map { case (m, v) => Row(m, v, at) })
   }
 
   /** The whole metric-telemetry dataset (every run's partition). */

@@ -499,7 +499,10 @@ object Job {
     * the reference's performance monitor, with zero bookkeeping in
     * the job itself. The recorder is detached even when the job
     * throws; a gate failure still records its actions (failed runs
-    * are what the SLA queries exist for).
+    * are what the SLA queries exist for). Engine bookkeeping is not an
+    * action: watermark ledger reads and writes and the history append
+    * itself run on the driver, not as Spark queries, so they add no
+    * entries (the `incremental` section's batch max still does).
     */
   def runWithHistory(spark: SparkSession, json: String, historyDir: String,
                      runId: String): Result = {

@@ -5,7 +5,10 @@ For every SQL execution in the log, prints one line: start offset from
 the application start, duration, the number of Spark jobs and tasks it
 ran, and the first `graft.*` frame of its call site (the engine call
 that triggered it). Jobs that ran outside any SQL execution (RDD-level
-actions) are summed in a last line.
+actions such as a schema-inference job of `spark.read.parquet`) follow,
+one line each: start offset, duration, the name of the job's final
+stage (its call site, e.g. `load at Sources.scala:60`) and the first
+`graft.*` frame of that stage's call stack.
 
 The log may be plain JSON lines, a `.zstd` file (decompressed through
 the `zstd` binary on PATH), or a rolling event-log directory whose
@@ -58,6 +61,7 @@ def timeline(path):
     execs = {}          # execution id -> dict
     job_exec = {}       # job id -> execution id (None if outside SQL)
     stage_job = {}      # stage id -> first job that lists it
+    jobs = {}           # job id -> start, end, stage name, graft frame
     for raw in read_lines(path):
         raw = raw.strip()
         if not raw:
@@ -78,15 +82,24 @@ def timeline(path):
             eid = props.get("spark.sql.execution.id")
             eid = int(eid) if eid is not None and int(eid) in execs else None
             job_exec[ev["Job ID"]] = eid
+            infos = ev.get("Stage Infos") or []
+            final = max(infos, key=lambda i: i["Stage ID"], default={})
+            jobs[ev["Job ID"]] = {
+                "start": ev.get("Submission Time"), "end": None,
+                "name": final.get("Stage Name", "-"),
+                "site": first_graft_frame(final.get("Details"))}
             for sid in ev.get("Stage IDs", []):
                 stage_job.setdefault(sid, ev["Job ID"])
             if eid is not None:
                 execs[eid]["jobs"] += 1
+        elif kind == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev.get("Completion Time")
         elif kind == "SparkListenerTaskEnd":
             eid = job_exec.get(stage_job.get(ev["Stage ID"]))
             if eid is not None:
                 execs[eid]["tasks"] += 1
-    outside = sum(1 for e in job_exec.values() if e is None)
+    outside = [dict(jobs[j], job=j) for j in sorted(jobs) if job_exec[j] is None]
     return app_start, execs, outside
 
 
@@ -98,11 +111,12 @@ def main(argv):
     if "--min-s" in argv:
         min_s = float(argv[argv.index("--min-s") + 1])
     app_start, execs, outside = timeline(argv[1])
-    if not execs:
-        print("no SQL executions in the log")
+    if not execs and not outside:
+        print("no SQL executions or jobs in the log")
         return 0
     origin = app_start if app_start is not None else min(
-        e["start"] for e in execs.values())
+        [e["start"] for e in execs.values()] +
+        [j["start"] for j in outside if j["start"] is not None])
     print(f"{'exec':>5} {'start_s':>9} {'dur_s':>7} {'jobs':>5} {'tasks':>6}  call site")
     shown = 0
     for eid in sorted(execs):
@@ -114,7 +128,14 @@ def main(argv):
         print(f"{eid:>5} {(e['start'] - origin) / 1000.0:>9.3f} {dur:>7.3f} "
               f"{e['jobs']:>5} {e['tasks']:>6}  {e['site']}")
     print(f"{shown} of {len(execs)} SQL executions shown; "
-          f"{outside} jobs ran outside any SQL execution")
+          f"{len(outside)} jobs ran outside any SQL execution")
+    if outside:
+        print(f"{'job':>5} {'start_s':>9} {'dur_s':>7}  stage name | call site")
+    for j in outside:
+        start = (j["start"] - origin) / 1000.0 if j["start"] is not None else float("nan")
+        dur = ((j["end"] - j["start"]) / 1000.0
+               if j["end"] is not None and j["start"] is not None else float("nan"))
+        print(f"{j['job']:>5} {start:>9.3f} {dur:>7.3f}  {j['name']} | {j['site']}")
     return 0
 
 
