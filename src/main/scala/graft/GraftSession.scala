@@ -58,23 +58,6 @@ object GraftSession {
       // slips through (e.g. a user-supplied session without this conf).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(s"local[$cores]", cores).getOrCreate()
-
-  /** Release every cached frame and persistent RDD in the session.
-    *
-    * The persist-ownership contract: operators that persist internal
-    * frames for intra-query reuse (Dedup.minhashLsh, Search.tfidfTopTerms,
-    * Lof.scores, Ivf.buildIndex, Dedup.connectedComponents'
-    * localCheckpoints, …) deliberately leave them alive because callers
-    * typically consume the returned frame more than once (collect +
-    * write, or probe an index repeatedly). A long-lived session — REPL,
-    * server, or harness looping over many queries — MUST call this
-    * between units of work, or the accumulated blocks eventually evict
-    * and GC-thrash every later query. `clearCache()` drops catalog-
-    * tracked Dataset persists; the RDD sweep additionally drops
-    * localCheckpoint blocks, which the catalog does not track.
-    */
   /** Swap a one-live-persist slot (operators that bound their notebook
     * cache leak to a single live frame): unpersist the previously
     * tracked frame ONLY when its analyzed plan differs from the new
@@ -116,9 +99,8 @@ object GraftSession {
     * (estimate ≫ budget by orders of magnitude) can never qualify.
     * Override with `spark.graft.smallPersistBytes` (set ≤ 0 to
     * disable persisting entirely — the pure re-derive shape,
-    * spec-pinned equal) or the SPARK_GRAFT_SMALL_PERSIST env var; on
-    * a cluster whose executors are sized very differently from the
-    * driver JVM, set it explicitly.
+    * spec-pinned equal); on a cluster whose executors are sized very
+    * differently from the driver JVM, set it explicitly.
     */
   def persistIfSmall(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (isSmall(df)) df.persist() else df
@@ -132,15 +114,26 @@ object GraftSession {
     * front of every consumer (measured r20-opt: q_anom_ocsvm at sf10,
     * 1.4x). */
   def isSmall(df: org.apache.spark.sql.DataFrame): Boolean = {
-    // conf wins; SPARK_GRAFT_SMALL_PERSIST env overrides the default
-    // (ops/bench A/B without a code edit)
     val budget = df.sparkSession.conf
       .getOption("spark.graft.smallPersistBytes").map(_.trim.toLong)
-      .orElse(sys.env.get("SPARK_GRAFT_SMALL_PERSIST").map(_.trim.toLong))
       .getOrElse(Runtime.getRuntime.maxMemory() / 1024)
     budget > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget
   }
 
+  /** Release every cached frame and persistent RDD in the session.
+    *
+    * The persist-ownership contract: operators that persist internal
+    * frames for intra-query reuse (Dedup.minhashLsh, Search.tfidfTopTerms,
+    * Lof.scores, Ivf.buildIndex, Dedup.connectedComponents'
+    * localCheckpoints, …) deliberately leave them alive because callers
+    * typically consume the returned frame more than once (collect +
+    * write, or probe an index repeatedly). A long-lived session — REPL,
+    * server, or harness looping over many queries — MUST call this
+    * between units of work, or the accumulated blocks eventually evict
+    * and GC-thrash every later query. `clearCache()` drops catalog-
+    * tracked Dataset persists; the RDD sweep additionally drops
+    * localCheckpoint blocks, which the catalog does not track.
+    */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

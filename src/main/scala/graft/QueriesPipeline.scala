@@ -297,7 +297,7 @@ object QueriesPipeline {
     // so the survivor set is exactly the batch screen's NOT-EXISTS
     // contract and the whole streaming loop is oracle-replayable; the
     // other five families ride the same dispatch (spec-verified incl.
-    // multi-batch parity with the hand-written wrapper and the
+    // multi-batch parity with the library's ingestScreenStream and the
     // version-checked semantic refusal).
     "q_job_ingest" -> ((s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft_jing").toString

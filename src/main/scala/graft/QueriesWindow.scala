@@ -212,8 +212,8 @@ object QueriesWindow {
     // dropDuplicatesWithinWatermark append-emits survivors on arrival)
     // — the extra batch only re-runs the full state machinery to evict
     // expired state, ~1.8 s of pure overhead per drain measured on the
-    // q_stream_dedup shape (Profile `streams`: no-data batch
-    // addBatch=1800 ms against data-batch 2774 ms, emitting nothing).
+    // q_stream_dedup shape (no-data batch addBatch=1800 ms against
+    // data-batch 2774 ms, emitting nothing).
     // Scoped to this drain and restored after, so the library default
     // (and any continuous production stream, where watermark-gated
     // APPEND finals do need the batch) is untouched.

@@ -110,12 +110,6 @@ object Dedup {
 
   // ---- shingling -----------------------------------------------------
 
-  /** Distinct character k-shingles of a text column (HOF, map-side). */
-  def charShingles(c: Column, k: Int = 8): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(lit(1), length(c) - lit(k - 1))),
-      i => c.substr(i, lit(k))))
-
   /** Distinct word n-grams (tokens joined by single spaces) — the
     * native codegen kernel ([[graft.plans.ShingleKernel]]): one JVM
     * loop per row instead of an interpreted zip_with chain. Bit-for-bit
@@ -1166,7 +1160,7 @@ object Dedup {
     * the screen without re-embedding anything). `historyRoot` is either
     * a plain parquet dir of [[semanticHistorySignatures]] rows or a
     * `batch_id=`-sliced streaming root
-    * ([[graft.streaming.Streams.semanticScreenStream]] layout, run
+    * ([[graft.streaming.Streams.ingestScreenStream]] layout, run
     * while the stream is STOPPED); vectors live under `vecCol`.
     *
     * Per slice: heal a torn swap, read, drop the old `__cid`/`__iv`,

@@ -148,12 +148,4 @@ object Pca {
         call_function("graft_dot", col(vecCol),
           typedLit(comp.map(_.toFloat))) - lit(offset))
     }
-
-  /** Fit + transform in one call, keeping `keep` plus the projections. */
-  def fitTransform(df: DataFrame, vecCol: String, k: Int,
-                   keep: Seq[String]): (Model, DataFrame) = {
-    val model = fit(df, vecCol, k)
-    (model, transform(df, vecCol, model).select(
-      (keep ++ (0 until k).map(j => s"pc$j")).map(col): _*))
-  }
 }

@@ -637,13 +637,6 @@ object Media {
     df.withColumn("resized",
       resizeUdf(col(binCol), lit(width), lit(height), lit(algo)))
 
-  /** Per-row aspect-preserving resize to the [[fitDims]] box:
-    * appends `resized`. Same map-side shape as [[resizeImages]].
-    */
-  def resizeImagesFit(df: DataFrame, idCol: String, binCol: String,
-                      box: Int, algo: String = "nearest"): DataFrame =
-    df.withColumn("resized", resizeFitUdf(col(binCol), lit(box), lit(algo)))
-
   // ---- perceptual image hashing (REAL pixel decode, r17) --------------
   //
   // The JDK itself ships PNG/JPEG/GIF/BMP decoders (javax.imageio) —

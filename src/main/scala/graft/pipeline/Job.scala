@@ -359,13 +359,14 @@ object Job {
     * replay-exclusion/atomic-append contract, with the family + knobs
     * resolved through the SAME dispatch as the batch `screen` step
     * ([[Pipeline.screenFns]]), so a document's knobs mean the same
-    * thing on both paths and match the hand-written wrappers
-    * (spec-pinned parity). The section's `id`/`column` must exist on
-    * the TRANSFORMED rows (the steps run first). Quarantined rows
-    * never reach the history — a failing row was not ingested. The
-    * semantic family loads the quantizer once at stream start and is
-    * version-checked by construction (the r19 handshake); `history`
-    * is bound to ONE checkpoint lineage exactly like the wrappers.
+    * thing on both paths (spec-pinned parity with
+    * [[graft.streaming.Streams.ingestScreenStream]]). The section's
+    * `id`/`column` must exist on the TRANSFORMED rows (the steps run
+    * first). Quarantined rows never reach the history — a failing row
+    * was not ingested. The semantic family loads the quantizer once at
+    * stream start and is version-checked by construction (the r19
+    * handshake); `history` is bound to ONE checkpoint lineage exactly
+    * like [[graft.streaming.Streams.ingestScreenStream]]'s.
     */
   def runStream(spark: SparkSession, spec: Spec, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -406,9 +407,9 @@ object Job {
         s"(got: ${unsupported.distinct.mkString(", ")}) — per-micro-batch " +
         "aggregation/window results differ from the batch job; use " +
         "Streams.windowedAgg/sessionWindowAgg for stream aggregation, and " +
-        "Streams.*ScreenStream for streaming ingest screens (they own the " +
-        "history-append + replay-exclusion contract the batch screen step " +
-        "deliberately lacks)")
+        "the document's \"ingest\" section for streaming ingest screens (it " +
+        "owns the history-append + replay-exclusion contract the batch " +
+        "screen step deliberately lacks)")
     val primarySpec = spec.datasets.find(_.name == spec.pipeline.primary)
       .getOrElse(throw new IllegalArgumentException(
         s"pipeline primary '${spec.pipeline.primary}' is not a declared dataset"))

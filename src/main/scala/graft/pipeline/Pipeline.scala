@@ -113,10 +113,10 @@ object Pipeline {
     }
   }
 
-  /** [[Screen]] dispatch — each family's defaults mirror its streaming
-    * wrapper in [[graft.streaming.Streams]] so a JSON document moved
-    * between batch and streaming screens identically. PURE: an
-    * absent/empty history passes everything through.
+  /** [[Screen]] dispatch through [[screenFns]], the same pair the
+    * streaming ingest uses, so a JSON document moved between batch and
+    * streaming screens identically. PURE: an absent/empty history
+    * passes everything through.
     */
   private def runScreen(df: DataFrame, s: Screen): DataFrame = {
     val spark = df.sparkSession
@@ -137,10 +137,10 @@ object Pipeline {
   /** The (signatures, screen) function pair a [[Screen]] config
     * declares (r20) — ONE family dispatch shared by the batch `screen`
     * step ([[runScreen]]) and the config-declared streaming ingest
-    * ([[graft.pipeline.Job.runStream]]'s `ingest` section), so a
-    * document's knobs mean the same thing on both paths, and both
-    * match the hand-written wrappers in
-    * [[graft.streaming.Streams]] (spec-pinned parity):
+    * ([[graft.pipeline.Job.runStream]]'s `ingest` section), and the
+    * pair library callers hand to
+    * [[graft.streaming.Streams.ingestScreenStream]], so a document's
+    * knobs mean the same thing on every path:
     *  - `signatures(rows)` is the stored-history frame the rows
     *    contribute (the slice an ingest stream appends; must accept an
     *    empty frame — the cold-start schema);

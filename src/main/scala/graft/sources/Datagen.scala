@@ -134,11 +134,9 @@ object Datagen {
   /** Deterministic error injection — ref :49/:198: each row draws its
     * own error lottery per column; winners (rate fraction) get the
     * error. `nullify` plants nulls in "non-nullable" columns;
-    * `outOfRange` pushes ints past the declared max (ref :228-231);
-    * `corruptFormat` replaces string values with a non-parseable
-    * token (ref :240 invalid date formats). Same lottery formula as
-    * the generator, salt offset 1000+i, so valid and invalid data
-    * stay independent.
+    * `outOfRange` pushes ints past the declared max (ref :228-231).
+    * Same lottery formula as the generator, salt offset 1000+i, so
+    * valid and invalid data stay independent.
     */
   def nullify(df: DataFrame, column: String, rate: Double,
               seed: Long = 42L, salt: Long = 1000L,
@@ -153,12 +151,6 @@ object Datagen {
       when(hit(rate, seed, salt, idCol),
         lit(declaredMax) + 1L + pmod(prng(col(idCol), seed, salt), lit(100L)))
         .otherwise(col(column)))
-
-  def corruptFormat(df: DataFrame, column: String, token: String,
-                    rate: Double, seed: Long = 42L, salt: Long = 1002L,
-                    idCol: String = "row_id"): DataFrame =
-    df.withColumn(column,
-      when(hit(rate, seed, salt, idCol), lit(token)).otherwise(col(column)))
 
   // idCol mirrors withFields: the lottery must draw on the SAME id
   // column the frame was generated with, whatever it is named

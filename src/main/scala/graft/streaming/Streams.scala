@@ -120,13 +120,11 @@ object Streams {
     * commit-overhead win, ~45-60% of the drain), while anything past
     * ~128 MB clamps to the session's parallelism — the pre-r21
     * behavior recovered exactly. The knob sheds fixed commit overhead
-    * on small replays and deliberately nothing else.
+    * on small replays and deliberately nothing else. The session conf
+    * is its only override (a non-positive value keeps the default).
     */
   def drainStatePartitions(spark: SparkSession, inputBytes: Long): Int = {
-    // conf wins; the env var enables ops/bench A/B without a code edit
-    // (the SPARK_GRAFT_SMALL_PERSIST pattern)
     val per = spark.conf.getOption("spark.graft.streamBytesPerStatePartition")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_BYTES_PER_STATE_PARTITION"))
       .map(_.trim.toLong).filter(_ > 0).getOrElse(4L << 20)
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1L, math.min(session.toLong, (inputBytes + per - 1) / per)).toInt
@@ -285,51 +283,17 @@ object Streams {
   def quarantinedRows(spark: SparkSession, quarantinePath: String): DataFrame =
     readBatchSlices(spark, quarantinePath, "quarantine")
 
-  /** Streaming near-duplicate ingest screen — the crawl-pipeline
-    * shape: each micro-batch screens against the SIGNATURE HISTORY
-    * (the union of an optional seed slice and every earlier batch's
-    * survivors) via [[graft.llm.Dedup.minhashAgainstHistory]] — stored
-    * signatures only, history text is never reread or re-shingled.
-    * Survivors flow to `clean`, and their
-    * [[graft.llm.Dedup.minhashHistorySignatures]] land as this batch's
-    * `batch_id=N` slice through the atomic swap, so a checkpoint
-    * replay of batch N REPLACES its own slice instead of
-    * double-appending — and because the history read EXCLUDES the
-    * current batch id, a replay can never screen a batch against its
-    * own previous attempt (which would self-match and drop every row).
-    *
-    * Scope: cross-batch near-dups only. Within-batch near-dups both
-    * survive (the history operator's contract) — compose exact/near
-    * batch dedup inside `clean` when the source can repeat inside one
-    * batch. Seed pre-existing corpus history by writing
-    * `minhashHistorySignatures` to `historyRoot/batch_id=-1` before
-    * starting the stream.
-    *
-    * `historyRoot` is bound to ONE checkpoint lineage: batch ids
-    * restart at 0 under a fresh checkpoint, so a restarted pipeline
-    * reusing an old historyRoot would both hide and then OVERWRITE the
-    * old `batch_id=0` slice (the same contract as every batch_id-slice
-    * sink here — quarantine, late side-output). Reset or re-seed the
-    * history when the checkpoint is reset.
-    */
-  def nearDupScreenStream(stream: DataFrame, idCol: String, textCol: String,
-                          historyRoot: String, checkpointDir: String,
-                          ngramN: Int = 5, numHashes: Int = 32,
-                          bands: Int = 8, threshold: Double = 1.0)
-                         (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStream(stream, historyRoot, checkpointDir)(
-      b => graft.llm.Dedup.minhashHistorySignatures(
-        b, idCol, textCol, ngramN, numHashes))(
-      (b, history) => graft.llm.Dedup.minhashAgainstHistory(
-        b, history, idCol, textCol, ngramN, numHashes, bands, threshold))(
-      clean)
-
-  /** Signature-family-GENERIC streaming ingest screen (r18) — the
-    * history/slice/replay core behind [[nearDupScreenStream]],
-    * factored so EVERY history-screen family member (minhash and
-    * simhash text, perceptual image hashes, cell-assigned embeddings
-    * — or any future signature) rides the same checkpoint-replay-safe
-    * machinery instead of re-implementing it:
+  /** Streaming ingest screen, generic over the signature family (the
+    * crawl-pipeline shape): each micro-batch screens against the
+    * SIGNATURE HISTORY — the union of an optional seed slice and every
+    * earlier batch's survivors — through stored signatures only;
+    * history rows are never reread, re-shingled or re-decoded. The
+    * family is a function pair, normally the one
+    * [[graft.pipeline.Pipeline.screenFns]] derives from a
+    * [[graft.pipeline.Pipeline.Screen]] (exact, minhash, simhash,
+    * image, audio or version-checked semantic), the same dispatch the
+    * batch `screen` step and [[graft.pipeline.Job.runStream]]'s
+    * `ingest` section use:
     *  - `signatures(rows)` derives the STORED-signature frame a
     *    survivor contributes to history (must accept an empty frame —
     *    the cold-start schema);
@@ -337,14 +301,24 @@ object Streams {
     *    (columns unchanged).
     * Per micro-batch: the history read unions the healed slices
     * EXCLUDING this batch id (replay safety — a replayed batch can
-    * never screen against its own previous attempt and self-match),
-    * survivors' signatures land as the `batch_id=N` slice through the
-    * atomic swap (a replay REPLACES its slice instead of
-    * double-appending), survivors flow to `clean`. Seed pre-existing
-    * corpus history at `historyRoot/batch_id=-1`; fold accumulated
-    * slices with [[compactSignatureHistory]] while stopped. Same
-    * one-checkpoint-lineage contract as every batch_id-slice sink
-    * here: reset or re-seed the history when the checkpoint resets.
+    * never screen against its own previous attempt and self-match,
+    * which would drop every row), survivors' signatures land as the
+    * `batch_id=N` slice through the atomic swap (a replay REPLACES its
+    * slice instead of double-appending), survivors flow to `clean`.
+    *
+    * Scope: cross-batch duplicates only. Within-batch duplicates all
+    * survive (the history operators' contract) — compose batch dedup
+    * inside `clean` when the source can repeat inside one batch. Seed
+    * pre-existing corpus history by writing its signatures to
+    * `historyRoot/batch_id=-1` before starting the stream; fold
+    * accumulated slices with [[compactSignatureHistory]] while stopped.
+    *
+    * `historyRoot` is bound to ONE checkpoint lineage: batch ids
+    * restart at 0 under a fresh checkpoint, so a restarted pipeline
+    * reusing an old historyRoot would both hide and then OVERWRITE the
+    * old `batch_id=0` slice (the same contract as every batch_id-slice
+    * sink here — quarantine, late side-output). Reset or re-seed the
+    * history when the checkpoint is reset.
     */
   def ingestScreenStream(stream: DataFrame, historyRoot: String,
                          checkpointDir: String)
@@ -382,87 +356,6 @@ object Streams {
       }
       .start()
   }
-
-  /** Streaming perceptual-image ingest screen — [[ingestScreenStream]]
-    * with [[graft.multimodal.Media.imageSignatures]] /
-    * [[graft.multimodal.Media.imageAgainstHistory]]: each micro-batch
-    * decodes once map-side, screens against the stored 8-byte
-    * signature history (history pixels are never re-decoded), and
-    * survivors append their signatures. Undecodable/null blobs
-    * always survive — quarantine them separately.
-    */
-  def imageScreenStream(stream: DataFrame, idCol: String, binCol: String,
-                        historyRoot: String, checkpointDir: String,
-                        maxHamming: Int = 6, algo: String = "dhash")
-                       (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStream(stream, historyRoot, checkpointDir)(
-      b => graft.multimodal.Media.imageSignatures(b, idCol, binCol, algo))(
-      (b, history) => graft.multimodal.Media.imageAgainstHistory(
-        b, idCol, binCol, history, maxHamming, algo = algo))(
-      clean)
-
-  /** Streaming simhash text ingest screen — [[ingestScreenStream]]
-    * with [[graft.llm.Dedup.simhashSignatures]] /
-    * [[graft.llm.Dedup.simhashAgainstHistory]] (token-multiset
-    * near-dup at a hamming budget; history text never re-tokenized).
-    */
-  def simhashScreenStream(stream: DataFrame, idCol: String, textCol: String,
-                          historyRoot: String, checkpointDir: String,
-                          maxHamming: Int = 3)
-                         (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStream(stream, historyRoot, checkpointDir)(
-      b => graft.llm.Dedup.simhashSignatures(b, idCol, textCol))(
-      (b, history) => graft.llm.Dedup.simhashAgainstHistory(
-        b, history, idCol, textCol, maxHamming))(
-      clean)
-
-  /** Streaming audio ingest screen — [[ingestScreenStream]] with
-    * [[graft.multimodal.Media.audioSignatures]] /
-    * [[graft.multimodal.Media.audioAgainstHistory]] (gain-invariant
-    * envelope signatures; history samples never re-decoded).
-    */
-  def audioScreenStream(stream: DataFrame, idCol: String, binCol: String,
-                        historyRoot: String, checkpointDir: String,
-                        maxHamming: Int = 4)
-                       (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStream(stream, historyRoot, checkpointDir)(
-      b => graft.multimodal.Media.audioSignatures(b, idCol, binCol))(
-      (b, history) => graft.multimodal.Media.audioAgainstHistory(
-        b, idCol, binCol, history, maxHamming))(
-      clean)
-
-  /** Streaming SEMANTIC (embedding) ingest screen —
-    * [[ingestScreenStream]] with [[graft.llm.Dedup
-    * .semanticHistorySignatures]] / [[graft.llm.Dedup
-    * .semanticAgainstHistory]] over the pipeline's persisted quantizer
-    * (`centroids` — load once via [[graft.llm.Ivf.loadIndex]]): each
-    * batch cell-assigns map-side and drops rows whose rounded cosine
-    * reaches `threshold` against stored history vectors in its
-    * `nprobe` cells; survivors append their cell-assigned embeddings.
-    *
-    * Pass `indexVersion` (r19 — from [[graft.llm.Ivf
-    * .loadIndexVersioned]], the same read that produced `centroids`)
-    * to VERSION-TIE the screen: survivors' signatures are stamped
-    * `__iv` and every micro-batch refuses loudly if the history was
-    * assigned under a different quantizer payload (the retrain
-    * composition hazard — repair with [[graft.llm.Dedup
-    * .reassignSemanticHistory]] or [[graft.llm.Ivf.maintainIndex]]'s
-    * `semanticHistoryRoots`, both run while this stream is stopped,
-    * then restart the stream against the re-loaded index).
-    */
-  def semanticScreenStream(stream: DataFrame, idCol: String, vecCol: String,
-                           centroids: DataFrame,
-                           historyRoot: String, checkpointDir: String,
-                           threshold: Double = 0.9, nprobe: Int = 1,
-                           indexVersion: Option[Long] = None)
-                          (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStream(stream, historyRoot, checkpointDir)(
-      b => graft.llm.Dedup.semanticHistorySignatures(
-        b, idCol, vecCol, centroids, indexVersion = indexVersion))(
-      (b, history) => graft.llm.Dedup.semanticAgainstHistory(
-        b, history, centroids, idCol, vecCol, threshold, nprobe,
-        indexVersion = indexVersion))(
-      clean)
 
   /** Compact an [[ingestScreenStream]] history root — SCHEMA-AGNOSTIC
     * (r19 spec-pinned over minhash, image, and version-stamped
@@ -540,7 +433,7 @@ object Streams {
 
   /** The signature-history slices under `root`, healed, MINUS the
     * `batch_id=exclude` slice (the replay-safety read of
-    * [[nearDupScreenStream]]); None when no other slice exists yet
+    * [[ingestScreenStream]]); None when no other slice exists yet
     * (cold start with no seed).
     */
   private def signatureHistory(spark: SparkSession, root: String,

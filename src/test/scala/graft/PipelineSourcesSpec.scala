@@ -937,10 +937,13 @@ class PipelineSourcesSpec extends SparkSpec {
     val qDoc = Job.runStreamJson(spark, doc, s"$base/doc-ckpt")
     val libStream = graft.streaming.Streams.fileStream(
       spark, "parquet", in, schema)
-    val qLib = graft.streaming.Streams.nearDupScreenStream(
-      libStream, "doc_id", "text", s"$base/lib-hist", s"$base/lib-ckpt",
-      ngramN = 3) { (ok, bid) =>
-      graft.Recovery.idempotentWrite(ok, s"$base/lib-sink/batch_id=$bid")
+    // the library side names the minhash operators and their knobs
+    // itself, so the document's defaults are checked against them
+    val qLib = graft.streaming.Streams.ingestScreenStream(
+      libStream, s"$base/lib-hist", s"$base/lib-ckpt")(
+      b => graft.llm.Dedup.minhashHistorySignatures(b, "doc_id", "text", ngramN = 3))(
+      (b, h) => graft.llm.Dedup.minhashAgainstHistory(b, h, "doc_id", "text", ngramN = 3)) {
+      (ok, bid) => graft.Recovery.idempotentWrite(ok, s"$base/lib-sink/batch_id=$bid")
     }
     try {
       qDoc.processAllAvailable(); qLib.processAllAvailable()

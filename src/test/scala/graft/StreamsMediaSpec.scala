@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.multimodal.Media
+import graft.pipeline.Pipeline
 import graft.streaming.Streams
 
 class StreamsMediaSpec extends SparkSpec {
@@ -657,32 +658,38 @@ class StreamsMediaSpec extends SparkSpec {
     val textSeed = "the quick brown fox jumps over the lazy dog"
     val textA = "completely fresh crawl content about spark engines"
     val textB = "another novel document with its own distinct words"
-    // seed: pre-existing corpus signatures at batch_id=-1
-    graft.Recovery.idempotentWrite(
-      graft.llm.Dedup.minhashHistorySignatures(
-        Seq((100L, textSeed)).toDF("doc_id", "text"), "doc_id", "text",
-        ngramN = 3),
-      s"$historyRoot/batch_id=-1")
-    val input = MemoryStream[(Long, String)]
-    val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    val q = Streams.nearDupScreenStream(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      historyRoot, s"$base/ckpt", ngramN = 3) { (ok, bid) =>
-      cleanSeen += ((bid, ok.select("doc_id").as[Long].collect().toSet))
+    val batch1 = Seq((3L, textA), (4L, textB), (5L, null: String))
+    def family(name: String, root: String) = Pipeline.screenFns(spark,
+      Pipeline.Screen(name, root, "doc_id", "text", ngramN = Some(3)))
+    // one two-batch ingest stream of `name`'s family over `root`; the
+    // survivors each batch hands to the sink
+    def screenStream(name: String, root: String): List[(Long, Set[Long])] = {
+      val (sigs, screen) = family(name, root)
+      // seed: pre-existing corpus signatures at batch_id=-1
+      graft.Recovery.idempotentWrite(
+        sigs(Seq((100L, textSeed)).toDF("doc_id", "text")), s"$root/batch_id=-1")
+      val input = MemoryStream[(Long, String)]
+      val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+      val q = Streams.ingestScreenStream(
+        input.toDF().toDF("doc_id", "text"), root, s"$root-ckpt")(sigs)(screen) {
+        (ok, bid) => cleanSeen += ((bid, ok.select("doc_id").as[Long].collect().toSet))
+      }
+      try {
+        // batch 0: id 1 repeats the SEEDED text (dropped); ids 2 and 6
+        // share fresh text A — within-batch dups both survive (the
+        // documented scope: the screen is cross-batch only)
+        input.addData(Seq((1L, textSeed), (2L, textA), (6L, textA)))
+        q.processAllAvailable()
+        // batch 1: id 3 repeats batch 0's survivor text (dropped via the
+        // batch-0 slice), id 4 is fresh, id 5 has null text (can never
+        // match — the NOT-EXISTS null contract)
+        input.addData(batch1)
+        q.processAllAvailable()
+      } finally q.stop()
+      cleanSeen.toList
     }
-    try {
-      // batch 0: id 1 repeats the SEEDED text (dropped); ids 2 and 6
-      // share fresh text A — within-batch dups both survive (the
-      // documented scope: the screen is cross-batch only)
-      input.addData(Seq((1L, textSeed), (2L, textA), (6L, textA)))
-      q.processAllAvailable()
-      // batch 1: id 3 repeats batch 0's survivor text (dropped via the
-      // batch-0 slice), id 4 is fresh, id 5 has null text (can never
-      // match — the NOT-EXISTS null contract)
-      input.addData(Seq((3L, textA), (4L, textB), (5L, null)))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(cleanSeen.toList == List((0L, Set(2L, 6L)), (1L, Set(4L, 5L))))
+    assert(screenStream("minhash", historyRoot) ==
+      List((0L, Set(2L, 6L)), (1L, Set(4L, 5L))))
     // survivors' signatures landed as batch-keyed slices beside the seed
     val hist = spark.read.option("basePath", historyRoot).parquet(historyRoot)
     assert(hist.select("batch_id").distinct().as[Long].collect().toSet ==
@@ -733,6 +740,23 @@ class StreamsMediaSpec extends SparkSpec {
     val m0 = seedMtimes
     assert(Streams.compactSignatureHistory(spark, historyRoot, upToBatch = 99L) == 0)
     assert(seedMtimes == m0)
+
+    // the simhash and exact families ride the same replay and
+    // history-append path: same survivors batch by batch, one slice
+    // per batch beside the seed, and batch 1 replayed against every
+    // slice but its own reproduces its survivors
+    for (name <- Seq("simhash", "exact")) {
+      val root = s"$base/history-$name"
+      assert(screenStream(name, root) ==
+        List((0L, Set(2L, 6L)), (1L, Set(4L, 5L))), name)
+      val h = spark.read.option("basePath", root).parquet(root)
+      assert(h.select("batch_id").distinct().as[Long].collect().toSet ==
+        Set(-1L, 0L, 1L), name)
+      val (_, screen) = family(name, root)
+      assert(screen(batch1.toDF("doc_id", "text"),
+          h.filter(col("batch_id") =!= 1L).drop("batch_id"))
+        .select("doc_id").as[Long].collect().toSet == Set(4L, 5L), name)
+    }
   }
 
   test("compactSignatureHistory is schema-agnostic: image and semantic roots fold, screen identically, keep stamps, compose with reassign") {
@@ -836,10 +860,11 @@ class StreamsMediaSpec extends SparkSpec {
       s"$historyRoot/batch_id=-1")
     val input = MemoryStream[(Long, Array[Byte])]
     val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    val q = Streams.imageScreenStream(
-      input.toDF().toDF("img_id", "img"), "img_id", "img",
-      historyRoot, s"$base/ckpt", maxHamming = 6) { (ok, bid) =>
-      cleanSeen += ((bid, ok.select("img_id").as[Long].collect().toSet))
+    val (sigs, screen) = Pipeline.screenFns(spark,
+      Pipeline.Screen("image", historyRoot, "img_id", "img", maxHamming = Some(6)))
+    val q = Streams.ingestScreenStream(
+      input.toDF().toDF("img_id", "img"), historyRoot, s"$base/ckpt")(sigs)(screen) {
+      (ok, bid) => cleanSeen += ((bid, ok.select("img_id").as[Long].collect().toSet))
     }
     val batch1 = Seq(
       (5L, cornered(50)),                       // near-copy of batch-0 survivor → drop
@@ -886,10 +911,11 @@ class StreamsMediaSpec extends SparkSpec {
       s"$historyRoot/batch_id=-1")
     val input = MemoryStream[(Long, Array[Byte])]
     val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    val q = Streams.audioScreenStream(
-      input.toDF().toDF("audio_id", "wav"), "audio_id", "wav",
-      historyRoot, s"$base/ckpt", maxHamming = 0) { (ok, bid) =>
-      cleanSeen += ((bid, ok.select("audio_id").as[Long].collect().toSet))
+    val (sigs, screen) = Pipeline.screenFns(spark,
+      Pipeline.Screen("audio", historyRoot, "audio_id", "wav", maxHamming = Some(0)))
+    val q = Streams.ingestScreenStream(
+      input.toDF().toDF("audio_id", "wav"), historyRoot, s"$base/ckpt")(sigs)(screen) {
+      (ok, bid) => cleanSeen += ((bid, ok.select("audio_id").as[Long].collect().toSet))
     }
     try {
       // batch 0: re-gained copy of the seed drops, fresh survives
@@ -911,19 +937,21 @@ class StreamsMediaSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft_semstream").toString
     val historyRoot = s"$base/history"
-    val cents = Seq((0, Array(1f, 0f, 0f, 0f)), (1, Array(0f, 1f, 0f, 0f)))
-      .toDF("__cid", "__cvec")
+    val idxDir = s"$base/idx"
+    graft.llm.Ivf.saveIndex(
+      Seq((0, Array(1f, 0f, 0f, 0f)), (1, Array(0f, 1f, 0f, 0f)))
+        .toDF("__cid", "__cvec"), idxDir)
+    val (sigs, screen) = Pipeline.screenFns(spark,
+      Pipeline.Screen("semantic", historyRoot, "vec_id", "embedding",
+        threshold = Some(0.9), indexDir = Some(idxDir)))
     graft.Recovery.idempotentWrite(
-      graft.llm.Dedup.semanticHistorySignatures(
-        Seq((100L, Array(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", cents),
+      sigs(Seq((100L, Array(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")),
       s"$historyRoot/batch_id=-1")
     val input = MemoryStream[(Long, Array[Float])]
     val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    val q = Streams.semanticScreenStream(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      cents, historyRoot, s"$base/ckpt", threshold = 0.9) { (ok, bid) =>
-      cleanSeen += ((bid, ok.select("vec_id").as[Long].collect().toSet))
+    val q = Streams.ingestScreenStream(
+      input.toDF().toDF("vec_id", "embedding"), historyRoot, s"$base/ckpt")(sigs)(screen) {
+      (ok, bid) => cleanSeen += ((bid, ok.select("vec_id").as[Long].collect().toSet))
     }
     try {
       // batch 0: exact seed dup drops, orthogonal fresh survives
@@ -939,9 +967,10 @@ class StreamsMediaSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(cleanSeen.toList == List((0L, Set(2L)), (1L, Set(4L))))
-    // history slices carry the CELL-ASSIGNED embedding schema
+    // history slices carry the CELL-ASSIGNED embedding schema, stamped
+    // with the quantizer version
     val hist = spark.read.option("basePath", historyRoot).parquet(historyRoot)
-    assert(hist.columns.toSet == Set("vec_id", "embedding", "__cid", "batch_id"))
+    assert(hist.columns.toSet == Set("vec_id", "embedding", "__cid", "__iv", "batch_id"))
   }
 
   test("semanticScreenStream version handshake: a mid-stream retrain+reassign refuses; restart on v2 replays green") {
@@ -962,14 +991,17 @@ class StreamsMediaSpec extends SparkSpec {
       s"$historyRoot/batch_id=-1")
     val input = MemoryStream[(Long, Array[Float])]
     val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    def startScreen(cents: org.apache.spark.sql.DataFrame, v: Long) =
-      Streams.semanticScreenStream(
-        input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        cents, historyRoot, s"$base/ckpt", threshold = 0.9,
-        indexVersion = Some(v)) { (ok, bid) =>
-        cleanSeen += ((bid, ok.select("vec_id").as[Long].collect().toSet))
+    // the screen loads the index (and its version) once, at start
+    def startScreen() = {
+      val (sigs, screen) = Pipeline.screenFns(spark,
+        Pipeline.Screen("semantic", historyRoot, "vec_id", "embedding",
+          threshold = Some(0.9), indexDir = Some(idxDir)))
+      Streams.ingestScreenStream(
+        input.toDF().toDF("vec_id", "embedding"), historyRoot, s"$base/ckpt")(sigs)(screen) {
+        (ok, bid) => cleanSeen += ((bid, ok.select("vec_id").as[Long].collect().toSet))
       }
-    val q1 = startScreen(cents1, v1)
+    }
+    val q1 = startScreen()
     try {
       // batch 0 under v1: seed dup drops, fresh survives
       input.addData(Seq(
@@ -997,9 +1029,9 @@ class StreamsMediaSpec extends SparkSpec {
     // restart the SAME checkpoint lineage with the re-loaded v2 index:
     // batch 1 replays against the healed history and screens green
     // (id 3 near-dups batch 0's survivor id 2, now in a v2 cell)
-    val (cents2, v2) = Ivf.loadIndexVersioned(spark, idxDir)
+    val (_, v2) = Ivf.loadIndexVersioned(spark, idxDir)
     assert(v2 == 2L)
-    val q2 = startScreen(cents2, v2)
+    val q2 = startScreen()
     try q2.processAllAvailable() finally q2.stop()
     assert(cleanSeen.toList == List((0L, Set(2L)), (1L, Set.empty[Long])))
     // every surviving slice is v2-stamped
