@@ -1,9 +1,8 @@
 package graft
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /** Metadata-driven dataset catalog — the reference wires its
   * connectors from metadata-DB rows (source configs consumed by the
@@ -35,27 +34,18 @@ object Catalog {
                                options: Map[String, String] = Map.empty,
                                schemaDdl: Option[String] = None)
 
-  private val mapper = new ObjectMapper()
+  def parseJson(json: String): Seq[DatasetSpec] =
+    parseNode(JsonCfg.read(json, "catalog config"))
 
-  def parseJson(json: String): Seq[DatasetSpec] = {
-    val root = mapper.readTree(json)
-    val datasets = Option(root.get("datasets")).getOrElse(
-      throw new IllegalArgumentException(
-        "catalog config needs a top-level \"datasets\" array"))
-    datasets.elements().asScala.map { d =>
-      def opt(f: String): Option[JsonNode] = Option(d.get(f))
-      def str(f: String): String = opt(f).map(_.asText()).getOrElse(
-        throw new IllegalArgumentException(
-          s"catalog dataset entry is missing required field \"$f\": $d"))
-      DatasetSpec(
-        str("name"),
-        str("format"),
-        str("path"),
-        opt("options").map(_.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty),
-        opt("schema").map(_.asText()))
-    }.toSeq
-  }
+  /** The `datasets` array of a catalog or job document. */
+  private[graft] def parseNode(root: JsonNode): Seq[DatasetSpec] =
+    JsonCfg.objects(root, "datasets", "catalog config").map { d =>
+      val name = JsonCfg.str(d, "name", "catalog dataset")
+      val ctx = s"catalog dataset '$name'"
+      DatasetSpec(name, JsonCfg.str(d, "format", ctx), JsonCfg.str(d, "path", ctx),
+        JsonCfg.stringMap.opt(d, "options", ctx).getOrElse(Map.empty),
+        JsonCfg.str.opt(d, "schema", ctx))
+    }
 
   def schemaOf(spec: DatasetSpec): Option[StructType] =
     spec.schemaDdl.map(StructType.fromDDL)

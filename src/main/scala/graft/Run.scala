@@ -24,20 +24,22 @@ import graft.pipeline.{Dag, Job}
   * }}}
   *
   * Verbs:
-  *  - `run <doc.json>`: executes the document through the existing
-  *    machinery — a `{"jobs": [...]}` document is a [[Dag]] (per-node
-  *    status printed; any failed/skipped node fails the run), anything
-  *    else is a [[Job]]. With `--history <dir>` the run records
+  *  - `run <doc.json>`: parses the document exactly as `validate`
+  *    does, every DAG node included, then executes it through the
+  *    existing machinery — a `{"jobs": [...]}` document is a [[Dag]]
+  *    (per-node status printed; any failed/skipped node fails the run),
+  *    anything else is a [[Job]]. A config error exits 2 before
+  *    anything runs. With `--history <dir>` the run records
   *    [[graft.monitoring.RunHistory]] under `--run-id` (default: the
   *    document's basename) via [[Job.runWithHistory]].
-  *  - `validate <doc.json>`: parses every section through the same
-  *    front-ends and exits — the reference's pre-flight contract
-  *    (cli.py validate path) without touching data.
+  *  - `validate <doc.json>`: that parse, then a one-line summary — the
+  *    reference's pre-flight contract (cli.py validate path) without
+  *    touching data.
   *  - `status --history <dir> [--run-id <id>]`: top-level entries of
   *    recorded runs, newest first.
   *
   * Exit codes: 0 success; 1 run failure (DQ gate, node failure, any
-  * execution error); 2 usage or config error. The logic lives in
+  * execution error); 2 usage or config error (`run` included). The logic lives in
   * [[execute]] (returns the code, prints to the given stream) so specs
   * drive the argument/exit contract without forking a JVM.
   */
@@ -104,60 +106,70 @@ object Run {
     else Right(new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def isDag(json: String): Boolean = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    root != null && root.isObject && root.has("jobs")
-  }
-
   private def defaultRunId(path: String): String = {
     val base = Paths.get(path).getFileName.toString
     base.stripSuffix(".json")
   }
+
+  /** Read and parse a document (`{"jobs": [...]}` is a [[Dag]], anything
+    * else a [[Job]]) without running it; None after printing why not. */
+  private def load(docPath: String,
+                   out: PrintStream): Option[Either[Seq[Dag.Node], Job.Spec]] =
+    readDoc(docPath) match {
+      case Left(err) => out.println(err); None
+      case Right(json) =>
+        try {
+          val root = JsonCfg.read(json, "document")
+          Some(if (root.has("jobs")) Left(Dag.parseNode(root))
+               else Right(Job.parseNode(root)))
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            out.println(s"invalid document: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
+            None
+        }
+    }
 
   private def runVerb(spark: SparkSession, args: Seq[String],
                       out: PrintStream): Int =
     parseFlags(args, Set("--history", "--run-id")) match {
       case Left(err) => out.println(err); out.println(usage); 2
       case Right((Seq(docPath), flags)) =>
-        readDoc(docPath) match {
-          case Left(err) => out.println(err); 2
-          case Right(json) =>
-            val history = flags.get("--history")
-            val runId = flags.getOrElse("--run-id", defaultRunId(docPath))
-            try {
-              if (isDag(json)) {
-                val results = Dag.runJson(spark, json, history, runId)
-                results.foreach { r =>
-                  out.println(s"node ${r.id}: ${r.status}" +
-                    r.error.fold("")(e => s" ($e)"))
-                }
-                if (results.forall(_.status == "succeeded")) {
-                  out.println(s"dag succeeded: ${results.size} node(s)"); 0
-                } else {
-                  out.println("dag failed: " + results
-                    .filterNot(_.status == "succeeded")
-                    .map(r => s"${r.id}=${r.status}").mkString(", "))
-                  1
-                }
-              } else {
-                val result = history match {
-                  case Some(dir) => Job.runWithHistory(spark, json, dir, runId)
-                  case None => Job.runJson(spark, json)
-                }
-                // a sink-less document still needs its plan to RUN —
-                // Job defers the output frame when no sink fires an action.
-                // The count is the output's last reader: release the cache
-                val rows =
-                  try { if (result.output.isStreaming) -1L else result.output.count() }
-                  finally result.close()
-                out.println(s"job succeeded: $rows output row(s)")
-                0
+        load(docPath, out).fold(2) { doc =>
+          val history = flags.get("--history")
+          val runId = flags.getOrElse("--run-id", defaultRunId(docPath))
+          try doc match {
+            case Left(nodes) =>
+              val results = Dag.run(spark, nodes, history, runId)
+              results.foreach { r =>
+                out.println(s"node ${r.id}: ${r.status}" +
+                  r.error.fold("")(e => s" ($e)"))
               }
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                out.println(s"run failed: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
+              if (results.forall(_.status == "succeeded")) {
+                out.println(s"dag succeeded: ${results.size} node(s)"); 0
+              } else {
+                out.println("dag failed: " + results
+                  .filterNot(_.status == "succeeded")
+                  .map(r => s"${r.id}=${r.status}").mkString(", "))
                 1
-            }
+              }
+            case Right(spec) =>
+              val result = history match {
+                case Some(dir) => Job.runWithHistory(spark, spec, dir, runId)
+                case None => Job.run(spark, spec)
+              }
+              // a sink-less document still needs its plan to RUN —
+              // Job defers the output frame when no sink fires an action.
+              // The count is the output's last reader: release the cache
+              val rows =
+                try { if (result.output.isStreaming) -1L else result.output.count() }
+                finally result.close()
+              out.println(s"job succeeded: $rows output row(s)")
+              0
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              out.println(s"run failed: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
+              1
+          }
         }
       case Right(_) => out.println(usage); 2
     }
@@ -165,26 +177,12 @@ object Run {
   private def validateVerb(args: Seq[String], out: PrintStream): Int =
     args match {
       case Seq(docPath) =>
-        readDoc(docPath) match {
-          case Left(err) => out.println(err); 2
-          case Right(json) =>
-            try {
-              if (isDag(json)) {
-                val nodes = Dag.parse(json)
-                nodes.foreach(n => Job.parse(n.jobJson))
-                Dag.topoOrder(nodes) // cycle / unknown-dep check
-                out.println(s"valid dag: ${nodes.size} node(s)"); 0
-              } else {
-                val spec = Job.parse(json)
-                out.println(s"valid job: ${spec.datasets.size} dataset(s), " +
-                  s"${spec.pipeline.steps.size} step(s)")
-                0
-              }
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                out.println(s"invalid document: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
-                2
-            }
+        load(docPath, out).fold(2) {
+          case Left(nodes) => out.println(s"valid dag: ${nodes.size} node(s)"); 0
+          case Right(spec) =>
+            out.println(s"valid job: ${spec.datasets.size} dataset(s), " +
+              s"${spec.pipeline.steps.size} step(s)")
+            0
         }
       case _ => out.println(usage); 2
     }

@@ -1,8 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -40,8 +38,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object SchemaDoc {
 
-  private val mapper = new ObjectMapper()
-
   /** One parsed versioned document. `steps` is deferred for the
     * target-schema form — the from-schema only exists at apply time.
     */
@@ -69,7 +65,7 @@ object SchemaDoc {
   /** sha256 of the document's canonical serialization — ref :190. */
   def checksum(node: JsonNode): String = {
     val bytes = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(mapper.writeValueAsString(node)
+      .digest(node.toString
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     bytes.map("%02x".format(_)).mkString
   }
@@ -79,14 +75,12 @@ object SchemaDoc {
     * dropped is a schema change that never happens.
     */
   def parse(json: String): Seq[Doc] = {
-    val root = mapper.readTree(json)
-    require(root != null && root.isObject, "schema document must be a JSON object")
+    val root = JsonCfg.read(json, "schema document")
     val docs =
-      if (root.hasNonNull("migrations")) {
-        val arr = root.get("migrations")
-        require(arr.isArray && arr.size() > 0,
-          "\"migrations\" must be a non-empty array")
-        arr.elements().asScala.toSeq
+      if (root.has("migrations")) {
+        val arr = JsonCfg.objects(root, "migrations", "schema document")
+        require(arr.nonEmpty, "\"migrations\" must be a non-empty array")
+        arr
       } else Seq(root)
     val parsed = docs.map(parseOne)
     val dup = parsed.groupBy(_.version).collect { case (v, ds) if ds.size > 1 => v }
@@ -96,54 +90,39 @@ object SchemaDoc {
   }
 
   private def parseOne(node: JsonNode): Doc = {
-    require(node.isObject, "each migration must be a JSON object")
-    def strField(f: String): String = {
-      val n = node.get(f)
-      require(n != null && n.isTextual, s"migration needs a string \"$f\"")
-      n.asText()
-    }
-    val version = strField("version")
-    val description =
-      Option(node.get("description")).filter(_.isTextual).map(_.asText()).getOrElse("")
+    val version = JsonCfg.str(node, "version", "migration")
+    val ctx = s"migration $version"
+    val description = JsonCfg.str.opt(node, "description", ctx).getOrElse("")
     val sum = checksum(node)
-    val hasSteps = node.hasNonNull("steps")
-    val hasTarget = node.hasNonNull("target_schema")
-    require(hasSteps ^ hasTarget,
-      s"migration $version: exactly one of \"steps\" or \"target_schema\"")
+    val hasSteps = node.has("steps")
+    require(hasSteps ^ node.has("target_schema"),
+      s"$ctx: exactly one of \"steps\" or \"target_schema\"")
     if (hasSteps) {
-      val steps = node.get("steps").elements().asScala.map(parseStep(version, _)).toSeq
-      require(steps.nonEmpty, s"migration $version: empty \"steps\"")
+      val steps = JsonCfg.objects(node, "steps", ctx).map(parseStep(ctx, _))
+      require(steps.nonEmpty, s"$ctx: empty \"steps\"")
       val m = Schemas.Migration(version, description, steps)
       Doc(version, description, sum, _ => m)
     } else {
-      val target = StructType.fromDDL(strField("target_schema"))
-      val renames = Option(node.get("renames")).map { r =>
-        require(r.isObject, s"migration $version: \"renames\" must be an object")
-        r.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-      }.getOrElse(Map.empty[String, String])
+      val target = StructType.fromDDL(JsonCfg.str(node, "target_schema", ctx))
+      val renames = JsonCfg.stringMap.opt(node, "renames", ctx).getOrElse(Map.empty)
       Doc(version, description, sum,
         from => Schemas.inferMigration(from, target, version, description, renames))
     }
   }
 
-  private def parseStep(version: String, s: JsonNode): Schemas.MigrationStep = {
-    def f(name: String): String = {
-      val n = s.get(name)
-      require(n != null && n.isTextual,
-        s"migration $version: step ${s.toString.take(80)} needs a string \"$name\"")
-      n.asText()
-    }
+  private def parseStep(ctx: String, s: JsonNode): Schemas.MigrationStep = {
+    def f(name: String): String = JsonCfg.str(s, name, s"$ctx step ${s.toString.take(80)}")
     f("type") match {
       case "add_column"    => Schemas.AddColumn(f("name"),
         // "expr" is any SQL expression (backfills, derivations);
         // omitted -> typed null, like inferMigration's added columns
-        if (s.hasNonNull("expr")) expr(f("expr"))
+        if (s.has("expr")) expr(f("expr"))
         else lit(null).cast(DataType.fromDDL(f("data_type"))))
       case "drop_column"   => Schemas.DropColumn(f("name"))
       case "rename_column" => Schemas.RenameColumn(f("from"), f("to"))
       case "cast_column"   => Schemas.CastColumn(f("name"), DataType.fromDDL(f("to")))
       case other => throw new IllegalArgumentException(
-        s"migration $version: unknown step type '$other' " +
+        s"$ctx: unknown step type '$other' " +
           "(add_column, drop_column, rename_column, cast_column)")
     }
   }

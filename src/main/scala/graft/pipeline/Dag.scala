@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
+
+import graft.JsonCfg
 
 /** Dependency-ordered multi-job execution — the data-plane half of the
   * reference's dependency scheduling (reference:
@@ -25,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Dag {
 
-  final case class Node(id: String, jobJson: String,
+  /** One DAG node: its id, its parsed job document and upstream ids. */
+  final case class Node(id: String, job: Job.Spec,
                         dependsOn: Seq[String] = Nil)
 
   /** Per-node outcome: `succeeded`, `failed` (error carried), or
@@ -61,7 +63,7 @@ object Dag {
     done.toSeq
   }
 
-  /** Execute the DAG. Each node parses + runs through [[Job]]
+  /** Execute the DAG. Each node runs through [[Job]]
     * (optionally [[Job.runWithHistory]] when `historyDir` is set —
     * node run ids are `<runId>/<node id>`-style `<runId>__<id>` so
     * one DAG run groups in the history). A failed node does not stop
@@ -84,8 +86,8 @@ object Dag {
         try {
           val r = historyDir match {
             case Some(dir) =>
-              Job.runWithHistory(spark, node.jobJson, dir, s"${runId}__$id")
-            case None => Job.runJson(spark, node.jobJson)
+              Job.runWithHistory(spark, node.job, dir, s"${runId}__$id")
+            case None => Job.run(spark, node.job)
           }
           // the node is done: a long DAG must not pin every node's output
           r.close()
@@ -108,27 +110,25 @@ object Dag {
     * ]}
     * }}}
     */
-  def parse(json: String): Seq[Node] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(json)
-    require(root != null && root.isObject && root.hasNonNull("jobs") &&
-      root.get("jobs").isArray, "dag config needs a \"jobs\" array")
-    root.get("jobs").elements().asScala.map { j =>
-      require(j.hasNonNull("id") && j.get("id").isTextual,
-        "each dag job needs a string \"id\"")
-      require(j.hasNonNull("job") && j.get("job").isObject,
-        s"dag job '${j.get("id").asText()}' needs a \"job\" document")
-      // a non-array depends_on (config typo: a bare string) would
-      // silently parse as NO dependencies and break the ordering —
-      // the loud-config contract every other front-end here keeps
-      val deps = Option(j.get("depends_on")).map { d =>
-        require(d.isArray,
-          s"dag job '${j.get("id").asText()}': \"depends_on\" must be an array")
-        d.elements().asScala.map(_.asText()).toSeq
-      }.getOrElse(Nil)
-      Node(j.get("id").asText(),
-        mapper.writeValueAsString(j.get("job")), deps)
-    }.toSeq
+  def parse(json: String): Seq[Node] = parseNode(JsonCfg.read(json, "dag config"))
+
+  /** A DAG document already read. Every node's job document parses
+    * here and the order is checked, so a malformed node or a cycle
+    * fails the whole DAG before any node runs.
+    */
+  private[graft] def parseNode(root: JsonNode): Seq[Node] = {
+    val nodes = JsonCfg.objects(root, "jobs", "dag config").map { j =>
+      val id = JsonCfg.str(j, "id", "dag job")
+      val ctx = s"dag job '$id'"
+      val doc = JsonCfg.obj(j, "job", ctx)
+      val job =
+        try Job.parseNode(doc)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$ctx: ${e.getMessage}", e) }
+      Node(id, job, JsonCfg.identifierList.opt(j, "depends_on", ctx).getOrElse(Nil))
+    }
+    topoOrder(nodes)
+    nodes
   }
 
   def runJson(spark: SparkSession, json: String,

@@ -2,11 +2,11 @@ package graft.pipeline
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.Catalog
+import graft.{Catalog, JsonCfg}
 import graft.quality.{Anomaly, DQ}
 
 /** One-document metadata-driven job — the reference's complete
@@ -28,15 +28,19 @@ import graft.quality.{Anomaly, DQ}
   * }
   * }}}
   *
-  * Each section parses through its existing front-end
-  * ([[graft.Catalog.parseJson]], [[PipelineJson.parse]],
-  * [[graft.quality.DQ.rulesFromJson]],
-  * [[graft.quality.Anomaly.fromJson]]), so a section's dialect is
-  * defined in exactly one place; this runner only sequences them:
-  * register datasets → compose the transform plan → evaluate the DQ
-  * gate on the OUTPUT (one fused agg; throws below min_score) →
+  * [[parse]] reads the document once through [[graft.JsonCfg]] and
+  * hands each section, as a node, to its front-end
+  * ([[graft.Catalog.parseNode]], [[PipelineJson.parseNode]],
+  * [[graft.quality.DQ.rulesFromNode]],
+  * [[graft.quality.Anomaly.parseNode]]), so a section's dialect is
+  * defined in exactly one place. Every section is validated at parse,
+  * the anomaly one included, and so are the pipeline primary and each
+  * join's right side against the declared datasets: a malformed
+  * document fails before any data loads. Unknown top-level keys are a
+  * config error, not silently ignored. [[run]] only sequences the
+  * sections: register datasets → compose the transform plan → evaluate
+  * the DQ gate on the OUTPUT (one fused agg; throws below min_score) →
   * anomaly screen as a side output → optional idempotent sink write.
-  * Unknown top-level keys are a config error, not silently ignored.
   *
   * Reuse: when the document declares a consumer beyond the caller (DQ
   * rules, quarantine, anomaly or sink), [[run]] persists the pipeline
@@ -96,81 +100,69 @@ object Job {
       if (closed.compareAndSet(false, true)) cached.foreach(_.unpersist(blocking = false))
   }
 
-  private val mapper = new ObjectMapper()
   private val knownKeys =
     Set("datasets", "pipeline", "quality", "anomaly", "sink", "incremental",
       "ingest")
 
-  def parse(json: String): Spec = {
-    val root = mapper.readTree(json)
-    require(root != null && root.isObject, "job config must be a JSON object")
+  def parse(json: String): Spec = parseNode(JsonCfg.read(json, "job config"))
+
+  /** A job document already read; each section goes to its front-end
+    * as a node.
+    */
+  private[graft] def parseNode(root: JsonNode): Spec = {
+    import JsonCfg.{num, obj, str}
     val unknown = root.properties().asScala.map(_.getKey).filterNot(knownKeys)
     require(unknown.isEmpty,
       s"job config has unknown top-level keys: ${unknown.mkString(", ")} " +
         s"(known: ${knownKeys.toSeq.sorted.mkString(", ")})")
-    require(root.hasNonNull("datasets"), "job config needs \"datasets\"")
-    require(root.hasNonNull("pipeline"), "job config needs \"pipeline\"")
 
-    val datasets = Catalog.parseJson(json) // reads the "datasets" array
-    val pipeline = PipelineJson.parse(mapper.writeValueAsString(root.get("pipeline")))
+    val datasets = Catalog.parseNode(root)
+    val pipeline = PipelineJson.parseNode(obj(root, "pipeline", "job config"))
+    val declared = datasets.map(_.name).toSet
+    (pipeline.primary +: pipeline.steps.collect { case j: Pipeline.Join => j.rightSource })
+      .foreach(n => require(declared(n), s"pipeline source '$n' is not a declared dataset"))
 
-    val (rules, minScore, quarantine) = Option(root.get("quality")) match {
-      case None => (Seq.empty[DQ.Rule], None, None)
-      case Some(q) =>
-        require(q.hasNonNull("rules"), "\"quality\" needs a \"rules\" array")
-        // rulesFromJson reads the {"rules": [...]} shape — hand it the
-        // quality object itself so the dialect stays defined there
-        val r = DQ.rulesFromJson(mapper.writeValueAsString(q))
-        val ms = Option(q.get("min_score")).map { n =>
-          // Jackson's asDouble coerces junk to 0.0, which would
-          // silently DISABLE the gate — a typo must fail loudly
-          require(n.isNumber, "\"min_score\" must be a number")
-          n.asDouble()
-        }
-        val quar = Option(q.get("quarantine_dir")).map { d =>
-          require(d.isTextual, "\"quarantine_dir\" must be a string")
-          // run_id must be EXPLICIT: quarantine slices are written
-          // idempotently per run id, so a shared default would make
-          // every later run silently REPLACE the previous run's
-          // quarantined evidence before anyone reprocessed it
-          require(q.hasNonNull("run_id") && q.get("run_id").isTextual,
-            "\"quarantine_dir\" requires an explicit string \"run_id\" " +
-              "(a reused id overwrites that run's quarantine slice)")
-          (d.asText(), q.get("run_id").asText())
-        }
+    val quality = obj.opt(root, "quality", "job config")
+    val rules = quality.fold(Seq.empty[DQ.Rule])(DQ.rulesFromNode)
+    // a gate written as a string would otherwise coerce to 0.0 and
+    // silently DISABLE the gate
+    val minScore = quality.flatMap(num.opt(_, "min_score", "quality"))
+    val quarantine = quality.flatMap { q =>
+      str.opt(q, "quarantine_dir", "quality").map { d =>
+        // run_id must be EXPLICIT: quarantine slices are written
+        // idempotently per run id, so a shared default would make
+        // every later run silently REPLACE the previous run's
+        // quarantined evidence before anyone reprocessed it
+        val runId = str(q, "run_id", "quality: quarantine_dir (a reused id " +
+          "overwrites that run's quarantine slice)")
         // the quarantine split needs per-row rules — reject the combo
         // at parse time, not deep in DQ.split mid-run
-        quar.foreach { _ =>
-          val aggOnly = r.filterNot(_.rowLevel).map(_.id)
-          require(aggOnly.isEmpty, "quarantine_dir requires row-level " +
-            s"rules only; aggregate-level: ${aggOnly.mkString(", ")}")
-        }
-        (r, ms, quar)
+        val aggOnly = rules.filterNot(_.rowLevel).map(_.id)
+        require(aggOnly.isEmpty, "quarantine_dir requires row-level " +
+          s"rules only; aggregate-level: ${aggOnly.mkString(", ")}")
+        (d, runId)
+      }
     }
-    val anomaly = Option(root.get("anomaly")).map(mapper.writeValueAsString)
-    val sink = Option(root.get("sink")).map { s =>
-      def str(f: String, dflt: Option[String] = None): String =
-        Option(s.get(f)).map(_.asText()).orElse(dflt).getOrElse(
-          throw new IllegalArgumentException(s"\"sink\" needs \"$f\""))
-      (str("format", Some("parquet")), str("path"),
-        Option(s.get("mode")).map(_.asText()))
+    // validated here, applied by run; the field stays the section's text
+    val anomaly = obj.opt(root, "anomaly", "job config").map { a =>
+      Anomaly.parseNode(a); a.toString
     }
-    val incremental = Option(root.get("incremental")).map { n =>
-      def str(f: String, dflt: Option[String] = None): String =
-        Option(n.get(f)).filter(_.isTextual).map(_.asText()).orElse(dflt)
-          .getOrElse(throw new IllegalArgumentException(
-            s"\"incremental\" needs a string \"$f\""))
-      val spec = IncrementalSpec(str("watermark_store"), str("pipeline_id"),
-        str("source_id"), str("column"), str("strategy", Some("timestamp")))
-      require(datasets.exists(_.name == spec.sourceId),
+    val sink = obj.opt(root, "sink", "job config").map { s =>
+      (str.opt(s, "format", "sink").getOrElse("parquet"), str(s, "path", "sink"),
+        str.opt(s, "mode", "sink"))
+    }
+    val incremental = obj.opt(root, "incremental", "job config").map { n =>
+      def field(f: String): String = str(n, f, "incremental")
+      val spec = IncrementalSpec(field("watermark_store"), field("pipeline_id"),
+        field("source_id"), field("column"),
+        str.opt(n, "strategy", "incremental").getOrElse("timestamp"))
+      require(declared(spec.sourceId),
         s"incremental.source_id '${spec.sourceId}' is not a declared dataset")
       spec
     }
-    val ingest = Option(root.get("ingest")).map { n =>
-      require(n.isObject, "\"ingest\" must be an object (family, history, " +
-        "id, column + per-family knobs — the screen-step dialect)")
-      PipelineJson.parseScreenNode(n, what = "ingest")
-    }
+    // the screen-step dialect (family, history, id, column + per-family knobs)
+    val ingest = obj.opt(root, "ingest", "job config")
+      .map(PipelineJson.parseScreenNode(_, what = "ingest"))
     Spec(datasets, pipeline, rules, minScore, quarantine, anomaly, sink,
       incremental, ingest)
   }
@@ -242,8 +234,6 @@ object Job {
     }
     try {
       pinnedDelta.foreach(_.count())
-      require(sources.contains(spec.pipeline.primary),
-        s"pipeline primary '${spec.pipeline.primary}' is not a declared dataset")
       // Consumer count is STATIC in the spec: DQ gate agg, quarantine
       // split, anomaly screen and sink each re-run the whole pipeline
       // unless its output is cached, so any of them alongside the caller
@@ -505,12 +495,12 @@ object Job {
     * itself run on the driver, not as Spark queries, so they add no
     * entries (the `incremental` section's batch max still does).
     */
-  def runWithHistory(spark: SparkSession, json: String, historyDir: String,
+  def runWithHistory(spark: SparkSession, spec: Spec, historyDir: String,
                      runId: String): Result = {
     val recorder = graft.monitoring.Metrics.attach(spark)
     val started = System.nanoTime()
     var jobError: Throwable = null
-    try run(spark, parse(json))
+    try run(spark, spec)
     catch { case e: Throwable => jobError = e; throw e }
     finally {
       // the bookkeeping below must never REPLACE the job's own

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
+
+import graft.JsonCfg
 
 /** JSON front-end for [[Pipeline]] — the reference's pipelines arrive
   * as config documents (`transform_config` dicts with a `steps` list,
@@ -22,55 +23,61 @@ import scala.jdk.CollectionConverters._
   * `sqltransform`, mirroring the reference's surface).
   */
 object PipelineJson {
+  import JsonCfg.{int, num, str}
 
-  private val mapper = new ObjectMapper()
+  def parse(json: String): Pipeline.Spec =
+    parseNode(JsonCfg.read(json, "pipeline config"))
 
-  def parse(json: String): Pipeline.Spec = {
-    val root = mapper.readTree(json)
-    val steps = root.get("steps").elements().asScala.map(parseStep).toSeq
-    Pipeline.Spec(root.get("primary").asText(), steps)
-  }
+  /** A `{"primary": …, "steps": […]}` object — the pipeline section of
+    * a job document, or a standalone pipeline config.
+    */
+  private[graft] def parseNode(root: JsonNode): Pipeline.Spec =
+    Pipeline.Spec(str(root, "primary", "pipeline"),
+      JsonCfg.objects(root, "steps", "pipeline").zipWithIndex.map {
+        case (s, i) => parseStep(s, s"pipeline step $i")
+      })
 
-  private def strings(n: JsonNode): Seq[String] =
-    n.elements().asScala.map(_.asText()).toSeq
+  // a filter literal: number, boolean or string
+  private val literal = new JsonCfg.Read[Any]("a string, number or boolean",
+    _.isValueNode,
+    n => if (n.isNumber) n.asDouble() else if (n.isBoolean) n.asBoolean() else n.asText())
 
-  private def anyValue(n: JsonNode): Any =
-    if (n.isNumber) n.asDouble() else if (n.isBoolean) n.asBoolean() else n.asText()
-
-  private def parseStep(s: JsonNode): Pipeline.Step = {
-    def str(f: String): String = s.get(f).asText()
-    def opt(f: String): Option[JsonNode] = Option(s.get(f))
-    str("type").toLowerCase match {
+  private def parseStep(s: JsonNode, at: String): Pipeline.Step = {
+    val kind = str(s, "type", at).toLowerCase
+    val ctx = s"$at ($kind)"
+    def text(f: String): String = str(s, f, ctx)
+    def columns(f: String): Seq[String] = JsonCfg.identifiers(s, f, ctx)
+    def mapping(f: String): Map[String, String] = JsonCfg.stringMap(s, f, ctx)
+    kind match {
       case "filter" =>
-        Pipeline.Filter(str("column"), str("op"), anyValue(s.get("value")))
+        Pipeline.Filter(text("column"), text("op"), literal(s, "value", ctx))
       case "daterange" =>
-        Pipeline.DateRange(str("column"), str("start"), str("end"))
+        Pipeline.DateRange(text("column"), text("start"), text("end"))
       case "rename" | "map" =>
-        Pipeline.Rename(s.get("mapping").properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap)
+        Pipeline.Rename(mapping("mapping"))
       case "drop" =>
-        Pipeline.Drop(strings(s.get("columns")))
+        Pipeline.Drop(columns("columns"))
       case "select" =>
-        Pipeline.Select(strings(s.get("columns")))
+        Pipeline.Select(columns("columns"))
       case "typeconversion" | "convert" =>
-        Pipeline.Convert(s.get("typeMapping").properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap)
+        Pipeline.Convert(mapping("typeMapping"))
       case "join" =>
-        Pipeline.Join(str("right"), strings(s.get("on")),
-          opt("how").map(_.asText()).getOrElse("inner"),
-          opt("broadcast").exists(_.asBoolean()))
+        Pipeline.Join(text("right"), columns("on"),
+          str.opt(s, "how", ctx).getOrElse("inner"),
+          JsonCfg.bool.opt(s, "broadcast", ctx).getOrElse(false))
       case "aggregate" =>
-        Pipeline.Aggregate(strings(s.get("groupBy")),
-          s.get("aggs").elements().asScala.map(a =>
-            (a.get("col").asText(), a.get("fn").asText(), a.get("as").asText())).toSeq)
+        Pipeline.Aggregate(JsonCfg.identifierList(s, "groupBy", ctx),
+          JsonCfg.objects(s, "aggs", ctx).map(a =>
+            (str(a, "col", s"$ctx aggs"), str(a, "fn", s"$ctx aggs"),
+              str(a, "as", s"$ctx aggs"))))
       case "sqltransform" =>
-        Pipeline.SqlTransform(str("sql"))
+        Pipeline.SqlTransform(text("sql"))
       case "sql_expr" | "withcolumn" =>
         // ref transform_engine.py:262 execute_custom_udf: the reference
         // compiles a Python code string per row; the Spark answer is a
         // declarative SQL expression -> native codegen'd Column
-        Pipeline.WithColumn(str("name"),
-          org.apache.spark.sql.functions.expr(str("expr")))
+        Pipeline.WithColumn(text("name"),
+          org.apache.spark.sql.functions.expr(text("expr")))
       case "screen" =>
         // r19: the ingest-screen family as a declared step — family,
         // history root, id + content columns; knobs optional per family
@@ -89,32 +96,24 @@ object PipelineJson {
     * section being parsed.
     */
   private[pipeline] def parseScreenNode(s: JsonNode, what: String): Pipeline.Screen = {
-    def str(f: String): String = Option(s.get(f))
-      .filter(n => n.isTextual)
-      .map(_.asText())
-      .getOrElse(throw new IllegalArgumentException(
-        s"""$what needs a string "$f""""))
-    def opt(f: String): Option[JsonNode] = Option(s.get(f))
-    val family = str("family").toLowerCase
+    val family = str(s, "family", what).toLowerCase
     val known = Set("exact", "minhash", "simhash", "image", "audio",
       "semantic")
     require(known(family),
       s"$what family '$family' unknown (${known.toSeq.sorted.mkString(" | ")})")
-    val index = opt("index").map(_.asText())
+    val index = str.opt(s, "index", what)
     require(family != "semantic" || index.isDefined,
       s"$what family 'semantic' needs \"index\" (the persisted quantizer dir)")
-    def num(f: String): Option[JsonNode] = opt(f).map { n =>
-      require(n.isNumber, s"$what \"$f\" must be a number"); n
-    }
-    Pipeline.Screen(family, str("history"), str("id"), str("column"),
-      num("threshold").map(_.asDouble()),
-      num("max_hamming").map(_.asInt()), index,
-      num("nprobe").map(_.asInt()).getOrElse(1),
+    Pipeline.Screen(family, str(s, "history", what), str(s, "id", what),
+      str(s, "column", what),
+      num.opt(s, "threshold", what),
+      int.opt(s, "max_hamming", what), index,
+      int.opt(s, "nprobe", what).getOrElse(1),
       // signature-shape knobs — must match how the history was
       // built (declared, so a stored document carries them)
-      num("ngram_n").map(_.asInt()),
-      num("num_hashes").map(_.asInt()),
-      num("bands").map(_.asInt()),
-      opt("algo").map(_.asText()))
+      int.opt(s, "ngram_n", what),
+      int.opt(s, "num_hashes", what),
+      int.opt(s, "bands", what),
+      str.opt(s, "algo", what))
   }
 }

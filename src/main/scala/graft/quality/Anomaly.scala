@@ -1,9 +1,11 @@
 package graft.quality
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.JsonCfg
 import graft.functions.Det
 
 /** Anomaly detection: Spark-native re-expression of the reference's
@@ -30,30 +32,28 @@ object Anomaly {
     * is deliberately replaced by the paper's deterministic score
     * cutoff — see [[IsolationForest.detect]]).
     */
-  def fromJson(df: DataFrame, json: String): DataFrame = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val c = mapper.readTree(json)
-    def str(f: String): String = {
-      require(c.has(f), s"anomaly config missing '$f'")
-      c.get(f).asText()
-    }
-    // absent -> default, present-but-not-a-number -> LOUD failure
-    // (Jackson's asDouble would coerce a typo to 0.0 — e.g. a zscore
-    // threshold of 0 flags half the table with no error)
-    def num(f: String, dflt: Double): Double =
-      if (!c.has(f)) dflt
-      else {
-        require(c.get(f).isNumber, s"anomaly config: '$f' must be a number")
-        c.get(f).asDouble()
-      }
+  def fromJson(df: DataFrame, json: String): DataFrame =
+    parseNode(JsonCfg.read(json, "anomaly config"))(df)
+
+  /** Validate a config (method, its column(s), numeric knobs; an absent
+    * knob takes its default) and return the detector it names, without
+    * touching data.
+    */
+  private[graft] def parseNode(c: JsonNode): DataFrame => DataFrame = {
+    val ctx = "anomaly config"
+    def knob(f: String, dflt: Double): Double = JsonCfg.num.opt(c, f, ctx).getOrElse(dflt)
     // Locale.ROOT: dispatch on user config must not vary with JVM locale
-    str("method").toLowerCase(java.util.Locale.ROOT) match {
-      case "zscore" => zscore(df, str("column"), num("threshold", 3.0))
-      case "iqr"    => iqr(df, str("column"), num("multiplier", 1.5))
+    JsonCfg.str(c, "method", ctx).toLowerCase(java.util.Locale.ROOT) match {
+      case "zscore" =>
+        val (column, threshold) = (JsonCfg.str(c, "column", ctx), knob("threshold", 3.0))
+        zscore(_, column, threshold)
+      case "iqr" =>
+        val (column, multiplier) = (JsonCfg.str(c, "column", ctx), knob("multiplier", 1.5))
+        iqr(_, column, multiplier)
       case "isolation_forest" =>
-        IsolationForest.detect(df,
-          JsonCfg.identifierArray(c, "columns", "isolation_forest config"),
-          threshold = num("threshold", 0.6))
+        val (columns, threshold) =
+          (JsonCfg.identifiers(c, "columns", ctx), knob("threshold", 0.6))
+        IsolationForest.detect(_, columns, threshold = threshold)
       case other =>
         throw new IllegalArgumentException(s"unknown anomaly method '$other'")
     }

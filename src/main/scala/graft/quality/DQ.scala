@@ -1,8 +1,10 @@
 package graft.quality
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.JsonCfg
 import graft.functions.Det
 
 /** Data-quality engine: the Spark-native re-expression of the
@@ -220,47 +222,37 @@ object DQ {
     * ]}
     * }}}
     */
-  def rulesFromJson(json: String): Seq[Rule] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(json)
-    require(root.has("rules"), "rule config needs a 'rules' array")
-    root.get("rules").elements().asScala.map { r =>
-      def str(f: String): String = {
-        require(r.has(f), s"rule ${r.get("rule_id")} missing '$f'")
-        r.get(f).asText()
-      }
-      // every malformed field fails LOUDLY with the rule id — Jackson's
-      // asDouble would otherwise coerce a typo'd/missing number to 0.0
-      // (a range rule silently becoming [0, 0])
-      def num(f: String): Double = {
-        require(r.has(f), s"rule ${r.get("rule_id")} missing '$f'")
-        require(r.get(f).isNumber, s"rule ${r.get("rule_id")}: '$f' must be a number")
-        r.get(f).asDouble()
-      }
-      val id = str("rule_id")
-      val pct = if (r.has("threshold")) num("threshold") else 0.0
+  def rulesFromJson(json: String): Seq[Rule] =
+    rulesFromNode(JsonCfg.read(json, "rule config"))
+
+  /** The `rules` array of a rule config or of a job's quality section. */
+  private[graft] def rulesFromNode(root: JsonNode): Seq[Rule] = {
+    import JsonCfg.{num, str}
+    JsonCfg.objects(root, "rules", "rule config").map { r =>
+      val id = str(r, "rule_id", "rule")
+      val ctx = s"rule $id"
+      def text(f: String): String = str(r, f, ctx)
+      val pct = num.opt(r, "threshold", ctx).getOrElse(0.0)
       // Locale.ROOT: config dispatch must not depend on the JVM locale
       // (tr-TR lowercases "I" to a dotless ı, breaking the match)
-      str("type").toLowerCase(java.util.Locale.ROOT) match {
+      text("type").toLowerCase(java.util.Locale.ROOT) match {
         case "completeness" | "not_null" =>
-          NotNull(id, str("column"), pct)
+          NotNull(id, text("column"), pct)
         case "range" =>
-          ValueRange(id, str("column"), num("min"), num("max"), pct)
+          ValueRange(id, text("column"), num(r, "min", ctx), num(r, "max", ctx), pct)
         case "pattern" | "regex" =>
-          RegexMatch(id, str("column"), str("pattern"), pct)
+          RegexMatch(id, text("column"), text("pattern"), pct)
         case "allowed_values" =>
-          AllowedValues(id, str("column"),
-            JsonCfg.stringArray(r, "values", s"rule $id"), pct)
+          AllowedValues(id, text("column"), JsonCfg.scalars(r, "values", ctx), pct)
         case "consistency" =>
-          CrossField(id, if (r.has("name")) str("name") else id,
-            expr(str("condition")), pct)
+          CrossField(id, str.opt(r, "name", ctx).getOrElse(id),
+            expr(text("condition")), pct)
         case "uniqueness" =>
-          UniqueKeys(id, JsonCfg.identifierArray(r, "columns", s"rule $id"), pct)
+          UniqueKeys(id, JsonCfg.identifiers(r, "columns", ctx), pct)
         case other =>
           throw new IllegalArgumentException(s"unknown rule type '$other' ($id)")
       }
-    }.toSeq
+    }
   }
 
   /** Run every rule in ONE aggregation pass over `df`.

@@ -544,9 +544,9 @@ class PipelineSourcesSpec extends SparkSpec {
     // history integration: the job's actions land in RunHistory under
     // the run id, even when the quality gate throws
     val hist = Files.createTempDirectory("graft_jobhist").toString + "/history"
-    Job.runWithHistory(spark, doc(0.0), hist, "job_ok")
+    Job.runWithHistory(spark, Job.parse(doc(0.0)), hist, "job_ok")
     intercept[graft.quality.DQ.QualityGateException](
-      Job.runWithHistory(spark, doc(100.0), hist, "job_gated"))
+      Job.runWithHistory(spark, Job.parse(doc(100.0)), hist, "job_gated"))
     val h = graft.monitoring.RunHistory.load(spark, hist)
     // the unconditional top-level entry: ok run not failed, gated failed
     assert(h.filter(col("run_id") === "job_ok" && col("query") === "job" &&
@@ -1051,6 +1051,98 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(chain.exists(_.contains("reassignSemanticHistory")), chain)
   }
 
+  test("config front-ends: a missing, null or wrong-typed field, a duplicate key and trailing content fail naming the field") {
+    import graft.pipeline.{Dag, Job, PipelineJson}
+    import graft.quality.{Anomaly, DQ}
+    val job = """{"datasets": [{"name": "d", "format": "parquet", "path": "p"}],
+                | "pipeline": {"primary": "d", "steps": []}@}""".stripMargin
+    val validJob = job.replace("@", "")
+    val vdf = Seq(1.0).toDF("v")
+    // front-end, parse, document with @ where the field goes, the
+    // required field, a valid value, a wrong-typed value
+    val required: Seq[(String, String => Any, String, String, String, String)] = Seq(
+      ("catalog", Catalog.parseJson,
+        """{"datasets": [{"name": "x", "format": "parquet"@}]}""", "path", "\"p\"", "{}"),
+      ("pipeline", PipelineJson.parse, """{"primary": "d"@}""", "steps", "[]", "{}"),
+      ("filter step", PipelineJson.parse,
+        """{"primary": "d", "steps": [{"type": "filter", "column": "c", "op": "="@}]}""",
+        "value", "1", "[1]"),
+      ("rename step", PipelineJson.parse,
+        """{"primary": "d", "steps": [{"type": "rename"@}]}""",
+        "mapping", """{"a": "b"}""", """["a"]"""),
+      ("join step", PipelineJson.parse,
+        """{"primary": "d", "steps": [{"type": "join", "right": "r"@}]}""",
+        "on", """["k"]""", "\"k\""),
+      ("screen step", PipelineJson.parse,
+        """{"primary": "d", "steps": [{"type": "screen", "family": "exact",
+          | "history": "h", "id": "i"@}]}""".stripMargin, "column", "\"c\"", "1"),
+      ("dq rules", DQ.rulesFromJson,
+        """{"rules": [{"rule_id": "r", "type": "range", "column": "x", "min": 0@}]}""",
+        "max", "1", "\"ten\""),
+      ("anomaly", (j: String) => Anomaly.fromJson(vdf, j),
+        """{"method": "zscore"@}""", "column", "\"v\"", "7"),
+      ("job sink", Job.parse, job.replace("@", """, "sink": {"format": "parquet"@}"""),
+        "path", "\"o\"", "{}"),
+      ("job anomaly", Job.parse, job.replace("@", """, "anomaly": {"method": "iqr"@}"""),
+        "column", "\"v\"", "[\"v\"]"),
+      ("dag", Dag.parse, """{"jobs": [{"id": "a"@}]}""", "job", validJob, "\"j\""),
+      ("dag node", Dag.parse,
+        s"""{"jobs": [{"id": "a", "job": ${job.replace("@", """, "sink": {@}""")}}]}""",
+        "path", "\"o\"", "{}"),
+      ("schema doc", SchemaDoc.parse,
+        """{"version": "v1", "steps": [{"type": "drop_column"@}]}""", "name", "\"a\"", "1"))
+    def fails(parse: String => Any, doc: String): String =
+      intercept[IllegalArgumentException](parse(doc)).getMessage
+    required.foreach { case (name, parse, doc, field, valid, wrong) =>
+      def at(v: String) = doc.replace("@", s""", "$field": $v""").replace("{, ", "{")
+      parse(at(valid))
+      Seq("missing" -> doc.replace("@", ""), "null" -> at("null"),
+        "wrong type" -> at(wrong), "duplicate" -> at(s"""$valid, "$field": $valid"""))
+        .foreach { case (what, bad) =>
+          val msg = fails(parse, bad)
+          assert(msg.contains(field), s"$name, $what: $msg")
+        }
+      assert(fails(parse, at(valid) + " {}").contains("Trailing"), name)
+    }
+    // optional fields: absent is fine, the wrong type is not
+    val optional: Seq[(String => Any, String, String)] = Seq(
+      (PipelineJson.parse, """{"primary": "d", "steps": [{"type": "join", "right": "r",
+        | "on": ["k"], "broadcast": "yes"}]}""".stripMargin, "broadcast"),
+      (Catalog.parseJson, """{"datasets": [{"name": "x", "format": "csv",
+        | "path": "p", "options": ["header"]}]}""".stripMargin, "options"),
+      (Job.parse, job.replace("@", """, "quality": {"rules": [], "min_score": "90"}"""),
+        "min_score"),
+      (Job.parse, job.replace("@", """, "anomaly": {"method": "zscore", "column": "v",
+        | "threshold": "3"}""".stripMargin), "threshold"),
+      (Dag.parse, s"""{"jobs": [{"id": "a", "depends_on": "b", "job": $validJob}]}""",
+        "depends_on"))
+    optional.foreach { case (parse, doc, field) =>
+      val msg = fails(parse, doc)
+      assert(msg.contains(field), msg)
+    }
+    // the pipeline's sources must be declared datasets, joins included
+    assert(fails(Job.parse, validJob.replace("\"steps\": []",
+      """"steps": [{"type": "join", "right": "ghost", "on": ["k"]}]"""))
+      .contains("'ghost' is not a declared dataset"))
+  }
+
+  test("Dag: a malformed node fails the parse before any node runs") {
+    import graft.pipeline.Dag
+    val tmp = Files.createTempDirectory("graft_dagbad").toString
+    def node(id: String, deps: String, sink: String) =
+      s"""{"id": "$id", "depends_on": [$deps], "job": {
+         | "datasets": [{"name": "o", "format": "parquet",
+         |               "path": "${TestSession.sfDir}/orders.parquet"}],
+         | "pipeline": {"primary": "o", "steps": []},
+         | "sink": {"path": $sink}}}""".stripMargin
+    val dag = s"""{"jobs": [${node("a_first", "", s""""$tmp/a"""")},
+                 |  ${node("b_second", "\"a_first\"", "{}")}]}""".stripMargin
+    val err = intercept[IllegalArgumentException](Dag.runJson(spark, dag))
+    assert(err.getMessage.contains("b_second") && err.getMessage.contains("path"),
+      err.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/a")))
+  }
+
   test("Dag: dependency-ordered jobs, failure skips downstream, branches isolate") {
     import graft.pipeline.Dag
     val sfDir = TestSession.sfDir
@@ -1097,12 +1189,14 @@ class PipelineSourcesSpec extends SparkSpec {
 
     // declaration errors fail loudly before anything runs
     import graft.pipeline.Dag.Node
+    val noop = graft.pipeline.Job.Spec(Nil, Pipeline.Spec("x", Nil), Nil,
+      None, None, None, None)
     intercept[IllegalArgumentException](Dag.topoOrder(Seq(
-      Node("a", "{}", Seq("b")), Node("b", "{}", Seq("a")))))
+      Node("a", noop, Seq("b")), Node("b", noop, Seq("a")))))
     intercept[IllegalArgumentException](Dag.topoOrder(Seq(
-      Node("a", "{}", Seq("ghost")))))
+      Node("a", noop, Seq("ghost")))))
     intercept[IllegalArgumentException](Dag.topoOrder(Seq(
-      Node("a", "{}"), Node("a", "{}"))))
+      Node("a", noop), Node("a", noop))))
   }
 
   test("Recovery retry: classification drives the policy; fallback rethrows primary") {

@@ -486,9 +486,11 @@ object PropertySpec extends Properties("graft") {
       // random DAG: node i may depend only on nodes < i (acyclic by
       // construction), edge pattern driven by the seed
       val rnd = new scala.util.Random(seed)
+      val noop = graft.pipeline.Job.Spec(Nil, graft.pipeline.Pipeline.Spec("x", Nil),
+        Nil, None, None, None, None)
       val nodes = (0 until n).map { i =>
         val deps = (0 until i).filter(_ => rnd.nextBoolean()).map(d => s"n$d")
-        Dag.Node(s"n$i", "{}", deps)
+        Dag.Node(s"n$i", noop, deps)
       }
       val order = Dag.topoOrder(nodes)
       val pos = order.zipWithIndex.toMap

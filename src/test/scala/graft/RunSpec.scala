@@ -93,6 +93,27 @@ class RunSpec extends SparkSpec {
     assert(failOut.contains("gate=failed") && failOut.contains("after=skipped_upstream"))
   }
 
+  test("run: a malformed job document or DAG node exits 2 and runs nothing") {
+    val sink = Files.createTempDirectory("graft_run_bad").toString
+    val badJob = jobDoc(0.0, Some(s"$sink/job"))
+      .replace("\"min_score\": 0.0", "\"min_score\": \"0\"")
+    val (jobCode, jobOut) = cli("run", writeDoc(badJob))
+    assert(jobCode == 2 && jobOut.contains("invalid document") &&
+      jobOut.contains("min_score"), jobOut)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$sink/job")))
+    // the second node's filter has no "value": the first never runs
+    val badDag = writeDoc(
+      s"""{"jobs": [
+         |  {"id": "a_first", "job": ${jobDoc(0.0, Some(s"$sink/a"))}},
+         |  {"id": "b_second", "depends_on": ["a_first"],
+         |   "job": ${jobDoc(0.0).replace(", \"value\": 1000", "")}}
+         |]}""".stripMargin)
+    val (dagCode, dagOut) = cli("run", badDag)
+    assert(dagCode == 2 && dagOut.contains("b_second") && dagOut.contains("value"),
+      dagOut)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$sink/a")))
+  }
+
   test("validate: parses without running; bad documents exit 2") {
     val (okCode, okOut) = cli("validate", writeDoc(jobDoc(0.0)))
     assert(okCode == 0 && okOut.contains("valid job: 1 dataset(s), 2 step(s)"))
