@@ -78,6 +78,9 @@ object GraftSession {
       prev.unpersist(blocking = false)
   }
 
+  /** [[persistIfSmall]]'s default budget: 32 MiB on every host. */
+  private[graft] val SmallPersistBytes: Long = 32L << 20
+
   /** Size-aware persist (r16): cache `df` only when the optimizer's
     * size estimate says it is a SMALL frame — re-derive it from the
     * scan otherwise. Resolves the r15 tension between two truths:
@@ -89,18 +92,18 @@ object GraftSession {
     *
     * The estimate is `optimizedPlan.stats.sizeInBytes` — for the
     * scan-derived frames this is meant for, a file-size-based figure
-    * (driver-side, no job). The budget defaults to maxMemory/1024
-    * (~32 MB under the 32 g bench JVM), set by A/B measurement of the
-    * LOF/ocsvm consumers: at sf0.1 the cache saves ~2 s/query, at sf1
-    * it is a wash, and at sf10 (estimates 50-300 MB) materializing
+    * (driver-side, no job). The budget is [[SmallPersistBytes]],
+    * 32 MiB, set by r16's A/B measurement of the LOF/ocsvm consumers
+    * under the 32 g bench JVM: at sf0.1 the cache saves ~2 s/query, at
+    * sf1 it is a wash, and at sf10 (estimates 50-300 MB) materializing
     * the deserialized cache costs MORE than the codegen'd kernel
     * re-derivations it saves (+2 s/query measured) — so the budget
     * sits just above the win region, and a 100 TB-shaped input
     * (estimate ≫ budget by orders of magnitude) can never qualify.
-    * Override with `spark.graft.smallPersistBytes` (set ≤ 0 to
-    * disable persisting entirely — the pure re-derive shape,
-    * spec-pinned equal); on a cluster whose executors are sized very
-    * differently from the driver JVM, set it explicitly.
+    * A fixed constant, not a share of the host's heap, so every JVM
+    * plans the same frame the same way. Override with
+    * `spark.graft.smallPersistBytes` (set ≤ 0 to disable persisting
+    * entirely — the pure re-derive shape, spec-pinned equal).
     */
   def persistIfSmall(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (isSmall(df)) df.persist() else df
@@ -116,7 +119,7 @@ object GraftSession {
   def isSmall(df: org.apache.spark.sql.DataFrame): Boolean = {
     val budget = df.sparkSession.conf
       .getOption("spark.graft.smallPersistBytes").map(_.trim.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory() / 1024)
+      .getOrElse(SmallPersistBytes)
     budget > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget
   }
 

@@ -58,6 +58,11 @@ private[graft] object JsonCfg {
     v.isArray && v.size() >= minSize && elements(v).forall(el)
 
   val str = new Read[String]("a string", _.isTextual, _.asText())
+  /** A string from an enumerated set: `ok` is the definition the
+    * executor dispatches on, `want` describes it in the error.
+    */
+  def choice(want: String)(ok: String => Boolean) =
+    new Read[String](want, v => v.isTextual && ok(v.asText()), _.asText())
   val num = new Read[Double]("a number", _.isNumber, _.asDouble())
   val int = new Read[Int]("a whole number",
     v => v.isIntegralNumber && v.canConvertToInt, _.asInt())

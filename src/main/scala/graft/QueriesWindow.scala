@@ -183,9 +183,9 @@ object QueriesWindow {
     try q.processAllAvailable() finally q.stop()
     val bad = graft.streaming.Streams.quarantinedRows(s, s"$tmp/quarantine")
       .drop("batch_id")
-    // batchSlices, not a raw read: a crashed mid-swap replay leaves
-    // __staging/__old siblings that partition discovery would parse
-    // as bogus batch_id values — both sides must heal identically
+    // batchSlices, not a raw read: a replay that crashed mid-swap
+    // leaves its slice only as a hidden staged or retired copy, which
+    // a raw read skips — both sides must heal identically
     val clean = graft.streaming.Streams.batchSlices(s, cleanPath, "clean-sink")
       .drop("batch_id")
     (clean, bad)

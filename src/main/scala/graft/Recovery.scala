@@ -10,49 +10,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * idempotent — there is no partial state to resume from, only
   * complete versions. (Streaming jobs get the same property from
   * checkpointed offsets + these idempotent sinks — see
-  * [[graft.streaming.Streams]].)
+  * [[graft.streaming.Streams]].) Every swap stages and retires in
+  * hidden siblings of its target, and only this object builds or
+  * parses their names; [[slices]] is the one reader of a root written
+  * slice by slice. Torn state under the visible sibling names earlier
+  * versions used still heals.
   */
 object Recovery {
 
-  /** Write `df` to `path` atomically: materialize to a staging dir,
-    * retire the old target to `path__old`, promote staging, drop the
-    * retiree. A complete state always exists on disk: a crash before
-    * promotion leaves the old target in place (at `path` or, in the
-    * one-rename window, at `path__old`); [[restoreIfTorn]] heals that
-    * window on the next run. (A bare delete-then-rename would lose the
-    * target entirely if the writer died between the two calls.)
+  /** Write `df` to `path` atomically: materialize to the hidden staging
+    * sibling `parent/.name__staging`, retire the old target to
+    * `parent/.name__old`, promote staging, drop the retiree. Spark's
+    * file listing and partition discovery skip dot-prefixed paths, so
+    * neither transient directory is ever visible to a reader: a plain
+    * `spark.read.parquet` of the enclosing dataset (a `run_id=` or
+    * `batch_id=` slice root, a hive tree) never sees a staged or
+    * retired copy as a bogus partition value with duplicated rows.
+    * A complete state always exists on disk: a crash before promotion
+    * leaves the old target in place (at `path` or, in the one-rename
+    * window, at the retiree); [[restoreIfTorn]] heals that window on
+    * the next run. (A bare delete-then-rename would lose the target
+    * entirely if the writer died between the two calls.) `options`
+    * reach the writer (text formats need e.g. header/delimiter).
     */
-  def idempotentWrite(df: DataFrame, path: String, format: String = "parquet"): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    atomicSwap(df, target, plainSiblings(target), format)
-  }
-
-  /** Heal the one-rename crash window of [[idempotentWrite]]: target
-    * missing but a retired `__old` (or a COMPLETE staging dir, marked
-    * by its _SUCCESS commit file) still present. Prefers the staged
-    * new state — it only reaches that window after a fully committed
-    * write. No-op when the target exists.
-    */
-  def restoreIfTorn(spark: SparkSession, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    healTorn(spark, target, plainSiblings(target))
-  }
-
-  // ---- the ONE swap/heal core both naming schemes share -----------
-
-  private def fsOf(spark: SparkSession,
-                   p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    // the PATH's filesystem, never the default one: an s3a:// dataset
-    // on an hdfs-default cluster must not resolve against HDFS
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def atomicSwap(df: DataFrame, target: org.apache.hadoop.fs.Path,
-                         siblings: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path),
-                         format: String,
-                         options: Map[String, String] = Map.empty): Unit = {
+  def idempotentWrite(df: DataFrame, path: String, format: String = "parquet",
+                      options: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
+    val target = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, target)
-    val (tmp, old) = siblings
+    val (tmp, old) = siblings(target)
     fs.delete(tmp, true)
     df.write.format(format).options(options).mode("overwrite").save(tmp.toString)
     fs.delete(old, true)
@@ -69,27 +55,108 @@ object Recovery {
     fs.delete(old, true)
   }
 
-  private def healTorn(spark: SparkSession, target: org.apache.hadoop.fs.Path,
-                       siblings: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)): Unit = {
-    val fs = fsOf(spark, target)
-    if (!fs.exists(target)) {
-      val (tmp, old) = siblings
-      val staged = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      if (fs.exists(staged)) {
-        // only drop the retiree once the promote actually landed — on
-        // a failed rename the old copy may be the last complete state
-        if (!fs.rename(tmp, target))
-          throw new java.io.IOException(s"heal failed: $tmp -> $target")
-        fs.delete(old, true)
-      } else if (fs.exists(old) && !fs.rename(old, target))
-        throw new java.io.IOException(s"heal failed: $old -> $target")
-    }
+  /** Heal the one-rename crash window of [[idempotentWrite]]: target
+    * missing but a retiree (or a COMPLETE staging dir, marked by its
+    * _SUCCESS commit file) still present. Prefers the staged new state
+    * — it only reaches that window after a fully committed write.
+    * Also heals the visible `name__staging`/`name__old` siblings
+    * earlier versions swapped through, so torn state they left still
+    * recovers. No-op when the target exists.
+    */
+  def restoreIfTorn(spark: SparkSession, path: String): Unit = {
+    val target = new org.apache.hadoop.fs.Path(path)
+    heal(fsOf(spark, target), target)
   }
 
-  private def plainSiblings(target: org.apache.hadoop.fs.Path)
+  /** The healed, existing `key=value` slices directly under `root`
+    * (qualified paths, sorted), keeping only values `keep` accepts —
+    * the one reader of a slice root written slice by slice through
+    * [[idempotentWrite]] (quarantine `run_id=` areas, stream
+    * `batch_id=` roots). A torn slice shows only as a swap sibling, so
+    * every sibling folds back to its slice name before the filter;
+    * each kept slice is then healed, and one that heals to nothing (a
+    * staging dir that never committed) is skipped. Empty when `root`
+    * does not exist.
+    */
+  private[graft] def slices(spark: SparkSession, root: String, key: String)
+                           (keep: String => Boolean = _ => true): Seq[String] = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(spark, rootPath)
+    val prefix = s"$key="
+    val children =
+      if (fs.exists(rootPath)) fs.listStatus(rootPath).toSeq.map(_.getPath) else Nil
+    val listed = children.map(_.toString).toSet
+    children
+      // hidden siblings, then the legacy visible ones
+      .map(p => hiddenSwapTarget(p).orElse(unsuffixed(p, p.getName)).getOrElse(p))
+      .filter(_.getName.startsWith(prefix))
+      .map(_.toString).distinct.sorted
+      // a listed slice exists; only one seen through a sibling needs a heal
+      .filter(p => keep(p.substring(p.lastIndexOf('/') + 1 + prefix.length)) &&
+        (listed(p) || heal(fs, new org.apache.hadoop.fs.Path(p))))
+  }
+
+  private def fsOf(spark: SparkSession,
+                   p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+    // the PATH's filesystem, never the default one: an s3a:// dataset
+    // on an hdfs-default cluster must not resolve against HDFS
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Restore a missing `target` from its hidden siblings, else from
+    * the legacy visible ones; true when `target` exists afterwards.
+    */
+  private def heal(fs: org.apache.hadoop.fs.FileSystem,
+                   target: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(target) || Seq(siblings(target), legacySiblings(target)).exists {
+      case (tmp, old) =>
+        if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
+          // only drop the retiree once the promote actually landed — on
+          // a failed rename the old copy may be the last complete state
+          if (!fs.rename(tmp, target))
+            throw new java.io.IOException(s"heal failed: $tmp -> $target")
+          fs.delete(old, true)
+          true
+        } else if (fs.exists(old)) {
+          if (!fs.rename(old, target))
+            throw new java.io.IOException(s"heal failed: $old -> $target")
+          true
+        } else false
+    }
+
+  private def siblings(target: org.apache.hadoop.fs.Path)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = (
+    child(target.getParent, s".${target.getName}__staging"),
+    child(target.getParent, s".${target.getName}__old"))
+
+  // a path-only child: a name holding ':' (a run id stamped with a
+  // time) must not parse as a URI scheme
+  private def child(parent: org.apache.hadoop.fs.Path, name: String) =
+    new org.apache.hadoop.fs.Path(parent, new org.apache.hadoop.fs.Path(null, null, name))
+
+  // the visible names earlier versions swapped through — read, never written
+  private def legacySiblings(target: org.apache.hadoop.fs.Path)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = (
     new org.apache.hadoop.fs.Path(target.toString + "__staging"),
     new org.apache.hadoop.fs.Path(target.toString + "__old"))
+
+  /** Parse a hidden swap-sibling name back to its target — the ONE
+    * place [[siblings]]' naming is reversed (used by [[slices]] and by
+    * the compaction sweep to discover torn leaves). None if `p` is not
+    * a hidden swap dir.
+    */
+  private[graft] def hiddenSwapTarget(p: org.apache.hadoop.fs.Path)
+      : Option[org.apache.hadoop.fs.Path] =
+    if (p.getName.startsWith(".")) unsuffixed(p, p.getName.stripPrefix("."))
+    else None
+
+  // strip exactly ONE suffix: a target whose own name ends in __old
+  // (".k=legacy__old__staging") must not collapse twice
+  private def unsuffixed(p: org.apache.hadoop.fs.Path, name: String)
+      : Option[org.apache.hadoop.fs.Path] =
+    Seq("__staging", "__old").collectFirst {
+      case s if name.endsWith(s) =>
+        child(p.getParent, name.stripSuffix(s))
+    }
 
   /** Quarantine the failed side of a [[graft.quality.DQ.split]] —
     * ref error_recovery.py:345-376 quarantine_bad_records: persist the
@@ -132,24 +199,10 @@ object Recovery {
         restoreIfTorn(spark, p)
         Seq(p)
       case None =>
-        // whole-area read: a crashed quarantine write can leave
-        // run_id=X__old / __staging siblings that partition discovery
-        // would treat as (duplicate-carrying) bogus partition values —
-        // heal each torn run slice, then read ONLY the real slices
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = fsOf(spark, root)
-        val children =
-          if (fs.exists(root)) fs.listStatus(root).toSeq.map(_.getPath.toString)
-          else Seq.empty
-        children
-          .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("run_id="))
-          .map(_.stripSuffix("__old").stripSuffix("__staging"))
-          .distinct.sorted
-          .map { p => restoreIfTorn(spark, p); p }
-          // an INCOMPLETE staging dir (crash mid-write, no _SUCCESS)
-          // heals to nothing — there was never a complete slice to
-          // recover; skip it rather than fail the whole-area read
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+        // whole-area read: ONLY the healed real slices, never a swap
+        // sibling; a staging dir that never committed (crash
+        // mid-write) heals to nothing and is skipped
+        slices(spark, dir, "run_id")()
     }
     require(paths.nonEmpty, s"no quarantine slices under $dir")
     val raw = spark.read.option("basePath", dir).parquet(paths: _*)
@@ -164,61 +217,10 @@ object Recovery {
     */
   def runStage(spark: SparkSession, path: String, format: String = "parquet")
               (stage: => DataFrame): DataFrame = {
-    restoreIfTorn(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
-    if (!fsOf(spark, target).exists(target))
+    if (!heal(fsOf(spark, target), target))
       idempotentWrite(stage, path, format)
     spark.read.format(format).load(path)
-  }
-
-  /** [[idempotentWrite]] with DOT-PREFIXED staging/retire names
-    * (`parent/.name__staging`, `parent/.name__old`). Spark's file
-    * listing and partition discovery skip dot/underscore paths, so
-    * the transient directories are INVISIBLE to concurrent readers —
-    * required when `path` is a leaf of a hive tree (a plain
-    * `name__staging` sibling would surface as a bogus partition
-    * value and double-count rows mid-swap). Same one-rename crash
-    * window as [[idempotentWrite]]; callers heal with
-    * [[restoreHiddenIfTorn]] before reading/sweeping the dataset.
-    */
-  def idempotentWriteHidden(df: DataFrame, path: String,
-                            format: String = "parquet",
-                            options: Map[String, String] = Map.empty): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    atomicSwap(df, target, hiddenSiblings(target), format, options)
-  }
-
-  /** Heal the crash window of [[idempotentWriteHidden]] (same policy
-    * as [[restoreIfTorn]]: prefer a COMPLETE hidden staging dir, else
-    * the hidden retiree). No-op when the target exists.
-    */
-  def restoreHiddenIfTorn(spark: SparkSession, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    healTorn(spark, target, hiddenSiblings(target))
-  }
-
-  private def hiddenSiblings(target: org.apache.hadoop.fs.Path)
-      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = (
-    new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}__staging"),
-    new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}__old"))
-
-  /** Parse a hidden swap-sibling name back to its target — the ONE
-    * place [[hiddenSiblings]]' naming is reversed (used by the
-    * compaction sweep to discover torn leaves). None if `name` is not
-    * a hidden swap dir.
-    */
-  private[graft] def hiddenSwapTarget(p: org.apache.hadoop.fs.Path)
-      : Option[org.apache.hadoop.fs.Path] = {
-    val n = p.getName
-    // strip exactly ONE suffix: a target whose own name ends in __old
-    // (".k=legacy__old__staging") must not collapse twice
-    if (n.startsWith(".") && n.endsWith("__staging"))
-      Some(new org.apache.hadoop.fs.Path(p.getParent,
-        n.stripPrefix(".").stripSuffix("__staging")))
-    else if (n.startsWith(".") && n.endsWith("__old"))
-      Some(new org.apache.hadoop.fs.Path(p.getParent,
-        n.stripPrefix(".").stripSuffix("__old")))
-    else None
   }
 
   // ---- retry / classification (ref error_recovery.py:157-257) -----

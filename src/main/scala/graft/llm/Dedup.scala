@@ -1179,35 +1179,27 @@ object Dedup {
     val (cents, v) = Ivf.loadIndexVersioned(spark, indexDir)
     val rootPath = new org.apache.hadoop.fs.Path(historyRoot)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return 0
-    val slices = fs.listStatus(rootPath).toSeq.map(_.getPath.toString)
-      .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("batch_id="))
-      .map(_.stripSuffix("__old").stripSuffix("__staging"))
-      .distinct.sorted
+    val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")()
     // a plain (un-sliced) history dir is one slice: the root itself —
-    // unless it is EMPTY (pre-created by an operator, nothing ingested
-    // yet): nothing to re-assign, and a parquet read of an empty dir
-    // would throw instead of no-op'ing the maintenance turn
+    // when it holds Spark-visible entries and no slice. An EMPTY root
+    // (pre-created by an operator, nothing ingested yet) or one holding
+    // only a slice that never committed has nothing to re-assign, and
+    // a parquet read of it would throw instead of no-op'ing the turn
     val targets =
-      if (slices.nonEmpty) slices
-      else if (fs.listStatus(rootPath).nonEmpty) Seq(historyRoot)
-      else Seq.empty
-    var rewritten = 0
+      if (slices.nonEmpty || !fs.exists(rootPath)) slices
+      else fs.listStatus(rootPath).map(_.getPath.getName)
+        .find(n => !n.startsWith(".") && !n.startsWith("_") && !n.startsWith("batch_id="))
+        .map(_ => historyRoot).toSeq
     targets.foreach { p =>
-      graft.Recovery.restoreIfTorn(spark, p)
-      if (fs.exists(new org.apache.hadoop.fs.Path(p))) {
-        val df = spark.read.parquet(p)
-        val keep = df.drop("__cid", "__iv")
-        // assignToCentroids appends __cid per row, preserving every
-        // other column — id column name irrelevant to the kernel
-        val re = Ivf.assignToCentroids(keep, keep.columns.head, vecCol,
-            cents, "__cid", "__cvec")
-          .withColumn("__iv", lit(v))
-        graft.Recovery.idempotentWrite(re, p)
-        rewritten += 1
-      }
+      val keep = spark.read.parquet(p).drop("__cid", "__iv")
+      // assignToCentroids appends __cid per row, preserving every
+      // other column — id column name irrelevant to the kernel
+      val re = Ivf.assignToCentroids(keep, keep.columns.head, vecCol,
+          cents, "__cid", "__cvec")
+        .withColumn("__iv", lit(v))
+      graft.Recovery.idempotentWrite(re, p)
     }
-    rewritten
+    targets.size
   }
 
   // ---- benchmark decontamination -------------------------------------
@@ -1463,8 +1455,8 @@ object Dedup {
         .select(col("node"), least(col("component"), col("__nbmin")).as("component"))
         .localCheckpoint()
       converged = next
-        .join(labels.withColumnRenamed("component", "__old"), Seq("node"))
-        .filter(col("component") =!= col("__old"))
+        .join(labels.withColumnRenamed("component", "__prev"), Seq("node"))
+        .filter(col("component") =!= col("__prev"))
         .isEmpty
       dropCheckpoint(labels)
       labels = next

@@ -176,17 +176,24 @@ object Ops {
     df.groupBy(groupCols.map(col): _*).agg(exprs.head, exprs.tail: _*)
   }
 
-  private def aggExpr(c: String, f: String): Column = f.toLowerCase match {
-    case "sum"            => sum(col(c))
-    case "sum_money"      => graft.functions.Det.sumMoney(col(c))
-    case "mean" | "avg"   => avg(col(c))
-    case "count"          => count(col(c))
-    case "count_distinct" => countDistinct(col(c))
-    case "min"            => min(col(c))
-    case "max"            => max(col(c))
-    case "first"          => first(col(c))
-    case other            => throw new IllegalArgumentException(s"Unsupported agg: $other")
-  }
+  /** The aggregate functions [[groupAgg]], [[rollupAgg]] and [[cubeAgg]]
+    * accept, by lower-cased name — also what a job document's `fn` is
+    * checked against at parse.
+    */
+  private[graft] val aggFunctions: Map[String, Column => Column] = Map(
+    "sum"            -> (sum(_: Column)),
+    "sum_money"      -> graft.functions.Det.sumMoney,
+    "mean"           -> (avg(_: Column)),
+    "avg"            -> (avg(_: Column)),
+    "count"          -> (count(_: Column)),
+    "count_distinct" -> (countDistinct(_: Column)),
+    "min"            -> (min(_: Column)),
+    "max"            -> (max(_: Column)),
+    "first"          -> (first(_: Column)))
+
+  private def aggExpr(c: String, f: String): Column =
+    aggFunctions.getOrElse(f.toLowerCase,
+      throw new IllegalArgumentException(s"Unsupported agg: $f"))(col(c))
 
   /** Pivot with explicit pivot values (explicit values keep the plan a
     * single pass — no extra distinct-scan to discover them — and make

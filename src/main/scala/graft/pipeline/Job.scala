@@ -106,6 +106,12 @@ object Job {
 
   def parse(json: String): Spec = parseNode(JsonCfg.read(json, "job config"))
 
+  // the modes run's sink dispatch accepts: the atomic swap, else
+  // FileSink.write's save modes
+  private val sinkMode = JsonCfg.choice("\"atomic\" or one of " +
+    graft.sources.FileSink.saveModes.keys.toSeq.sorted.mkString(" | "))(m =>
+    m == "atomic" || graft.sources.FileSink.saveModes.contains(m.toLowerCase))
+
   /** A job document already read; each section goes to its front-end
     * as a node.
     */
@@ -149,7 +155,7 @@ object Job {
     }
     val sink = obj.opt(root, "sink", "job config").map { s =>
       (str.opt(s, "format", "sink").getOrElse("parquet"), str(s, "path", "sink"),
-        str.opt(s, "mode", "sink"))
+        sinkMode.opt(s, "mode", "sink"))
     }
     val incremental = obj.opt(root, "incremental", "job config").map { n =>
       def field(f: String): String = str(n, f, "incremental")
@@ -381,7 +387,6 @@ object Job {
         "micro-batches); the watermark ledger belongs to batch runs")
     val unsupported = spec.pipeline.steps.collect {
       case _: Pipeline.Aggregate => "aggregate"
-      case _: Pipeline.Pivot => "pivot"
       case _: Pipeline.Rank => "rank"
       case _: Pipeline.Lag => "lag"
       case _: Pipeline.RunningTotal => "running_total"

@@ -33,8 +33,6 @@ object Pipeline {
                         how: String = "inner", broadcastRight: Boolean = false) extends Step
   /** ref aggregate step: (inputCol, fn, alias) */
   final case class Aggregate(groupBy: Seq[String], aggs: Seq[(String, String, String)]) extends Step
-  final case class Pivot(index: Seq[String], pivotCol: String,
-                         pivotValues: Seq[String], valueCol: String, fn: String) extends Step
   /** ref window step */
   final case class Rank(partitionBy: Seq[String], orderBy: Seq[String],
                         dense: Boolean = false, alias: String = "rank") extends Step
@@ -97,8 +95,6 @@ object Pipeline {
         case Convert(m)             => Ops.convertTypes(df, m)
         case Join(r, on, how, bc)   => Ops.join(df, sources(r), on, how, bc)
         case Aggregate(g, aggs)     => Ops.groupAgg(df, g, aggs)
-        case Pivot(i, pc, pv, v, f) =>
-          Ops.pivot(df, i, pc, pv, aggColumn(v, f))
         case Rank(p, o, d, a)       => Ops.rankWithin(df, p, o.map(orderCol), d, a)
         case Lag(c, p, o, off, a)   => Ops.lagLead(df, c, p, o.map(orderCol), off, a)
         case RunningTotal(c, p, o, a) => Ops.runningTotal(df, c, p, o.map(orderCol), a)
@@ -197,19 +193,6 @@ object Pipeline {
       case other => throw new IllegalArgumentException(
         s"Unsupported screen family: $other " +
           "(exact | minhash | simhash | image | audio | semantic)")
-    }
-  }
-
-  private def aggColumn(c: String, f: String): Column = {
-    import org.apache.spark.sql.functions._
-    f.toLowerCase match {
-      case "sum"          => sum(col(c))
-      case "sum_money"    => graft.functions.Det.sumMoney(col(c))
-      case "mean" | "avg" => avg(col(c))
-      case "count"        => count(col(c))
-      case "min"          => min(col(c))
-      case "max"          => max(col(c))
-      case other          => throw new IllegalArgumentException(s"Unsupported agg: $other")
     }
   }
 

@@ -42,6 +42,15 @@ object PipelineJson {
     _.isValueNode,
     n => if (n.isNumber) n.asDouble() else if (n.isBoolean) n.asBoolean() else n.asText())
 
+  // checked against what the executors dispatch on: Spark's own join
+  // type parser (Dataset.join's) and Ops' aggregate table
+  private val joinType = JsonCfg.choice("a Spark join type (inner, left, " +
+    "right, full, left_semi, left_anti, cross, …)")(h =>
+    scala.util.Try(org.apache.spark.sql.catalyst.plans.JoinType(h)).isSuccess)
+  private val aggFunction = JsonCfg.choice("one of " +
+    graft.operators.Ops.aggFunctions.keys.toSeq.sorted.mkString(" | "))(f =>
+    graft.operators.Ops.aggFunctions.contains(f.toLowerCase))
+
   private def parseStep(s: JsonNode, at: String): Pipeline.Step = {
     val kind = str(s, "type", at).toLowerCase
     val ctx = s"$at ($kind)"
@@ -63,12 +72,12 @@ object PipelineJson {
         Pipeline.Convert(mapping("typeMapping"))
       case "join" =>
         Pipeline.Join(text("right"), columns("on"),
-          str.opt(s, "how", ctx).getOrElse("inner"),
+          joinType.opt(s, "how", ctx).getOrElse("inner"),
           JsonCfg.bool.opt(s, "broadcast", ctx).getOrElse(false))
       case "aggregate" =>
         Pipeline.Aggregate(JsonCfg.identifierList(s, "groupBy", ctx),
           JsonCfg.objects(s, "aggs", ctx).map(a =>
-            (str(a, "col", s"$ctx aggs"), str(a, "fn", s"$ctx aggs"),
+            (str(a, "col", s"$ctx aggs"), aggFunction(a, "fn", s"$ctx aggs"),
               str(a, "as", s"$ctx aggs"))))
       case "sqltransform" =>
         Pipeline.SqlTransform(text("sql"))

@@ -63,6 +63,16 @@ object FileSource {
 
 object FileSink {
 
+  /** The save modes [[write]] accepts, by lower-cased name (Spark's
+    * own `DataFrameWriter.mode` names).
+    */
+  private[graft] val saveModes: Map[String, org.apache.spark.sql.SaveMode] = {
+    import org.apache.spark.sql.SaveMode._
+    Map("overwrite" -> Overwrite, "append" -> Append, "ignore" -> Ignore,
+      "error" -> ErrorIfExists, "errorifexists" -> ErrorIfExists,
+      "default" -> ErrorIfExists)
+  }
+
   /** Write with optional partition columns — ref file_connector.py:203.
     * `partitionBy` produces the hive-layout directory tree that makes
     * downstream partition pruning work; pair it with a sensible
@@ -71,6 +81,8 @@ object FileSink {
   def write(df: DataFrame, format: String, path: String,
             mode: String = "overwrite", partitionBy: Seq[String] = Nil,
             options: Map[String, String] = Map.empty): Unit = {
+    val saveMode = saveModes.getOrElse(mode.toLowerCase,
+      throw new IllegalArgumentException(s"Unsupported save mode: $mode"))
     val fmt = format.toLowerCase
     if (fmt == "excel" || fmt == "xlsx") {
       // single-workbook write (the format's own row cap bounds it);
@@ -82,7 +94,7 @@ object FileSink {
       val defaults =
         if (fmt == "xml") Map("rowTag" -> "ROW") // required by the XML datasource; matches FileSource's read default
         else Map.empty[String, String]
-      val w = df.write.format(fmt).mode(mode).options(defaults ++ options)
+      val w = df.write.format(fmt).mode(saveMode).options(defaults ++ options)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
     }
   }
@@ -173,20 +185,10 @@ object FileSink {
       .write.format(format).mode(mode).save(path)
   }
 
-  /** Small-file compaction — the operational sweep every long-lived
-    * 100 TB dataset needs (streaming sinks and incremental appends
-    * accrete kilobyte files; a million tiny files makes listing and
-    * scan planning the bottleneck, not IO). Reads the dataset,
-    * coalesces to ceil(bytes/targetFileBytes) partitions (coalesce:
-    * no shuffle — it only merges read splits), and atomically swaps
-    * the rewritten copy in via [[graft.Recovery.idempotentWrite]]'s
-    * temp-dir + rename, so readers never observe a half-compacted
-    * dataset. Returns (filesBefore, filesAfter).
-    */
   /** Data files under `root`, excluding anything inside a hidden
     * (dot/underscore-prefixed) path component — what Spark's own
-    * listing would read. Keeps compaction from sweeping the atomic
-    * swap's transient `.x__staging`/`.x__old` directories back in.
+    * listing would read. Keeps compaction from sweeping an atomic
+    * swap's hidden staging or retired directory back in.
     */
   private def visibleDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path)
@@ -209,6 +211,18 @@ object FileSink {
     files
   }
 
+  /** Small-file compaction — the operational sweep every long-lived
+    * 100 TB dataset needs (streaming sinks and incremental appends
+    * accrete kilobyte files; a million tiny files makes listing and
+    * scan planning the bottleneck, not IO). Reads the dataset,
+    * coalesces to ceil(bytes/targetFileBytes) partitions (coalesce:
+    * no shuffle — it only merges read splits), and atomically swaps
+    * the rewritten copy in via [[graft.Recovery.idempotentWrite]]'s
+    * hidden staging dir + rename, so readers never observe a
+    * half-compacted dataset (nor, mid-swap, a staged copy as a bogus
+    * partition of an enclosing hive tree). Returns
+    * (filesBefore, filesAfter).
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
               format: String = "parquet",
@@ -218,7 +232,7 @@ object FileSink {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
     // heal a previous crashed sweep before reading anything
-    graft.Recovery.restoreHiddenIfTorn(spark, root.toString)
+    graft.Recovery.restoreIfTorn(spark, root.toString)
     val before = visibleDataFiles(fs, root)
     // ANY nested layout (hive partitions, or plain subdirectories)
     // must be compacted per leaf directory — a whole-tree rewrite
@@ -238,7 +252,7 @@ object FileSink {
     // options reach BOTH sides (text formats need e.g. header/delimiter
     // to round-trip); string-typed csv/json reads keep values verbatim
     val df = spark.read.format(format).options(options).load(path).coalesce(parts)
-    graft.Recovery.idempotentWriteHidden(df, path, format, options)
+    graft.Recovery.idempotentWrite(df, path, format, options)
     (before.size.toLong, visibleDataFiles(fs, root).size.toLong)
   }
 
@@ -271,7 +285,7 @@ object FileSink {
         }
       }
     hiddenSwapTargets(root).distinct
-      .foreach(t => graft.Recovery.restoreHiddenIfTorn(spark, t.toString))
+      .foreach(t => graft.Recovery.restoreIfTorn(spark, t.toString))
     val leaves = visibleDataFiles(fs, root).map(_.getPath.getParent).distinct
     require(leaves.nonEmpty, s"no data files under $path")
     val results = leaves.sortBy(_.toString)

@@ -165,27 +165,17 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
         // watermark state is kept PER BATCH (the cumulative max as of
         // each batch id), and a batch reads the newest slice BELOW its
         // own id — so a checkpoint replay of batch N sees exactly the
         // horizon it saw the first time, and the late/on-time split is
         // replay-DETERMINISTIC (a single mutable state would have
         // advanced past N and reclassified rows on replay)
-        val stateRoot = new org.apache.hadoop.fs.Path(statePath)
-        val priorId: Option[Long] =
-          if (!fs.exists(stateRoot)) None
-          else fs.listStatus(stateRoot).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("batch_id="))
-            .map(_.stripPrefix("batch_id=")
-              .stripSuffix("__old").stripSuffix("__staging").toLong)
-            .distinct.filter(_ < batchId).sorted.lastOption
-        val prevMax: Option[java.sql.Timestamp] = priorId.flatMap { id =>
-          val p = s"$statePath/batch_id=$id"
-          graft.Recovery.restoreIfTorn(spark, p)
-          spark.read.parquet(p).collect().headOption.map(_.getTimestamp(0))
-        }
+        val prevMax: Option[java.sql.Timestamp] =
+          graft.Recovery.slices(spark, statePath, "batch_id")(_.toLong < batchId)
+            .maxByOption(p => p.substring(p.lastIndexOf('=') + 1).toLong)
+            .flatMap(p => spark.read.parquet(p).collect().headOption
+              .map(_.getTimestamp(0)))
         val df = graft.functions.Times.ensureTimestamp(batch.toDF(), tsCol)
         val isLate = prevMax.fold(lit(false))(m =>
           coalesce(col(tsCol) <= lit(m) - expr(s"INTERVAL '$delay'"), lit(false)))
@@ -208,37 +198,28 @@ object Streams {
       .start()
   }
 
-  /** Everything landed on the late side across all batches so far.
-    * Reads only REAL batch slices: a crashed swap's lingering
-    * `batch_id=N__old` / `__staging` siblings are healed (complete
-    * staging promoted, retiree restored) and never double-counted as
-    * bogus partition values.
+  /** Everything landed on the late side across all batches so far:
+    * every healed `batch_id=N` slice, read through
+    * [[graft.Recovery.slices]], so a crashed swap's staged or retired
+    * copy is promoted or restored, never double-counted.
     */
   def lateRows(spark: SparkSession, latePath: String): DataFrame =
     readBatchSlices(spark, latePath, "late-data")
 
-  /** Heal + read every `batch_id=N` slice under `root` (the shared
+  /** Read every healed `batch_id=N` slice under `root` (the shared
     * side-output layout of [[lateSideOutput]], [[quarantineStream]]
-    * and [[graft.pipeline.Job.runStream]]'s sink): torn swaps
-    * restored, lingering staging/retiree siblings never
-    * double-counted.
+    * and [[graft.pipeline.Job.runStream]]'s sink) through
+    * [[graft.Recovery.slices]]: torn swaps restored, no slice read
+    * twice.
     */
   def batchSlices(spark: SparkSession, root: String,
                   what: String = "batch-slice"): DataFrame =
     readBatchSlices(spark, root, what)
 
+  /** The one reader behind [[lateRows]] and [[batchSlices]]. */
   private def readBatchSlices(spark: SparkSession, root: String,
                               what: String): DataFrame = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val slices =
-      (if (fs.exists(rootPath)) fs.listStatus(rootPath).toSeq.map(_.getPath.toString)
-       else Seq.empty)
-        .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("batch_id="))
-        .map(_.stripSuffix("__old").stripSuffix("__staging"))
-        .distinct.sorted
-        .map { p => graft.Recovery.restoreIfTorn(spark, p); p }
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val slices = graft.Recovery.slices(spark, root, "batch_id")()
     require(slices.nonEmpty, s"no $what slices under $root")
     spark.read.option("basePath", root).parquet(slices: _*)
   }
@@ -383,19 +364,9 @@ object Streams {
     */
   def compactSignatureHistory(spark: SparkSession, root: String,
                               upToBatch: Long): Int = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return 0
-    val slices = fs.listStatus(rootPath).toSeq.map(_.getPath.toString)
-      .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("batch_id="))
-      .map(_.stripSuffix("__old").stripSuffix("__staging"))
-      .distinct.sorted
-      .filter { p =>
-        val id = p.substring(p.lastIndexOf('=') + 1).toLong
-        id == -1L || id <= upToBatch
-      }
-      .map { p => graft.Recovery.restoreIfTorn(spark, p); p }
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val slices = graft.Recovery.slices(spark, root, "batch_id") { v =>
+      v.toLong == -1L || v.toLong <= upToBatch
+    }
     // nothing to fold below the watermark, or only the seed itself
     // (endsWith, not string equality: listStatus paths come back
     // scheme-qualified — file:/..., hdfs://... — so comparing against
@@ -408,9 +379,10 @@ object Streams {
     // the FULL new seed beside it first and only then swaps names, so
     // the scan never races the replace
     graft.Recovery.idempotentWrite(merged, s"$root/batch_id=-1")
-    slices.filterNot(_.endsWith("batch_id=-1")).foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    slices.filterNot(_.endsWith("batch_id=-1"))
+      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
     slices.count(!_.endsWith("batch_id=-1"))
   }
 
@@ -438,17 +410,7 @@ object Streams {
     */
   private def signatureHistory(spark: SparkSession, root: String,
                                exclude: Long): Option[DataFrame] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val slices =
-      (if (fs.exists(rootPath)) fs.listStatus(rootPath).toSeq.map(_.getPath.toString)
-       else Seq.empty)
-        .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("batch_id="))
-        .map(_.stripSuffix("__old").stripSuffix("__staging"))
-        .distinct.sorted
-        .filterNot(_.endsWith(s"batch_id=$exclude"))
-        .map { p => graft.Recovery.restoreIfTorn(spark, p); p }
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val slices = graft.Recovery.slices(spark, root, "batch_id")(_ != exclude.toString)
     if (slices.isEmpty) None
     else Some(spark.read.option("basePath", root).parquet(slices: _*))
   }

@@ -1116,7 +1116,15 @@ class PipelineSourcesSpec extends SparkSpec {
         | "threshold": "3"}""".stripMargin), "threshold"),
       (Dag.parse, s"""{"jobs": [{"id": "a", "depends_on": "b", "job": $validJob}]}""",
         "depends_on"))
-    optional.foreach { case (parse, doc, field) =>
+    // an enumerated field rejects a value its executor does not know
+    val unknownValue: Seq[(String => Any, String, String)] = Seq(
+      (Job.parse, job.replace("@", """, "sink": {"path": "o", "mode": "apend"}"""), "mode"),
+      (PipelineJson.parse, """{"primary": "d", "steps": [{"type": "join", "right": "r",
+        | "on": ["k"], "how": "innner"}]}""".stripMargin, "how"),
+      (PipelineJson.parse, """{"primary": "d", "steps": [{"type": "aggregate",
+        | "groupBy": ["k"], "aggs": [{"col": "v", "fn": "summ", "as": "s"}]}]}""".stripMargin,
+        "fn"))
+    (optional ++ unknownValue).foreach { case (parse, doc, field) =>
       val msg = fails(parse, doc)
       assert(msg.contains(field), msg)
     }
@@ -1646,6 +1654,22 @@ class PipelineSourcesSpec extends SparkSpec {
     Recovery.restoreIfTorn(spark, p)
     assert(spark.read.parquet(p).count() == table("nation").count())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "__old")))
+    // the hidden retiree a crash inside idempotentWrite leaves heals too
+    fs.rename(new org.apache.hadoop.fs.Path(p), new org.apache.hadoop.fs.Path(s"$dir/.state__old"))
+    Recovery.restoreIfTorn(spark, p)
+    assert(spark.read.parquet(p).count() == table("nation").count())
+    assert(new java.io.File(dir).list().toSeq == Seq("state"))
+    // a relative target swaps and heals beside itself
+    val rel = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(dir, "rel")).toString
+    assert(!rel.startsWith("/"))
+    Recovery.idempotentWrite(table("region"), rel)
+    Recovery.idempotentWrite(table("nation"), rel)
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("rel", "state"))
+    fs.rename(new org.apache.hadoop.fs.Path(rel), new org.apache.hadoop.fs.Path(s"$dir/.rel__old"))
+    Recovery.restoreIfTorn(spark, rel)
+    assert(spark.read.parquet(s"$dir/rel").count() == table("nation").count())
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("rel", "state"))
   }
 
   test("Recovery quarantine + reprocess round-trips failed rows through the rules") {
@@ -1701,6 +1725,52 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(allBad.count() ==
       nBad + math.min(3, nBad) + math.min(2, nBad))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/run_id=run_003")))
+  }
+
+  test("Recovery: a swap crashed between retire and promote stays invisible to plain reads and heals exactly once") {
+    import graft.quality.DQ
+    import graft.streaming.Streams
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[PromoteCrashFs].getName)
+    val tmp = Files.createTempDirectory("graft_crashfs").toString
+    // run the real idempotentWrite with its promote rename failing
+    def crashed(target: String)(write: => Unit): Unit = {
+      PromoteCrashFs.armed = Some(new org.apache.hadoop.fs.Path(target).toUri.getPath)
+      try intercept[java.io.IOException](write)
+      finally PromoteCrashFs.armed = None
+    }
+    val ids = spark.range(0, 100).toDF("id")
+
+    // a quarantine area: run r2's retry crashes mid-swap
+    val quar = s"crashfs://$tmp/quarantine"
+    val rules = Seq(DQ.ValueRange("small", "id", 0, 9))
+    Recovery.quarantine(ids.filter(col("id").between(10, 12)), quar, "r1")
+    Recovery.quarantine(ids.filter(col("id").between(20, 21)), quar, "r2:retry")
+    crashed(s"$quar/run_id=r2:retry") {
+      Recovery.quarantine(ids.filter(col("id").between(30, 33)), quar, "r2:retry")
+    }
+    val plainQ = spark.read.parquet(quar)
+    assert(plainQ.select("run_id").distinct().as[String].collect().toSeq == Seq("r1"))
+    assert(plainQ.count() == plainQ.select("id").distinct().count())
+    val (_, stillBad) = Recovery.reprocess(spark, quar, rules)
+    assert(stillBad.select("id").as[Long].collect().sorted.toSeq ==
+      Seq(10L, 11L, 12L, 30L, 31L, 32L, 33L))
+
+    // a batch_id slice root: batch 1's replay crashes mid-swap
+    val slices = s"crashfs://$tmp/slices"
+    Recovery.idempotentWrite(ids.filter(col("id") < 2), s"$slices/batch_id=0")
+    Recovery.idempotentWrite(ids.filter(col("id").between(40, 42)), s"$slices/batch_id=1")
+    crashed(s"$slices/batch_id=1") {
+      Recovery.idempotentWrite(ids.filter(col("id").between(50, 54)), s"$slices/batch_id=1")
+    }
+    val plainS = spark.read.parquet(slices)
+    assert(plainS.select(col("batch_id").cast("string")).distinct().as[String]
+      .collect().toSeq == Seq("0"))
+    assert(plainS.count() == plainS.select("id").distinct().count())
+    val healed = Streams.batchSlices(spark, slices)
+    assert(healed.select("id").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 50L, 51L, 52L, 53L, 54L))
+    assert(healed.filter(col("batch_id") === 1).count() == 5)
   }
 
   test("typed Dataset ops compose with the untyped library surface") {

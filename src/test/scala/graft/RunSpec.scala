@@ -114,6 +114,31 @@ class RunSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$sink/a")))
   }
 
+  test("an unknown sink mode, join type or aggregate exits 2 on validate and run, before any write") {
+    val tmp = Files.createTempDirectory("graft_run_enum").toString
+    val quarantine = s"$tmp/quarantine"
+    val doc = jobDoc(0.0, Some(s"$tmp/out")).replace("\"min_score\": 0.0",
+      s""""min_score": 0.0, "quarantine_dir": "$quarantine", "run_id": "r1"""")
+    val select = """{"type": "select", "columns": ["o_orderkey", "o_orderstatus"]}"""
+    Seq(
+      "mode" -> doc.replace("\"atomic\"", "\"apend\""),
+      "how" -> doc.replace(select, """{"type": "join", "right": "ro",
+        | "on": ["o_orderkey"], "how": "innner"}, """.stripMargin + select),
+      "fn" -> doc.replace(select, select + """, {"type": "aggregate",
+        | "groupBy": ["o_orderstatus"],
+        | "aggs": [{"col": "o_orderkey", "fn": "summ", "as": "n"}]}""".stripMargin))
+      .foreach { case (field, bad) =>
+        val path = writeDoc(bad)
+        Seq("validate", "run").foreach { verb =>
+          val (code, out) = cli(verb, path)
+          assert(code == 2 && out.contains("invalid document") && out.contains(field),
+            s"$verb, $field: $out")
+        }
+      }
+    assert(!Files.exists(java.nio.file.Paths.get(quarantine)))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/out")))
+  }
+
   test("validate: parses without running; bad documents exit 2") {
     val (okCode, okOut) = cli("validate", writeDoc(jobDoc(0.0)))
     assert(okCode == 0 && okOut.contains("valid job: 1 dataset(s), 2 step(s)"))
