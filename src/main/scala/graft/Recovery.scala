@@ -10,9 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * idempotent — there is no partial state to resume from, only
   * complete versions. (Streaming jobs get the same property from
   * checkpointed offsets + these idempotent sinks — see
-  * [[graft.streaming.Streams]].) Every swap stages and retires in
-  * hidden siblings of its target, and only this object builds or
-  * parses their names; [[slices]] is the one reader of a root written
+  * [[graft.streaming.Streams]].) Every swap — a directory here, the
+  * IVF index descriptor file in [[graft.llm.Ivf.saveIndex]] — runs
+  * through [[swap]] and [[heal]], stages and retires in hidden
+  * siblings of its target, and only this object builds or parses
+  * their names; [[slices]] is the one reader of a root written
   * slice by slice. Torn state under the visible sibling names earlier
   * versions used still heals.
   */
@@ -35,24 +37,10 @@ object Recovery {
     */
   def idempotentWrite(df: DataFrame, path: String, format: String = "parquet",
                       options: Map[String, String] = Map.empty): Unit = {
-    val spark = df.sparkSession
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, target)
-    val (tmp, old) = siblings(target)
-    fs.delete(tmp, true)
-    df.write.format(format).options(options).mode("overwrite").save(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(s"could not retire old state: $target -> $old")
-    if (!fs.rename(tmp, target)) {
-      // roll back so a complete state stays readable; a failed
-      // rollback must surface too — the retiree is the only copy left
-      if (fs.exists(old) && !fs.rename(old, target))
-        throw new java.io.IOException(
-          s"atomic swap failed AND rollback failed: state is at $old, not $target")
-      throw new java.io.IOException(s"atomic swap failed: $tmp -> $target")
+    swap(fsOf(df.sparkSession, target), target) { tmp =>
+      df.write.format(format).options(options).mode("overwrite").save(tmp.toString)
     }
-    fs.delete(old, true)
   }
 
   /** Heal the one-rename crash window of [[idempotentWrite]]: target
@@ -67,6 +55,75 @@ object Recovery {
     val target = new org.apache.hadoop.fs.Path(path)
     heal(fsOf(spark, target), target)
   }
+
+  /** Replace `target` — a directory or a single file — by rename; the
+    * one swap for everything the engine publishes that way: `stage`
+    * writes the new state to the hidden staging sibling, the old
+    * target retires to the hidden retiree, staging is promoted and the
+    * retiree dropped. A promote that lost its race to a concurrent
+    * [[heal]] (which promoted this very staging) counts as done; any
+    * other promote that returns false rolls the retiree back and
+    * throws.
+    */
+  private[graft] def swap(fs: org.apache.hadoop.fs.FileSystem,
+                          target: org.apache.hadoop.fs.Path)
+                         (stage: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val (tmp, old) = siblings(target)
+    fs.delete(tmp, true)
+    stage(tmp)
+    fs.delete(old, true)
+    if (fs.exists(target) && !fs.rename(target, old))
+      throw new java.io.IOException(s"could not retire old state: $target -> $old")
+    if (!promote(fs, tmp, target)) {
+      // roll back so a complete state stays readable; a failed
+      // rollback must surface too — the retiree is the only copy left
+      if (fs.exists(old) && !fs.rename(old, target))
+        throw new java.io.IOException(
+          s"atomic swap failed AND rollback failed: state is at $old, not $target")
+      throw new java.io.IOException(s"atomic swap failed: $tmp -> $target")
+    }
+    fs.delete(old, true)
+  }
+
+  /** Restore a missing `target` from its hidden siblings, else from
+    * the legacy visible ones; true when `target` exists afterwards. A
+    * staged copy wins when `complete` accepts it (a directory: its
+    * `_SUCCESS` commit file), else the retiree is restored.
+    */
+  private[graft] def heal(fs: org.apache.hadoop.fs.FileSystem,
+                          target: org.apache.hadoop.fs.Path,
+                          complete: (org.apache.hadoop.fs.FileSystem,
+                                     org.apache.hadoop.fs.Path) => Boolean = committed)
+      : Boolean =
+    fs.exists(target) || Seq(siblings(target), legacySiblings(target)).exists {
+      case (tmp, old) =>
+        def from(src: org.apache.hadoop.fs.Path): Boolean = {
+          if (!promote(fs, src, target))
+            throw new java.io.IOException(s"heal failed: $src -> $target")
+          true
+        }
+        if (complete(fs, tmp)) {
+          // only drop the retiree once the promote actually landed — on
+          // a failed rename the old copy may be the last complete state
+          from(tmp)
+          fs.delete(old, true)
+          true
+        } else fs.exists(old) && from(old)
+    }
+
+  /** Rename `src` onto `target`. A rename that fails — false, or a
+    * FileNotFoundException for a `src` already moved — while `target`
+    * exists afterwards was done by a concurrent healer: true.
+    */
+  private def promote(fs: org.apache.hadoop.fs.FileSystem,
+                      src: org.apache.hadoop.fs.Path,
+                      target: org.apache.hadoop.fs.Path): Boolean =
+    try fs.rename(src, target) || fs.exists(target)
+    catch { case _: java.io.FileNotFoundException if fs.exists(target) => true }
+
+  private def committed(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
 
   /** The healed, existing `key=value` slices directly under `root`
     * (qualified paths, sorted), keeping only values `keep` accepts —
@@ -96,32 +153,27 @@ object Recovery {
         (listed(p) || heal(fs, new org.apache.hadoop.fs.Path(p))))
   }
 
+  /** What a reader of a history `root` reads: its [[slices]], or else
+    * `root` itself (healed) when it holds a Spark-visible entry — a
+    * plain, un-sliced dataset. Empty when there is nothing to read: no
+    * root, an empty one, or one holding only a slice that never
+    * committed, which a parquet read of the root would fail on.
+    */
+  private[graft] def slicesOrRoot(spark: SparkSession, root: String,
+                                  key: String): Seq[String] = {
+    val found = slices(spark, root, key)()
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(spark, rootPath)
+    if (found.nonEmpty || !heal(fs, rootPath)) found
+    else fs.listStatus(rootPath).map(_.getPath.getName)
+      .find(n => !n.startsWith(".") && !n.startsWith("_")).map(_ => root).toSeq
+  }
+
   private def fsOf(spark: SparkSession,
                    p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
     // the PATH's filesystem, never the default one: an s3a:// dataset
     // on an hdfs-default cluster must not resolve against HDFS
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Restore a missing `target` from its hidden siblings, else from
-    * the legacy visible ones; true when `target` exists afterwards.
-    */
-  private def heal(fs: org.apache.hadoop.fs.FileSystem,
-                   target: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(target) || Seq(siblings(target), legacySiblings(target)).exists {
-      case (tmp, old) =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-          // only drop the retiree once the promote actually landed — on
-          // a failed rename the old copy may be the last complete state
-          if (!fs.rename(tmp, target))
-            throw new java.io.IOException(s"heal failed: $tmp -> $target")
-          fs.delete(old, true)
-          true
-        } else if (fs.exists(old)) {
-          if (!fs.rename(old, target))
-            throw new java.io.IOException(s"heal failed: $old -> $target")
-          true
-        } else false
-    }
 
   private def siblings(target: org.apache.hadoop.fs.Path)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = (
@@ -149,11 +201,23 @@ object Recovery {
     if (p.getName.startsWith(".")) unsuffixed(p, p.getName.stripPrefix("."))
     else None
 
+  private val swapSuffixes = Seq("__staging", "__old")
+
+  /** `runId` when it can name one quarantine slice: a non-empty path
+    * segment with no swap-sibling suffix, which [[slices]] would fold
+    * into another run's slice name.
+    */
+  private[graft] def checkRunId(runId: String): String = {
+    require(runId.nonEmpty && !runId.contains("/") && !swapSuffixes.exists(runId.endsWith),
+      s"run_id must be a non-empty path segment not ending in __old or __staging, got '$runId'")
+    runId
+  }
+
   // strip exactly ONE suffix: a target whose own name ends in __old
   // (".k=legacy__old__staging") must not collapse twice
   private def unsuffixed(p: org.apache.hadoop.fs.Path, name: String)
       : Option[org.apache.hadoop.fs.Path] =
-    Seq("__staging", "__old").collectFirst {
+    swapSuffixes.collectFirst {
       case s if name.endsWith(s) =>
         child(p.getParent, name.stripSuffix(s))
     }
@@ -169,9 +233,7 @@ object Recovery {
     * same property from its uuid quarantine_id per call).
     */
   def quarantine(quarantined: DataFrame, dir: String, runId: String): String = {
-    require(runId.nonEmpty && !runId.contains("/"),
-      s"runId must be a non-empty path segment, got '$runId'")
-    val path = s"$dir/run_id=$runId"
+    val path = s"$dir/run_id=${checkRunId(runId)}"
     idempotentWrite(
       quarantined.withColumn("quarantined_at", org.apache.spark.sql.functions
         .current_timestamp()),

@@ -1177,19 +1177,7 @@ object Dedup {
                               historyRoot: String, indexDir: String,
                               vecCol: String): Int = {
     val (cents, v) = Ivf.loadIndexVersioned(spark, indexDir)
-    val rootPath = new org.apache.hadoop.fs.Path(historyRoot)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")()
-    // a plain (un-sliced) history dir is one slice: the root itself —
-    // when it holds Spark-visible entries and no slice. An EMPTY root
-    // (pre-created by an operator, nothing ingested yet) or one holding
-    // only a slice that never committed has nothing to re-assign, and
-    // a parquet read of it would throw instead of no-op'ing the turn
-    val targets =
-      if (slices.nonEmpty || !fs.exists(rootPath)) slices
-      else fs.listStatus(rootPath).map(_.getPath.getName)
-        .find(n => !n.startsWith(".") && !n.startsWith("_") && !n.startsWith("batch_id="))
-        .map(_ => historyRoot).toSeq
+    val targets = graft.Recovery.slicesOrRoot(spark, historyRoot, "batch_id")
     targets.foreach { p =>
       val keep = spark.read.parquet(p).drop("__cid", "__iv")
       // assignToCentroids appends __cid per row, preserving every

@@ -610,6 +610,7 @@ object Ivf {
   private val indexMetaName = "ivf_index.json"
   private val payloadRe = "centroids_v([0-9]+)".r
   private val payloadFieldRe = """"payload":"([^"]+)"""".r
+  private val formatTag = "\"format\":\"graft-ivf-index\""
 
   /** Persist a trained quantizer (the [[trainIndex]] /
     * [[centroids]]-shaped frame) as an on-disk index artifact — the
@@ -621,9 +622,10 @@ object Ivf {
     * half-written payload or a descriptor/centroids mismatch): each
     * save writes a FRESH versioned payload dir (`centroids_v<N>`) and
     * only then publishes the descriptor naming it — the descriptor is
-    * the single commit point, landing via staged-write + rename with
-    * the repo's retire/heal discipline ([[Recovery.idempotentWrite]]'s
-    * policy applied to a file). A concurrent [[loadIndex]] therefore
+    * the single commit point, a file replaced through
+    * [[graft.Recovery.swap]] and healed by every read through
+    * [[graft.Recovery.heal]] (plain rename-to-existing is not atomic on
+    * HDFS). A concurrent [[loadIndex]] therefore
     * always resolves a COMPLETE payload: the prior descriptor keeps
     * naming the prior payload until the new one is fully on disk, and
     * the superseded payload is retained for ONE more save (readers
@@ -648,9 +650,12 @@ object Ivf {
     val saved = spark.read.parquet(s"$dir/$payload")
     val nlist = saved.count()
     val dim = vecDim(saved, "__cvec")
-    val meta = s"""{"format":"graft-ivf-index","version":1,""" +
+    val meta = s"""{$formatTag,"version":1,""" +
       s""""nlist":$nlist,"dim":$dim,"metric":"cosine","payload":"$payload"}"""
-    publishDescriptor(fs, dirPath, meta)
+    graft.Recovery.swap(fs, new org.apache.hadoop.fs.Path(dirPath, indexMetaName)) { tmp =>
+      val out = fs.create(tmp, true)
+      try out.write((meta + "\n").getBytes("UTF-8")) finally out.close()
+    }
     // sweep payloads at least TWO versions back (the one directly
     // superseded stays for readers that resolved it just before the
     // commit); the legacy un-versioned `centroids` dir is left alone —
@@ -663,77 +668,22 @@ object Ivf {
     }
   }
 
-  /** Stage the descriptor beside its target, then retire-and-promote —
-    * the file analog of [[graft.Recovery.idempotentWrite]]'s dir swap
-    * (plain rename-to-existing is not atomic on HDFS, so the brief
-    * no-descriptor window between the two renames is HEALED by
-    * [[healIndexDescriptor]] on every read instead).
-    */
-  private def publishDescriptor(fs: org.apache.hadoop.fs.FileSystem,
-                                dirPath: org.apache.hadoop.fs.Path,
-                                meta: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dirPath, indexMetaName)
-    val staging = new org.apache.hadoop.fs.Path(dirPath, s".${indexMetaName}__staging")
-    val old = new org.apache.hadoop.fs.Path(dirPath, s".${indexMetaName}__old")
-    fs.delete(staging, false)
-    val out = fs.create(staging, true)
-    try out.write((meta + "\n").getBytes("UTF-8")) finally out.close()
-    fs.delete(old, false)
-    if (fs.exists(p) && !fs.rename(p, old))
-      throw new java.io.IOException(s"could not retire old descriptor: $p")
-    // a concurrent loadIndex healing mid-publish can win the staging→p
-    // rename between our two renames: our rename(staging, p) then fails
-    // (staging gone / p occupied) even though the publish LANDED. Before
-    // treating that as failure, check whether p now holds exactly the
-    // descriptor we were publishing — the benign race of
-    // healIndexDescriptor's contract — and return success if so.
-    def publishedByRacer(): Boolean = fs.exists(p) && {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      s == meta + "\n"
-    }
-    if (!fs.rename(staging, p)) {
-      if (publishedByRacer()) {
-        // if the failed rename was "p occupied by an identical
-        // concurrent publish" (not "staging consumed by a heal"), OUR
-        // staging file is still sitting there and a later heal would
-        // act on it; sweep it best-effort before declaring success
-        // (ADVICE r19)
-        fs.delete(staging, false)
-        fs.delete(old, false)
-        return
-      }
-      if (fs.exists(old) && !fs.rename(old, p))
-        throw new java.io.IOException(
-          s"descriptor publish failed AND rollback failed: state is at $old")
-      throw new java.io.IOException(s"descriptor publish failed: $staging -> $p")
-    }
-    fs.delete(old, false)
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** Heal [[saveIndex]]'s one-rename crash window: descriptor missing
-    * but a VALID staged one (or the retiree) still present — prefer
-    * the staged new state, exactly [[graft.Recovery.restoreIfTorn]]'s
-    * policy. A partial staging (writer died mid-write) fails the
-    * format check and falls back to the retiree. No-op when the
-    * descriptor exists. Rename races with a concurrent writer are
-    * benign: a false rename just means someone else completed it.
+  /** The descriptor's completeness test for [[graft.Recovery.heal]]: a
+    * staged copy whose writer died mid-write lacks the format tag or
+    * the closing newline, and loses to the retiree.
     */
-  private def healIndexDescriptor(fs: org.apache.hadoop.fs.FileSystem,
-                                  dirPath: org.apache.hadoop.fs.Path): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dirPath, indexMetaName)
-    if (fs.exists(p)) return
-    val staging = new org.apache.hadoop.fs.Path(dirPath, s".${indexMetaName}__staging")
-    val old = new org.apache.hadoop.fs.Path(dirPath, s".${indexMetaName}__old")
-    def validDescriptor(f: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(f) && {
-        val in = fs.open(f)
-        val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        s.contains("\"format\":\"graft-ivf-index\"") && s.endsWith("\n")
-      }
-    if (validDescriptor(staging)) { fs.rename(staging, p); () }
-    else if (validDescriptor(old)) { fs.rename(old, p); () }
-  }
+  private def completeDescriptor(fs: org.apache.hadoop.fs.FileSystem,
+                                 p: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(p) && {
+      val s = readText(fs, p)
+      s.contains(formatTag) && s.endsWith("\n")
+    }
 
   /** The payload versions currently retained under an index dir,
     * ascending (at most two: the live one and its direct predecessor).
@@ -785,15 +735,12 @@ object Ivf {
 
   private def resolvePayload(spark: org.apache.spark.sql.SparkSession,
                              dir: String): String = {
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIndexDescriptor(fs, dirPath)
-    val p = new org.apache.hadoop.fs.Path(dirPath, indexMetaName)
-    require(fs.exists(p), s"no $indexMetaName under $dir — not a graft ANN index")
-    val in = fs.open(p)
-    val meta = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    require(meta.contains("\"format\":\"graft-ivf-index\""),
-      s"$p is not a graft-ivf-index descriptor")
+    val p = new org.apache.hadoop.fs.Path(dir, indexMetaName)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(graft.Recovery.heal(fs, p, completeDescriptor),
+      s"no $indexMetaName under $dir — not a graft ANN index")
+    val meta = readText(fs, p)
+    require(meta.contains(formatTag), s"$p is not a graft-ivf-index descriptor")
     val payload = payloadFieldRe.findFirstMatchIn(meta)
       .map(_.group(1)).getOrElse("centroids")
     require(!payload.contains("/") && !payload.contains(".."),
@@ -930,10 +877,8 @@ object Ivf {
                     iters: Int = 2,
                     semanticHistoryRoots: Seq[String] = Nil): (String, Row) = {
     val spark = corpus.sparkSession
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIndexDescriptor(fs, dirPath)
-    val descriptor = new org.apache.hadoop.fs.Path(dirPath, indexMetaName)
+    val descriptor = new org.apache.hadoop.fs.Path(dir, indexMetaName)
+    val fs = descriptor.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def retrainAndSave(): DataFrame = {
       val cents = trainIndex(corpus.select(col(idCol), col(vecCol)),
         idCol, vecCol, nlistFor(corpus.count()), iters)
@@ -950,7 +895,7 @@ object Ivf {
       }
       cents
     }
-    if (!fs.exists(descriptor)) {
+    if (!graft.Recovery.heal(fs, descriptor, completeDescriptor)) {
       val cents = retrainAndSave()
       val report = driftReport(
         quantizerDrift(corpus, idCol, vecCol, cents, simFloor = simFloor),

@@ -139,8 +139,8 @@ object Job {
         // idempotently per run id, so a shared default would make
         // every later run silently REPLACE the previous run's
         // quarantined evidence before anyone reprocessed it
-        val runId = str(q, "run_id", "quality: quarantine_dir (a reused id " +
-          "overwrites that run's quarantine slice)")
+        val runId = graft.Recovery.checkRunId(str(q, "run_id", "quality: " +
+          "quarantine_dir (a reused id overwrites that run's quarantine slice)"))
         // the quarantine split needs per-row rules — reject the combo
         // at parse time, not deep in DQ.split mid-run
         val aggOnly = rules.filterNot(_.rowLevel).map(_.id)

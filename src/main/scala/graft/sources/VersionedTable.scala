@@ -368,8 +368,9 @@ object VersionedTable {
     if (files.isEmpty)
       throw new IllegalArgumentException(
         s"versioned table at $dir has no committed data")
-    // one footer read pins the schema for a no-delta read
-    val schema = spark.read.parquet(files.head).schema
+    // one driver-side footer read pins the schema for a no-delta read
+    val head = new Path(files.head)
+    val schema = SmallParquet.footerSchema(spark, fsOf(spark, head).getFileStatus(head))
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }

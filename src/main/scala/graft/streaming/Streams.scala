@@ -327,8 +327,12 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val b = batch.toDF()
-        val history = signatureHistory(spark, historyRoot, exclude = batchId)
-          .getOrElse(signatures(b.limit(0)))
+        // every healed slice but this batch's own (a replay must not
+        // screen against itself); none yet is a cold start with no seed
+        val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")(_ != batchId.toString)
+        val history =
+          if (slices.isEmpty) signatures(b.limit(0))
+          else spark.read.option("basePath", historyRoot).parquet(slices: _*)
         val survivors = screen(b, history, batchId)
         graft.Recovery.idempotentWrite(
           signatures(survivors), s"$historyRoot/batch_id=$batchId")
@@ -390,29 +394,14 @@ object Streams {
     * — the pipeline `screen` step): every healed `batch_id=` slice, or
     * the root itself as one plain parquet dir when it holds no slices
     * (the same dual layout [[graft.llm.Dedup.reassignSemanticHistory]]
-    * accepts). None when nothing exists. No slice exclusion — a batch
-    * reader has no replay identity to exclude.
+    * accepts, through [[graft.Recovery.slicesOrRoot]]). None when there
+    * is nothing to read. No slice exclusion — a batch reader has no
+    * replay identity to exclude.
     */
-  def loadSignatureHistory(spark: SparkSession, root: String): Option[DataFrame] =
-    signatureHistory(spark, root, exclude = Long.MinValue).orElse {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.Recovery.restoreIfTorn(spark, root)
-      if (fs.exists(rootPath) && fs.listStatus(rootPath).nonEmpty)
-        Some(spark.read.parquet(root))
-      else None
-    }
-
-  /** The signature-history slices under `root`, healed, MINUS the
-    * `batch_id=exclude` slice (the replay-safety read of
-    * [[ingestScreenStream]]); None when no other slice exists yet
-    * (cold start with no seed).
-    */
-  private def signatureHistory(spark: SparkSession, root: String,
-                               exclude: Long): Option[DataFrame] = {
-    val slices = graft.Recovery.slices(spark, root, "batch_id")(_ != exclude.toString)
-    if (slices.isEmpty) None
-    else Some(spark.read.option("basePath", root).parquet(slices: _*))
+  def loadSignatureHistory(spark: SparkSession, root: String): Option[DataFrame] = {
+    val paths = graft.Recovery.slicesOrRoot(spark, root, "batch_id")
+    if (paths.isEmpty) None
+    else Some(spark.read.option("basePath", root).parquet(paths: _*))
   }
 
   /** End-to-end streaming CDC: every micro-batch of I/U/D events folds

@@ -24,22 +24,6 @@ class DriverStateSpec extends SparkSpec {
   private def leafFiles(dir: String, p: String, s: String) =
     SmallParquet.list(spark, new Path(s"$dir/pipeline_id=$p/source_id=$s"))
 
-  /** Spark jobs started while `body` runs (listener bus drained). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      (out, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def footer(p: Path) = {
     val in = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,

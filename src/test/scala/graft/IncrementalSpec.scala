@@ -469,7 +469,9 @@ class IncrementalSpec extends SparkSpec {
     assert(VersionedTable.readSince(spark, dir, 1L)
       .select("k").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L))
     assert(VersionedTable.readSince(spark, dir, -1L).count() == 5)
-    val none = VersionedTable.readSince(spark, dir, 3L)
+    // the no-delta read pins its schema from one footer on the driver
+    val (none, jobs) = jobsDuring(VersionedTable.readSince(spark, dir, 3L))
+    assert(jobs == 0, s"$jobs Spark jobs for a no-delta readSince")
     assert(none.isEmpty &&
       none.schema == VersionedTable.read(spark, dir).schema)
 

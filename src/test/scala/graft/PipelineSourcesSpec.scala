@@ -1773,6 +1773,77 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(healed.filter(col("batch_id") === 1).count() == 5)
   }
 
+  test("Recovery: a promote lost to a concurrent heal counts as done, for a write, a heal and the index descriptor") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[PromoteCrashFs].getName)
+    val tmp = Files.createTempDirectory("graft_healrace").toString
+    val fs = new org.apache.hadoop.fs.Path("crashfs:///")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // run `body` with `action` hooked just before the next rename into `target`
+    def racing[T](target: String)(action: => Unit)(body: => T): T = {
+      PromoteCrashFs.before =
+        Some(new org.apache.hadoop.fs.Path(target).toUri.getPath -> (() => action))
+      try {
+        val out = body
+        assert(PromoteCrashFs.before.isEmpty, s"no rename into $target ran")
+        out
+      } finally PromoteCrashFs.before = None
+    }
+    val ids = spark.range(0, 100).toDF("id")
+
+    // a heal inside idempotentWrite's retire -> promote window promotes
+    // the writer's committed staging; the writer's own promote then finds
+    // it gone, and the write still returns
+    val t = s"crashfs://$tmp/t"
+    Recovery.idempotentWrite(ids.filter(col("id") < 3), t)
+    racing(t)(Recovery.restoreIfTorn(spark, t)) {
+      Recovery.idempotentWrite(ids.filter(col("id").between(10, 16)), t)
+    }
+    assert(spark.read.parquet(t).select("id").as[Long].collect().sorted.toSeq ==
+      (10L to 16L))
+
+    // two heals of one torn target (the retiree only): both return
+    val u = s"crashfs://$tmp/u"
+    Recovery.idempotentWrite(ids.filter(col("id") < 3), u)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(u),
+      new org.apache.hadoop.fs.Path(s"crashfs://$tmp/.u__old")))
+    racing(u)(Recovery.restoreIfTorn(spark, u))(Recovery.restoreIfTorn(spark, u))
+    assert(spark.read.parquet(u).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 2L))
+    assert(new java.io.File(tmp).list().toSeq.sorted == Seq("t", "u"))
+
+    // the same window inside Ivf.saveIndex: a loadIndex heals the
+    // descriptor mid-publish, the save returns, the new payload is live
+    import graft.llm.Ivf
+    val e = table("embeddings")
+    def centsOf(k: Int) = e.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int").as("__cid"), col("embedding").as("__cvec"))
+    val idx = s"crashfs://$tmp/idx"
+    Ivf.saveIndex(centsOf(3), idx)
+    racing(s"$idx/ivf_index.json")(Ivf.loadIndex(spark, idx)) {
+      Ivf.saveIndex(centsOf(5), idx)
+    }
+    assert(Ivf.liveIndexVersion(spark, idx) == 2L)
+    assert(Ivf.loadIndex(spark, idx).count() == 5L)
+  }
+
+  test("loadSignatureHistory: a lone uncommitted first slice is no history; a plain root is one") {
+    import graft.streaming.Streams
+    val base = Files.createTempDirectory("graft_sighist").toString
+    // a stream that crashed while staging batch 0: data files, no _SUCCESS
+    val root = s"$base/sliced"
+    val staged = s"$root/.batch_id=0__staging"
+    spark.range(0, 4).toDF("id").write.parquet(staged)
+    assert(new java.io.File(s"$staged/_SUCCESS").delete())
+    assert(Streams.loadSignatureHistory(spark, root).isEmpty)
+    assert(Streams.loadSignatureHistory(spark, s"$base/absent").isEmpty)
+    // an un-sliced history dir reads as itself
+    val plain = s"$base/plain"
+    spark.range(0, 3).toDF("id").write.parquet(plain)
+    assert(Streams.loadSignatureHistory(spark, plain).get
+      .select("id").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
   test("typed Dataset ops compose with the untyped library surface") {
     val ds = table("orders").select("o_orderkey", "o_totalprice").as[TypedOrder]
     val big = ds.filter(_.o_totalprice > 100000.0).map(_.o_orderkey)

@@ -149,6 +149,16 @@ class RunSpec extends SparkSpec {
     val (badCode, badOut) = cli("validate",
       writeDoc("""{"datasets": [], "pipelines": {}}"""))
     assert(badCode == 2 && badOut.contains("invalid document"))
+    // a quarantine run id must name one slice: no path separator and
+    // no swap-sibling suffix a whole-area read would fold away
+    def quarantined(runId: String) = writeDoc(jobDoc(0.0).replace("\"min_score\": 0.0",
+      s""""min_score": 0.0, "quarantine_dir": "/nonexistent/q", "run_id": "$runId""""))
+    Seq("a/b", "x__old", "x__staging").foreach { id =>
+      val (code, out) = cli("validate", quarantined(id))
+      assert(code == 2 && out.contains("invalid document") && out.contains("run_id"),
+        s"$id: $out")
+    }
+    assert(cli("validate", quarantined("nightly"))._1 == 0)
     // a dag with a cycle fails validation too
     val (cycCode, cycOut) = cli("validate", writeDoc(
       s"""{"jobs": [

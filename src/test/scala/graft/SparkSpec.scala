@@ -18,4 +18,20 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def table(name: String): DataFrame = Tables.load(spark, TestSession.sfDir, name)
+
+  /** Spark jobs started while `body` runs (listener bus drained). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      (out, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
