@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session factory with the engine's standard configuration.
   *
@@ -58,26 +59,6 @@ object GraftSession {
       // slips through (e.g. a user-supplied session without this conf).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
-  /** Swap a one-live-persist slot (operators that bound their notebook
-    * cache leak to a single live frame): unpersist the previously
-    * tracked frame ONLY when its analyzed plan differs from the new
-    * one. Spark's CacheManager keys cache entries by plan equality, so
-    * unpersisting an older frame with the SAME plan — the common case:
-    * the same operator re-invoked on the same input, e.g. every second
-    * bench or verify pass — would evict the entry the new frame just
-    * registered and silently turn every downstream reuse into a full
-    * recompute (measured on q_anom_ocsvm: 5.9 s pass 1 vs 41 s pass 2,
-    * the scored frame rebuilt once per quantile pass + once per
-    * consumer action).
-    */
-  def swapPersist(slot: java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame],
-                  next: org.apache.spark.sql.DataFrame): Unit = {
-    val prev = slot.getAndSet(next)
-    if (prev != null &&
-        !prev.queryExecution.analyzed.sameResult(next.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-  }
-
   /** [[persistIfSmall]]'s default budget: 32 MiB on every host. */
   private[graft] val SmallPersistBytes: Long = 32L << 20
 
@@ -105,8 +86,8 @@ object GraftSession {
     * `spark.graft.smallPersistBytes` (set ≤ 0 to disable persisting
     * entirely — the pure re-derive shape, spec-pinned equal).
     */
-  def persistIfSmall(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (isSmall(df)) df.persist() else df
+  def persistIfSmall(df: DataFrame): DataFrame =
+    if (isSmall(df)) pin(df) else df
 
   /** The [[persistIfSmall]] decision, exposed: true iff the
     * optimizer's size estimate fits the small-frame budget. Callers
@@ -116,26 +97,77 @@ object GraftSession {
     * frame that will NOT be cached just inserts a full-row exchange in
     * front of every consumer (measured r20-opt: q_anom_ocsvm at sf10,
     * 1.4x). */
-  def isSmall(df: org.apache.spark.sql.DataFrame): Boolean = {
+  def isSmall(df: DataFrame): Boolean = {
     val budget = df.sparkSession.conf
       .getOption("spark.graft.smallPersistBytes").map(_.trim.toLong)
       .getOrElse(SmallPersistBytes)
     budget > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget
   }
 
+  /** Pins released together: [[pin]] records a frame in the innermost
+    * scope open on its thread ([[PinScope.within]]), and `close()`
+    * releases them once; a second close does nothing. */
+  final class PinScope extends AutoCloseable {
+    private[GraftSession] val releases =
+      new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+    private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    /** Run `body` with this scope innermost on the current thread. */
+    def within[A](body: => A): A = {
+      val outer = open.get
+      open.set(this :: outer)
+      try body finally open.set(outer)
+    }
+
+    def close(): Unit = if (closed.compareAndSet(false, true)) releases.forEach(_())
+  }
+
+  private val open = ThreadLocal.withInitial[List[PinScope]](() => Nil)
+  private def own(release: () => Unit): Unit =
+    open.get.headOption.foreach(_.releases.add(release))
+
+  /** Run `body` in a fresh scope, released however `body` ends. */
+  def scoped[A](body: => A): A = {
+    val scope = new PinScope
+    try scope.within(body) finally scope.close()
+  }
+
+  /** Persist `df` (Spark's default level), owned by the innermost open
+    * scope, else by the session ([[releaseAll]]). A plan already cached
+    * is read, not owned, so a close never drops someone else's cache. */
+  def pin(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else { own(() => df.unpersist(blocking = false)); df.persist() }
+
+  /** Own an eager `localCheckpoint` that outlives its operator, as [[pin]] does. */
+  private[graft] def ownCheckpoint(cp: DataFrame): DataFrame = { own(() => releaseCheckpoint(cp)); cp }
+
+  /** Drop a `localCheckpoint`'s blocks (no-op on any other frame). */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit = Some(df.queryExecution.analyzed)
+    .collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false) }
+
+  /** A cached frame's bytes as measured when an action loaded it (None
+    * when `df` is not cached or not loaded yet). */
+  private[graft] def cachedBytes(df: DataFrame): Option[Long] = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.sharedState.cacheManager.lookupCachedData(session, df.queryExecution.analyzed)
+      .map(_.cachedRepresentation.cacheBuilder).filter(_.isCachedColumnBuffersLoaded)
+      .map(_.sizeInBytesStats.value.longValue)
+  }
+
   /** Release every cached frame and persistent RDD in the session.
     *
-    * The persist-ownership contract: operators that persist internal
-    * frames for intra-query reuse (Dedup.minhashLsh, Search.tfidfTopTerms,
-    * Lof.scores, Ivf.buildIndex, Dedup.connectedComponents'
-    * localCheckpoints, …) deliberately leave them alive because callers
-    * typically consume the returned frame more than once (collect +
-    * write, or probe an index repeatedly). A long-lived session — REPL,
-    * server, or harness looping over many queries — MUST call this
-    * between units of work, or the accumulated blocks eventually evict
-    * and GC-thrash every later query. `clearCache()` drops catalog-
-    * tracked Dataset persists; the RDD sweep additionally drops
-    * localCheckpoint blocks, which the catalog does not track.
+    * The ownership rule: every cache the engine takes is a [[pin]] (or
+    * an [[ownCheckpoint]]) and belongs to the innermost [[PinScope]]
+    * open on its thread. `Job.run` runs in a scope its `Job.Result`
+    * owns, and every engine `foreachBatch` body in its own scope, closed
+    * after the batch's writes. A pin made with no scope open belongs to
+    * the session: a long-lived session that opens no scope (REPL,
+    * server, a harness looping over queries) MUST call this between
+    * units of work, or the accumulated blocks eventually evict and
+    * GC-thrash every later query. `clearCache()` drops catalog-tracked
+    * Dataset persists; the RDD sweep additionally drops localCheckpoint
+    * blocks, which the catalog does not track.
     */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

@@ -848,11 +848,11 @@ object QueriesLlm {
       // quantizer (bit-identical to the fused build, spec-pinned);
       // cohesion stays defined against the MEMBER-MEAN centroid — that
       // aggregation is this query's own semantics, so the index is
-      // still persisted for its two consumers (the mean agg + the join)
+      // still pinned for its two consumers (the mean agg + the join)
       val (_, tcents) = graft.llm.Ivf.trainAutoCached(e, "vec_id", "embedding",
         iters = 2, cacheKey = s"$dir/embeddings")
-      val index = graft.llm.Ivf.assignToCentroids(e, "vec_id", "embedding",
-        tcents, "__cid", "__cvec").persist()
+      val index = GraftSession.pin(graft.llm.Ivf.assignToCentroids(e, "vec_id",
+        "embedding", tcents, "__cid", "__cvec"))
       index.count() // materialize before the broadcast job can race (see q_sim_ivf)
       val cents = graft.llm.Ivf.centroids(index, "embedding")
       index.join(broadcast(cents), Seq("__cid"))
@@ -892,8 +892,8 @@ object QueriesLlm {
       val e = t(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val index = graft.llm.Ivf.buildIndex(e, "vec_id", "embedding",
-        nlist = 8, iters = 2).persist()
+      val index = GraftSession.pin(graft.llm.Ivf.buildIndex(e, "vec_id", "embedding",
+        nlist = 8, iters = 2))
       index.count() // materialize before the broadcast job can race (see q_sim_ivf)
       val cents = graft.llm.Ivf.centroids(index, "embedding")
       // nprobe = nlist: every query scans every cell

@@ -192,8 +192,8 @@ object Incremental {
     * batch-side counts — extracted, late arrivals, the new watermark —
     * fuse into ONE aggregation over the batch scan, and the
     * insert/update split is ONE aggregation over the key-flagged
-    * deduped frame, which is persisted because the returned upsert
-    * plan consumes it again (persist-ownership contract:
+    * deduped frame, pinned because the returned upsert plan consumes
+    * it again (owned by the caller's pin scope, else the session: see
     * [[graft.GraftSession.releaseAll]]). Rows with a NULL watermark
     * column count as neither extracted nor late — no watermark can
     * judge them — and are excluded, matching [[afterWatermark]].
@@ -214,9 +214,9 @@ object Incremental {
         lit(String.valueOf(watermark))).as("wm_after")).head()
     val deduped = dedupLatestBy(afterWatermark(batch, watermarkCol, watermark),
       keys, newestFirst)
-    val flagged = deduped.join(
+    val flagged = graft.GraftSession.pin(deduped.join(
       target.select(keys.map(col): _*).distinct().withColumn("__exists", lit(true)),
-      keys, "left").persist()
+      keys, "left"))
     val split = flagged.agg(
       coalesce(sum(when(col("__exists"), 1L).otherwise(0L)), lit(0L)).as("updated"),
       count(lit(1)).as("deduped")).head()
@@ -444,22 +444,21 @@ object Incremental {
   def gaps(df: DataFrame, seqCol: String, expectedStep: Double = 1.0,
            tolerance: Double = 1.5, maxBuckets: Int = 64,
            smallDistinct: Long = 1L << 20): DataFrame = {
-    // The distinct frame is needed on EVERY path — build it once,
-    // persist, and route on its EXACT count. (r16: the previous HLL
+    // The distinct frame is needed on EVERY path — build it once, pin
+    // it, and route on its EXACT count. (r16: the previous HLL
     // probe paid a separate full scan of the RAW frame — 3.8 s of an
     // 8-10 s query at the sf10 gate — to approximate a number the
     // distinct shuffle yields for free; exact routing is also strictly
     // more stable at the threshold.) Cache ownership (r17): the BIG
-    // path's persist follows the documented releaseAll contract (it is
+    // path's pin is the caller's scope's, else the session's (it is
     // consumed by three downstream scans — quantile edges, in-bucket
     // window, seams); the SMALL path unpersists before returning — its
     // plan reads the distinct frame exactly once, so the cache would
-    // buy nothing after the routing count, and a library caller
-    // outside the releaseAll lifecycle would otherwise accumulate one
-    // dead cached frame per call. Cost: the small path's consume
-    // recomputes the distinct (one bounded shuffle) — the pre-r16
-    // small-path cost exactly.
-    val distinct = df.select(col(seqCol)).distinct().persist()
+    // buy nothing after the routing count, and a caller that opens no
+    // scope would otherwise accumulate one dead cached frame per call.
+    // Cost: the small path's consume recomputes the distinct (one
+    // bounded shuffle) — the pre-r16 small-path cost exactly.
+    val distinct = graft.GraftSession.pin(df.select(col(seqCol)).distinct())
     val card = distinct.count()
     def gapsOf(lagged: DataFrame): DataFrame = lagged
       .withColumn("gap", col(seqCol) - col("prev_val"))

@@ -69,14 +69,14 @@ object Dedup {
                           textCol: String,
                           bitsPerItem: Double = 10.0,
                           numBitsOverride: Long = -1L): DataFrame = {
-    val histHashes = history.select(md5(col(textCol)).as("__h")).distinct()
-      // null-text history rows have a NULL hash: they can never match a
-      // batch row (null = null is no match), and left in, the Bloom
-      // build would hash them as xxhash64's seed value — planting a
-      // phantom member that costs false positives for nothing
-      .filter(col("__h").isNotNull)
-      // consumed thrice (sizing count + filter build + verify anti-join)
-      .persist()
+    // consumed thrice (sizing count + filter build + verify anti-join)
+    val histHashes = graft.GraftSession.pin(
+      history.select(md5(col(textCol)).as("__h")).distinct()
+        // null-text history rows have a NULL hash: they can never match a
+        // batch row (null = null is no match), and left in, the Bloom
+        // build would hash them as xxhash64's seed value — planting a
+        // phantom member that costs false positives for nothing
+        .filter(col("__h").isNotNull))
     // sized from the real history cardinality — see
     // ngramContaminationBloom on why a fixed oversized width is a trap
     val items = histHashes.count()
@@ -1231,14 +1231,13 @@ object Dedup {
   def contaminationReport(corpus: DataFrame, bench: DataFrame,
                           idCol: String, textCol: String,
                           benchNameCol: String, n: Int = 5): DataFrame = {
-    val benchGrams = bench
+    // consumed twice (sizes agg + the broadcast join build): pinned so
+    // the shingling runs once; the returned frame is lazy, so the pin is
+    // the caller's scope's, else the session's (GraftSession.releaseAll)
+    val benchGrams = graft.GraftSession.pin(bench
       .select(col(benchNameCol).as("bench_name"),
         explode(wordShingles(col(textCol), n)).as("__g"))
-      .distinct()
-      // consumed twice (sizes agg + the broadcast join build): persist
-      // so the benchmark shingling runs once (session-scoped, see
-      // GraftSession.releaseAll — the returned frame is lazy)
-      .persist()
+      .distinct())
     val sizes = benchGrams.groupBy("bench_name")
       .agg(count(lit(1)).as("n_bench_grams"))
     val corpusGrams = corpus
@@ -1284,10 +1283,9 @@ object Dedup {
                               n: Int = 5,
                               bitsPerItem: Double = 10.0,
                               numBitsOverride: Long = -1L): DataFrame = {
-    val benchGrams = bench
-      .select(explode(wordShingles(col(textCol), n)).as("__g")).distinct()
-      // consumed thrice (sizing count + filter build + verify join)
-      .persist()
+    // consumed thrice (sizing count + filter build + verify join)
+    val benchGrams = graft.GraftSession.pin(bench
+      .select(explode(wordShingles(col(textCol), n)).as("__g")).distinct())
     val corpusGrams = corpus
       .select(col(idCol), explode(wordShingles(col(textCol), n)).as("__g"))
     val items = benchGrams.count()
@@ -1366,7 +1364,11 @@ object Dedup {
       s"need windowLen >= 2, stride >= 1, minOccurrences >= 2")
     val starts = sequence(lit(1),
       greatest(length(col(textCol)) - lit(windowLen - 1), lit(1)), lit(stride))
-    val spans = df
+    // spans feeds the occurrence agg AND the join-back, and the two
+    // subtrees prune different columns, so ReuseExchange cannot dedupe
+    // them (the tfidf/bm25 case) — pin it or the corpus is exploded+
+    // hashed twice. The caller's scope owns it, as in Lof.scores.
+    val spans = graft.GraftSession.pin(df
       .select(col(idCol), explode(starts).as("__start"), col(textCol))
       .select(col(idCol),
         md5(substring(col(textCol), col("__start").cast("int"), lit(windowLen))).as("__h"),
@@ -1374,12 +1376,7 @@ object Dedup {
       // partial tail windows don't count; docs shorter than windowLen
       // emit no rows at all
       .filter(col("__full"))
-      .select(col(idCol), col("__h"))
-      // spans feeds the occurrence agg AND the join-back, and the two
-      // subtrees prune different columns, so ReuseExchange cannot
-      // dedupe them (the tfidf/bm25 case) — persist or the corpus is
-      // exploded+hashed twice. Session-scoped cache, as in Lof.scores.
-      .persist()
+      .select(col(idCol), col("__h")))
     val occ = spans.groupBy(col("__h")).agg(count(lit(1)).as("__occ"))
     spans.join(occ, Seq("__h"))
       .groupBy(col(idCol))
@@ -1418,15 +1415,14 @@ object Dedup {
     // clusters switch to reliable `checkpoint` with a checkpoint dir.
     // Superseded rounds are released as soon as the convergence probe
     // has consumed them — peak checkpoint storage is 2 label frames,
-    // not maxIters of them (only the final frame outlives the call;
-    // its blocks belong to the returned plan and follow the session
-    // release contract, GraftSession.releaseAll).
+    // not maxIters of them (only the final frame outlives the call,
+    // owned like a pin: GraftSession.releaseAll).
     // the undirected edge frame is consumed once per ROUND (neighbour
     // join) plus the label init — unmaterialized, every consumption
     // re-ran the caller's pair derivation (diameter+1 evaluations of a
     // banding/levenshtein join). Materialize it ONCE (r21, the same
     // localCheckpoint device the label rounds already use; its blocks
-    // back the loop only, released with the session contract).
+    // back the loop only and are released before the call returns).
     val und = edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
       .union(edges.select(col(dstCol).as("__u"), col(srcCol).as("__v")))
       .localCheckpoint()
@@ -1446,7 +1442,7 @@ object Dedup {
         .join(labels.withColumnRenamed("component", "__prev"), Seq("node"))
         .filter(col("component") =!= col("__prev"))
         .isEmpty
-      dropCheckpoint(labels)
+      graft.GraftSession.releaseCheckpoint(labels)
       labels = next
       i += 1
     }
@@ -1456,11 +1452,12 @@ object Dedup {
       throw new IllegalStateException(
         s"componentLabels did not converge in $maxIters iterations — " +
           "the pair graph has a longer path than expected; raise maxIters")
-    // the returned labels frame is its own checkpoint; the edge
+    // the returned labels frame is its own checkpoint, owned like a
+    // pin; the edge
     // materialization served only the loop — release it so exactly one
     // checkpoint outlives the call (the leak contract the specs pin)
-    dropCheckpoint(und)
-    labels
+    graft.GraftSession.releaseCheckpoint(und)
+    graft.GraftSession.ownCheckpoint(labels)
   }
 
   /** Connected components by the alternating large-star/small-star
@@ -1508,8 +1505,8 @@ object Dedup {
     * self-loop of the other id.
     *
     * Storage left behind: the rounds return their (node, component)
-    * checkpoint, the one checkpoint that outlives the call, released by
-    * the session contract (GraftSession.releaseAll). The driver path
+    * checkpoint, the one checkpoint that outlives the call, owned like a
+    * pin (GraftSession.releaseAll). The driver path
     * returns a local frame and leaves no persistent RDD at all.
     */
   def componentLabelsStar(edges: DataFrame, srcCol: String, dstCol: String,
@@ -1519,7 +1516,7 @@ object Dedup {
     if (driverPassSupports(canon0.schema("__u").dataType) &&
         canon0.count() <= DriverEdgeLimit) {
       val out = starLabelsOnDriver(canon0)
-      dropCheckpoint(canon0)
+      graft.GraftSession.releaseCheckpoint(canon0)
       out
     } else starRounds(canon0, maxIters)
   }
@@ -1558,13 +1555,6 @@ object Dedup {
     require(maxIters >= 1, "need at least one iteration")
     starRounds(canonicalEdges(edges, srcCol, dstCol), maxIters)
   }
-
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   // ONE evaluation of the caller's edge derivation (r21): the edge
   // input used to be consumed twice — canonical orientation + the
@@ -1688,7 +1678,7 @@ object Dedup {
         Option(r.getDecimal(1)).map(_.toBigInteger.toString).getOrElse("0"))
     }
     // cur starts as a lazy self-loop filter over canon0's checkpoint —
-    // no second materialization; round 1's dropCheckpoint(cur) is then
+    // no second materialization; round 1's releaseCheckpoint(cur) is then
     // a safe no-op (not a LogicalRDD) and canon0 survives for the final
     // node union below
     var cur: DataFrame = canon
@@ -1698,7 +1688,7 @@ object Dedup {
     while (!converged && i < maxIters) {
       val ls = largeStar(cur).localCheckpoint()
       val next = smallStar(ls).localCheckpoint()
-      dropCheckpoint(ls)
+      graft.GraftSession.releaseCheckpoint(ls)
       val nextSig = fingerprint(next)
       if (nextSig == sig) {
         // exact confirmation — a 2^-64 fingerprint collision must cost
@@ -1706,7 +1696,7 @@ object Dedup {
         converged = next.join(cur, Seq("__u", "__v"), "left_anti").isEmpty
       }
       sig = nextSig
-      dropCheckpoint(cur)
+      graft.GraftSession.releaseCheckpoint(cur)
       cur = next
       i += 1
     }
@@ -1725,16 +1715,16 @@ object Dedup {
     // materialize the (node, component) result — node-sized, the same
     // class as the fixpoint frame — so BOTH edge-sized checkpoints
     // (canon0 and the final round) release here. On this path exactly
-    // one checkpoint, the returned one, outlives the call; the driver
-    // path leaves none (the leak contracts the specs pin). Callers
-    // consume the result at least once, so the eager pass is moved
-    // work, not added work
+    // one checkpoint, the returned one (owned like a pin), outlives the
+    // call; the driver path leaves none (the leak contracts the specs
+    // pin). Callers consume the result at least once, so the eager
+    // pass is moved work, not added work
     val out = nodes.join(starMap, Seq("node"), "left")
       .select(col("node"), coalesce(col("__comp"), col("node")).as("component"))
       .localCheckpoint()
-    dropCheckpoint(canon0)
-    dropCheckpoint(cur)
-    out
+    graft.GraftSession.releaseCheckpoint(canon0)
+    graft.GraftSession.releaseCheckpoint(cur)
+    graft.GraftSession.ownCheckpoint(out)
   }
 
   /** Collapse near-duplicate clusters to one canonical row each: given

@@ -291,9 +291,10 @@ object Ivf {
       .limit(nlist)
       .withColumn("__rn", row_number().over(Window.orderBy(col("__h"), col(idCol))))
       .select(col("__rn").as("__cid"), col(vecCol).as("__cvec"))
-    (1 to iters).foldLeft(seeds.cache()) { (cent, _) =>
-      val next = recenter(
-        assignDistributed(train, vecCol, cent), vecCol).cache()
+    // the last round's pin outlives the call (the caller's scope's)
+    (1 to iters).foldLeft(graft.GraftSession.pin(seeds)) { (cent, _) =>
+      val next = graft.GraftSession.pin(recenter(
+        assignDistributed(train, vecCol, cent), vecCol))
       next.count()
       cent.unpersist(blocking = false)
       next
@@ -364,37 +365,40 @@ object Ivf {
     */
   def buildIndexSampled(corpus: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iters: Int = 2, trainPerCell: Int = 64,
-                        knownCount: Option[Long] = None): DataFrame = {
-    require(trainPerCell >= 1, "trainPerCell >= 1")
-    val n = knownCount.getOrElse(corpus.count())
-    val target = nlist.toLong * trainPerCell
-    if (n <= target)
-      return buildFrom(corpus, corpus, idCol, vecCol, nlist, iters)
-    // keep-threshold on a 2^20 hash ring; ceil so the expected sample
-    // never rounds below the target. The nlist lowest-hash seeds are
-    // inside any threshold that admits >= nlist rows only if the SAME
-    // hash orders both — seeds hash xxhash64(id) too, so the sampled
-    // seeds are a deterministic function of the sample alone.
-    val ring = 1L << 20
-    val keep = math.min(ring, (ring * target + n - 1) / n)
-    val train = corpus
-      .filter(pmod(xxhash64(col(idCol)), lit(ring)) < lit(keep))
-      .select(col(idCol), col(vecCol))
-      .cache()
-    // materialize (Lloyd scans it per iteration) and guard the tail
-    // risk of a hash sample landing under nlist rows — centroid
-    // training needs at least one vector per prospective cell
-    if (train.count() < nlist) {
-      train.unpersist(blocking = false)
-      return buildFrom(corpus, corpus, idCol, vecCol, nlist, iters)
-    }
+                        knownCount: Option[Long] = None): DataFrame =
     // driver-path centroids materialize eagerly (collect per
     // iteration) and distributed centroids are cached nlist-row
     // frames, so by the time buildFrom returns the train sample's
     // lineage is no longer referenced by the final assignment plan
-    val out = buildFrom(corpus, train, idCol, vecCol, nlist, iters)
-    train.unpersist(blocking = false)
-    out
+    withTrainSample(corpus, idCol, vecCol, nlist, trainPerCell, knownCount)(
+      buildFrom(corpus, _, idCol, vecCol, nlist, iters))
+
+  /** Run `train` over the bounded deterministic train sample of
+    * `corpus` (nlist·trainPerCell rows; every row of a corpus that
+    * small), pinned while `train` runs and released after: `train` must
+    * materialize what it keeps. The sample is a keep-threshold on a
+    * 2^20 hash ring; ceil so the expected sample never rounds below the
+    * target. The nlist lowest-hash seeds are inside any threshold that
+    * admits >= nlist rows only if the SAME hash orders both — seeds
+    * hash xxhash64(id) too, so the sampled seeds are a deterministic
+    * function of the sample alone. A sample landing under nlist rows
+    * (the hash tail risk) falls back to the corpus: centroid training
+    * needs at least one vector per prospective cell.
+    */
+  private def withTrainSample[A](corpus: DataFrame, idCol: String, vecCol: String,
+                                 nlist: Int, trainPerCell: Int,
+                                 knownCount: Option[Long])(train: DataFrame => A): A = {
+    require(trainPerCell >= 1, "trainPerCell >= 1")
+    val n = knownCount.getOrElse(corpus.count())
+    val target = nlist.toLong * trainPerCell
+    if (n <= target) return train(corpus)
+    val ring = 1L << 20
+    val keep = math.min(ring, (ring * target + n - 1) / n)
+    val sample = graft.GraftSession.pin(corpus
+      .filter(pmod(xxhash64(col(idCol)), lit(ring)) < lit(keep))
+      .select(col(idCol), col(vecCol)))
+    try train(if (sample.count() < nlist) corpus else sample)
+    finally sample.unpersist(blocking = false)
   }
 
   /** Cell centroids of a built index — compute ONCE and persist/reuse
@@ -507,31 +511,17 @@ object Ivf {
 
   /** [[trainIndex]]'s body, keeping driver-path centroids as raw
     * arrays so the memo can hold them without a frame round-trip.
-    * Sampling mirrors [[buildIndexSampled]] exactly (same hash ring,
-    * same under-nlist fallback), so the trained centroids are
-    * IDENTICAL to the ones the fused build would assign with.
+    * Sampling is [[buildIndexSampled]]'s own, so the trained centroids
+    * are IDENTICAL to the ones the fused build would assign with. Both
+    * train paths materialize before returning (driver collect /
+    * lloydDistributed's cached+counted frame), so releasing the sample
+    * never recomputes it.
     */
   private def trainEither(corpus: DataFrame, idCol: String, vecCol: String,
                           nlist: Int, iters: Int, trainPerCell: Int,
-                          knownCount: Option[Long]): Either[Cents, DataFrame] = {
-    require(trainPerCell >= 1, "trainPerCell >= 1")
-    val n = knownCount.getOrElse(corpus.count())
-    val target = nlist.toLong * trainPerCell
-    if (n <= target) return trainFrom(corpus, idCol, vecCol, nlist, iters)
-    val ring = 1L << 20
-    val keep = math.min(ring, (ring * target + n - 1) / n)
-    val train = corpus
-      .filter(pmod(xxhash64(col(idCol)), lit(ring)) < lit(keep))
-      .select(col(idCol), col(vecCol))
-      .cache()
-    try {
-      if (train.count() < nlist) trainFrom(corpus, idCol, vecCol, nlist, iters)
-      // both branches materialize before returning (driver collect /
-      // lloydDistributed's cached+counted frame), so releasing the
-      // train sample in finally never recomputes it
-      else trainFrom(train, idCol, vecCol, nlist, iters)
-    } finally train.unpersist(blocking = false)
-  }
+                          knownCount: Option[Long]): Either[Cents, DataFrame] =
+    withTrainSample(corpus, idCol, vecCol, nlist, trainPerCell, knownCount)(
+      trainFrom(_, idCol, vecCol, nlist, iters))
 
   /** Train the cell quantizer ONLY — the decomposed, persistable half
     * of [[buildIndexSampled]]: bounded deterministic Lloyd sample,

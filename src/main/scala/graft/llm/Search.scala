@@ -76,10 +76,10 @@ object Search {
                     k: Int = 3): DataFrame = {
     // tf feeds both the score join and the document-frequency agg —
     // and the two subtrees prune different columns, so ReuseExchange
-    // can NOT dedupe them (verified at runtime: without the persist
-    // the corpus is tokenized+exploded+shuffled twice). Same
-    // session-scoped persist contract as Lof.scores.
-    val tf = docTermFreq(df, idCol, textCol).persist()
+    // can NOT dedupe them (verified at runtime: without the pin the
+    // corpus is tokenized+exploded+shuffled twice). The caller's scope
+    // owns the pin, as in Lof.scores.
+    val tf = graft.GraftSession.pin(docTermFreq(df, idCol, textCol))
     val termDf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf
       .join(termDf, Seq("term")) // vocab-sized side: AQE broadcasts when small
@@ -104,12 +104,11 @@ object Search {
   def bm25Search(df: DataFrame, idCol: String, textCol: String,
                  queryTerms: Seq[String], k: Int = 20,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // persisted: feeds both the df agg and the score join (see
+    // pinned: feeds both the df agg and the score join (see
     // tfidfTopTerms — exchange reuse cannot dedupe the two subtrees);
     // post-filter the frame is hits-only, far smaller than the corpus
-    val tf = docTermFreq(df, idCol, textCol)
-      .filter(col("term").isin(queryTerms: _*))
-      .persist()
+    val tf = graft.GraftSession.pin(docTermFreq(df, idCol, textCol)
+      .filter(col("term").isin(queryTerms: _*)))
     // df counts docs containing the term WITHIN the filtered frame —
     // identical to corpus df because the filter keeps every (doc, term)
     // row of the query terms

@@ -281,8 +281,8 @@ object Similarity {
     * Below `exactThreshold` rows the router returns EXACT brute force
     * (the FAISS flat-index regime: at small n the full pairing is
     * cheaper than an index build and recall is 1.0 by construction);
-    * above it, a sampled-training IVF index for this batch (persisted
-    * — release via GraftSession.releaseAll, or build once with
+    * above it, a sampled-training IVF index for this batch (a pin the
+    * caller's scope owns, see GraftSession.releaseAll, or build once with
     * [[graft.llm.Ivf.buildIndexAuto]] and probe [[graft.llm.Ivf.topK]]
     * directly across many batches).
     */
@@ -310,8 +310,8 @@ object Similarity {
       if (n <= exactThreshold)
         bruteForceTopKPartitioned(corpus, queries, corpusId, queryId, vecCol, k)
       else {
-        val index = Ivf.buildIndexSampled(corpus, corpusId, vecCol,
-          Ivf.nlistFor(n), knownCount = Some(n)).persist()
+        val index = graft.GraftSession.pin(Ivf.buildIndexSampled(corpus, corpusId,
+          vecCol, Ivf.nlistFor(n), knownCount = Some(n)))
         index.count() // materialize before the probe job can race the cache
         val cents = Ivf.centroids(index, vecCol)
         Ivf.topK(index, queries, corpusId, queryId, vecCol, k, nprobe,

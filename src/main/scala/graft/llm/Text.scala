@@ -271,9 +271,9 @@ object Text {
     def toks(df: DataFrame) = df.select(
       explode(split(lower(trim(col(textCol))), "\\s+")).as("__tok"))
       .filter(col("__tok") =!= "")
-    val refCounts = toks(ref).groupBy(col("__tok"))
-      .agg(count(lit(1)).as("__n"))
-      .persist() // consumed twice: top-K pick + category re-group
+    // consumed twice: top-K pick + category re-group
+    val refCounts = graft.GraftSession.pin(toks(ref).groupBy(col("__tok"))
+      .agg(count(lit(1)).as("__n")))
     val top: Seq[String] = refCounts
       .orderBy(col("__n").desc, col("__tok").asc)
       .limit(topK).select("__tok").as[String].collect().toSeq

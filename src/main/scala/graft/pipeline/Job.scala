@@ -4,9 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Catalog, JsonCfg}
+import graft.{Catalog, GraftSession, JsonCfg}
 import graft.quality.{Anomaly, DQ}
 
 /** One-document metadata-driven job — the reference's complete
@@ -43,14 +42,15 @@ import graft.quality.{Anomaly, DQ}
   * anomaly screen as a side output → optional idempotent sink write.
   *
   * Reuse: when the document declares a consumer beyond the caller (DQ
-  * rules, quarantine, anomaly or sink), [[run]] persists the pipeline
+  * rules, quarantine, anomaly or sink), [[run]] pins the pipeline
   * output at Spark's default level (MEMORY_AND_DISK) so the gate agg,
   * the split, the screen and the sink all read one materialization. At
   * scale this writes the output once to executor memory or disk
   * instead of re-deriving it through every shuffle per consumer; the
-  * cost is the cached blocks' footprint for the job's lifetime. The
-  * cache belongs to the returned [[Result]]: `close()` releases it, and
-  * a failed run releases it before rethrowing.
+  * cost is the cached blocks' footprint for the job's lifetime. The run
+  * executes in a [[graft.GraftSession.PinScope]] that the returned
+  * [[Result]] owns: `close()` releases the output and every operator
+  * pin the run made, and a failed run releases them before rethrowing.
   */
 object Job {
 
@@ -85,19 +85,16 @@ object Job {
                                    sourceId: String, column: String,
                                    strategy: String)
 
-  /** A run's frames. `cached` is the persisted pipeline output this
-    * result owns (None when the job had a single consumer, or the plan
-    * was already cached by someone else); `close()` unpersists it, once.
-    * The frames stay valid after close — they re-derive when read.
+  /** A run's frames. The Result owns the run's pins (its cached output
+    * and every operator pin): `close()` releases them, once. The frames
+    * stay valid after close — they re-derive when read.
     */
   final case class Result(output: DataFrame,
                           dqReport: Option[DataFrame],
                           anomalies: Option[DataFrame])(
-                          cached: Option[DataFrame])
+                          pins: GraftSession.PinScope)
       extends AutoCloseable {
-    private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def close(): Unit =
-      if (closed.compareAndSet(false, true)) cached.foreach(_.unpersist(blocking = false))
+    def close(): Unit = pins.close()
   }
 
   private val knownKeys =
@@ -173,10 +170,6 @@ object Job {
       incremental, ingest)
   }
 
-  /** Execute a parsed job. The pipeline's named sources are the
-    * registered datasets (loaded through [[Catalog.load]], schema
-    * pinned + validated when declared).
-    */
   // streaming guard — file streams only; batch additionally accepts
   // jdbc connector datasets through loadBatchDataset
   private def requireFileDatasets(spec: Spec): Unit =
@@ -202,6 +195,10 @@ object Job {
           "jdbc datasets")
     }
 
+  /** Execute a parsed job. The pipeline's named sources are the
+    * registered datasets (loaded through [[Catalog.load]], schema
+    * pinned + validated when declared).
+    */
   def run(spark: SparkSession, spec: Spec): Result = {
     require(spec.ingest.isEmpty,
       "batch job does not support the \"ingest\" section: ingest APPENDS " +
@@ -217,47 +214,49 @@ object Job {
     // afterWatermark's pushed-down range filter, driven by stored
     // state instead of caller state. On a jdbc dataset the filter
     // lands in the database's WHERE clause (only the delta crosses
-    // the wire), and the delta batch is PINNED with persist: unlike a
+    // the wire), and the delta batch is PINNED: unlike a
     // file scan, whose listing Spark pins at plan time, a live table
     // re-queried later could include rows that committed mid-run —
     // the advance aggregate below must see exactly the rows the
     // pipeline consumed (the reference holds the batch in memory for
     // the same reason). A delta batch is bounded by change volume,
     // not corpus size, so caching it is the scale-safe choice.
-    // The run owns the pinned batch and releases it however it ends:
-    // after the ledger advance on success, before rethrowing on failure.
-    val (sources, pinnedDelta) = spec.incremental.fold(
-        (loaded, Option.empty[DataFrame])) { inc =>
-      val wm = graft.incremental.WatermarkStore.last(spark, inc.storeDir,
-        inc.pipelineId, inc.sourceId, Some(inc.column))
-      val cut = wm.fold(loaded(inc.sourceId))(w =>
-        graft.incremental.Incremental.afterWatermark(
-          loaded(inc.sourceId), inc.column, w.value))
-      val isJdbc = spec.datasets.find(_.name == inc.sourceId)
-        .exists(d => Catalog.connector(d).exists(_.isLeft))
-      val pinned = if (isJdbc) Some(cut.persist()) else None
-      (loaded + (inc.sourceId -> pinned.getOrElse(cut)), pinned)
-    }
+    // Its scope is released however the run ends: after the ledger
+    // advance, or before rethrowing. The run's other pins belong to the
+    // Result's scope, which a failed run releases before rethrowing.
+    val delta = new GraftSession.PinScope
+    val pins = new GraftSession.PinScope
     try {
-      pinnedDelta.foreach(_.count())
-      // Consumer count is STATIC in the spec: DQ gate agg, quarantine
-      // split, anomaly screen and sink each re-run the whole pipeline
-      // unless its output is cached, so any of them alongside the caller
-      // makes a second consumer and the output is persisted — no size
-      // estimate, so the plan shape does not depend on the host heap.
-      // With none of them the caller is the only consumer and a cache
-      // pays materialization for zero reuse (r20 verdict: q_job_screen
-      // regressed on exactly this shape). The returned Result owns the
-      // cache; a failure below releases it before rethrowing. A plan that
-      // is already cached (by the caller or another open Result) is read
-      // but not owned, so close() never drops someone else's cache.
-      val out = Pipeline.run(spark, sources, spec.pipeline)
-      val multiConsumer = spec.dqRules.nonEmpty || spec.quarantine.isDefined ||
-        spec.anomalyJson.isDefined || spec.sink.isDefined
-      val owned =
-        if (multiConsumer && out.storageLevel == StorageLevel.NONE) Some(out.persist())
-        else None
-      try {
+      val sources = spec.incremental.fold(loaded) { inc =>
+        val wm = graft.incremental.WatermarkStore.last(spark, inc.storeDir,
+          inc.pipelineId, inc.sourceId, Some(inc.column))
+        val cut = wm.fold(loaded(inc.sourceId))(w =>
+          graft.incremental.Incremental.afterWatermark(
+            loaded(inc.sourceId), inc.column, w.value))
+        val isJdbc = spec.datasets.find(_.name == inc.sourceId)
+          .exists(d => Catalog.connector(d).exists(_.isLeft))
+        if (!isJdbc) loaded + (inc.sourceId -> cut)
+        else {
+          val pinned = delta.within(GraftSession.pin(cut))
+          pinned.count()
+          loaded + (inc.sourceId -> pinned)
+        }
+      }
+      pins.within {
+        // Consumer count is STATIC in the spec: DQ gate agg, quarantine
+        // split, anomaly screen and sink each re-run the whole pipeline
+        // unless its output is cached, so any of them alongside the caller
+        // makes a second consumer and the output is pinned — no size
+        // estimate, so the plan shape does not depend on the host heap.
+        // With none of them the caller is the only consumer and a cache
+        // pays materialization for zero reuse (r20 verdict: q_job_screen
+        // regressed on exactly this shape). A plan that is already cached
+        // (by the caller or another open Result) is read but not owned,
+        // so close() never drops someone else's cache.
+        val piped = Pipeline.run(spark, sources, spec.pipeline)
+        val out = if (spec.dqRules.nonEmpty || spec.quarantine.isDefined ||
+            spec.anomalyJson.isDefined || spec.sink.isDefined) GraftSession.pin(piped)
+          else piped
         // DQ gate on the OUTPUT frame (the reference's dq profile runs
         // post-transform). ONE fused-agg action evaluates the rules; the
         // gate decides from those collected results (no second pass) and
@@ -267,6 +266,10 @@ object Job {
           spec.minScore.foreach(ms => DQ.gateFromResults(report.collect(), ms))
           Some(report)
         }
+        // the gate loaded the cache: its measured size, not its shuffle
+        // partitions, sets the files the writes and the anomalies make
+        val sized: DataFrame => DataFrame = GraftSession.cachedBytes(out)
+          .fold(identity[DataFrame] _)(b => _.coalesce(graft.sources.FileSink.filesFor(b)))
         // quarantine mode: failing rows route to the per-run quarantine
         // slice and the job CONTINUES with the clean side (the
         // ErrorRecovery workflow, error_recovery.py:345, in config) —
@@ -275,14 +278,14 @@ object Job {
           case None => out
           case Some((dir, runId)) =>
             val (clean, bad) = DQ.split(out, spec.dqRules)
-            graft.Recovery.quarantine(bad, dir, runId)
+            graft.Recovery.quarantine(sized(bad), dir, runId)
             clean
         }
-        val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(result, a))
+        val anomalies = spec.anomalyJson.map(a => Anomaly.fromJson(sized(result), a))
         spec.sink.foreach { case (format, path, modeOpt) =>
           val mode = modeOpt.getOrElse("overwrite")
-          if (mode == "atomic") graft.Recovery.idempotentWrite(result, path, format)
-          else graft.sources.FileSink.write(result, format, path, mode)
+          if (mode == "atomic") graft.Recovery.idempotentWrite(sized(result), path, format)
+          else graft.sources.FileSink.write(sized(result), format, path, mode)
         }
         // the ledger advances LAST, only on a fully successful run (gate
         // passed, sink written): a failed run never moves the watermark,
@@ -302,13 +305,13 @@ object Job {
             inc.pipelineId, inc.sourceId, inc.column,
             sources(inc.sourceId), inc.strategy)
         }
-        Result(result, dqReport, anomalies)(owned)
-      } catch {
-        case e: Throwable =>
-          owned.foreach(_.unpersist(blocking = false))
-          throw e
+        Result(result, dqReport, anomalies)(pins)
       }
-    } finally pinnedDelta.foreach(_.unpersist(blocking = false))
+    } catch {
+      case e: Throwable =>
+        pins.close()
+        throw e
+    } finally delta.close()
   }
 
   def runJson(spark: SparkSession, json: String): Result =
@@ -419,25 +422,20 @@ object Job {
       primarySpec.format, primarySpec.path, schema, primarySpec.options)
     spec.ingest match {
       case None =>
-        stream.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            val out = Pipeline.run(spark,
-              statics + (spec.pipeline.primary -> batch.toDF()), spec.pipeline)
-            val result = spec.quarantine match {
-              case None => out
-              case Some((dir, runId)) =>
-                val (clean, bad) = DQ.split(out, spec.dqRules)
-                graft.Recovery.idempotentWrite(bad,
-                  s"$dir/run_id=$runId/batch_id=$batchId")
-                clean
-            }
-            graft.Recovery.idempotentWrite(result,
-              s"$sinkPath/batch_id=$batchId", sinkFormat)
-            ()
+        graft.streaming.Streams.eachBatch(stream, checkpointDir) { (batch, batchId) =>
+          val out = Pipeline.run(spark,
+            statics + (spec.pipeline.primary -> batch), spec.pipeline)
+          val result = spec.quarantine match {
+            case None => out
+            case Some((dir, runId)) =>
+              val (clean, bad) = DQ.split(out, spec.dqRules)
+              graft.Recovery.idempotentWrite(bad,
+                s"$dir/run_id=$runId/batch_id=$batchId")
+              clean
           }
-          .start()
+          graft.Recovery.idempotentWrite(result,
+            s"$sinkPath/batch_id=$batchId", sinkFormat)
+        }
       case Some(scr) =>
         // the ingest loop: the (row-local + stream-static-join) steps
         // compose directly ON the stream — every supported step is
@@ -513,20 +511,15 @@ object Job {
       // suppressed context instead of masking the cause
       try {
         val wallMs = (System.nanoTime() - started) / 1000000L
-        // QueryExecutionListener delivery is asynchronous: give the
-        // bus a bounded quiesce window (stop when the snapshot stops
-        // growing). Per-action capture is best-effort; the top-level
-        // "job" entry below is recorded unconditionally either way.
-        try {
-          val deadline = System.nanoTime() + 3L * 1000 * 1000 * 1000
-          var last = -1
-          var cur = recorder.snapshot().size
-          while (cur != last && System.nanoTime() < deadline) {
-            last = cur; Thread.sleep(100); cur = recorder.snapshot().size
-          }
-          // an interrupted quiesce must STILL detach the listener —
-          // a leaked recorder grows its snapshot for the session's life
-        } finally spark.listenerManager.unregister(recorder)
+        // QueryExecutionListener delivery is asynchronous: drain the
+        // listener bus so every action the run fired is in the snapshot.
+        // A bus still busy after the drain's timeout records what has
+        // arrived; the top-level "job" entry below is recorded either way.
+        try org.apache.spark.GraftBus.drain(spark.sparkContext)
+        catch { case _: java.util.concurrent.TimeoutException => () }
+        // an interrupted drain must STILL detach the listener — a
+        // leaked recorder grows its snapshot for the session's life
+        finally spark.listenerManager.unregister(recorder)
         val entries = graft.monitoring.RunHistory.Entry(
           "job", wallMs, failed = jobError != null) +:
           graft.monitoring.RunHistory.fromActions(recorder.snapshot())

@@ -591,13 +591,13 @@ object DQ {
                                saltBuckets: Int = 64): DataFrame = {
     require(cols.nonEmpty, "need at least one column to profile")
     require(k >= 1, s"k must be >= 1, got $k")
-    val counts = df
+    // candidates + cardinalities: a pin the caller's scope owns
+    val counts = graft.GraftSession.pin(df
       .select(explode(array(cols.map(c =>
         struct(lit(c).as("col_name"), valueStr(df, c).as("value"))): _*)).as("p"))
       .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
       .filter(col("value").isNotNull)
-      .groupBy("col_name", "value").agg(count(lit(1)).as("n"))
-      .persist() // candidates + cardinalities (ownership: releaseAll)
+      .groupBy("col_name", "value").agg(count(lit(1)).as("n")))
     val w1 = Window
       .partitionBy(col("col_name"),
         pmod(xxhash64(col("value")), lit(saltBuckets)))
@@ -881,23 +881,11 @@ object DQ {
     * (the totals frame is 1 row; the grouped frame never re-shuffles).
     * `counts` feeds both the totals agg and the join, with different
     * columns pruned on each side, which defeats ReuseExchange — the
-    * persist collapses the two grouped-aggregation runs into one.
-    *
-    * Leak bound for callers outside the harness's releaseAll contract
-    * (e.g. repeated entropy/keySkew calls in a notebook): each call
-    * releases the PREVIOUS call's persisted counts frame, so at most
-    * one is ever live per JVM. If a caller materializes an older
-    * profile frame after a newer call, the counts agg recomputes —
-    * a performance, never a correctness, difference.
+    * pin (the caller's scope's) collapses the two grouped-aggregation
+    * runs into one.
     */
-  private val lastTotalsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
   private def withBroadcastTotals(counts: DataFrame, totals: Column*): DataFrame = {
-    val c = counts.persist()
-    // plan-aware swap: unpersisting a SAME-plan previous frame would
-    // evict the entry c itself just registered (CacheManager keys by
-    // plan equality) and every profile pass would recompute twice
-    graft.GraftSession.swapPersist(lastTotalsCache, c)
+    val c = graft.GraftSession.pin(counts)
     c.crossJoin(broadcast(c.agg(totals.head, totals.tail: _*)))
   }
 
@@ -1105,9 +1093,10 @@ object DQ {
       .select(col(column).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
       .select(col("__v"), lit(r.toLong).as("__r"), lit(c.toLong).as("__c"))
-    val pooled = side(reference, 1, 0).unionByName(side(current, 0, 1))
-      .groupBy("__v").agg(sum("__r").as("__dr"), sum("__c").as("__dc"))
-      .persist() // consumed by two jobs (offsets, max-gap) + the caller's action
+    // consumed by two jobs (offsets, max-gap) + the caller's action
+    val pooled = graft.GraftSession.pin(side(reference, 1, 0)
+      .unionByName(side(current, 0, 1))
+      .groupBy("__v").agg(sum("__r").as("__dr"), sum("__c").as("__dc")))
 
     val edges: Seq[Double] =
       if (rangeBuckets == 1) Seq.empty
@@ -1151,8 +1140,8 @@ object DQ {
       (sum(col("__dr")).over(w) + col("__offr")).cast("double") / lit(nR.toDouble) -
       (sum(col("__dc")).over(w) + col("__offc")).cast("double") / lit(nC.toDouble))
     // rounding stays in-plan (identical expression shape to the oracle,
-    // like ksBinned); `pooled` stays persisted for the caller's action
-    // per the engine's persist-ownership contract (GraftSession.releaseAll)
+    // like ksBinned); `pooled` stays pinned for the caller's action and
+    // belongs to the caller's scope, else the session (releaseAll)
     val ks = round(col("__ks"), 6)
     withB.join(broadcast(offDf), "__b")
       .select(gap.as("__gap"))

@@ -90,14 +90,14 @@ object Lof {
       case _ => false
     }
     // The kNN pair list (n x k rows) feeds kdist, reach, lrd AND the
-    // final ratio — four plan references. Persist it (and the equally
+    // final ratio — four plan references. Pin it (and the equally
     // bounded reach frame) so the candidate stage runs ONCE; default
     // Dataset storage spills to disk, so at scale this costs k x input
-    // in cache space, not recomputation. Caches are session-scoped
-    // (the returned frame is lazy, so the operator cannot unpersist
-    // for its caller) — long-lived sessions should
-    // `spark.catalog.clearCache()` between corpora.
-    val knn = (if (bucketed && integralId) knnHeap(b, idCol, vecCol, k, bucketBits)
+    // in cache space, not recomputation. The returned frame is lazy, so
+    // the operator cannot release its pins: they belong to the caller's
+    // innermost scope, else the session (GraftSession.releaseAll).
+    val knn = graft.GraftSession.pin(if (bucketed && integralId)
+      knnHeap(b, idCol, vecCol, k, bucketBits)
     else {
       val a = b.select(col("__bucket"), col(idCol).as("p"),
         col(vecCol).as("__vp"), col("__n").as("__np"))
@@ -126,21 +126,19 @@ object Lof {
         .withColumn("__rn", row_number().over(wk))
         .filter(col("__rn") <= k)
         .select("p", "o", "dist")
-    }).persist()
+    })
     val kdist = knn.groupBy(col("p"))
       .agg(max(col("dist")).as("kdist"))
-    val reach = knn
+    val reach = graft.GraftSession.pin(knn
       .join(kdist.select(col("p").as("o"), col("kdist").as("__kdist_o")), Seq("o"))
-      .withColumn("reach", greatest(col("__kdist_o"), col("dist")))
-      .persist()
+      .withColumn("reach", greatest(col("__kdist_o"), col("dist"))))
     // identical points give reach sums of 0 — classic LOF sends lrd to
     // infinity there; cap instead so the ratio stays finite and ordered
-    val lrd = reach.groupBy(col("p")).agg(
+    val lrd = graft.GraftSession.pin(reach.groupBy(col("p")).agg(
       count(lit(1)).as("n_neighbors"),
       when(sum(col("reach")) > 0.0,
         count(lit(1)).cast("double") / sum(col("reach")))
-        .otherwise(lit(1e12)).as("lrd"))
-      .persist()
+        .otherwise(lit(1e12)).as("lrd")))
     reach
       .join(lrd.select(col("p").as("o"), col("lrd").as("__lrd_o")), Seq("o"))
       .groupBy(col("p"))

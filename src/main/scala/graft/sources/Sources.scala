@@ -63,6 +63,12 @@ object FileSource {
 
 object FileSink {
 
+  /** Bytes per written file: [[compact]]'s and Job's target. */
+  private[graft] val TargetFileBytes: Long = 128L << 20
+
+  private[graft] def filesFor(bytes: Long, targetFileBytes: Long = TargetFileBytes): Int =
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+
   /** The save modes [[write]] accepts, by lower-cased name (Spark's
     * own `DataFrameWriter.mode` names).
     */
@@ -224,7 +230,7 @@ object FileSink {
     * (filesBefore, filesAfter).
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024,
+              targetFileBytes: Long = TargetFileBytes,
               format: String = "parquet",
               options: Map[String, String] = Map.empty): (Long, Long) = {
     require(targetFileBytes > 0, "targetFileBytes > 0")
@@ -243,7 +249,7 @@ object FileSink {
     require(!before.exists(f => f.getPath.getParent != root),
       s"$path has nested data directories; use compactPartitions (per-partition sweep)")
     val totalBytes = before.map(_.getLen).sum
-    val parts = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
+    val parts = filesFor(totalBytes, targetFileBytes)
     // materialize the read plan BEFORE the swap deletes its input: the
     // write stages into a HIDDEN sibling dir (invisible to partition
     // discovery and concurrent readers), so source files are still
@@ -264,7 +270,7 @@ object FileSink {
     * filesBefore, filesAfter).
     */
   def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
-                        targetFileBytes: Long = 128L * 1024 * 1024,
+                        targetFileBytes: Long = TargetFileBytes,
                         format: String = "parquet",
                         options: Map[String, String] = Map.empty): (Long, Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(path)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-streaming building blocks. The reference's streaming
@@ -130,6 +130,19 @@ object Streams {
     math.max(1L, math.min(session.toLong, (inputBytes + per - 1) / per)).toInt
   }
 
+  /** Every engine `foreachBatch`: start `stream` under `checkpointDir`
+    * and run `body` on each micro-batch in a pin scope of its own,
+    * released after the batch's writes ([[graft.GraftSession.scoped]]). */
+  private[graft] def eachBatch(stream: DataFrame, checkpointDir: String,
+                               mode: OutputMode = OutputMode.Append())
+                              (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(mode)
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        graft.GraftSession.scoped(body(batch, batchId)))
+      .start()
+
   /** Late-data SIDE OUTPUT: Spark's watermark silently DROPS rows that
     * arrive after the horizon — correct for state bounding, but a
     * training-data pipeline usually wants late rows LANDED somewhere
@@ -161,41 +174,37 @@ object Streams {
                      latePath: String, statePath: String,
                      checkpointDir: String)
                     (onTime: (DataFrame, Long) => Unit) = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // watermark state is kept PER BATCH (the cumulative max as of
-        // each batch id), and a batch reads the newest slice BELOW its
-        // own id — so a checkpoint replay of batch N sees exactly the
-        // horizon it saw the first time, and the late/on-time split is
-        // replay-DETERMINISTIC (a single mutable state would have
-        // advanced past N and reclassified rows on replay)
-        val prevMax: Option[java.sql.Timestamp] =
-          graft.Recovery.slices(spark, statePath, "batch_id")(_.toLong < batchId)
-            .maxByOption(p => p.substring(p.lastIndexOf('=') + 1).toLong)
-            .flatMap(p => spark.read.parquet(p).collect().headOption
-              .map(_.getTimestamp(0)))
-        val df = graft.functions.Times.ensureTimestamp(batch.toDF(), tsCol)
-        val isLate = prevMax.fold(lit(false))(m =>
-          coalesce(col(tsCol) <= lit(m) - expr(s"INTERVAL '$delay'"), lit(false)))
-        val late = df.filter(isLate)
-        graft.Recovery.idempotentWrite(late, s"$latePath/batch_id=$batchId")
-        onTime(df.filter(!isLate), batchId)
-        // advance the horizon AFTER the batch (Spark updates the global
-        // watermark at micro-batch end, from the batch's max event time)
-        val batchMax = df.agg(max(col(tsCol))).collect().headOption
-          .flatMap(r => Option(r.getTimestamp(0)))
-        val newMax = (prevMax.toSeq ++ batchMax.toSeq).sortBy(_.getTime).lastOption
-        newMax.foreach { m =>
-          import spark.implicits._
-          graft.Recovery.idempotentWrite(
-            Seq(m).toDF("max_event_time").coalesce(1),
-            s"$statePath/batch_id=$batchId")
-        }
-        ()
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // watermark state is kept PER BATCH (the cumulative max as of
+      // each batch id), and a batch reads the newest slice BELOW its
+      // own id — so a checkpoint replay of batch N sees exactly the
+      // horizon it saw the first time, and the late/on-time split is
+      // replay-DETERMINISTIC (a single mutable state would have
+      // advanced past N and reclassified rows on replay)
+      val prevMax: Option[java.sql.Timestamp] =
+        graft.Recovery.slices(spark, statePath, "batch_id")(_.toLong < batchId)
+          .maxByOption(p => p.substring(p.lastIndexOf('=') + 1).toLong)
+          .flatMap(p => spark.read.parquet(p).collect().headOption
+            .map(_.getTimestamp(0)))
+      val df = graft.functions.Times.ensureTimestamp(batch, tsCol)
+      val isLate = prevMax.fold(lit(false))(m =>
+        coalesce(col(tsCol) <= lit(m) - expr(s"INTERVAL '$delay'"), lit(false)))
+      val late = df.filter(isLate)
+      graft.Recovery.idempotentWrite(late, s"$latePath/batch_id=$batchId")
+      onTime(df.filter(!isLate), batchId)
+      // advance the horizon AFTER the batch (Spark updates the global
+      // watermark at micro-batch end, from the batch's max event time)
+      val batchMax = df.agg(max(col(tsCol))).collect().headOption
+        .flatMap(r => Option(r.getTimestamp(0)))
+      val newMax = (prevMax.toSeq ++ batchMax.toSeq).sortBy(_.getTime).lastOption
+      newMax.foreach { m =>
+        import spark.implicits._
+        graft.Recovery.idempotentWrite(
+          Seq(m).toDF("max_event_time").coalesce(1),
+          s"$statePath/batch_id=$batchId")
       }
-      .start()
+    }
   }
 
   /** Everything landed on the late side across all batches so far:
@@ -204,7 +213,7 @@ object Streams {
     * copy is promoted or restored, never double-counted.
     */
   def lateRows(spark: SparkSession, latePath: String): DataFrame =
-    readBatchSlices(spark, latePath, "late-data")
+    batchSlices(spark, latePath, "late-data")
 
   /** Read every healed `batch_id=N` slice under `root` (the shared
     * side-output layout of [[lateSideOutput]], [[quarantineStream]]
@@ -213,12 +222,7 @@ object Streams {
     * twice.
     */
   def batchSlices(spark: SparkSession, root: String,
-                  what: String = "batch-slice"): DataFrame =
-    readBatchSlices(spark, root, what)
-
-  /** The one reader behind [[lateRows]] and [[batchSlices]]. */
-  private def readBatchSlices(spark: SparkSession, root: String,
-                              what: String): DataFrame = {
+                  what: String = "batch-slice"): DataFrame = {
     val slices = graft.Recovery.slices(spark, root, "batch_id")()
     require(slices.nonEmpty, s"no $what slices under $root")
     spark.read.option("basePath", root).parquet(slices: _*)
@@ -244,17 +248,13 @@ object Streams {
     val aggOnly = rules.filterNot(_.rowLevel).map(_.id)
     require(aggOnly.isEmpty,
       s"quarantineStream needs per-row rules; aggregate-level: ${aggOnly.mkString(", ")}")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val (ok, bad) = graft.quality.DQ.split(batch.toDF(), rules)
-        // no extra batch column: the batch_id=N slice layout already
-        // surfaces it as a partition column on read
-        graft.Recovery.idempotentWrite(bad, s"$quarantinePath/batch_id=$batchId")
-        clean(ok, batchId)
-        ()
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      val (ok, bad) = graft.quality.DQ.split(batch, rules)
+      // no extra batch column: the batch_id=N slice layout already
+      // surfaces it as a partition column on read
+      graft.Recovery.idempotentWrite(bad, s"$quarantinePath/batch_id=$batchId")
+      clean(ok, batchId)
+    }
   }
 
   /** Everything quarantined across all batches so far (healed slices
@@ -262,7 +262,7 @@ object Streams {
     * replays after the upstream fix.
     */
   def quarantinedRows(spark: SparkSession, quarantinePath: String): DataFrame =
-    readBatchSlices(spark, quarantinePath, "quarantine")
+    batchSlices(spark, quarantinePath, "quarantine")
 
   /** Streaming ingest screen, generic over the signature family (the
     * crawl-pipeline shape): each micro-batch screens against the
@@ -322,24 +322,19 @@ object Streams {
                         (signatures: DataFrame => DataFrame)
                         (screen: (DataFrame, DataFrame, Long) => DataFrame)
                         (clean: (DataFrame, Long) => Unit) = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.toDF()
-        // every healed slice but this batch's own (a replay must not
-        // screen against itself); none yet is a cold start with no seed
-        val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")(_ != batchId.toString)
-        val history =
-          if (slices.isEmpty) signatures(b.limit(0))
-          else spark.read.option("basePath", historyRoot).parquet(slices: _*)
-        val survivors = screen(b, history, batchId)
-        graft.Recovery.idempotentWrite(
-          signatures(survivors), s"$historyRoot/batch_id=$batchId")
-        clean(survivors, batchId)
-        ()
-      }
-      .start()
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // every healed slice but this batch's own (a replay must not
+      // screen against itself); none yet is a cold start with no seed
+      val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")(_ != batchId.toString)
+      val history =
+        if (slices.isEmpty) signatures(batch.limit(0))
+        else spark.read.option("basePath", historyRoot).parquet(slices: _*)
+      val survivors = screen(batch, history, batchId)
+      graft.Recovery.idempotentWrite(
+        signatures(survivors), s"$historyRoot/batch_id=$batchId")
+      clean(survivors, batchId)
+    }
   }
 
   /** Compact an [[ingestScreenStream]] history root — SCHEMA-AGNOSTIC
@@ -413,24 +408,19 @@ object Streams {
   def applyCdcStream(cdc: DataFrame, keys: Seq[String], opCol: String,
                      newestFirst: Seq[Column], targetPath: String,
                      checkpointDir: String) = {
-    cdc.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // heal a torn swap from a crashed previous batch, then read the
-        // (guaranteed-present) current state and fold the batch in via
-        // the retire-promote swap of Recovery.idempotentWrite — a crash
-        // at any point leaves a complete state findable on restart
-        graft.Recovery.restoreIfTorn(spark, targetPath)
-        val current = spark.read.parquet(targetPath)
-        val targetCols = current.columns.toSeq
-        val next = graft.incremental.Incremental
-          .applyCdc(current, batch.toDF(), keys, opCol, newestFirst)
-          .select(targetCols.map(org.apache.spark.sql.functions.col): _*)
-        graft.Recovery.idempotentWrite(next, targetPath)
-        ()
-      }
-      .start()
+    eachBatch(cdc, checkpointDir, OutputMode.Update()) { (batch, _) =>
+      val spark = batch.sparkSession
+      // heal a torn swap from a crashed previous batch, then read the
+      // (guaranteed-present) current state and fold the batch in via
+      // the retire-promote swap of Recovery.idempotentWrite — a crash
+      // at any point leaves a complete state findable on restart
+      graft.Recovery.restoreIfTorn(spark, targetPath)
+      val current = spark.read.parquet(targetPath)
+      val targetCols = current.columns.toSeq
+      val next = graft.incremental.Incremental
+        .applyCdc(current, batch, keys, opCol, newestFirst)
+        .select(targetCols.map(org.apache.spark.sql.functions.col): _*)
+      graft.Recovery.idempotentWrite(next, targetPath)
+    }
   }
 }

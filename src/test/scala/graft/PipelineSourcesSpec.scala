@@ -544,7 +544,7 @@ class PipelineSourcesSpec extends SparkSpec {
     // history integration: the job's actions land in RunHistory under
     // the run id, even when the quality gate throws
     val hist = Files.createTempDirectory("graft_jobhist").toString + "/history"
-    Job.runWithHistory(spark, Job.parse(doc(0.0)), hist, "job_ok")
+    Job.runWithHistory(spark, Job.parse(doc(0.0, withSink = true)), hist, "job_ok").close()
     intercept[graft.quality.DQ.QualityGateException](
       Job.runWithHistory(spark, Job.parse(doc(100.0)), hist, "job_gated"))
     val h = graft.monitoring.RunHistory.load(spark, hist)
@@ -553,6 +553,11 @@ class PipelineSourcesSpec extends SparkSpec {
       !col("failed")).count() == 1)
     assert(h.filter(col("run_id") === "job_gated" && col("query") === "job" &&
       col("failed")).count() == 1)
+    // the drained bus delivered the ok run's actions: its gate collect
+    // and its sink write
+    val okActions = h.filter(col("run_id") === "job_ok").select("query")
+      .as[String].collect().toSeq
+    assert(okActions.contains("collect") && okActions.contains("command"), okActions)
   }
 
   // a multi-consumer document over the sf tables: lineitem (the
@@ -614,7 +619,7 @@ class PipelineSourcesSpec extends SparkSpec {
       val base = Files.createTempDirectory("graft_mc").toString
       val counter = new ScanCounter
       budget.foreach(spark.conf.set("spark.graft.smallPersistBytes", _))
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       spark.listenerManager.register(counter)
       try {
         val res = Job.runJson(spark, multiConsumerJob(base))
@@ -623,7 +628,7 @@ class PipelineSourcesSpec extends SparkSpec {
           Recovery.idempotentWrite(res.anomalies.get, s"$base/anomalies")
           assert(spark.read.parquet(s"$base/out").count() > 0)
         } finally res.close()
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         counter.scans
       } finally {
         spark.listenerManager.unregister(counter)
@@ -632,6 +637,16 @@ class PipelineSourcesSpec extends SparkSpec {
     }
     assert(primaryScans(Some("1")) == 1, "1-byte budget")
     assert(primaryScans(None) == 1, "default budget")
+  }
+
+  test("Job: a small multi-consumer job writes one file per output") {
+    import graft.pipeline.Job
+    val base = Files.createTempDirectory("graft_files").toString
+    val res = Job.runJson(spark, multiConsumerJob(base))
+    try Recovery.idempotentWrite(res.anomalies.get, s"$base/anomalies") finally res.close()
+    def files(dir: String) =
+      new java.io.File(s"$base/$dir").listFiles().count(_.getName.startsWith("part-"))
+    assert(Seq("out", "quarantine/run_id=mc1", "anomalies").map(files) == Seq(1, 1, 1))
   }
 
   test("Job.Result owns the output cache: close, a failed gate, Dag and Run release it") {

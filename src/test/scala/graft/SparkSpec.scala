@@ -26,11 +26,11 @@ abstract class SparkSpec extends AnyFunSuite {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         n.incrementAndGet()
     }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       val out = body
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       (out, n.get())
     } finally spark.sparkContext.removeSparkListener(l)
   }
