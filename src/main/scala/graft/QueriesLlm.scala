@@ -363,7 +363,7 @@ object QueriesLlm {
     "q_media_resize" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"),
         graft.multimodal.Media.syntheticPngCol(col("doc_id"), lit(0)).as("img"))
-      val r = graft.multimodal.Media.resizeImages(d, "doc_id", "img", 32, 24)
+      val r = graft.multimodal.Media.resizeImages(d, "img", 32, 24)
       graft.multimodal.Media.imageDims(
           r.select(col("doc_id"), col("resized").as("img")), "img")
         .withColumn("decodable", col("format").isNotNull)
@@ -380,7 +380,7 @@ object QueriesLlm {
     "q_media_resize_area" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"),
         graft.multimodal.Media.syntheticPngCol(col("doc_id"), lit(0)).as("img"))
-      val r = graft.multimodal.Media.resizeImages(d, "doc_id", "img", 9, 8,
+      val r = graft.multimodal.Media.resizeImages(d, "img", 9, 8,
         algo = "area")
       graft.multimodal.Media.imageDims(
           r.select(col("doc_id"), col("resized").as("img")), "img")
@@ -627,7 +627,7 @@ object QueriesLlm {
       val e = t(s, dir, "embeddings")
       val cents = e.filter(col("vec_id") < 4)
         .select(col("vec_id").cast("int").as("cid"), col("embedding"))
-      graft.llm.Ivf.assignToCentroids(e, "vec_id", "embedding",
+      graft.llm.Ivf.assignToCentroids(e, "embedding",
           cents, "cid", "embedding")
         .groupBy(col("__cid").as("cluster_id"))
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("sum_ids"))
@@ -851,7 +851,7 @@ object QueriesLlm {
       // still pinned for its two consumers (the mean agg + the join)
       val (_, tcents) = graft.llm.Ivf.trainAutoCached(e, "vec_id", "embedding",
         iters = 2, cacheKey = s"$dir/embeddings")
-      val index = GraftSession.pin(graft.llm.Ivf.assignToCentroids(e, "vec_id",
+      val index = GraftSession.pin(graft.llm.Ivf.assignToCentroids(e,
         "embedding", tcents, "__cid", "__cvec"))
       index.count() // materialize before the broadcast job can race (see q_sim_ivf)
       val cents = graft.llm.Ivf.centroids(index, "embedding")

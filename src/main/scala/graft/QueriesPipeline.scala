@@ -372,15 +372,15 @@ object QueriesPipeline {
     // input IO, no shuffle, no driver data); hash-checked against
     // DuckDB re-deriving every value from the same arithmetic — the
     // cross-engine determinism contract the module documents.
-    "q_datagen" -> ((s, dir) => {
-      import graft.sources.Datagen, Datagen._
+    "q_datagen" -> ((s, _) => {
+      import graft.sources.Datagen
       Datagen.table(s, 20000L, employeeFields, seed = 7L)
     }),
 
     // deterministic invalid-data injection (ref :49/:198/:228): the
     // same error lottery DuckDB can replay — nulls planted in a
     // non-nullable column, out-of-range values past the declared max
-    "q_datagen_errors" -> ((s, dir) => {
+    "q_datagen_errors" -> ((s, _) => {
       import graft.sources.Datagen
       val base = Datagen.table(s, 20000L, employeeFields, seed = 7L)
       Datagen.outOfRange(

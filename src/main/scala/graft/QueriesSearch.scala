@@ -51,8 +51,8 @@ object QueriesSearch {
     }),
 
     // r20 CAPSTONE — the brief's crawl pipeline END-TO-END: a STORED
-    // document drives quality gate (sql_expr mirror of
-    // Text.qualityScore) → exact-dedup screen vs a stored history →
+    // document drives quality gate (a sql_expr over graft_doc_stats,
+    // the kernel behind Text.qualityScore) → exact-dedup screen vs a stored history →
     // minhash near-dup screen vs a stored signature history (the
     // threshold-1.0 exact contract) → token count + shard → DQ gate,
     // all through Job.runJson with the r19 screen step; then the
@@ -72,25 +72,16 @@ object QueriesSearch {
         graft.llm.Dedup.minhashHistorySignatures(
           all.filter(col("doc_id") % 7 === 0), "doc_id", "text"),
         s"$tmp/hist_minhash")
-      // Text.qualityScore spelled as the document's sql_expr (same
-      // regexes, same term order — the q_corpus_pipeline-proven form).
-      // qExpr is the TRUE Spark SQL text; jsonStr doubles backslashes
-      // for the JSON layer (Jackson consumes one level, Spark's SQL
-      // string-literal parser the next — the regexes need both)
-      val qExpr =
-        "LEAST(1.0, CAST(regexp_count(text, '\\\\S+') AS DOUBLE) / 50.0) * 0.3" +
-          " + (CAST(regexp_count(text, '[A-Za-z]') AS DOUBLE) /" +
-          " GREATEST(length(text), 1)) * 0.4" +
-          " + (CAST(regexp_count(lower(text), '\\\\b(the|a|and|of|to|in|is)\\\\b')" +
-          " AS DOUBLE) / GREATEST(regexp_count(text, '\\\\S+'), 1)) * 0.3"
-      def jsonStr(s: String) = s.replace("\\", "\\\\")
+      // Text.qualityScore through the injected SQL function: the job
+      // document runs the same kernel expression as the Column API
+      val qExpr = "graft_doc_stats(text, 'quality_score', 50)"
       val json =
         s"""{
            |  "datasets": [
            |    {"name": "docs", "format": "parquet", "path": "$dir/documents.parquet"}
            |  ],
            |  "pipeline": {"primary": "docs", "steps": [
-           |    {"type": "sql_expr", "name": "q", "expr": "${jsonStr(qExpr)}"},
+           |    {"type": "sql_expr", "name": "q", "expr": "$qExpr"},
            |    {"type": "filter", "column": "q", "op": ">=", "value": 0.5},
            |    {"type": "sql_expr", "name": "__batch", "expr": "doc_id % 5"},
            |    {"type": "filter", "column": "__batch", "op": "!=", "value": 0},
@@ -99,7 +90,7 @@ object QueriesSearch {
            |    {"type": "screen", "family": "minhash", "history": "$tmp/hist_minhash",
            |     "id": "doc_id", "column": "text"},
            |    {"type": "sql_expr", "name": "n_tokens",
-           |     "expr": "${jsonStr("CAST(regexp_count(text, '\\\\S+') AS BIGINT)")}"},
+           |     "expr": "CAST(graft_doc_stats(text, 'tokens') AS BIGINT)"},
            |    {"type": "sql_expr", "name": "shard", "expr": "doc_id % 4"},
            |    {"type": "select", "columns": ["doc_id", "lang", "n_tokens", "shard"]}
            |  ]},

@@ -204,7 +204,7 @@ object QueriesWindow {
                            mode: org.apache.spark.sql.streaming.OutputMode =
                              org.apache.spark.sql.streaming.OutputMode.Complete(),
                            requireSingleBatch: Boolean = false,
-                           sourceBytes: Option[Long] = None): DataFrame = {
+                           sourceBytes: Option[Long]): DataFrame = {
     s.catalog.dropTempView(sink)
     // Bounded replays never need the watermark-advance NO-DATA batch:
     // every query drained here emits its rows in the DATA batch itself

@@ -155,13 +155,6 @@ object Dedup {
     * once per pair — the inline [[jaccard]] expression would re-run it
     * inside both the union term and the ratio.
     */
-  private def withJacc(df: DataFrame, a: String, b: String): DataFrame =
-    df.withColumn("__inter", size(array_intersect(col(a), col(b))).cast("double"))
-      .withColumn("__union", size(col(a)) + size(col(b)) - col("__inter"))
-      .withColumn("jacc",
-        when(col("__union") =!= 0.0, col("__inter") / col("__union")).otherwise(lit(0.0)))
-      .drop("__inter", "__union")
-
   // ---- n-gram Jaccard with explicit blocking -------------------------
 
   /** All pairs within a blocking key whose shingle-set Jaccard meets
@@ -468,7 +461,6 @@ object Dedup {
                  maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
-    val shingler: Column => Column = wordShingles(_, ngramN)
     // NOTHING is cached here (r15): sh is one cheap projection off the
     // scan; the signature is the native graft_minhash kernel, so the
     // band frame's derivation is a scan plus a per-row loop, and the
@@ -476,7 +468,11 @@ object Dedup {
     // forced — is planned once and exchange-reused by both sides.
     // (The old persist predated the kernel, when the band frame
     // embedded the explode + 32-min-aggregate signature pass.)
-    val sh = df.select(col(idCol), shingler(col(textCol)).as("__sh"))
+    // Verification reads sorted shingle HASHES, not the shingle strings:
+    // the join side Spark broadcasts is ~4x smaller and the intersection
+    // is one merge walk (jacc equal barring a 64-bit hash collision).
+    val sh = df.select(col(idCol),
+      graft.plans.TextExpressions.wordShingleHashes(col(textCol), ngramN).as("__sh"))
     val sig = minhashSignatures(df, idCol, textCol, ngramN, numHashes)
     val bandStructs = (0 until bands).map { j =>
       struct(lit(j).as("b"), hash(slice(col("__sig"), j * r + 1, r)).as("h"))
@@ -496,12 +492,10 @@ object Dedup {
           col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
-    withJacc(cand
+    jaccVerify(cand
         .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
         .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__shb")), Seq("id_b")),
-        "__sha", "__shb")
-      .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "jacc")
+      threshold)
   }
 
   /** The persistable signature table an incremental crawl pipeline
@@ -999,7 +993,7 @@ object Dedup {
           iters = 2, cacheKey = key)
         semanticNearDupIndexed(
           Ivf.assignToCentroids(df.select(col(idCol), col(vecCol)),
-            idCol, vecCol, cents, "__cid", "__cvec"),
+            vecCol, cents, "__cid", "__cvec"),
           idCol, vecCol, threshold, hotCellCap = 4 * targetCellSize)
     }
 
@@ -1029,7 +1023,7 @@ object Dedup {
                                 centVecCol: String = "__cvec",
                                 indexVersion: Option[Long] = None): DataFrame = {
     val assigned = Ivf.assignToCentroids(df.select(col(idCol), col(vecCol)),
-      idCol, vecCol, centroids, centIdCol, centVecCol)
+      vecCol, centroids, centIdCol, centVecCol)
     indexVersion.fold(assigned)(v => assigned.withColumn("__iv", lit(v)))
   }
 
@@ -1103,7 +1097,7 @@ object Dedup {
     val probed =
       if (nprobe == 1)
         Ivf.assignToCentroids(batch.select(col(idCol), col(vecCol)),
-            idCol, vecCol, cents0, "__cid", "__cvec")
+            vecCol, cents0, "__cid", "__cvec")
           .select(col(idCol).as("__bid"), col(vecCol).as("__bvec"),
             col("__cid"))
       else {
@@ -1182,7 +1176,7 @@ object Dedup {
       val keep = spark.read.parquet(p).drop("__cid", "__iv")
       // assignToCentroids appends __cid per row, preserving every
       // other column — id column name irrelevant to the kernel
-      val re = Ivf.assignToCentroids(keep, keep.columns.head, vecCol,
+      val re = Ivf.assignToCentroids(keep, vecCol,
           cents, "__cid", "__cvec")
         .withColumn("__iv", lit(v))
       graft.Recovery.idempotentWrite(re, p)

@@ -87,7 +87,7 @@ object Ivf {
     * argmax (zero shuffle); any other id type keeps the broadcast-join
     * formulation.
     */
-  def assignToCentroids(df: DataFrame, idCol: String, vecCol: String,
+  def assignToCentroids(df: DataFrame, vecCol: String,
                         centroids: DataFrame, centIdCol: String,
                         centVecCol: String): DataFrame = {
     val cf = centroids.select(
@@ -528,7 +528,7 @@ object Ivf {
     * same seeding, same iterations, NO corpus assignment. Returns the
     * TRAINED centroid frame (__cid int, __cvec array<float>) — the
     * artifact [[saveIndex]] persists. `assignToCentroids(corpus,
-    * idCol, vecCol, this, "__cid", "__cvec")` then reproduces the
+    * vecCol, this, "__cid", "__cvec")` then reproduces the
     * fused build's cell assignment bit-for-bit (spec-pinned), one
     * map-side kernel pass per corpus, however many times the quantizer
     * is reused.
@@ -772,7 +772,7 @@ object Ivf {
     val denom = col("__nv") * col("__nc")
     val scored =
       assignToCentroids(corpus.select(col(idCol), col(vecCol)),
-          idCol, vecCol, centroids, centIdCol, centVecCol)
+          vecCol, centroids, centIdCol, centVecCol)
         .withColumn("__nv", Similarity.norm(col(vecCol)))
         .join(cents, Seq("__cid"))
         .withColumn("__sim", when(denom =!= 0.0,
@@ -910,7 +910,7 @@ object Ivf {
   def topKIndexed(corpus: DataFrame, queries: DataFrame,
                   corpusId: String, queryId: String, vecCol: String,
                   centroids: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
-    topK(assignToCentroids(corpus, corpusId, vecCol, centroids,
+    topK(assignToCentroids(corpus, vecCol, centroids,
         "__cid", "__cvec"),
       queries, corpusId, queryId, vecCol, k, nprobe, Some(centroids))
 }

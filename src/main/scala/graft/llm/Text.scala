@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. All are
-  * pure codegen'd Column expressions (no UDFs) — they run map-side at
+  * codegen'd Column expressions (no UDFs) — they run map-side at
   * full whole-stage-codegen speed and never shuffle.
   *
   * (These extend beyond the reference repo, which has no text
@@ -13,78 +13,67 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
-  // ---- token counting ------------------------------------------------
+  // ---- document statistics -----------------------------------------
+  // Every scorer below is ONE graft_doc_stats expression: a single
+  // UTF-8 scan per document (graft.plans.DocStats) that equals the
+  // regex composition it replaced, count for count.
 
-  // counts use regexp_count (no match-array materialization); the
-  // DuckDB oracles keep len(regexp_extract_all(...)) — same value
+  import graft.plans.DocStats.column
 
-  /** Whitespace tokenization count. */
-  def tokenCount(c: Column): Column =
-    regexp_count(c, lit("\\S+"))
+  /** Whitespace tokenization count (`\S+` runs). */
+  def tokenCount(c: Column): Column = column(c, "tokens")
 
   /** BPE-ish pre-tokenizer count: letter runs / digit runs / symbol
     * runs, each with an optional leading space (GPT-2-style pattern
-    * minus lookaheads, which RE2-class engines reject).
+    * minus lookaheads).
     */
-  val bpeishPattern = " ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+"
-  def bpeishTokenCount(c: Column): Column =
-    regexp_count(c, lit(bpeishPattern))
+  def bpeishTokenCount(c: Column): Column = column(c, "bpe_tokens")
 
   // ---- quality scoring ----------------------------------------------
 
-  def alphaCount(c: Column): Column =
-    regexp_count(c, lit("[A-Za-z]"))
-  def punctCount(c: Column): Column =
-    regexp_count(c, lit("[.,;:!?]"))
+  def alphaCount(c: Column): Column = column(c, "alpha")
+  def punctCount(c: Column): Column = column(c, "punct")
 
-  val enStopwords = Seq("the", "a", "and", "of", "to", "in", "is")
-  def stopwordCount(c: Column, words: Seq[String] = enStopwords): Column =
-    regexp_count(lower(c), lit("\\b(" + words.mkString("|") + ")\\b"))
+  val enStopwords: Seq[String] = graft.plans.DocStats.EnStopwords
+  /** Whole-word [[enStopwords]] hits in `lower(c)`. */
+  def stopwordCount(c: Column): Column = column(c, "stopwords")
 
-  def alphaRatio(c: Column): Column =
-    alphaCount(c).cast("double") / greatest(length(c), lit(1))
-  def punctRatio(c: Column): Column =
-    punctCount(c).cast("double") / greatest(length(c), lit(1))
-  def stopwordRatio(c: Column, words: Seq[String] = enStopwords): Column =
-    stopwordCount(c, words).cast("double") / greatest(tokenCount(c), lit(1))
+  def alphaRatio(c: Column): Column = column(c, "alpha_ratio")
+  def punctRatio(c: Column): Column = column(c, "punct_ratio")
+  def stopwordRatio(c: Column): Column = column(c, "stopword_ratio")
 
   /** Composite quality score in [0,1]: length component (saturates at
     * `fullTokens` tokens) + alphabetic-character ratio + stopword
     * ratio. Deterministic double arithmetic; identical on any engine.
     */
-  def qualityScore(c: Column, fullTokens: Int = 50): Column =
-    least(lit(1.0), tokenCount(c).cast("double") / lit(fullTokens.toDouble)) * lit(0.3) +
-      alphaRatio(c) * lit(0.4) + stopwordRatio(c) * lit(0.3)
+  def qualityScore(c: Column, fullTokens: Int = 50): Column = {
+    require(fullTokens >= 1, s"fullTokens must be >= 1, got $fullTokens")
+    column(c, "quality_score", fullTokens)
+  }
 
   // ---- Gopher-style document rules -----------------------------------
   // Public corpus-filtering heuristics (Rae et al. 2021 "Scaling
   // Language Models: Gopher" appendix A; Penedo et al. 2023
-  // RefinedWeb). All pure codegen'd expressions — one map-side pass.
+  // RefinedWeb).
 
   /** Mean word length: non-whitespace chars / whitespace tokens. */
-  def meanWordLength(c: Column): Column =
-    (length(c) - regexp_count(c, lit("\\s"))).cast("double") /
-      greatest(tokenCount(c), lit(1))
+  def meanWordLength(c: Column): Column = column(c, "mean_word_length")
 
   /** Hash/ellipsis symbols per word (Gopher: drop when >= 0.1). */
-  def symbolToWordRatio(c: Column): Column =
-    regexp_count(c, lit("#|\\.\\.\\.|…")).cast("double") / greatest(tokenCount(c), lit(1))
+  def symbolToWordRatio(c: Column): Column = column(c, "symbol_ratio")
 
-  def lineCount(c: Column): Column = regexp_count(c, lit("\n")) + lit(1)
+  def lineCount(c: Column): Column = column(c, "lines")
 
   /** Fraction of lines starting with a bullet (Gopher: drop >= 0.9). */
-  def bulletLineFraction(c: Column): Column =
-    regexp_count(c, lit("(?m)^\\s*[-*•]")).cast("double") / lineCount(c)
+  def bulletLineFraction(c: Column): Column = column(c, "bullet_fraction")
 
   /** Fraction of lines ending in an ellipsis (Gopher: drop >= 0.3). */
-  def ellipsisLineFraction(c: Column): Column =
-    regexp_count(c, lit("(?m)(\\.\\.\\.|…) *$")).cast("double") / lineCount(c)
+  def ellipsisLineFraction(c: Column): Column = column(c, "ellipsis_fraction")
 
   /** Fraction of words containing at least one alphabetic character
     * (Gopher: drop < 0.8).
     */
-  def alphaWordFraction(c: Column): Column =
-    regexp_count(c, lit("\\S*[A-Za-z]\\S*")).cast("double") / greatest(tokenCount(c), lit(1))
+  def alphaWordFraction(c: Column): Column = column(c, "alpha_word_fraction")
 
   /** Distinct-word / total-word ratio — low values mean heavy
     * repetition (RefinedWeb-style repetition screen).
@@ -108,35 +97,22 @@ object Text {
     * short-doc corpora.
     */
   def gopherPasses(c: Column, minTokens: Int = 50, maxTokens: Int = 100000): Column =
-    tokenCount(c).between(minTokens, maxTokens) &&
-      meanWordLength(c).between(3.0, 10.0) &&
-      symbolToWordRatio(c) < 0.1 &&
-      bulletLineFraction(c) < 0.9 &&
-      ellipsisLineFraction(c) < 0.3 &&
-      alphaWordFraction(c) > 0.8
+    column(c, "gopher_passes", minTokens, maxTokens)
 
   // ---- readability ---------------------------------------------------
 
   /** Approximate syllable count: vowel groups (the standard cheap
     * heuristic — exact syllabification needs a dictionary).
     */
-  def syllableCount(c: Column): Column =
-    regexp_count(lower(c), lit("[aeiouy]+"))
+  def syllableCount(c: Column): Column = column(c, "syllables")
 
   /** Sentence count: terminal-punctuation runs, floored at one. */
-  def sentenceCount(c: Column): Column =
-    greatest(regexp_count(c, lit("[.!?]+")), lit(1))
+  def sentenceCount(c: Column): Column = column(c, "sentences")
 
   /** Flesch reading-ease score (206.835 - 1.015·words/sentences -
-    * 84.6·syllables/words); higher = easier. Null-safe via the
-    * standard floors; pure codegen'd regexp counts, map-side.
+    * 84.6·syllables/words); higher = easier.
     */
-  def fleschScore(c: Column): Column = {
-    val words = greatest(tokenCount(c), lit(1)).cast("double")
-    val sentences = sentenceCount(c).cast("double")
-    val syllables = syllableCount(c).cast("double")
-    lit(206.835) - lit(1.015) * words / sentences - lit(84.6) * syllables / words
-  }
+  def fleschScore(c: Column): Column = column(c, "flesch")
 
   // ---- language ID ---------------------------------------------------
 
@@ -144,33 +120,19 @@ object Text {
     * CJK presence wins outright; otherwise argmax of stopword hits
     * with deterministic tie-break in declaration order (en first).
     */
-  val langMarkers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of", "is", "a"),
-    "de" -> Seq("der", "die", "das", "und", "ist"),
-    "fr" -> Seq("le", "la", "les", "et", "est"),
-    "es" -> Seq("el", "los", "las", "y", "es"))
+  val langMarkers: Seq[(String, Seq[String])] = graft.plans.DocStats.LangMarkers
 
   def langScore(c: Column, lang: String): Column = {
-    val words = langMarkers.toMap.apply(lang)
-    regexp_count(lower(c), lit("\\b(" + words.mkString("|") + ")\\b"))
+    require(langMarkers.exists(_._1 == lang), s"no marker list for language '$lang'")
+    column(c, "lang_" + lang)
   }
 
-  def cjkCount(c: Column): Column =
-    regexp_count(c, lit("[\\u4e00-\\u9fff]"))
+  def cjkCount(c: Column): Column = column(c, "cjk")
 
-  def langId(c: Column): Column = {
-    val scores = langMarkers.map { case (l, _) => l -> langScore(c, l) }
-    val best = greatest(scores.map(_._2): _*)
-    // first-wins tie-break in declaration order (en, de, fr, es)
-    val firstWins = scores.foldRight(lit("und"): Column) { case ((l, s), acc) =>
-      when(s === best, lit(l)).otherwise(acc)
-    }
-    when(cjkCount(c) > 0, lit("zh")).otherwise(firstWins)
-  }
+  def langId(c: Column): Column = column(c, "lang_id")
 
   // ---- fingerprinting ------------------------------------------------
 
-  /** Exact content fingerprint (md5 of the full text). */
   /** CCNet-style corpus-LM quality score: each document's mean
     * add-k-smoothed bigram log-probability under the bigram language
     * model of the WHOLE corpus — the perplexity-proxy screen that
@@ -322,6 +284,7 @@ object Text {
           .as("drifted"))
   }
 
+  /** Exact content fingerprint (md5 of the full text). */
   def fingerprint(c: Column): Column = md5(c)
 
   /** Rolling-hash document fingerprint: the minimum md5 over all

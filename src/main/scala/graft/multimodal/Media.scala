@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -631,7 +631,7 @@ object Media {
     * policy: `nearest` (index remap) or `area` (integer box-filter —
     * the anti-aliased downscale).
     */
-  def resizeImages(df: DataFrame, idCol: String, binCol: String,
+  def resizeImages(df: DataFrame, binCol: String,
                    width: Int, height: Int,
                    algo: String = "nearest"): DataFrame =
     df.withColumn("resized",

@@ -83,7 +83,6 @@ object Pipeline {
 
   /** Compose the pipeline's DataFrame plan from named sources. */
   def run(spark: SparkSession, sources: Map[String, DataFrame], spec: Spec): DataFrame = {
-    import org.apache.spark.sql.functions.col
     spec.steps.foldLeft(sources(spec.primary)) { (df, step) =>
       step match {
         case Filter(c, op, v)       => Ops.filterBy(df, c, op, v)

@@ -605,6 +605,10 @@ class GraftExtensions extends SparkSessionExtensionsProvider {
           s"graft_simhash(text) takes 1 arg, got ${children.length}")
         SimHashF(children(0))
       }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_doc_stats"),
+      new ExpressionInfo(classOf[DocStatF].getName, "graft_doc_stats"),
+      (children: Seq[Expression]) => DocStats.build(children)))
     // Spark ships Bloom filter build/probe expressions for its own
     // runtime join filtering but does not register them as SQL
     // functions; exposing them gives the 100 TB membership-prune

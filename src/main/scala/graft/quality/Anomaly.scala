@@ -164,7 +164,6 @@ object Anomaly {
     // is one extra scan of the input; callers with expensive lineage
     // upstream should persist it first.
     val x = col(column)
-    val dec = DecimalType(28, scale)
     val unit = math.pow(10.0, scale)
     val a = math.pow(2.0, 52) / (unit * window)
     val cutoff = math.min(a, math.sqrt(a))

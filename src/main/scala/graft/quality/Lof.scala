@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -399,7 +399,7 @@ object Lof {
     require(maxCid >= 0, s"IVF cell ids must be non-negative, got max $maxCid")
     val bits = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(maxCid + 1))
     val assigned0 = graft.GraftSession.persistIfSmall(
-      Ivf.assignToCentroids(base, idCol, vecCol, q, "__cid", "__cvec"))
+      Ivf.assignToCentroids(base, vecCol, q, "__cid", "__cvec"))
     val assigned =
       if (!rescueSingletons) assigned0
       else {
@@ -415,7 +415,7 @@ object Lof {
           val stranded = assigned0.join(singles, Seq("__cid"), "left_semi")
             .drop("__cid")
           assigned0.join(singles, Seq("__cid"), "left_anti").unionByName(
-            Ivf.assignToCentroids(stranded, idCol, vecCol, keepCents,
+            Ivf.assignToCentroids(stranded, vecCol, keepCents,
               "__cid", "__cvec"))
         }
       }

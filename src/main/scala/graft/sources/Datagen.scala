@@ -155,7 +155,7 @@ object Datagen {
   // idCol mirrors withFields: the lottery must draw on the SAME id
   // column the frame was generated with, whatever it is named
   private def hit(rate: Double, seed: Long, salt: Long,
-                  idCol: String = "row_id"): Column =
+                  idCol: String): Column =
     prng(col(idCol), seed, salt) < lit((rate * M).toLong)
 
   /** One row per edge case — ref :81 generate_edge_case_data /

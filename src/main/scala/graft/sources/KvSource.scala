@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}

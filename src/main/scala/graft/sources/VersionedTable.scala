@@ -358,13 +358,13 @@ object VersionedTable {
     } finally fs.delete(tmp, false) // no-op if the publish moved it
   }
 
-  private def filesOf(spark: SparkSession, dir: String,
+  private def filesOf(dir: String,
                       ms: Seq[Manifest]): Seq[String] =
     ms.flatMap(_.files).map(n => new Path(new Path(dir), n).toString)
 
   private def emptyLike(spark: SparkSession, dir: String,
                         all: Seq[Manifest]): DataFrame = {
-    val files = filesOf(spark, dir, all)
+    val files = filesOf(dir, all)
     if (files.isEmpty)
       throw new IllegalArgumentException(
         s"versioned table at $dir has no committed data")
@@ -378,7 +378,7 @@ object VersionedTable {
   /** The whole table at its newest readable version. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val all = readable(fsOf(spark, new Path(dir)), dir)
-    val files = filesOf(spark, dir, all)
+    val files = filesOf(dir, all)
     if (files.isEmpty) emptyLike(spark, dir, all)
     else spark.read.parquet(files: _*)
   }
@@ -391,7 +391,7 @@ object VersionedTable {
                 sinceVersion: Long): DataFrame = {
     val all = readable(fsOf(spark, new Path(dir)), dir)
     val delta = all.filter(_.version > sinceVersion)
-    val files = filesOf(spark, dir, delta)
+    val files = filesOf(dir, delta)
     if (files.isEmpty) emptyLike(spark, dir, all)
     else spark.read.parquet(files: _*)
   }

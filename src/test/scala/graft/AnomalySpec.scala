@@ -413,7 +413,7 @@ class AnomalySpec extends SparkSpec {
       "vec_id", "embedding", nlist = 13)
     val ivfCost = pairCost(Ivf.assignToCentroids(
         vecs.select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", q, "__cid", "__cvec")
+        "embedding", q, "__cid", "__cvec")
       .select(col("__cid").as("__b")))
     info(s"in-bucket pair cost: hyperplane $hyperCost, ivf $ivfCost")
     assert(ivfCost < 4 * hyperCost && hyperCost < 4 * ivfCost,

@@ -183,7 +183,7 @@ class SearchSpec extends SparkSpec {
     val n = e.count()
     val nlist = Ivf.nlistFor(n)
     val cents = Ivf.trainIndex(e, "vec_id", "embedding", nlist, iters = 2)
-    val assigned = Ivf.assignToCentroids(e, "vec_id", "embedding", cents,
+    val assigned = Ivf.assignToCentroids(e, "embedding", cents,
         "__cid", "__cvec")
       .select(col("vec_id"), col("__cid").cast("long"))
       .orderBy("vec_id").collect().toSeq
@@ -419,11 +419,11 @@ class SearchSpec extends SparkSpec {
     // routes to the legacy broadcast-join + max_by form — the two must
     // agree row for row (same dot accumulation, same 6-dp rounding,
     // same lowest-cid tie-break)
-    val fast = Ivf.assignToCentroids(e, "vec_id", "embedding",
+    val fast = Ivf.assignToCentroids(e, "embedding",
         cents, "cid", "embedding")
       .select(col("vec_id"), col("__cid").cast("long"))
       .orderBy("vec_id").collect().toSeq
-    val slow = Ivf.assignToCentroids(e, "vec_id", "embedding",
+    val slow = Ivf.assignToCentroids(e, "embedding",
         cents.withColumn("cid", col("cid").cast("double")), "cid", "embedding")
       .select(col("vec_id"), col("__cid").cast("long"))
       .orderBy("vec_id").collect().toSeq
@@ -731,7 +731,7 @@ class SearchSpec extends SparkSpec {
         .withColumn("v", array(lit(0.2f), lit(0.8f))))
     val cents = Seq((1, Seq(1f, 0f)), (2, Seq(0f, 1f))).toDF("cid", "cvec")
     def run(c: org.apache.spark.sql.DataFrame) =
-      Ivf.assignToCentroids(df, "id", "v", c, "cid", "cvec")
+      Ivf.assignToCentroids(df, "v", c, "cid", "cvec")
         .select(col("id"), col("__cid").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fast = run(cents) // int cid → native kernel, map-side

@@ -1352,7 +1352,7 @@ class StreamsMediaSpec extends SparkSpec {
     assert(Media.resizeImage(Media.syntheticWebp(8, 8), 4, 4).isEmpty) // dims-only format
     val df = Seq((1L, Media.syntheticPng(1)),
         (2L, null.asInstanceOf[Array[Byte]])).toDF("id", "img")
-    val out = Media.resizeImages(df, "id", "img", 8, 8)
+    val out = Media.resizeImages(df, "img", 8, 8)
       .select(col("id"), col("resized").isNull.as("n"))
       .as[(Long, Boolean)].collect().toMap
     assert(out == Map(1L -> false, 2L -> true))
@@ -1417,7 +1417,7 @@ class StreamsMediaSpec extends SparkSpec {
     // DataFrame form: algo=area, null contract intact
     val df = Seq((1L, Media.syntheticPng(1)),
         (2L, null.asInstanceOf[Array[Byte]])).toDF("id", "img")
-    val out = Media.resizeImages(df, "id", "img", 9, 8, algo = "area")
+    val out = Media.resizeImages(df, "img", 9, 8, algo = "area")
       .select(col("id"), col("resized").isNull.as("n"))
       .as[(Long, Boolean)].collect().toMap
     assert(out == Map(1L -> false, 2L -> true))
