@@ -193,21 +193,25 @@ object GraftSession {
   }
 }
 
-/** Per-invocation scratch directories (q_stream_cdc's target+checkpoint
-  * copy, and anything else whose returned frame reads the path lazily)
-  * registered here are deleted by ONE static JVM shutdown hook — not one
-  * hook per invocation, which grew the JVM's hook list and the temp
-  * volume without bound in a long-lived REPL/server session. Eager
-  * reclamation: `sweep()` (called from GraftSession.releaseAll, i.e. at
-  * every between-units-of-work boundary) deletes all but the most
-  * recently registered dir, which may still back a live lazily-read
-  * frame from the current unit of work.
+/** Scratch directories, deleted by ONE static JVM shutdown hook — not
+  * one hook per invocation, which grew the JVM's hook list and the temp
+  * volume without bound in a long-lived REPL/server session.
+  *  - per-invocation dirs ([[register]]: a query's target, checkpoint
+  *    or history copy, anything whose returned frame reads the path
+  *    lazily) are also reclaimed eagerly: `sweep()` (called from
+  *    GraftSession.releaseAll, i.e. at every between-units-of-work
+  *    boundary) deletes all but the most recently registered dir, which
+  *    may still back a live lazily-read frame from the current unit of
+  *    work;
+  *  - session-lifetime dirs ([[registerForExit]]: a ledger or table
+  *    that repeated invocations reuse) are deleted at exit only.
   */
 object TempDirs {
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val lifetime = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val hook: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      dirs.forEach(p => rm(p.toFile)); dirs.clear()
+      Seq(dirs, lifetime).foreach { q => q.forEach(p => rm(p.toFile)); q.clear() }
     }))
   }
   private def rm(f: java.io.File): Unit = {
@@ -217,6 +221,12 @@ object TempDirs {
   /** Register a scratch dir for shutdown-time (and sweep-time) deletion. */
   def register(p: java.nio.file.Path): java.nio.file.Path = {
     hook; dirs.add(p); p
+  }
+
+  /** Register a session-lifetime dir: deleted at shutdown, never by
+    * `sweep()`. */
+  private[graft] def registerForExit(p: java.nio.file.Path): java.nio.file.Path = {
+    hook; lifetime.add(p); p
   }
 
   /** Delete every registered dir except the newest (still potentially

@@ -14,34 +14,18 @@ object QueriesIncremental {
     Tables.load(s, dir, name)
 
   /** Session-lifetime ledger dir for q_incr_watermark_store, removed
-    * by a shutdown hook — repeated invocations reuse it instead of
+    * at exit by [[TempDirs]] — repeated invocations reuse it instead of
     * leaking one temp tree each.
     */
-  private[graft] lazy val wmStoreDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_q_wmstore")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(d.toFile)
-    }))
-    d.toString + "/wm"
-  }
+  private[graft] lazy val wmStoreDir: String = TempDirs.registerForExit(
+    java.nio.file.Files.createTempDirectory("graft_q_wmstore")).toString + "/wm"
 
   /** Session-lifetime versioned-table root for q_incr_since_version —
     * per-sf-dir subtrees (the committed slices derive from the input
-    * tables), removed by the same shutdown discipline as the ledger.
+    * tables), removed at exit the same way.
     */
-  private[graft] lazy val vtBase: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_q_vt")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(d.toFile)
-    }))
-    d.toString
-  }
+  private[graft] lazy val vtBase: String = TempDirs.registerForExit(
+    java.nio.file.Files.createTempDirectory("graft_q_vt")).toString
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -538,8 +538,8 @@ object QueriesLlm {
     // comparison is EXACT on the sampled corpus while the oracle's
     // blocked all-pairs join shrinks ~100× — tractable for DuckDB at
     // sf10 (~20M pairs) where the full formulation is ~2B pairs. The
-    // engine-side scale path for UNBLOCKED corpora is
-    // embeddingNearDupLshAuto (occupancy-stable buckets).
+    // engine-side scale path for UNBLOCKED corpora is semanticNearDup
+    // (q_dedup_semantic).
     "q_dedup_embed_bounded" -> ((s, dir) => {
       Dedup.embeddingNearDup(
         t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0),

@@ -220,7 +220,7 @@ object QueriesPipeline {
     // per invocation BECAUSE the advance moves the watermark — a
     // reused ledger would make the second bench pass extract nothing.
     "q_job_incremental" -> ((s, dir) => {
-      val store = java.nio.file.Files.createTempDirectory("graft_jinc")
+      val store = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_jinc"))
         .toString + "/wm"
       graft.incremental.WatermarkStore.update(s, store, "pi", "w_orders",
         "o_orderdate", java.sql.Timestamp.valueOf("1997-01-01 00:00:00"),
@@ -245,7 +245,7 @@ object QueriesPipeline {
     // :345 in config): failing output rows route to the per-run
     // quarantine slice and the job continues with the clean side
     "q_job_quarantine_clean" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jq").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_jq")).toString
       graft.pipeline.Job.runJson(s, jobQuarantineJson(dir, tmp)).output
     }),
 
@@ -253,7 +253,7 @@ object QueriesPipeline {
     // area (failed_rules comma-joined in rule order; quarantined_at
     // is wall-clock bookkeeping, dropped for the deterministic hash)
     "q_job_quarantine" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jq").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_jq")).toString
       graft.pipeline.Job.runJson(s, jobQuarantineJson(dir, tmp)).close()
       s.read.parquet(s"$tmp/run_id=jq1").drop("quarantined_at")
     }),
@@ -267,7 +267,7 @@ object QueriesPipeline {
     // oracle-replayable; the other five families ride the same
     // dispatch (spec-verified incl. the version-checked semantic one).
     "q_job_screen" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jscr").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_jscr")).toString
       graft.Recovery.idempotentWrite(
         s.read.parquet(s"$dir/documents.parquet")
           .filter(pmod(col("doc_id"), lit(7)) === 0).select("text"),
@@ -300,7 +300,7 @@ object QueriesPipeline {
     // multi-batch parity with the library's ingestScreenStream and the
     // version-checked semantic refusal).
     "q_job_ingest" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jing").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_jing")).toString
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.Recovery.idempotentWrite(
         docs.filter(pmod(col("doc_id"), lit(7)) === 0).select("text"),
@@ -340,7 +340,7 @@ object QueriesPipeline {
     // sink): the dependency-ordered composition proven end-to-end
     // against the same oracle as q_job
     "q_dag" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_qdag").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_qdag")).toString
       val dag =
         s"""{"jobs": [
            | {"id": "a_filter", "job": {

@@ -60,7 +60,7 @@ object QueriesSearch {
     // packing. Every stage is oracle-expressible, so the WHOLE crawl
     // path is hash-checked as one composition, not just its pieces.
     "q_corpus_crawl" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_crawl").toString
+      val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_crawl")).toString
       val all = docs(s, dir)
       // stored histories: exact = raw texts of the %5 slice, near-dup
       // = minhash signatures of the %7 slice (built once, as a real

@@ -173,7 +173,7 @@ object QueriesWindow {
     */
   private def streamQuarantine(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_squar").toString
+    val tmp = TempDirs.register(java.nio.file.Files.createTempDirectory("graft_squar")).toString
     val cleanPath = s"$tmp/clean"
     val q = graft.streaming.Streams.quarantineStream(
       eventsStream(s, dir), streamQuarantineRules,

@@ -383,36 +383,6 @@ object Incremental {
     survivors.unionByName(applied)
   }
 
-  /** Gap detection — ref :480-519 detect_data_gaps (watermark-history
-    * semantics re-expressed over the data itself): consecutive distinct
-    * watermark/sequence values whose delta exceeds
-    * expectedStep × tolerance.
-    *
-    * Scale shape, ADAPTIVE: one cheap cardinality probe (HLL, a
-    * single map-combined aggregation of the raw scan) decides the
-    * plan; the quantile sketch is paid only on the big path.
-    *
-    *  - ≤ `smallDistinct` distinct values (the watermark/day/batch
-    *    case the reference targets): the classic distinct → one tiny
-    *    ordered window — bounded input, cheapest plan.
-    *  - more (dense ids, epoch seconds — billions of distinct values,
-    *    where one partition holding them all is a scale killer): the
-    *    sketch edges range-bucket the values map-side (flat codegen'd
-    *    `value > edge` sum, monotone so cross-bucket order matches
-    *    value order), and each value is ALSO emitted once into the
-    *    NEXT bucket as a marked boundary copy. `lag` then runs per
-    *    bucket: a bucket's first own value takes the previous bucket's
-    *    maximum from the copies (which all sort below the own values),
-    *    copies are dropped after the window, and the seams stitch
-    *    exactly. Every interior bucket is provably non-empty — each
-    *    sketch edge is an observed value landing in its own bucket —
-    *    so no seam can skip a bucket. ONE window job over 2×distinct
-    *    plus the edge sketch over the persisted distinct frame
-    *    (distinct-value quantiles, immune to hot-value row skew); no
-    *    driver-side merge state.
-    *
-    * Both plans produce identical output.
-    */
   /** Mergeable distinct-count maintenance: one HLL sketch per group
     * (Spark's built-in DataSketches HllSketch agg), persistable as a
     * binary column. The 100 TB use: computing "distinct users per
@@ -441,6 +411,33 @@ object Incremental {
       hll_sketch_estimate(col("__u")).cast("long").as("approx_distinct"): _*)
   }
 
+  /** Gap detection — ref :480-519 detect_data_gaps (watermark-history
+    * semantics re-expressed over the data itself): consecutive distinct
+    * watermark/sequence values whose delta exceeds
+    * expectedStep × tolerance.
+    *
+    * Scale shape, ADAPTIVE: the distinct values are built once, pinned,
+    * and their EXACT count picks the plan.
+    *
+    *  - ≤ `smallDistinct` distinct values (the watermark/day/batch
+    *    case the reference targets): one ordered window over the
+    *    distinct values — bounded input, cheapest plan. The pin is
+    *    released before returning: that plan reads the distinct frame
+    *    once.
+    *  - more (dense ids, epoch seconds — billions of distinct values,
+    *    where one partition holding them all is a scale killer):
+    *    quantile edges of the DISTINCT values (immune to hot-value row
+    *    skew) range-bucket them map-side (a flat codegen'd
+    *    `value > edge` sum, monotone so bucket order matches value
+    *    order), and `lag` runs per bucket. The bucket seams stitch from
+    *    the per-bucket (min, max) aggregate: at most one row per bucket,
+    *    so its unpartitioned window is free and links consecutive
+    *    non-empty buckets. The bucket count grows with the distinct
+    *    count past ~32M (`maxBuckets` is the floor) so each window
+    *    partition stays bounded.
+    *
+    * Both plans produce identical output.
+    */
   def gaps(df: DataFrame, seqCol: String, expectedStep: Double = 1.0,
            tolerance: Double = 1.5, maxBuckets: Int = 64,
            smallDistinct: Long = 1L << 20): DataFrame = {

@@ -830,78 +830,11 @@ object Dedup {
       .select("id_a", "id_b", "sim")
   }
 
-  /** Unblocked embedding near-dup at scale: block by deterministic
-    * hyperplane bucket first (recall < 1, measured in specs).
-    *
-    * `hotBucketCap` (> 0 to enable) bounds the densest bucket the way
-    * real embedding corpora demand — planesFor holds the MEAN
-    * occupancy, but clustered corpora skew hard (the LOF sf10
-    * measurement: median 91, max 10,688 — one bucket owning a
-    * single-task quadratic pair explosion). Buckets above the cap are
-    * REFINED WITH EXTRA HYPERPLANES (ceil(log2(occ / cap)) fresh
-    * planes from [[graft.llm.Similarity.hyperplaneBucketSlice]]), NOT
-    * id-hash-split: near-dup pairs must stay together, and similar
-    * vectors agree on each fresh plane with the usual 1 − θ/π odds —
-    * so refinement can only DROP pairs (sub-buckets partition the
-    * bucket), never invent them, and EXACT duplicates can never be
-    * lost (identical vectors agree on every plane). Residual: a mass
-    * of truly identical vectors never separates — correctly, since
-    * every pair among them IS a near-dup pair and the quadratic
-    * output is the answer (collapse clusters downstream via
-    * [[nearDupClusters]] when that is the real question).
-    */
-  def embeddingNearDupLsh(df: DataFrame, idCol: String, vecCol: String,
-                          planes: Int = 8, threshold: Double = 0.9,
-                          hotBucketCap: Int = 0): DataFrame = {
-    val bucketed = df.withColumn("__bucket",
-      Similarity.hyperplaneBucket(col(vecCol), planes))
-    val refined =
-      if (hotBucketCap <= 0 || planes <= 0) bucketed
-      else {
-        // no persist (r15): the projection is the native codegen
-        // kernel, so each consumer (occupancy agg, hot join, pair
-        // stage) re-derives with a scan + cheap per-row loop instead
-        // of reading a corpus-sized cache
-        val b = bucketed
-        val hot = broadcast(
-          b.groupBy(col("__bucket")).agg(count(lit(1)).as("__occ"))
-            .filter(col("__occ") > hotBucketCap)
-            .select(col("__bucket"),
-              least(lit(16.0), ceil(log2(col("__occ").cast("double") / hotBucketCap)))
-                .cast("int").as("__extra")))
-        val ext = Similarity.hyperplaneBucketSlice(col(vecCol), 16, planes)
-        b.join(hot, Seq("__bucket"), "left")
-          .withColumn("__bucket",
-            when(col("__extra").isNull, col("__bucket"))
-              .otherwise(col("__bucket") +
-                (pmod(ext, pow(lit(2.0), col("__extra")).cast("long")) + 1L) *
-                  lit(1L << math.min(planes, 45))))
-          .drop("__extra")
-      }
-    embeddingNearDup(refined, idCol, vecCol, "__bucket", threshold)
-  }
-
-  /** [[embeddingNearDupLsh]] with `planes` sized from the corpus (one
-    * count() scan) and the hot-bucket refinement on at 4× the target:
-    * in-bucket all-pairs cost stays n·targetBucketSize/2 as the corpus
-    * grows — a FIXED plane count instead grows bucket occupancy, and
-    * with it the pair count, linearly (the same quadratic-in-bucket
-    * hazard [[graft.quality.Lof]] measured before its r12 adaptive
-    * flip) — and the cap handles the skew tail the mean cannot see.
-    */
-  def embeddingNearDupLshAuto(df: DataFrame, idCol: String, vecCol: String,
-                              targetBucketSize: Int = 512,
-                              threshold: Double = 0.9): DataFrame =
-    embeddingNearDupLsh(df, idCol, vecCol,
-      planes = Similarity.planesFor(df.count(), targetBucketSize), threshold,
-      hotBucketCap = 4 * targetBucketSize)
-
   /** SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     * arXiv:2303.09540): k-means-cluster the embedding corpus (the IVF
     * cell build), then emit within-cell pairs with rounded cosine
-    * >= threshold — the LEARNED counterpart of
-    * [[embeddingNearDupLsh]]'s data-blind hyperplane blocking (the
-    * registered recall telemetry says learned partitions group
+    * >= threshold — the LEARNED counterpart of data-blind hyperplane
+    * blocking (the registered recall telemetry says learned partitions group
     * semantically-close vectors far better per candidate:
     * q_sim_ivf_recall 0.79 vs q_sim_lsh_recall 0.23 at the sf10 gate).
     * Output contract matches the other near-dup generators:
@@ -916,9 +849,9 @@ object Dedup {
     * [[graft.llm.Ivf.buildIndexSampled]] (bounded deterministic Lloyd
     * sample, ONE map-side native-kernel assignment pass over the
     * corpus); the within-cell self-join costs n·occupancy/2 dots; and
-    * cells above `hotCellCap` are refined with fresh hyperplanes
-    * exactly like the LSH form's hot buckets — refinement partitions
-    * a cell, so it can only DROP pairs, never invent them. nlist=1
+    * cells above `hotCellCap` are refined with fresh hyperplanes —
+    * refinement partitions a cell, so it can only DROP pairs, never
+    * invent them. nlist=1
     * with no cap degenerates to the exact unblocked all-pairs form —
     * the oracle anchor (q_dedup_semantic_exact).
     */
@@ -967,12 +900,11 @@ object Dedup {
   }
 
   /** [[semanticNearDupAt]] at the adaptive operating point: nlist on
-    * the ANN sqrt rule (per-row assignment cost is nlist·dim, so the
-    * occupancy-stable nlist = n/target sizing the LSH form uses would
-    * send the one full-corpus assignment pass superlinear; the
-    * hot-cell refinement carries the within-cell occupancy bound
-    * instead) and hot cells refined at 4× the target, mirroring
-    * [[embeddingNearDupLshAuto]].
+    * the ANN sqrt rule (per-row assignment cost is nlist·dim, so an
+    * occupancy-stable nlist = n/target sizing would send the one
+    * full-corpus assignment pass superlinear; the hot-cell refinement
+    * carries the within-cell occupancy bound instead) and hot cells
+    * refined at 4× the target.
     */
   def semanticNearDup(df: DataFrame, idCol: String, vecCol: String,
                       targetCellSize: Int = 512,

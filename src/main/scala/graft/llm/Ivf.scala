@@ -330,21 +330,9 @@ object Ivf {
     math.max(minList, math.ceil(math.sqrt(math.max(0L, n).toDouble)).toInt)
   }
 
-  /** [[buildIndexSampled]] with `nlist` sized from the corpus (one
-    * count() scan) — cell occupancy ~sqrt(n) AND sample-bounded Lloyd
-    * training, the scale-stable operating point on both axes.
-    */
-  def buildIndexAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                     iters: Int = 2, minList: Int = 16,
-                     trainPerCell: Int = 64): DataFrame = {
-    val n = corpus.count()
-    buildIndexSampled(corpus, idCol, vecCol, nlistFor(n, minList), iters,
-      trainPerCell, knownCount = Some(n))
-  }
-
   /** Build the index: (corpus columns ++ __cid cell id). Lloyd
     * training runs over the FULL corpus — prefer
-    * [[buildIndexSampled]]/[[buildIndexAuto]] when the corpus is large.
+    * [[buildIndexSampled]] when the corpus is large.
     */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
                  nlist: Int = 16, iters: Int = 2): DataFrame =
@@ -561,7 +549,8 @@ object Ivf {
     */
   def clearIndexCache(): Unit = indexMemo.clear()
 
-  /** [[buildIndexAuto]]'s train half with an in-process memo: returns
+  /** The train half of [[buildIndexSampled]] at the sqrt-rule
+    * [[nlistFor]] cell count, with an in-process memo: returns
     * (corpus row count, trained centroid frame), both served from the
     * memo on a key hit — zero Spark jobs, so every IVF-family consumer
     * in a run (ANN top-k, recall telemetry, semantic dedup, k-means

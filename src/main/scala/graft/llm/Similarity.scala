@@ -272,18 +272,14 @@ object Similarity {
     * multi-probe hyperplane LSH on the same hard query set, the FAISS
     * conclusion reproduced: learned cells adapt to the data
     * distribution where fixed hyperplanes cannot, and the sqrt-rule
-    * cell count keeps per-query probe cost ~nprobe·sqrt(n). LSH stays
-    * the PAIR-GENERATION engine for near-dup dedup
-    * ([[graft.llm.Dedup.embeddingNearDupLshAuto]]), where bucket
-    * co-occurrence of near-identical vectors — not per-query recall
-    * on arbitrary queries — is the contract.
+    * cell count keeps per-query probe cost ~nprobe·sqrt(n).
     *
     * Below `exactThreshold` rows the router returns EXACT brute force
     * (the FAISS flat-index regime: at small n the full pairing is
     * cheaper than an index build and recall is 1.0 by construction);
     * above it, a sampled-training IVF index for this batch (a pin the
-    * caller's scope owns, see GraftSession.releaseAll, or build once with
-    * [[graft.llm.Ivf.buildIndexAuto]] and probe [[graft.llm.Ivf.topK]]
+    * caller's scope owns, see GraftSession.releaseAll, or train once with
+    * [[graft.llm.Ivf.trainAutoCached]] and probe [[graft.llm.Ivf.topK]]
     * directly across many batches).
     */
   def topKAuto(corpus: DataFrame, queries: DataFrame,

@@ -68,7 +68,7 @@ object Job {
                         // r20: the streaming crawl-ingest loop as config —
                         // a Screen-shaped section (same dialect/knobs as the
                         // batch `screen` step) that [[runStream]] dispatches
-                        // through Streams.ingestScreenStreamBatchAware:
+                        // through Streams.screenSlice:
                         // screen each micro-batch against the history,
                         // APPEND survivors' signatures (which the batch
                         // screen step deliberately never does). Streaming
@@ -108,6 +108,10 @@ object Job {
   private val sinkMode = JsonCfg.choice("\"atomic\" or one of " +
     graft.sources.FileSink.saveModes.keys.toSeq.sorted.mkString(" | "))(m =>
     m == "atomic" || graft.sources.FileSink.saveModes.contains(m.toLowerCase))
+
+  // the strategies the section runs (both cut with afterWatermark's
+  // range filter); the ledger records the name as the event's tag
+  private val strategy = JsonCfg.choice("timestamp | sequence")(Set("timestamp", "sequence"))
 
   /** A job document already read; each section goes to its front-end
     * as a node.
@@ -158,7 +162,7 @@ object Job {
       def field(f: String): String = str(n, f, "incremental")
       val spec = IncrementalSpec(field("watermark_store"), field("pipeline_id"),
         field("source_id"), field("column"),
-        str.opt(n, "strategy", "incremental").getOrElse("timestamp"))
+        strategy.opt(n, "strategy", "incremental").getOrElse("timestamp"))
       require(declared(spec.sourceId),
         s"incremental.source_id '${spec.sourceId}' is not a declared dataset")
       spec
@@ -318,13 +322,14 @@ object Job {
     run(spark, parse(json))
 
   /** The SAME one-document job driven by a STREAMING primary: new
-    * files under the primary dataset's path become micro-batches, and
-    * each batch runs through the identical sections — the batch
-    * [[Pipeline.run]] with the static datasets joined in
-    * (stream-static join), the quarantine split, and the sink — so
-    * config written for the batch job replays unchanged as a stream. Exactly-once on BOTH outputs:
-    * clean rows land as `batch_id=N` atomic-swap slices under the
-    * sink path, quarantined rows under
+    * files under the primary dataset's path become micro-batches. The
+    * document's steps compose ON the stream once ([[Pipeline.run]] with
+    * the static datasets joined in, stream-static), and each
+    * micro-batch runs one body: quarantine split → (with an `ingest`
+    * section) history screen → sink — so config written for the batch
+    * job replays unchanged as a stream. Exactly-once on every output:
+    * clean rows land as `batch_id=N` atomic-swap slices under the sink
+    * path, quarantined rows under
     * `<quarantine_dir>/run_id=<id>/batch_id=N` — a checkpoint replay
     * REPLACES its own slices instead of double-appending. Read the
     * accumulated output back with [[streamedOutput]].
@@ -335,30 +340,29 @@ object Job {
     * replayed union. Aggregation/window/sql steps are rejected loudly
     * — per-batch aggregates would silently DIFFER from the batch
     * result; stream aggregation belongs to
-    * [[graft.streaming.Streams.windowedAgg]] and friends. The
-    * `anomaly` section is batch-scoped (its baselines need the whole
-    * frame) and likewise rejected — as is `min_score`: the gate's
-    * percentage thresholds and aggregate score are not
-    * batching-invariant (each micro-batch could pass while the union
-    * fails, or vice versa, with earlier batches' output already
-    * committed), so gate [[streamedOutput]] with
-    * [[graft.quality.DQ.check]] + gateFromResults instead. The sink's
-    * `mode` must be `"atomic"` or absent: this runner always writes
-    * `batch_id=N` atomic-swap slices, so an explicit `append`/
+    * [[graft.streaming.Streams.windowedAgg]] and friends. A join Spark
+    * cannot run incrementally against a static side (`right`/`full`
+    * outer: the static side's unmatched rows would repeat per batch)
+    * fails when the stream starts. The `anomaly` section is
+    * batch-scoped (its baselines need the whole frame) and likewise
+    * rejected — as is `min_score`: the gate's percentage thresholds
+    * and aggregate score are not batching-invariant (each micro-batch
+    * could pass while the union fails, or vice versa, with earlier
+    * batches' output already committed), so gate [[streamedOutput]]
+    * with [[graft.quality.DQ.check]] + gateFromResults instead. The
+    * sink's `mode` must be `"atomic"` or absent: this runner always
+    * writes `batch_id=N` atomic-swap slices, so an explicit `append`/
     * `overwrite` mode would replay with silently different semantics.
     *
-    * With an `ingest` section (r20 — the last reference surface that
-    * was library-only: the crawl screen+append loop as a stored
-    * document), each micro-batch additionally runs the declared
-    * ingest-screen family between the quarantine split and the sink:
-    * the (transformed, clean) rows screen against the signature
-    * history at `history`, survivors land in the sink slice, and the
-    * survivors' SIGNATURES append as this batch's history slice —
-    * [[graft.streaming.Streams.ingestScreenStreamBatchAware]]'s
-    * replay-exclusion/atomic-append contract, with the family + knobs
-    * resolved through the SAME dispatch as the batch `screen` step
-    * ([[Pipeline.screenFns]]), so a document's knobs mean the same
-    * thing on both paths (spec-pinned parity with
+    * With an `ingest` section (the crawl screen+append loop as a stored
+    * document), the clean rows screen against the signature history
+    * at `history` and the survivors' SIGNATURES append as this batch's
+    * history slice through [[graft.streaming.Streams.screenSlice]] —
+    * the replay-exclusion/atomic-append step
+    * [[graft.streaming.Streams.ingestScreenStream]] runs — with the
+    * family + knobs resolved through the SAME dispatch as the batch
+    * `screen` step ([[Pipeline.screenFns]]), so a document's knobs
+    * mean the same thing on both paths (spec-pinned parity with
     * [[graft.streaming.Streams.ingestScreenStream]]). The section's
     * `id`/`column` must exist on the TRANSFORMED rows (the steps run
     * first). Quarantined rows never reach the history — a failing row
@@ -420,56 +424,28 @@ object Job {
     val schema = Catalog.load(spark, primarySpec).schema
     val stream = graft.streaming.Streams.fileStream(spark,
       primarySpec.format, primarySpec.path, schema, primarySpec.options)
-    spec.ingest match {
-      case None =>
-        graft.streaming.Streams.eachBatch(stream, checkpointDir) { (batch, batchId) =>
-          val out = Pipeline.run(spark,
-            statics + (spec.pipeline.primary -> batch), spec.pipeline)
-          val result = spec.quarantine match {
-            case None => out
-            case Some((dir, runId)) =>
-              val (clean, bad) = DQ.split(out, spec.dqRules)
-              graft.Recovery.idempotentWrite(bad,
-                s"$dir/run_id=$runId/batch_id=$batchId")
-              clean
-          }
-          graft.Recovery.idempotentWrite(result,
-            s"$sinkPath/batch_id=$batchId", sinkFormat)
-        }
-      case Some(scr) =>
-        // the ingest loop: the (row-local + stream-static-join) steps
-        // compose directly ON the stream — every supported step is
-        // batching-invariant, so per-micro-batch rows are exactly the
-        // batch pipeline's rows — then the generic screen core owns
-        // the per-batch machinery: history read EXCLUDING this batch
-        // id (replay safety), quarantine split, screen, survivor
-        // signatures appended via the atomic swap, survivors to the
-        // sink slice. Family + knobs resolve through the SAME dispatch
-        // as the batch screen step; the semantic quantizer (and its
-        // handshake version) loads ONCE here, at stream start.
-        val transformed = Pipeline.run(spark,
-          statics + (spec.pipeline.primary -> stream), spec.pipeline)
-        val (signatures, screen) = Pipeline.screenFns(spark, scr)
-        graft.streaming.Streams.ingestScreenStreamBatchAware(
-          transformed, scr.historyRoot, checkpointDir)(signatures)(
-          (batch, history, batchId) => {
-            // quarantine BEFORE the screen: a row that fails quality
-            // was never ingested, so it must not enter the history
-            val cleaned = spec.quarantine match {
-              case None => batch
-              case Some((dir, runId)) =>
-                val (clean, bad) = DQ.split(batch, spec.dqRules)
-                graft.Recovery.idempotentWrite(bad,
-                  s"$dir/run_id=$runId/batch_id=$batchId")
-                clean
-            }
-            screen(cleaned, history)
-          })(
-          (survivors, batchId) => {
-            graft.Recovery.idempotentWrite(survivors,
-              s"$sinkPath/batch_id=$batchId", sinkFormat)
-            ()
-          })
+    // the steps compose ON the stream, once: every supported step is
+    // batching-invariant, so each micro-batch's rows are exactly the
+    // batch pipeline's rows, and Spark refuses at start what it cannot
+    // run incrementally (a right or full outer join against a static
+    // dataset). The ingest family + knobs resolve through the SAME
+    // dispatch as the batch screen step; the semantic quantizer (and
+    // its handshake version) loads ONCE here, at stream start.
+    val transformed = Pipeline.run(spark,
+      statics + (spec.pipeline.primary -> stream), spec.pipeline)
+    val ingest = spec.ingest.map(scr => (scr.historyRoot, Pipeline.screenFns(spark, scr)))
+    graft.streaming.Streams.eachBatch(transformed, checkpointDir) { (batch, batchId) =>
+      // quarantine BEFORE the screen: a row that fails quality was
+      // never ingested, so it must not enter the history
+      val clean = spec.quarantine.fold(batch) { case (dir, runId) =>
+        graft.streaming.Streams.quarantineSlice(batch, spec.dqRules,
+          s"$dir/run_id=$runId", batchId)
+      }
+      val survivors = ingest.fold(clean) { case (root, (signatures, screen)) =>
+        graft.streaming.Streams.screenSlice(clean, root, batchId)(signatures)(screen)
+      }
+      graft.Recovery.idempotentWrite(survivors,
+        s"$sinkPath/batch_id=$batchId", sinkFormat)
     }
   }
 

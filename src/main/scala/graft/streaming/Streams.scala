@@ -249,12 +249,23 @@ object Streams {
     require(aggOnly.isEmpty,
       s"quarantineStream needs per-row rules; aggregate-level: ${aggOnly.mkString(", ")}")
     eachBatch(stream, checkpointDir) { (batch, batchId) =>
-      val (ok, bad) = graft.quality.DQ.split(batch, rules)
-      // no extra batch column: the batch_id=N slice layout already
-      // surfaces it as a partition column on read
-      graft.Recovery.idempotentWrite(bad, s"$quarantinePath/batch_id=$batchId")
-      clean(ok, batchId)
+      clean(quarantineSlice(batch, rules, quarantinePath, batchId), batchId)
     }
+  }
+
+  /** One micro-batch of [[quarantineStream]] (and of
+    * [[graft.pipeline.Job.runStream]]'s quarantine split): split `batch`
+    * through `rules` and write the failed side as the `batch_id=N`
+    * slice under `root` through the atomic swap; returns the clean
+    * side. No extra batch column: the slice layout surfaces it as a
+    * partition column on read.
+    */
+  private[graft] def quarantineSlice(batch: DataFrame,
+                                     rules: Seq[graft.quality.DQ.Rule],
+                                     root: String, batchId: Long): DataFrame = {
+    val (ok, bad) = graft.quality.DQ.split(batch, rules)
+    graft.Recovery.idempotentWrite(bad, s"$root/batch_id=$batchId")
+    ok
   }
 
   /** Everything quarantined across all batches so far (healed slices
@@ -306,35 +317,32 @@ object Streams {
                         (signatures: DataFrame => DataFrame)
                         (screen: (DataFrame, DataFrame) => DataFrame)
                         (clean: (DataFrame, Long) => Unit) =
-    ingestScreenStreamBatchAware(stream, historyRoot, checkpointDir)(
-      signatures)((b, history, _) => screen(b, history))(clean)
-
-  /** [[ingestScreenStream]] with the micro-batch id exposed to the
-    * screen function (r20) — for composed per-batch work that needs a
-    * replay-stable slice identity of its own beside the history slice
-    * (the config-driven ingest job routes its quarantine split through
-    * this: failing rows land under `batch_id=N` exactly-once, survivors
-    * continue into the screen). Identical history/replay/append
-    * contract; the extra argument is the only difference.
-    */
-  def ingestScreenStreamBatchAware(stream: DataFrame, historyRoot: String,
-                                   checkpointDir: String)
-                        (signatures: DataFrame => DataFrame)
-                        (screen: (DataFrame, DataFrame, Long) => DataFrame)
-                        (clean: (DataFrame, Long) => Unit) = {
     eachBatch(stream, checkpointDir) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      // every healed slice but this batch's own (a replay must not
-      // screen against itself); none yet is a cold start with no seed
-      val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")(_ != batchId.toString)
-      val history =
-        if (slices.isEmpty) signatures(batch.limit(0))
-        else spark.read.option("basePath", historyRoot).parquet(slices: _*)
-      val survivors = screen(batch, history, batchId)
-      graft.Recovery.idempotentWrite(
-        signatures(survivors), s"$historyRoot/batch_id=$batchId")
-      clean(survivors, batchId)
+      clean(screenSlice(batch, historyRoot, batchId)(signatures)(screen), batchId)
     }
+
+  /** One micro-batch of [[ingestScreenStream]] (and of
+    * [[graft.pipeline.Job.runStream]]'s `ingest` section): screen
+    * `batch` against every healed history slice but this batch's own
+    * (a replay must not screen against itself; none yet is a cold
+    * start with no seed), write the survivors' signatures as the
+    * `batch_id=N` slice through the atomic swap, and return the
+    * survivors.
+    */
+  private[graft] def screenSlice(batch: DataFrame, historyRoot: String,
+                                 batchId: Long)
+                                (signatures: DataFrame => DataFrame)
+                                (screen: (DataFrame, DataFrame) => DataFrame)
+      : DataFrame = {
+    val spark = batch.sparkSession
+    val slices = graft.Recovery.slices(spark, historyRoot, "batch_id")(_ != batchId.toString)
+    val history =
+      if (slices.isEmpty) signatures(batch.limit(0))
+      else spark.read.option("basePath", historyRoot).parquet(slices: _*)
+    val survivors = screen(batch, history)
+    graft.Recovery.idempotentWrite(
+      signatures(survivors), s"$historyRoot/batch_id=$batchId")
+    survivors
   }
 
   /** Compact an [[ingestScreenStream]] history root — SCHEMA-AGNOSTIC

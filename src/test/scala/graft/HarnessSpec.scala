@@ -25,6 +25,24 @@ class HarnessSpec extends SparkSpec {
     assert(more.init.forall(!_.toFile.exists) && more.last.toFile.exists)
   }
 
+  test("a query's scratch dir is reclaimed at the next releaseAll after a later query") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def jobDirs(): Set[String] = Option(tmpRoot.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("graft_jq")).toSet)
+    val before = jobDirs()
+    SparkEntry.queries("q_job_quarantine")(spark, TestSession.sfDir).count()
+    val first = jobDirs() -- before
+    assert(first.size == 1, s"expected one new scratch dir, got $first")
+    SparkEntry.queries("q_job_quarantine_clean")(spark, TestSession.sfDir).count()
+    GraftSession.releaseAll(spark)
+    assert(!new java.io.File(tmpRoot, first.head).exists,
+      s"${first.head} outlived the next query and releaseAll")
+    // the session-lifetime ledger is reused across invocations, never swept
+    val ledger = new java.io.File(QueriesIncremental.wmStoreDir).getParentFile
+    GraftSession.releaseAll(spark)
+    assert(ledger.exists, "sweep must not delete a session-lifetime dir")
+  }
+
   test("Bench.planFingerprint ignores run-varying ids, catches plan changes") {
     val p1 = "Project [l_orderkey#123L, sum#456]\n+- *(2) Filter (l_qty#12 > 5)"
     val p2 = "Project [l_orderkey#987L, sum#12]\n+- *(4) Filter (l_qty#77 > 5)"

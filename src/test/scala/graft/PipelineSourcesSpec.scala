@@ -894,6 +894,54 @@ class PipelineSourcesSpec extends SparkSpec {
       s""""path": "$base/x5-sink", "mode": "atomic""""))
   }
 
+  test("Job streaming mode: a full outer join against a static dataset fails at start") {
+    import graft.pipeline.Job
+    val base = Files.createTempDirectory("graft_jobstream_full").toString
+    val in = s"$base/in"
+    val sfDir = TestSession.sfDir
+    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    orders.filter(col("o_orderkey") % 2 === 0).coalesce(1).write.parquet(in)
+    // the streaming-mode document with the static join made full outer:
+    // customers no order matches are the static side's unmatched rows
+    def doc(runId: String) =
+      s"""{
+         |  "datasets": [
+         |    {"name": "s_orders", "format": "parquet", "path": "$in",
+         |     "options": {"maxFilesPerTrigger": "1"}},
+         |    {"name": "s_customer", "format": "parquet",
+         |     "path": "$sfDir/customer.parquet"}
+         |  ],
+         |  "pipeline": {"primary": "s_orders", "steps": [
+         |    {"type": "filter", "column": "o_totalprice", "op": ">", "value": 1000},
+         |    {"type": "rename", "mapping": {"o_custkey": "c_custkey"}},
+         |    {"type": "join", "right": "s_customer", "on": ["c_custkey"], "how": "full"},
+         |    {"type": "select", "columns": ["o_orderkey", "c_custkey",
+         |      "c_mktsegment", "o_orderstatus", "o_totalprice"]}
+         |  ]},
+         |  "sink": {"format": "parquet", "path": "$base/$runId-sink"}
+         |}""".stripMargin
+    val started = scala.util.Try(Job.runStreamJson(spark, doc("sr1"), s"$base/ckpt"))
+    // a stream that runs anyway must at least equal the batch job on the
+    // replayed union over two micro-batches
+    started.foreach { q =>
+      try {
+        q.processAllAvailable()
+        orders.filter(col("o_orderkey") % 2 === 1).coalesce(1)
+          .write.mode("append").parquet(in)
+        q.processAllAvailable()
+      } finally q.stop()
+      val streamed = Job.streamedOutput(spark, s"$base/sr1-sink")
+      assert(streamed.select("batch_id").distinct().count() >= 2)
+      val s = streamed.drop("batch_id")
+      val batchOut = Job.runJson(spark, doc("br1")).output
+      assert(s.count() == batchOut.count() &&
+        s.exceptAll(batchOut).isEmpty && batchOut.exceptAll(s).isEmpty,
+        "the streamed union differs from the batch job")
+    }
+    val e = started.failed.get
+    assert(e.getMessage.contains("FullOuter"), e.getMessage)
+  }
+
   test("ingest section: parse validation; batch runs reject it loudly") {
     import graft.pipeline.Job
     val base = Files.createTempDirectory("graft_ingval").toString

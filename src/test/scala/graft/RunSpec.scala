@@ -159,6 +159,16 @@ class RunSpec extends SparkSpec {
         s"$id: $out")
     }
     assert(cli("validate", quarantined("nightly"))._1 == 0)
+    // an incremental strategy the section does not run is a typo, not
+    // a free-form ledger tag
+    def incremental(strategy: String) = writeDoc(jobDoc(0.0).replace("\"quality\":",
+      s""""incremental": {"watermark_store": "/nonexistent/wm", "pipeline_id": "p",
+         | "source_id": "ro", "column": "o_orderdate", "strategy": "$strategy"},
+         | "quality":""".stripMargin))
+    val (typoCode, typoOut) = cli("validate", incremental("timestmap"))
+    assert(typoCode == 2 && typoOut.contains("invalid document") &&
+      typoOut.contains("strategy"), typoOut)
+    assert(cli("validate", incremental("sequence"))._1 == 0)
     // a dag with a cycle fails validation too
     val (cycCode, cycOut) = cli("validate", writeDoc(
       s"""{"jobs": [

@@ -152,7 +152,8 @@ class SearchSpec extends SparkSpec {
     val routed = Similarity.topKAuto(e, q, "vec_id", "qid", "embedding",
         k = 5, exactThreshold = 0L)
       .orderBy("query_id", "rnk").collect().toSeq
-    val index = Ivf.buildIndexAuto(e, "vec_id", "embedding").persist()
+    val index = Ivf.buildIndexSampled(e, "vec_id", "embedding",
+      Ivf.nlistFor(e.count())).persist()
     index.count()
     val manual = Ivf.topK(index, q, "vec_id", "qid", "embedding", k = 5,
         nprobe = 8, cellCentroids = Some(Ivf.centroids(index, "embedding")))
@@ -466,10 +467,12 @@ class SearchSpec extends SparkSpec {
     assert(Ivf.nlistFor(100000000) == 10000)
     assert(Ivf.nlistFor(0) == 16)
 
-    // the auto entry points equal their explicit-parameter forms
+    // the sampled build at the sqrt-rule cell count degenerates to the
+    // exact build on a small corpus; the auto LSH entry point equals
+    // its explicit-parameter form
     val e = table("embeddings")
     val n = e.count()
-    val auto = Ivf.buildIndexAuto(e, "vec_id", "embedding", iters = 2)
+    val auto = Ivf.buildIndexSampled(e, "vec_id", "embedding", Ivf.nlistFor(n), iters = 2)
       .select("vec_id", "__cid").orderBy("vec_id").collect().toSeq
     val manual = Ivf.buildIndex(e, "vec_id", "embedding",
       nlist = Ivf.nlistFor(n), iters = 2)

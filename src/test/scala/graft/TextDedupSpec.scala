@@ -513,41 +513,6 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.toSeq == Seq((1L, 2L)))
   }
 
-  test("embeddingNearDupLshAuto equals the explicit-planes form at planesFor(n)") {
-    val e = table("embeddings")
-    val n = e.count()
-    val auto = Dedup.embeddingNearDupLshAuto(e, "vec_id", "embedding",
-        targetBucketSize = 512, threshold = 0.4)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val manual = Dedup.embeddingNearDupLsh(e, "vec_id", "embedding",
-        planes = graft.llm.Similarity.planesFor(n, 512), threshold = 0.4)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(auto == manual && auto.nonEmpty)
-  }
-
-  test("embedding LSH hot-bucket refinement: subset of uncapped pairs, exact dups never lost") {
-    // clustered corpus: 120 vectors in one tight cluster (all land in
-    // one bucket at planes=2) + planted EXACT duplicate pairs
-    val base = (1 to 120).map { i =>
-      val r = new scala.util.Random(i * 31337)
-      val v = Array.fill(8)(0.9f + r.nextFloat() * 0.1f) // tight cluster
-      (i.toLong, v)
-    }
-    val dups = Seq((2001L, base(3)._2.clone()), (2002L, base(7)._2.clone()))
-    val vecs = (base ++ dups).toDF("vec_id", "embedding")
-    def pairSet(cap: Int) = Dedup.embeddingNearDupLsh(vecs, "vec_id",
-        "embedding", planes = 2, threshold = 0.999, hotBucketCap = cap)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val uncapped = pairSet(0)
-    val capped = pairSet(16) // forces ceil(log2(122/16)) = 3 extra planes
-    // refinement partitions buckets: it can only DROP pairs
-    assert(capped.subsetOf(uncapped))
-    // exact duplicates agree on every extra plane — never lost
-    assert(capped.contains((4L, 2001L)) && capped.contains((8L, 2002L)))
-    // and the refinement genuinely bounds the hot bucket (it split)
-    assert(capped.size < uncapped.size || uncapped.size <= 16 * 16)
-  }
-
   test("minhashAgainstHistory: stored-signature screen, no history text recompute") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again"

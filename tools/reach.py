@@ -7,7 +7,6 @@ resolved by name:
 
   query       a `SparkEntry` query (SparkEntry.scala, Queries*.scala)
   job         the job-document dispatch (PipelineJson, Job, Dag, Run)
-  router      a `*Auto` router def
   harness     a harness main (Bench, Verify, Explain, ScaleUp, Run)
   graftbench  `graftbench/src`, which compiles against `src/main`
   specs       `src/test` only
@@ -39,7 +38,7 @@ import re
 import sys
 from collections import defaultdict, deque
 
-GROUPS = ["query", "job", "router", "harness", "graftbench", "specs"]
+GROUPS = ["query", "job", "harness", "graftbench", "specs"]
 JOB_FILES = {"PipelineJson.scala", "Job.scala", "Dag.scala", "Run.scala"}
 HARNESS_OBJECTS = {"Bench", "Verify", "Explain", "ScaleUp", "Run"}
 
@@ -404,7 +403,6 @@ def census(repo):
     seeds = {
         "query": own(lambda n: base(n) == "SparkEntry.scala" or base(n).startswith("Queries")),
         "job": own(lambda n: base(n) in JOB_FILES),
-        "router": own(lambda n: n.kind == "def" and n.name.endswith("Auto")),
         "harness": own(lambda n: n.qname.split(".")[0] in HARNESS_OBJECTS),
         "graftbench": resolved(seed_refs(scala_files(os.path.join(repo, "graftbench", "src")))),
         "specs": resolved(seed_refs(scala_files(os.path.join(repo, "src", "test")))),
