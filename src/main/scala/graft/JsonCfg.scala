@@ -70,6 +70,8 @@ private[graft] object JsonCfg {
   val obj = new Read[JsonNode]("an object", _.isObject, identity)
   val objects = new Read[Seq[JsonNode]]("an array of objects",
     arrayOf(_, 0)(_.isObject), elements)
+  val nonEmptyObjects = new Read[Seq[JsonNode]]("a non-empty array of objects",
+    arrayOf(_, 1)(_.isObject), elements)
   /** Column names: only strings are legitimate — a numeric "column" is
     * a typo that would otherwise die later as an unresolved column.
     */

@@ -16,7 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * siblings of its target, and only this object builds or parses
   * their names; [[slices]] is the one reader of a root written
   * slice by slice. Torn state under the visible sibling names earlier
-  * versions used still heals.
+  * versions used still heals. The engine's other hidden files are
+  * this object's too: what Spark's listing sees ([[hidden]],
+  * [[dataFiles]]), every private name ([[privatePath]]) and the small
+  * text files kept beside the data ([[readText]], [[writeText]]).
   */
 object Recovery {
 
@@ -165,8 +168,72 @@ object Recovery {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = fsOf(spark, rootPath)
     if (found.nonEmpty || !heal(fs, rootPath)) found
-    else fs.listStatus(rootPath).map(_.getPath.getName)
-      .find(n => !n.startsWith(".") && !n.startsWith("_")).map(_ => root).toSeq
+    else fs.listStatus(rootPath).find(st => !hidden(st.getPath.getName)).map(_ => root).toSeq
+  }
+
+  // ---- the engine's hidden files ---------------------------------
+
+  /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`,
+    * private to Spark), the one visibility rule of the engine: `.` and
+    * `_` names are hidden, except parquet summary files and `_k=v`
+    * partition directories, and so is an in-flight `._COPYING_` file.
+    */
+  private[graft] def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+
+  /** A data file's name: visible, and no `_` summary file. */
+  private[graft] def dataFile(name: String): Boolean =
+    !hidden(name) && !name.startsWith("_")
+
+  /** Every entry under `root` as Spark's listing descends the tree:
+    * each visible directory is listed, and the hidden entries met on
+    * the way are kept but never entered (empty when `root` does not
+    * exist).
+    */
+  private[graft] def tree(fs: org.apache.hadoop.fs.FileSystem,
+                          root: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    (try fs.listStatus(root).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+      .flatMap { st =>
+        if (st.isDirectory && !hidden(st.getPath.getName)) st +: tree(fs, st.getPath)
+        else Seq(st)
+      }
+
+  /** The data files Spark reads under `root`, at any depth. */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                               root: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    tree(fs, root).filter(st => st.isFile && dataFile(st.getPath.getName))
+
+  /** `parent/.name`: the one builder of the engine's private names
+    * (staging dirs, temp manifests, leases, retirement manifests),
+    * hidden from Spark's listing by their dot. [[privateName]] parses
+    * one back.
+    */
+  private[graft] def privatePath(parent: org.apache.hadoop.fs.Path,
+                                 name: String): org.apache.hadoop.fs.Path =
+    child(parent, "." + name)
+
+  /** The `name` [[privatePath]] built `p` from; None for any other path. */
+  private[graft] def privateName(p: org.apache.hadoop.fs.Path): Option[String] =
+    Some(p.getName).filter(_.startsWith(".")).map(_.stripPrefix("."))
+
+  /** The whole of a small UTF-8 file: a manifest, a descriptor, a lease. */
+  private[graft] def readText(fs: org.apache.hadoop.fs.FileSystem,
+                              p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** `text` as the whole of the small file `p`, replacing any there (a
+    * plain create: atomic publication is the caller's rename).
+    */
+  private[graft] def writeText(fs: org.apache.hadoop.fs.FileSystem,
+                               p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   private def fsOf(spark: SparkSession,
@@ -177,8 +244,8 @@ object Recovery {
 
   private def siblings(target: org.apache.hadoop.fs.Path)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = (
-    child(target.getParent, s".${target.getName}__staging"),
-    child(target.getParent, s".${target.getName}__old"))
+    privatePath(target.getParent, s"${target.getName}__staging"),
+    privatePath(target.getParent, s"${target.getName}__old"))
 
   // a path-only child: a name holding ':' (a run id stamped with a
   // time) must not parse as a URI scheme
@@ -198,8 +265,7 @@ object Recovery {
     */
   private[graft] def hiddenSwapTarget(p: org.apache.hadoop.fs.Path)
       : Option[org.apache.hadoop.fs.Path] =
-    if (p.getName.startsWith(".")) unsuffixed(p, p.getName.stripPrefix("."))
-    else None
+    privateName(p).flatMap(unsuffixed(p, _))
 
   private val swapSuffixes = Seq("__staging", "__old")
 

@@ -159,7 +159,8 @@ object WatermarkStore {
     // shared staging between concurrent appenders, and the event
     // appears atomically (one rename) or not at all; a failed write
     // leaves no staging dir behind
-    SmallParquet.publish(spark, new org.apache.hadoop.fs.Path(dir, s".__wm_append_$stamp"),
+    SmallParquet.publish(spark,
+      graft.Recovery.privatePath(new org.apache.hadoop.fs.Path(dir), s"__wm_append_$stamp"),
       eventFileSchema, _ => new org.apache.hadoop.fs.Path(
         leafPath(dir, pipelineId, sourceId), s"event-$stamp.parquet"))(
       put => put(Row(column, v, vt, strategy, op, updateTime, stamp)))
@@ -405,54 +406,35 @@ object WatermarkStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return
-    val retiredDir = new org.apache.hadoop.fs.Path(root, ".__wm_retired")
+    val retiredDir = graft.Recovery.privatePath(root, "__wm_retired")
 
     // ---- phase 1: reap the previous compact's retired originals ----
     if (fs.exists(retiredDir)) fs.listStatus(retiredDir).foreach { m =>
       if (m.isFile) {
-        val in = fs.open(m.getPath)
-        val listed = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
         // relative paths: the manifest survives a ledger-tree move
-        listed.filter(_.nonEmpty).foreach(rel =>
+        graft.Recovery.readText(fs, m.getPath).linesIterator.filter(_.nonEmpty).foreach(rel =>
           fs.delete(new org.apache.hadoop.fs.Path(root, rel), false))
         fs.delete(m.getPath, false)
       }
     }
 
     // ---- phase 2: fold each leaf and retire what was merged --------
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toSeq.flatMap {
-        case st if st.isDirectory =>
-          val n = st.getPath.getName
-          if (n.startsWith(".") || n.startsWith("_")) Nil
-          else leaves(st.getPath)
-        case st if st.isFile &&
-          !st.getPath.getName.startsWith(".") &&
-          !st.getPath.getName.startsWith("_") => Seq(p)
-        case _ => Nil
-      }.distinct
     val rootUri = fs.makeQualified(root).toUri
-    leaves(root).foreach { leaf =>
-      val originals = fs.listStatus(leaf).toSeq.filter(st => st.isFile &&
-        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      if (originals.size > 1) {
+    graft.Recovery.dataFiles(fs, root).groupBy(_.getPath.getParent)
+      .filter(_._2.size > 1).foreach { case (leaf, originals) =>
         val stamp = java.util.UUID.randomUUID().toString
         // the append protocol: stream the originals' rows into a private
         // staging dir, publish the combined file with one rename
         SmallParquet.publish(spark,
-          new org.apache.hadoop.fs.Path(leaf, s".__wm_compact_$stamp"), eventSchema,
+          graft.Recovery.privatePath(leaf, s"__wm_compact_$stamp"), eventSchema,
           _ => new org.apache.hadoop.fs.Path(leaf, s"compact-$stamp.parquet"))(
           put => SmallParquet.foreach(spark, originals, eventSchema)(put))
         // combined file is visible from here on; retire (don't
         // delete) the merged originals for the next run's reap
         val rels = originals.map(st => rootUri.relativize(
           fs.makeQualified(st.getPath).toUri).getPath)
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(retiredDir, s"$stamp.list"), false)
-        try out.write(rels.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
+        graft.Recovery.writeText(fs,
+          new org.apache.hadoop.fs.Path(retiredDir, s"$stamp.list"), rels.mkString("\n"))
       }
-    }
   }
 }

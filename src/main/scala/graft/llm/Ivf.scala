@@ -631,10 +631,8 @@ object Ivf {
     val dim = vecDim(saved, "__cvec")
     val meta = s"""{$formatTag,"version":1,""" +
       s""""nlist":$nlist,"dim":$dim,"metric":"cosine","payload":"$payload"}"""
-    graft.Recovery.swap(fs, new org.apache.hadoop.fs.Path(dirPath, indexMetaName)) { tmp =>
-      val out = fs.create(tmp, true)
-      try out.write((meta + "\n").getBytes("UTF-8")) finally out.close()
-    }
+    graft.Recovery.swap(fs, new org.apache.hadoop.fs.Path(dirPath, indexMetaName))(
+      graft.Recovery.writeText(fs, _, meta + "\n"))
     // sweep payloads at least TWO versions back (the one directly
     // superseded stays for readers that resolved it just before the
     // commit); the legacy un-versioned `centroids` dir is left alone —
@@ -647,12 +645,6 @@ object Ivf {
     }
   }
 
-  private def readText(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
   /** The descriptor's completeness test for [[graft.Recovery.heal]]: a
     * staged copy whose writer died mid-write lacks the format tag or
     * the closing newline, and loses to the retiree.
@@ -660,7 +652,7 @@ object Ivf {
   private def completeDescriptor(fs: org.apache.hadoop.fs.FileSystem,
                                  p: org.apache.hadoop.fs.Path): Boolean =
     fs.exists(p) && {
-      val s = readText(fs, p)
+      val s = graft.Recovery.readText(fs, p)
       s.contains(formatTag) && s.endsWith("\n")
     }
 
@@ -718,7 +710,7 @@ object Ivf {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(graft.Recovery.heal(fs, p, completeDescriptor),
       s"no $indexMetaName under $dir — not a graft ANN index")
-    val meta = readText(fs, p)
+    val meta = graft.Recovery.readText(fs, p)
     require(meta.contains(formatTag), s"$p is not a graft-ivf-index descriptor")
     val payload = payloadFieldRe.findFirstMatchIn(meta)
       .map(_.group(1)).getOrElse("centroids")

@@ -82,7 +82,8 @@ object RunHistory {
     val partition = new Path(dir, org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.getPartitionPathString("run_id", runId))
     SmallParquet.publish(spark,
-      new Path(dir, s".__hist_append_${java.util.UUID.randomUUID()}"), schema,
+      graft.Recovery.privatePath(new Path(dir), s"__hist_append_${java.util.UUID.randomUUID()}"),
+      schema,
       file => new Path(partition, file.getName))(put => rows.foreach(put))
   }
 

@@ -130,10 +130,10 @@ object Job {
       .foreach(n => require(declared(n), s"pipeline source '$n' is not a declared dataset"))
 
     val quality = obj.opt(root, "quality", "job config")
-    val rules = quality.fold(Seq.empty[DQ.Rule])(DQ.rulesFromNode)
     // a gate written as a string would otherwise coerce to 0.0 and
     // silently DISABLE the gate
     val minScore = quality.flatMap(num.opt(_, "min_score", "quality"))
+    val rules = quality.fold(Seq.empty[DQ.Rule])(DQ.rulesFromNode)
     val quarantine = quality.flatMap { q =>
       str.opt(q, "quarantine_dir", "quality").map { d =>
         // run_id must be EXPLICIT: quarantine slices are written

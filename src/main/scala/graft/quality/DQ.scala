@@ -225,10 +225,12 @@ object DQ {
   def rulesFromJson(json: String): Seq[Rule] =
     rulesFromNode(JsonCfg.read(json, "rule config"))
 
-  /** The `rules` array of a rule config or of a job's quality section. */
+  /** The `rules` array of a rule config or of a job's quality section:
+    * non-empty, since a rule-less gate or quarantine split checks nothing.
+    */
   private[graft] def rulesFromNode(root: JsonNode): Seq[Rule] = {
     import JsonCfg.{num, str}
-    JsonCfg.objects(root, "rules", "rule config").map { r =>
+    JsonCfg.nonEmptyObjects(root, "rules", "rule config").map { r =>
       val id = str(r, "rule_id", "rule")
       val ctx = s"rule $id"
       def text(f: String): String = str(r, f, ctx)

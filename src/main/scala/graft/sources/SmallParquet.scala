@@ -32,19 +32,12 @@ object SmallParquet {
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  /** Spark's listing rule for data files (`HadoopFSUtils`): `.` and `_`
-    * entries are hidden, except parquet summary files and `_k=v`
-    * partition directories.
+  /** The visible children of `dir` (empty when it does not exist), by
+    * Spark's listing rule ([[graft.Recovery.hidden]]).
     */
-  private def hidden(name: String): Boolean =
-    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-      name.endsWith("._COPYING_")) &&
-      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
-
-  /** The visible children of `dir` (empty when it does not exist). */
   def list(spark: SparkSession, dir: Path): Seq[FileStatus] = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName))
+    try fs.listStatus(dir).toSeq.filterNot(st => graft.Recovery.hidden(st.getPath.getName))
     catch { case _: java.io.FileNotFoundException => Nil }
   }
 
@@ -102,8 +95,7 @@ object SmallParquet {
       val st = fs.getFileStatus(root)
       if (st.isDirectory) list(spark, root) else Seq(st)
     } catch { case _: java.io.FileNotFoundException => return None }
-    if (entries.exists(st => st.isDirectory || hidden(st.getPath.getName) ||
-        st.getPath.getName.startsWith("_")))
+    if (entries.exists(st => st.isDirectory || !graft.Recovery.dataFile(st.getPath.getName)))
       return None
     entries.sortBy(_.getPath.toString).headOption.flatMap { first =>
       try Some(footerSchema(spark, first))

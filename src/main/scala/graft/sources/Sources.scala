@@ -191,32 +191,6 @@ object FileSink {
       .write.format(format).mode(mode).save(path)
   }
 
-  /** Data files under `root`, excluding anything inside a hidden
-    * (dot/underscore-prefixed) path component — what Spark's own
-    * listing would read. Keeps compaction from sweeping an atomic
-    * swap's hidden staging or retired directory back in.
-    */
-  private def visibleDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                               root: org.apache.hadoop.fs.Path)
-      : Vector[org.apache.hadoop.fs.LocatedFileStatus] = {
-    def hiddenBelowRoot(p: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != root) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    val it = fs.listFiles(root, true)
-    var files = Vector.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (!hiddenBelowRoot(f.getPath)) files :+= f
-    }
-    files
-  }
-
   /** Small-file compaction — the operational sweep every long-lived
     * 100 TB dataset needs (streaming sinks and incremental appends
     * accrete kilobyte files; a million tiny files makes listing and
@@ -239,7 +213,7 @@ object FileSink {
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
     // heal a previous crashed sweep before reading anything
     graft.Recovery.restoreIfTorn(spark, root.toString)
-    val before = visibleDataFiles(fs, root)
+    val before = graft.Recovery.dataFiles(fs, root)
     // ANY nested layout (hive partitions, or plain subdirectories)
     // must be compacted per leaf directory — a whole-tree rewrite
     // would flatten the directory structure into root, breaking
@@ -259,7 +233,7 @@ object FileSink {
     // to round-trip); string-typed csv/json reads keep values verbatim
     val df = spark.read.format(format).options(options).load(path).coalesce(parts)
     graft.Recovery.idempotentWrite(df, path, format, options)
-    (before.size.toLong, visibleDataFiles(fs, root).size.toLong)
+    (before.size.toLong, graft.Recovery.dataFiles(fs, root).size.toLong)
   }
 
   /** Per-partition small-file sweep for hive-layout datasets: every
@@ -280,19 +254,10 @@ object FileSink {
     // sits complete in a hidden staging/old sibling): a torn leaf has
     // no visible files, so discover it from the hidden dirs — at any
     // partition depth
-    def hiddenSwapTargets(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { st =>
-        graft.Recovery.hiddenSwapTarget(st.getPath) match {
-          case Some(t) => Seq(t)
-          case None =>
-            val n = st.getPath.getName
-            if (n.startsWith(".") || n.startsWith("_")) Nil
-            else hiddenSwapTargets(st.getPath)
-        }
-      }
-    hiddenSwapTargets(root).distinct
+    graft.Recovery.tree(fs, root).filter(_.isDirectory)
+      .flatMap(st => graft.Recovery.hiddenSwapTarget(st.getPath)).distinct
       .foreach(t => graft.Recovery.restoreIfTorn(spark, t.toString))
-    val leaves = visibleDataFiles(fs, root).map(_.getPath.getParent).distinct
+    val leaves = graft.Recovery.dataFiles(fs, root).map(_.getPath.getParent).distinct
     require(leaves.nonEmpty, s"no data files under $path")
     val results = leaves.sortBy(_.toString)
       .map(dir => compact(spark, dir.toString, targetFileBytes, format, options))

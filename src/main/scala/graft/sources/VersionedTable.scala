@@ -63,6 +63,10 @@ object VersionedTable {
   private val header = "#graft-versioned-manifest"
   private val endMark = "#end"
   private val txnPrefix = "#txn:"
+  // the private names under `_graft_log`: a commit's temp manifest and
+  // a [[FileLeaseLocker]]'s lease, both reclaimed by [[vacuum]]
+  private val tempSuffix = ".tmp"
+  private val leaseSuffix = ".lease"
 
   /** Exclusive atomic publish: move the fully written `tmp` manifest
     * into the contended version `slot`. MUST return true iff the slot
@@ -130,18 +134,11 @@ object VersionedTable {
                               staleLeaseMs: Long = 60000L,
                               waitMs: Long = 30000L) extends CommitLocker {
     private def readSmall(fs: FileSystem, p: Path): Option[String] =
-      try {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-      } catch { case _: java.io.IOException => None }
-
-    private def writeOver(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-      val out = fs.create(p, true) // plain overwrite; no atomicity assumed
-      try out.write(bytes) finally out.close()
-    }
+      try Some(graft.Recovery.readText(fs, p))
+      catch { case _: java.io.IOException => None }
 
     override def publish(fs: FileSystem, tmp: Path, slot: Path): Boolean = {
-      val lease = new Path(slot.getParent, s".${slot.getName}.lease")
+      val lease = graft.Recovery.privatePath(slot.getParent, slot.getName + leaseSuffix)
       val token = java.util.UUID.randomUUID().toString
       val deadline = System.currentTimeMillis() + waitMs
       // 1. wait out a fresh foreign lease; steal a stale one
@@ -160,7 +157,8 @@ object VersionedTable {
       }
       if (fs.exists(slot)) return false // published while we waited
       // 2. claim by write + settle + read-back
-      writeOver(fs, lease, token.getBytes("UTF-8"))
+      // a plain overwrite; no atomicity assumed
+      graft.Recovery.writeText(fs, lease, token)
       Thread.sleep(settleMs)
       if (!readSmall(fs, lease).contains(token)) return false // outraced
       try {
@@ -169,7 +167,7 @@ object VersionedTable {
         else {
           val body = readSmall(fs, tmp).getOrElse(
             throw new java.io.IOException(s"commit temp manifest $tmp unreadable"))
-          writeOver(fs, slot, body.getBytes("UTF-8"))
+          graft.Recovery.writeText(fs, slot, body)
           readSmall(fs, slot).contains(body)
         }
       } finally {
@@ -258,9 +256,7 @@ object VersionedTable {
       .flatMap(st => versionOf(st.getPath).map(v => (v, st)))
       .sortBy(_._1)
       .map { case (v, st) =>
-        val in = fs.open(st.getPath)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
+        val lines = graft.Recovery.readText(fs, st.getPath).linesIterator.toList
         Manifest(v,
           lines.filterNot(_.startsWith("#")).filter(_.nonEmpty),
           lines.find(_.startsWith(txnPrefix)).map(_.stripPrefix(txnPrefix)),
@@ -318,7 +314,7 @@ object VersionedTable {
       manifests(fs, dir).find(m => m.complete && m.txnId.contains(id)))
     if (replayed.nonEmpty) return replayed.get.version
     val stamp = java.util.UUID.randomUUID().toString
-    val staging = new Path(root, s".__vt_stage_$stamp")
+    val staging = graft.Recovery.privatePath(root, s"__vt_stage_$stamp")
     df.write.parquet(staging.toString)
     val names = try {
       val parts = fs.listStatus(staging).toSeq
@@ -340,10 +336,8 @@ object VersionedTable {
     // next slot (the pre-r16 create-then-write loop did exactly that
     // when close() failed after the content was fully written)
     val body = (header +: txnId.map(txnPrefix + _).toSeq) ++ names :+ endMark
-    val tmp = new Path(logDir(dir), s".m-$stamp.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    val tmp = graft.Recovery.privatePath(logDir(dir), s"m-$stamp$tempSuffix")
+    graft.Recovery.writeText(fs, tmp, body.mkString("\n") + "\n")
     try {
       // CAS loop: claim the next unclaimed version slot; losing just
       // means someone else published that version — re-list, retry
@@ -362,25 +356,26 @@ object VersionedTable {
                       ms: Seq[Manifest]): Seq[String] =
     ms.flatMap(_.files).map(n => new Path(new Path(dir), n).toString)
 
-  private def emptyLike(spark: SparkSession, dir: String,
-                        all: Seq[Manifest]): DataFrame = {
-    val files = filesOf(dir, all)
-    if (files.isEmpty)
-      throw new IllegalArgumentException(
-        s"versioned table at $dir has no committed data")
-    // one driver-side footer read pins the schema for a no-delta read
-    val head = new Path(files.head)
+  /** The rows of `delta`'s files, or an empty frame when it has none.
+    * The schema is one driver-side footer read (of the delta's first
+    * file, else the table's), so building the frame runs no schema
+    * inference job.
+    */
+  private def frameOf(spark: SparkSession, dir: String, all: Seq[Manifest],
+                      delta: Seq[Manifest]): DataFrame = {
+    val files = filesOf(dir, delta)
+    val head = new Path((files ++ filesOf(dir, all)).headOption.getOrElse(
+      throw new IllegalArgumentException(s"versioned table at $dir has no committed data")))
     val schema = SmallParquet.footerSchema(spark, fsOf(spark, head).getFileStatus(head))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
   }
 
   /** The whole table at its newest readable version. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val all = readable(fsOf(spark, new Path(dir)), dir)
-    val files = filesOf(dir, all)
-    if (files.isEmpty) emptyLike(spark, dir, all)
-    else spark.read.parquet(files: _*)
+    frameOf(spark, dir, all, all)
   }
 
   /** Rows committed STRICTLY AFTER `sinceVersion` — the incremental
@@ -390,10 +385,7 @@ object VersionedTable {
   def readSince(spark: SparkSession, dir: String,
                 sinceVersion: Long): DataFrame = {
     val all = readable(fsOf(spark, new Path(dir)), dir)
-    val delta = all.filter(_.version > sinceVersion)
-    val files = filesOf(dir, delta)
-    if (files.isEmpty) emptyLike(spark, dir, all)
-    else spark.read.parquet(files: _*)
+    frameOf(spark, dir, all, all.filter(_.version > sinceVersion))
   }
 
   /** Delete data files no complete manifest references (crashed-commit
@@ -412,7 +404,7 @@ object VersionedTable {
     val referenced = ms.filter(_.complete).flatMap(_.files).toSet
     val dataRemoved = fs.listStatus(root).toSeq.count { st =>
       val n = st.getPath.getName
-      st.isFile && !n.startsWith(".") && !n.startsWith("_") &&
+      st.isFile && graft.Recovery.dataFile(n) &&
         !referenced.contains(n) && now - st.getModificationTime >= staleClaimMs &&
         fs.delete(st.getPath, false)
     }
@@ -422,9 +414,9 @@ object VersionedTable {
     val tmpRemoved =
       if (!fs.exists(ld)) 0
       else fs.listStatus(ld).toSeq.count { st =>
-        val n = st.getPath.getName
-        st.isFile && n.startsWith(".") &&
-          (n.endsWith(".tmp") || n.endsWith(".lease")) &&
+        st.isFile &&
+          graft.Recovery.privateName(st.getPath)
+            .exists(n => n.endsWith(tempSuffix) || n.endsWith(leaseSuffix)) &&
           now - st.getModificationTime >= staleClaimMs &&
           fs.delete(st.getPath, false)
       }

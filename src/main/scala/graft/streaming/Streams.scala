@@ -93,6 +93,9 @@ object Streams {
     df.writeStream.format("memory").queryName(queryName)
       .outputMode(outputMode).start()
 
+  /** Replay bytes per state partition in [[drainStatePartitions]]. */
+  private val StreamBytesPerStatePartition: Long = 4L << 20
+
   /** State-store partition count for a BOUNDED replay, derived from the
     * replay's input volume. A stateful streaming query pins its state
     * partitioning to `spark.sql.shuffle.partitions` at the FIRST
@@ -102,10 +105,10 @@ object Streams {
     * whole state fits a few partitions spends most of its wall time
     * committing empty ones (r20-opt: ~1.2-1.7 s per stateful drain at
     * the session's core-count partitioning). Volume-derived, never a
-    * constant: bytes / `spark.graft.streamBytesPerStatePartition`,
-    * clamped to [1, session shuffle partitions], so a corpus-sized
-    * replay keeps the session's full parallelism and only small
-    * replays shed the fixed commit overhead. Callers scope it to the
+    * constant: bytes / [[StreamBytesPerStatePartition]], clamped to
+    * [1, session shuffle partitions], so a corpus-sized replay keeps
+    * the session's full parallelism and only small replays shed the
+    * fixed commit overhead. Callers scope it to the
     * one query start (state partitioning is a per-checkpoint
     * property).
     *
@@ -119,13 +122,11 @@ object Streams {
     * the few-MB gate replays still collapse to one partition (the
     * commit-overhead win, ~45-60% of the drain), while anything past
     * ~128 MB clamps to the session's parallelism — the pre-r21
-    * behavior recovered exactly. The knob sheds fixed commit overhead
-    * on small replays and deliberately nothing else. The session conf
-    * is its only override (a non-positive value keeps the default).
+    * behavior recovered exactly. The target sheds fixed commit overhead
+    * on small replays and deliberately nothing else.
     */
   def drainStatePartitions(spark: SparkSession, inputBytes: Long): Int = {
-    val per = spark.conf.getOption("spark.graft.streamBytesPerStatePartition")
-      .map(_.trim.toLong).filter(_ > 0).getOrElse(4L << 20)
+    val per = StreamBytesPerStatePartition
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1L, math.min(session.toLong, (inputBytes + per - 1) / per)).toInt
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ import graft.sources.SmallParquet
 class DriverStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = scratchDir(prefix).toString
   private def fs: FileSystem = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -348,6 +347,24 @@ class DriverStateSpec extends SparkSpec {
     assert(leafFiles(big, "p", "s").size == 1)
     check("one compacted file")
     assert(WatermarkStore.events(spark, big, "p", "s").count() == (1 << 14) + 41)
+  }
+
+  test("VersionedTable.read and readSince build their frame with no Spark job") {
+    import graft.sources.VersionedTable
+    val dir = tmp("graft_vtread") + "/t"
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "s"), dir)
+    VersionedTable.commit(Seq((2L, "b"), (3L, "c")).toDF("id", "s"), dir)
+    val files = new java.io.File(dir).list().filter(_.endsWith(".parquet"))
+      .sorted.map(n => s"$dir/$n").toSeq
+    val (whole, wholeJobs) = jobsDuring(VersionedTable.read(spark, dir))
+    val (delta, deltaJobs) = jobsDuring(VersionedTable.readSince(spark, dir, 1L))
+    val (none, noneJobs) = jobsDuring(VersionedTable.readSince(spark, dir, 2L))
+    assert((wholeJobs, deltaJobs, noneJobs) == ((0, 0, 0)))
+    assert(whole.schema == spark.read.parquet(files: _*).schema)
+    assert(delta.schema == whole.schema && none.schema == whole.schema)
+    assert(whole.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(delta.as[(Long, String)].collect().toSet == Set((2L, "b"), (3L, "c")))
+    assert(none.isEmpty)
   }
 
   test("a failed ledger append or compact leaves no staging dir; concurrent history appends keep every row") {

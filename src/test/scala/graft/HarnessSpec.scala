@@ -96,9 +96,6 @@ class HarnessSpec extends SparkSpec {
     assert(Streams.drainStatePartitions(spark, (4L << 20) + 1) == math.min(2, sp))
     assert(Streams.drainStatePartitions(spark, Long.MaxValue / 4) == sp,
       "a corpus-sized replay must keep the session's full parallelism")
-    spark.conf.set("spark.graft.streamBytesPerStatePartition", "1048576")
-    try assert(Streams.drainStatePartitions(spark, 3L << 20) == math.min(3, sp))
-    finally spark.conf.unset("spark.graft.streamBytesPerStatePartition")
   }
 
   test("bounded-window audit (r21): unpartitioned windows sit above an explicit bound") {

@@ -179,7 +179,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("upsertPartitioned rewrites only the touched partitions") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_upart").toString + "/facts"
+    val dir = scratchDir("graft_upart").toString + "/facts"
     val t0 = Seq(("d1", 1L, "a"), ("d1", 2L, "b"), ("d2", 3L, "c"), ("d3", 4L, "d"))
       .toDF("day", "k", "v")
     // first load goes through the same call (no target yet)
@@ -205,7 +205,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("WatermarkStore: update/last/reset/history on a durable ledger, replay-idempotent") {
     import graft.incremental.WatermarkStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_wmstore").toString + "/wm"
+    val dir = scratchDir("graft_wmstore").toString + "/wm"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
     // empty ledger (and an unknown key later): no watermark, no error
@@ -292,7 +292,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("WatermarkStore.compact: merge-then-retire — racing readers never see an empty key, crash states only duplicate") {
     import graft.incremental.WatermarkStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_wmrace").toString + "/wm"
+    val dir = scratchDir("graft_wmrace").toString + "/wm"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // 6 events on one key, 2 on another — many small files
     (1 to 6).foreach(i => WatermarkStore.update(spark, dir, "px", "src", "c",
@@ -382,7 +382,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("Job incremental section: resumes from the stored watermark, advances only on success") {
     import graft.pipeline.Job
-    val base = java.nio.file.Files.createTempDirectory("graft_jobwm").toString
+    val base = scratchDir("graft_jobwm").toString
     val store = s"$base/wm"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val sfDir = TestSession.sfDir
@@ -446,7 +446,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("VersionedTable: atomic commits, since-version deltas, txn replay, crash debris invisible") {
     import graft.sources.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_vt")
+    val dir = scratchDir("graft_vt")
       .toString + "/tbl"
     val a = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     val b = Seq((3L, "c")).toDF("k", "v")
@@ -502,7 +502,7 @@ class IncrementalSpec extends SparkSpec {
 
     // the named strategy round trip: extract past the STORED version,
     // advance only when something new committed (replay-idempotent)
-    val store = java.nio.file.Files.createTempDirectory("graft_vtwm")
+    val store = scratchDir("graft_vtwm")
       .toString + "/wm"
     assert(Incremental.extractSinceVersion(spark, dir, store, "pv", "tbl")
       .count() == 5)
@@ -534,7 +534,7 @@ class IncrementalSpec extends SparkSpec {
     // would let two racers both "succeed" and lose a commit. The
     // default local publish uses link(2) instead, which atomically
     // refuses an existing target.
-    val hazDir = java.nio.file.Files.createTempDirectory("graft_vt_haz")
+    val hazDir = scratchDir("graft_vt_haz")
     val fa = hazDir.resolve("a"); val fb = hazDir.resolve("b")
     val fc = hazDir.resolve("c")
     java.nio.file.Files.write(fa, "A".getBytes)
@@ -555,7 +555,7 @@ class IncrementalSpec extends SparkSpec {
 
     // (2) racing committers: every commit lands on its own version,
     // none are lost, the readable table holds the union
-    val dir = java.nio.file.Files.createTempDirectory("graft_vt_race")
+    val dir = scratchDir("graft_vt_race")
       .toString + "/tbl"
     val dfs = (1 to 20).map(i => i -> Seq((i.toLong, s"r$i")).toDF("k", "v")).toMap
     import scala.concurrent.{Await, Future}
@@ -581,7 +581,7 @@ class IncrementalSpec extends SparkSpec {
     // the byte copy itself is a deliberately NON-atomic overwrite; the
     // lock table alone provides exclusivity, and no slot may ever be
     // granted twice
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_vt_lock")
+    val dir2 = scratchDir("graft_vt_lock")
       .toString + "/tbl"
     val granted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val locker = new VersionedTable.CommitLocker {
@@ -618,7 +618,7 @@ class IncrementalSpec extends SparkSpec {
     // primitive exists; only the lease protocol provides exclusivity
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mockns.impl", classOf[NonAtomicMockFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("graft_vt_lease")
+    val base = scratchDir("graft_vt_lease")
     val dir = s"mockns:${base}/tbl"
     val fs = new Path(dir).getFileSystem(conf)
     assert(fs.isInstanceOf[NonAtomicMockFs], s"got ${fs.getClass}")
@@ -672,7 +672,7 @@ class IncrementalSpec extends SparkSpec {
     System.setProperty("derby.system.home", "/tmp/graft-derby")
     val url = "jdbc:derby:memory:graftinc;create=true"
     val drv = Map("driver" -> "org.apache.derby.iapi.jdbc.AutoloadedDriver")
-    val store = java.nio.file.Files.createTempDirectory("graft_jdbcwm")
+    val store = scratchDir("graft_jdbcwm")
       .toString + "/wm"
     val src = table("orders")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
@@ -721,7 +721,7 @@ class IncrementalSpec extends SparkSpec {
     System.setProperty("derby.system.home", "/tmp/graft-derby")
     val url = "jdbc:derby:memory:graftjobinc;create=true"
     val drv = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
-    val store = java.nio.file.Files.createTempDirectory("graft_jobjdbc")
+    val store = scratchDir("graft_jobjdbc")
       .toString + "/wm"
     val src = table("orders")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
@@ -775,7 +775,7 @@ class IncrementalSpec extends SparkSpec {
     System.setProperty("derby.system.home", "/tmp/graft-derby")
     val url = "jdbc:derby:memory:graftjobfail;create=true"
     val drv = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
-    val store = java.nio.file.Files.createTempDirectory("graft_jobfail")
+    val store = scratchDir("graft_jobfail")
       .toString + "/wm"
     JdbcSink.write(table("orders").select($"o_orderkey", $"o_orderstatus"),
       url, "ORDERS_FAIL", "overwrite", Map("driver" -> drv))

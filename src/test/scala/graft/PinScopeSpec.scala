@@ -96,7 +96,7 @@ class PinScopeSpec extends SparkSpec {
 
   test("Job.Result.close releases a screen step's operator pins") {
     for ((family, knobs) <- families) {
-      val base = Files.createTempDirectory(s"graft_pin_$family").toString
+      val base = scratchDir(s"graft_pin_$family").toString
       val doc = screenDoc(base, family, knobs)
       leaksNothing(s"a closed $family screen job") {
         val res = Job.runJson(spark, doc)
@@ -107,7 +107,7 @@ class PinScopeSpec extends SparkSpec {
 
   test("a two-node Dag of screen-step documents releases every node's pins") {
     for ((family, knobs) <- families) {
-      val base = Files.createTempDirectory(s"graft_pindag_$family").toString
+      val base = scratchDir(s"graft_pindag_$family").toString
       val dag =
         s"""{"jobs": [
            | {"id": "a", "job": ${screenDoc(s"$base/a", family, knobs)}},
@@ -121,7 +121,7 @@ class PinScopeSpec extends SparkSpec {
 
   test("a gated run releases its operator pins before the exception escapes") {
     for ((family, knobs) <- families) {
-      val base = Files.createTempDirectory(s"graft_pingate_$family").toString
+      val base = scratchDir(s"graft_pingate_$family").toString
       val doc = screenDoc(base, family, knobs, minScore = Some(101.0))
       leaksNothing(s"a gated $family screen job") {
         intercept[graft.quality.DQ.QualityGateException](Job.runJson(spark, doc))
@@ -131,7 +131,7 @@ class PinScopeSpec extends SparkSpec {
 
   test("the ingest stream releases each micro-batch's pins: the count does not grow") {
     for ((family, knobs) <- families) {
-      val base = Files.createTempDirectory(s"graft_pinstream_$family").toString
+      val base = scratchDir(s"graft_pinstream_$family").toString
       val in = s"$base/in"
       seedHistory(family, knobs, s"$base/hist")
       // the first batch's file is on disk before the stream starts

@@ -102,7 +102,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("RunHistory persists multi-run metrics and loads back as a catalog dataset") {
     import graft.monitoring.{Metrics, RunHistory}
-    val dir = Files.createTempDirectory("graft_runhist").toString + "/history"
+    val dir = scratchDir("graft_runhist").toString + "/history"
 
     // run 1: recorder-captured actions (with plan hashes)
     val rec = Metrics.attach(spark)
@@ -142,7 +142,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Trends: trends, baseline compare, regression and SLA alerts over history") {
     import graft.monitoring.{RunHistory, Trends}
-    val dir = Files.createTempDirectory("graft_trends").toString + "/history"
+    val dir = scratchDir("graft_trends").toString + "/history"
     def e(q: String, ms: Long, plan: String = "p1", failed: Boolean = false) =
       RunHistory.Entry(q, ms, Some(10L), Some(plan), failed)
     // three steady prior runs, then a run where q_b regressed WITH a
@@ -189,7 +189,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("metricAlerts: planted decaying recall history fires decay + floor alerts") {
     import graft.monitoring.{RunHistory, Trends}
-    val dir = Files.createTempDirectory("graft_recall").toString + "/metrics"
+    val dir = scratchDir("graft_recall").toString + "/metrics"
     // five rounds of ANN telemetry: recall_ivf decays steadily,
     // recall_lsh holds low (under its floor), recall_flat is healthy
     val rounds = Seq(
@@ -218,7 +218,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("SLA kinds over RunHistory: checks, compliance window, predictive warning") {
     import graft.monitoring.{RunHistory, Trends}, Trends.SlaRule
-    val dir = Files.createTempDirectory("graft_sla").toString + "/history"
+    val dir = scratchDir("graft_sla").toString + "/history"
     def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-$day%02d 12:00:00")
     val asOf = java.sql.Timestamp.valueOf("2024-03-30 12:00:00")
     def e(q: String, ms: Long, rows: Long, failed: Boolean = false) =
@@ -447,7 +447,7 @@ class PipelineSourcesSpec extends SparkSpec {
   test("Job: one-document config runs end-to-end; gate, sink and validation enforced") {
     import graft.pipeline.Job
     val dir = TestSession.sfDir
-    val out = Files.createTempDirectory("graft_job").toString + "/out"
+    val out = scratchDir("graft_job").toString + "/out"
     def doc(minScore: Double, withSink: Boolean = false, withAnomaly: Boolean = false) =
       s"""{
          |  "datasets": [
@@ -509,7 +509,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
     // quarantine mode: failing rows route to the per-run slice and the
     // job continues with the clean side
-    val qdir = Files.createTempDirectory("graft_jobq").toString + "/quarantine"
+    val qdir = scratchDir("graft_jobq").toString + "/quarantine"
     val quarDoc =
       s"""{
          |  "datasets": [
@@ -543,7 +543,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
     // history integration: the job's actions land in RunHistory under
     // the run id, even when the quality gate throws
-    val hist = Files.createTempDirectory("graft_jobhist").toString + "/history"
+    val hist = scratchDir("graft_jobhist").toString + "/history"
     Job.runWithHistory(spark, Job.parse(doc(0.0, withSink = true)), hist, "job_ok").close()
     intercept[graft.quality.DQ.QualityGateException](
       Job.runWithHistory(spark, Job.parse(doc(100.0)), hist, "job_gated"))
@@ -616,7 +616,7 @@ class PipelineSourcesSpec extends SparkSpec {
     }
     def primaryScans(budget: Option[String]): Long = {
       GraftSession.releaseAll(spark)
-      val base = Files.createTempDirectory("graft_mc").toString
+      val base = scratchDir("graft_mc").toString
       val counter = new ScanCounter
       budget.foreach(spark.conf.set("spark.graft.smallPersistBytes", _))
       org.apache.spark.GraftBus.drain(spark.sparkContext)
@@ -641,7 +641,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Job: a small multi-consumer job writes one file per output") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_files").toString
+    val base = scratchDir("graft_files").toString
     val res = Job.runJson(spark, multiConsumerJob(base))
     try Recovery.idempotentWrite(res.anomalies.get, s"$base/anomalies") finally res.close()
     def files(dir: String) =
@@ -657,7 +657,7 @@ class PipelineSourcesSpec extends SparkSpec {
     def pinned(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
     GraftSession.releaseAll(spark)
     val before = pinned()
-    val base = Files.createTempDirectory("graft_own").toString
+    val base = scratchDir("graft_own").toString
 
     // no quarantine: the output IS the cached frame
     val res = Job.runJson(spark, multiConsumerJob(base, quarantine = false))
@@ -693,7 +693,7 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(cacheManager.isEmpty && (pinned() -- before).isEmpty)
 
     // graft.Run closes after its row count
-    val doc = Files.createTempFile("graft_own", ".json")
+    val doc = scratchDir("graft_own").resolve("doc.json")
     Files.write(doc, multiConsumerJob(s"$base/run").getBytes("UTF-8"))
     val buf = new java.io.ByteArrayOutputStream()
     assert(Run.execute(spark, Seq("run", doc.toString),
@@ -704,7 +704,7 @@ class PipelineSourcesSpec extends SparkSpec {
   test("screen step: parse validation, family dispatch == library screens, cold start, semantic version check") {
     import graft.pipeline.{Job, PipelineJson}
     import graft.llm.{Dedup, Ivf}
-    val base = Files.createTempDirectory("graft_scr").toString
+    val base = scratchDir("graft_scr").toString
     // --- parse validation -------------------------------------------
     def step(json: String) =
       PipelineJson.parse(s"""{"primary": "d", "steps": [$json]}""")
@@ -801,7 +801,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Job streaming mode: multi-batch stream equals the batch job on the replayed union") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_jobstream").toString
+    val base = scratchDir("graft_jobstream").toString
     val in = s"$base/in"
     val sfDir = TestSession.sfDir
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -896,7 +896,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Job streaming mode: a full outer join against a static dataset fails at start") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_jobstream_full").toString
+    val base = scratchDir("graft_jobstream_full").toString
     val in = s"$base/in"
     val sfDir = TestSession.sfDir
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -944,7 +944,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("ingest section: parse validation; batch runs reject it loudly") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_ingval").toString
+    val base = scratchDir("graft_ingval").toString
     def doc(ingest: String) =
       s"""{"datasets": [{"name": "d", "format": "parquet", "path": "$base/in"}],
          | "pipeline": {"primary": "d", "steps": []},
@@ -976,7 +976,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("ingest section: document-driven multi-batch stream == the hand-written wrapper") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_ingpar").toString
+    val base = scratchDir("graft_ingpar").toString
     val in = s"$base/in"
     val textSeed = "the quick brown fox jumps over the lazy dog"
     val textA = "completely fresh crawl content about spark engines"
@@ -1036,7 +1036,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("ingest section: quarantined rows never reach the history or the sink") {
     import graft.pipeline.Job
-    val base = Files.createTempDirectory("graft_ingquar").toString
+    val base = scratchDir("graft_ingquar").toString
     val in = s"$base/in"
     // id 1 fails quality; id 2 carries the SAME text and is clean —
     // if the failing row entered the history, id 2 would be dropped
@@ -1070,7 +1070,7 @@ class PipelineSourcesSpec extends SparkSpec {
   test("ingest section: semantic family refuses a stale history loudly through config") {
     import graft.pipeline.Job
     import graft.llm.{Dedup, Ivf}
-    val base = Files.createTempDirectory("graft_ingsem").toString
+    val base = scratchDir("graft_ingsem").toString
     val in = s"$base/in"
     val idxDir = s"$base/idx"
     Ivf.saveIndex(Seq((0, Array(1f, 0f)), (1, Array(0f, 1f)))
@@ -1199,7 +1199,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Dag: a malformed node fails the parse before any node runs") {
     import graft.pipeline.Dag
-    val tmp = Files.createTempDirectory("graft_dagbad").toString
+    val tmp = scratchDir("graft_dagbad").toString
     def node(id: String, deps: String, sink: String) =
       s"""{"id": "$id", "depends_on": [$deps], "job": {
          | "datasets": [{"name": "o", "format": "parquet",
@@ -1234,7 +1234,7 @@ class PipelineSourcesSpec extends SparkSpec {
          | {"id": "n_report", "depends_on": ["n_clean", "n_gate"], "job": ${jobDoc(0.0)}},
          | {"id": "n_island", "job": ${jobDoc(0.0)}}
          |]}""".stripMargin
-    val hist = Files.createTempDirectory("graft_dag").toString + "/history"
+    val hist = scratchDir("graft_dag").toString + "/history"
     val res = Dag.runJson(spark, dag, historyDir = Some(hist), runId = "dagrun")
     val byId = res.map(r => r.id -> r).toMap
     // topological, lexicographic among ready: n_extract before its
@@ -1324,7 +1324,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("csv and json roundtrips preserve data with a pinned schema") {
-    val dir = Files.createTempDirectory("graft_src_spec").toString
+    val dir = scratchDir("graft_src_spec").toString
     val n = table("nation")
     FileSink.write(n, "csv", s"$dir/n_csv", options = Map("header" -> "true"))
     FileSink.write(n, "json", s"$dir/n_json")
@@ -1338,7 +1338,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("FileSource reads glob patterns and custom delimiters (reference file_options)") {
-    val dir = Files.createTempDirectory("graft_glob").toString
+    val dir = scratchDir("graft_glob").toString
     table("region").limit(1).write.option("header", "true")
       .option("sep", ";").csv(s"$dir/sales_1.csv")
     table("region").limit(2).write.option("header", "true")
@@ -1350,7 +1350,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("partitioned write produces hive-layout dirs that prune on read") {
-    val dir = Files.createTempDirectory("graft_part_spec").toString
+    val dir = scratchDir("graft_part_spec").toString
     FileSink.write(table("orders"), "parquet", s"$dir/by_status",
       partitionBy = Seq("o_orderstatus"))
     val sub = new java.io.File(s"$dir/by_status").listFiles()
@@ -1386,7 +1386,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("writeShards produces balanced, deterministic, complete shard layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = scratchDir("graft-shards").toString
     val orders = table("orders").select("o_orderkey", "o_custkey", "o_totalprice")
     FileSink.writeShards(orders, dir, "o_orderkey", numShards = 8)
     val back = spark.read.parquet(dir)
@@ -1404,7 +1404,7 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(sizes.forall(s => s < ideal * 2 && s > ideal / 2), sizes.mkString(","))
     // deterministic: shard assignment is a pure function of the key —
     // a re-export from differently-partitioned input matches per-key
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-shards2").toString
+    val dir2 = scratchDir("graft-shards2").toString
     FileSink.writeShards(orders.repartition(13), dir2, "o_orderkey", numShards = 8)
     val a = back.select("o_orderkey", "shard").as[(Long, Long)].collect().toSet
     val b = spark.read.parquet(dir2).select("o_orderkey", "shard")
@@ -1414,7 +1414,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("xlsx roundtrip preserves numerics, strings, booleans, and nulls") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_xlsx_spec").toString
+    val dir = scratchDir("graft_xlsx_spec").toString
     val df = Seq(
       (1L, Option("plain"), Option(1.5), Option(true)),
       (2L, Option("<&> \"escaped\"\nline"), Option(-2.25), Option(false)),
@@ -1438,7 +1438,7 @@ class PipelineSourcesSpec extends SparkSpec {
     // hand-built workbook in the layout real Excel emits: values in
     // xl/sharedStrings.xml, cells typed t="s" — our writer never emits
     // this shape, so it pins reader coverage beyond self-roundtrips
-    val dir = Files.createTempDirectory("graft_xlsx_sst")
+    val dir = scratchDir("graft_xlsx_sst")
     val file = new java.io.File(dir.toFile, "book.xlsx")
     val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(file))
     def put(name: String, content: String): Unit = {
@@ -1465,7 +1465,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("xlsx multi-sheet roundtrip with typed date/timestamp cells") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_xlsx_multi")
+    val dir = scratchDir("graft_xlsx_multi")
     val file = new java.io.File(dir.toFile, "book.xlsx").toString
     val a = Seq(
       (1, "alpha", java.sql.Timestamp.valueOf("2024-03-01 10:15:30"),
@@ -1503,7 +1503,7 @@ class PipelineSourcesSpec extends SparkSpec {
     // are plain numerics whose STYLE resolves to a date format (builtin
     // 14 and a custom yyyy-mm-dd code), formula cells carry <f> plus
     // the cached <v> — the reader must use the cache, data_only-style
-    val dir = Files.createTempDirectory("graft_xlsx_dates")
+    val dir = scratchDir("graft_xlsx_dates")
     val file = new java.io.File(dir.toFile, "book.xlsx")
     val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(file))
     def put(name: String, content: String): Unit = {
@@ -1655,7 +1655,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("ObjectStore lists and deletes by object-store prefix semantics") {
-    val root = Files.createTempDirectory("graft_objstore")
+    val root = scratchDir("graft_objstore")
     def touch(rel: String): Unit = {
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
@@ -1689,7 +1689,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("Recovery.idempotentWrite swaps atomically and runStage skips done stages") {
-    val dir = Files.createTempDirectory("graft_recovery").toString
+    val dir = scratchDir("graft_recovery").toString
     val p = s"$dir/stage1"
     Recovery.idempotentWrite(table("region"), p)
     assert(spark.read.parquet(p).count() == table("region").count())
@@ -1703,7 +1703,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("Recovery.restoreIfTorn heals the crash window between the two renames") {
-    val dir = Files.createTempDirectory("graft_torn").toString
+    val dir = scratchDir("graft_torn").toString
     val p = s"$dir/state"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     // simulate a crash after target -> __old but before __staging -> target
@@ -1737,7 +1737,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("Recovery quarantine + reprocess round-trips failed rows through the rules") {
     import graft.quality.DQ
-    val dir = Files.createTempDirectory("graft_quarantine").toString
+    val dir = scratchDir("graft_quarantine").toString
     val orders = table("orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val strict = Seq(
@@ -1795,7 +1795,7 @@ class PipelineSourcesSpec extends SparkSpec {
     import graft.streaming.Streams
     spark.sparkContext.hadoopConfiguration
       .set("fs.crashfs.impl", classOf[PromoteCrashFs].getName)
-    val tmp = Files.createTempDirectory("graft_crashfs").toString
+    val tmp = scratchDir("graft_crashfs").toString
     // run the real idempotentWrite with its promote rename failing
     def crashed(target: String)(write: => Unit): Unit = {
       PromoteCrashFs.armed = Some(new org.apache.hadoop.fs.Path(target).toUri.getPath)
@@ -1839,7 +1839,7 @@ class PipelineSourcesSpec extends SparkSpec {
   test("Recovery: a promote lost to a concurrent heal counts as done, for a write, a heal and the index descriptor") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.crashfs.impl", classOf[PromoteCrashFs].getName)
-    val tmp = Files.createTempDirectory("graft_healrace").toString
+    val tmp = scratchDir("graft_healrace").toString
     val fs = new org.apache.hadoop.fs.Path("crashfs:///")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // run `body` with `action` hooked just before the next rename into `target`
@@ -1892,7 +1892,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
   test("loadSignatureHistory: a lone uncommitted first slice is no history; a plain root is one") {
     import graft.streaming.Streams
-    val base = Files.createTempDirectory("graft_sighist").toString
+    val base = scratchDir("graft_sighist").toString
     // a stream that crashed while staging batch 0: data files, no _SUCCESS
     val root = s"$base/sliced"
     val staged = s"$root/.batch_id=0__staging"
@@ -2054,7 +2054,7 @@ class PipelineSourcesSpec extends SparkSpec {
       .columns.toSeq == Seq("id", "amount_usd", "prio_code"))
 
     // the file entry point — ref :171 apply_schema_from_file
-    val f = java.nio.file.Files.createTempFile("graft_schemadoc", ".json")
+    val f = scratchDir("graft_schemadoc").resolve("doc.json")
     java.nio.file.Files.write(f, doc.getBytes("UTF-8"))
     assert(SchemaDoc.applyFile(df, f.toString).columns.toSeq ==
       Seq("id", "amount_usd", "prio_code"))
@@ -2132,7 +2132,7 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(byTarget("n_name") == Set(("nation.parquet", "n_name")))
 
     // the edge list IS a dataset: write + register + query it
-    val dir = Files.createTempDirectory("graft_lineage").toString + "/edges"
+    val dir = scratchDir("graft_lineage").toString + "/edges"
     e.write.parquet(dir)
     Catalog.register(spark, Seq(Catalog.DatasetSpec(
       name = "lineage_edges", format = "parquet", path = dir,
@@ -2261,7 +2261,7 @@ class PipelineSourcesSpec extends SparkSpec {
     // clustered write: every file's min/max window on EVERY clustering
     // column must be materially tighter than the global range
     val orders = table("orders")
-    val dir = Files.createTempDirectory("graft_zorder").toString + "/orders_z"
+    val dir = scratchDir("graft_zorder").toString + "/orders_z"
     FileSink.writeZOrdered(orders, dir, Seq("o_custkey", "o_totalprice"),
       bits = 10, numFiles = 8)
     val files = new java.io.File(dir).listFiles()
@@ -2288,7 +2288,7 @@ class PipelineSourcesSpec extends SparkSpec {
     }
 
     // compaction: many small files -> one, content preserved, atomic
-    val cdir = Files.createTempDirectory("graft_compact").toString + "/orders_many"
+    val cdir = scratchDir("graft_compact").toString + "/orders_many"
     orders.repartition(16).write.parquet(cdir)
     val (nBefore, nAfter) =
       FileSink.compact(spark, cdir, targetFileBytes = 10L * 1024 * 1024 * 1024)
@@ -2296,13 +2296,13 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(spark.read.parquet(cdir).count() == orders.count())
 
     // a hive tree refuses whole-tree compact but sweeps per partition
-    val pdir = Files.createTempDirectory("graft_compact_p").toString + "/days"
+    val pdir = scratchDir("graft_compact_p").toString + "/days"
     orders.withColumn("day", (col("o_orderkey") % 2).cast("string"))
       .repartition(4).write.partitionBy("day").parquet(pdir)
     intercept[IllegalArgumentException](FileSink.compact(spark, pdir))
     // ... and so does ANY nested layout, hive-named or not: a
     // whole-tree rewrite would flatten root/sub/* into root
-    val ndir = Files.createTempDirectory("graft_compact_n").toString + "/root"
+    val ndir = scratchDir("graft_compact_n").toString + "/root"
     orders.limit(10).repartition(2).write.parquet(ndir + "/sub")
     intercept[IllegalArgumentException](FileSink.compact(spark, ndir))
     val (parts, pb, pa) = FileSink.compactPartitions(spark, pdir,
@@ -2314,7 +2314,7 @@ class PipelineSourcesSpec extends SparkSpec {
 
     // text formats round-trip through compaction with their options
     // (string-typed read keeps values verbatim; header preserved)
-    val csvDir = Files.createTempDirectory("graft_compact_csv").toString + "/t"
+    val csvDir = scratchDir("graft_compact_csv").toString + "/t"
     val opts = Map("header" -> "true", "sep" -> ";")
     Seq((1, "a;x", 1.50), (2, "b", 2.0)).toDF("id", "s", "amt")
       .repartition(2).write.options(opts).csv(csvDir)
@@ -2341,6 +2341,32 @@ class PipelineSourcesSpec extends SparkSpec {
       targetFileBytes = 10L * 1024 * 1024 * 1024)
     assert(parts2 == 2) // the torn partition is back in the sweep
     assert(spark.read.parquet(pdir).count() == orders.count())
+  }
+
+  test("compaction walks a `_k=v` partition tree the way Spark lists it") {
+    // Spark reads `_p=0` as a partition directory, not a hidden path
+    val orders = table("orders")
+    val dir = scratchDir("graft_compact_u").toString + "/days"
+    orders.withColumn("_p", (col("o_orderkey") % 2).cast("string"))
+      .repartition(4).write.partitionBy("_p").parquet(dir)
+    // an in-flight copy is no data file, for Spark or for the sweep
+    Files.write(java.nio.file.Paths.get(dir, "_p=0", "part-x.parquet._COPYING_"),
+      Array[Byte](1, 2, 3))
+    def digest() = {
+      val df = spark.read.parquet(dir)
+      df.select(count(lit(1)),
+        sum(xxhash64(df.columns.sorted.map(col): _*).cast("decimal(38,0)"))).head()
+    }
+    val before = digest()
+    assert(graft.Recovery.slicesOrRoot(spark, dir, "run_id") == Seq(dir))
+    // a whole-tree rewrite would flatten `_p=*` into the root
+    intercept[IllegalArgumentException](FileSink.compact(spark, dir))
+    val (parts, pb, pa) = FileSink.compactPartitions(spark, dir,
+      targetFileBytes = 10L * 1024 * 1024 * 1024)
+    assert(parts == 2 && pb == 8 && pa == 2)
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq ==
+      Seq("_SUCCESS", "_p=0", "_p=1"))
+    assert(digest() == before)
   }
 
   test("Datagen: partitioning-invariant values, bounded ranges, error rates, sizing") {
@@ -2386,7 +2412,7 @@ class PipelineSourcesSpec extends SparkSpec {
   }
 
   test("replacePartitions rewrites only the partitions present in the batch") {
-    val dir = Files.createTempDirectory("graft_dynpart").toString + "/days"
+    val dir = scratchDir("graft_dynpart").toString + "/days"
     import spark.implicits._
     Seq(("2024-01-01", 1L, "orig"), ("2024-01-02", 2L, "orig"))
       .toDF("day", "k", "v").write.partitionBy("day").parquet(dir)
@@ -2447,7 +2473,7 @@ class PipelineSourcesSpec extends SparkSpec {
     assert(kept.count() + archived.count() == audit.count())
 
     // append/load round-trip: day partitions exist and prune
-    val dir = Files.createTempDirectory("graft_audit").toString + "/audit"
+    val dir = scratchDir("graft_audit").toString + "/audit"
     Audit.append(audit, dir)
     val back = Audit.load(spark, dir)
     assert(back.count() == 6)

@@ -18,7 +18,7 @@ class RunSpec extends SparkSpec {
   }
 
   private def writeDoc(body: String): String = {
-    val f = Files.createTempFile("graft_run", ".json")
+    val f = scratchDir("graft_run").resolve("doc.json")
     Files.write(f, body.getBytes("UTF-8"))
     f.toString
   }
@@ -42,8 +42,8 @@ class RunSpec extends SparkSpec {
        |}""".stripMargin
 
   test("run: job document succeeds (exit 0), gate failure exits 1, history recorded") {
-    val histDir = Files.createTempDirectory("graft_run_hist").toString + "/hist"
-    val sink = Files.createTempDirectory("graft_run_sink").toString + "/out"
+    val histDir = scratchDir("graft_run_hist").toString + "/hist"
+    val sink = scratchDir("graft_run_sink").toString + "/out"
     val okDoc = writeDoc(jobDoc(0.0, Some(sink)))
     val (okCode, okOut) = cli("run", okDoc, "--history", histDir, "--run-id", "r_ok")
     assert(okCode == 0, okOut)
@@ -94,7 +94,7 @@ class RunSpec extends SparkSpec {
   }
 
   test("run: a malformed job document or DAG node exits 2 and runs nothing") {
-    val sink = Files.createTempDirectory("graft_run_bad").toString
+    val sink = scratchDir("graft_run_bad").toString
     val badJob = jobDoc(0.0, Some(s"$sink/job"))
       .replace("\"min_score\": 0.0", "\"min_score\": \"0\"")
     val (jobCode, jobOut) = cli("run", writeDoc(badJob))
@@ -115,7 +115,7 @@ class RunSpec extends SparkSpec {
   }
 
   test("an unknown sink mode, join type or aggregate exits 2 on validate and run, before any write") {
-    val tmp = Files.createTempDirectory("graft_run_enum").toString
+    val tmp = scratchDir("graft_run_enum").toString
     val quarantine = s"$tmp/quarantine"
     val doc = jobDoc(0.0, Some(s"$tmp/out")).replace("\"min_score\": 0.0",
       s""""min_score": 0.0, "quarantine_dir": "$quarantine", "run_id": "r1"""")
@@ -169,6 +169,15 @@ class RunSpec extends SparkSpec {
     assert(typoCode == 2 && typoOut.contains("invalid document") &&
       typoOut.contains("strategy"), typoOut)
     assert(cli("validate", incremental("sequence"))._1 == 0)
+    // an empty rule list checks nothing: beside quarantine_dir the run
+    // would die in the quarantine split, beside min_score it skips the gate
+    def noRules(rest: String) = writeDoc(jobDoc(90.0).replaceFirst(
+      "(?s)\"rules\": \\[.*\\], \"min_score\": 90.0", s""""rules": [], $rest"""))
+    Seq(""""quarantine_dir": "/nonexistent/q", "run_id": "nightly"""", """"min_score": 90.0""")
+      .foreach { rest =>
+        val (code, out) = cli("validate", noRules(rest))
+        assert(code == 2 && out.contains("invalid document") && out.contains("rules"), out)
+      }
     // a dag with a cycle fails validation too
     val (cycCode, cycOut) = cli("validate", writeDoc(
       s"""{"jobs": [
@@ -180,7 +189,7 @@ class RunSpec extends SparkSpec {
 
   test("maintain-index verb: bootstrap then keep, numeric-flag and arity errors exit 2") {
     import spark.implicits._
-    val corpusDir = Files.createTempDirectory("graft_run_midx").toString
+    val corpusDir = scratchDir("graft_run_midx").toString
     val corpus = s"$corpusDir/embeddings"
     val idxDir = s"$corpusDir/idx"
     (0 until 200).map { i =>

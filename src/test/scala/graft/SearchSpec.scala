@@ -194,7 +194,7 @@ class SearchSpec extends SparkSpec {
     assert(assigned.nonEmpty && assigned == fused)
     // 2. saveIndex → loadIndex → probe == direct probe (the FAISS
     //    write_index/read_index contract)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann").toString + "/idx"
+    val dir = scratchDir("graft_ann").toString + "/idx"
     Ivf.saveIndex(cents, dir)
     val loaded = Ivf.loadIndex(spark, dir)
     val direct = Ivf.topKIndexed(e, q, "vec_id", "qid", "embedding",
@@ -211,7 +211,7 @@ class SearchSpec extends SparkSpec {
       .orderBy("__cid").collect().toSeq
     assert(viaCatalog == loaded.orderBy("__cid").collect().toSeq)
     // ...and a random directory cannot masquerade as an index
-    val notIdx = java.nio.file.Files.createTempDirectory("graft_notidx").toString
+    val notIdx = scratchDir("graft_notidx").toString
     intercept[IllegalArgumentException] { Ivf.loadIndex(spark, notIdx) }
     // 4. the memo: a key hit serves count + centroids without
     //    retraining, identical to the uncached trainIndex result
@@ -240,7 +240,7 @@ class SearchSpec extends SparkSpec {
     def centsOf(k: Int) = e.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("__cid"),
         col("embedding").as("__cvec"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_atomic")
+    val dir = scratchDir("graft_ann_atomic")
       .toString + "/idx"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -300,7 +300,7 @@ class SearchSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val epoch0 = clusters(rot = false)
     val drifted = clusters(rot = true)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_maintain")
+    val dir = scratchDir("graft_ann_maintain")
       .toString + "/idx"
     def maintain(corpus: org.apache.spark.sql.DataFrame) =
       Ivf.maintainIndex(corpus, "vec_id", "embedding", dir,
@@ -328,8 +328,7 @@ class SearchSpec extends SparkSpec {
   test("maintainIndex + semanticHistoryRoots: a retrain re-assigns and re-stamps sliced history; kept leaves it alone") {
     import graft.llm.{Dedup, Ivf}
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_maintain_hist").toString
+    val base = scratchDir("graft_maintain_hist").toString
     val idxDir = s"$base/idx"
     val root = s"$base/history"
     // same planted-drift fixture as the maintainIndex test above

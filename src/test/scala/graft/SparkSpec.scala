@@ -19,6 +19,12 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def table(name: String): DataFrame = Tables.load(spark, TestSession.sfDir, name)
 
+  /** A fresh scratch dir under the temp dir, deleted with everything in
+    * it when the test JVM exits (`Test / fork` gives the suite its own).
+    */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    TempDirs.registerForExit(java.nio.file.Files.createTempDirectory(prefix))
+
   /** Spark jobs started while `body` runs (listener bus drained). */
   def jobsDuring[T](body: => T): (T, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger()

@@ -80,7 +80,7 @@ class StreamsMediaSpec extends SparkSpec {
     // leaf names matched nothing for the directory layout — a
     // silently EMPTY stream (caught by the r13 sf1 streaming gate);
     // this pins both layouts to the batch row count
-    val base = java.nio.file.Files.createTempDirectory("graft_evdir").toString
+    val base = scratchDir("graft_evdir").toString
     val batch = spark.read.parquet(s"${TestSession.sfDir}/events.parquet")
     batch.write.parquet(s"$base/events.parquet") // directory dataset
     val expected = batch.count()
@@ -180,7 +180,7 @@ class StreamsMediaSpec extends SparkSpec {
 
   test("lateSideOutput lands exactly the rows batch flagLate would flag") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val dir = scratchDir("graft_late").toString
     val input = MemoryStream[(java.sql.Timestamp, Long)]
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val onTimeCounts = scala.collection.mutable.Map.empty[Long, Long]
@@ -262,7 +262,7 @@ class StreamsMediaSpec extends SparkSpec {
   }
 
   test("fileStream picks up dropped files as micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_filestream").toString
+    val dir = scratchDir("graft_filestream").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType)))
@@ -284,7 +284,7 @@ class StreamsMediaSpec extends SparkSpec {
 
   test("applyCdcStream folds CDC micro-batches into the parquet target") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_stream").toString
+    val dir = scratchDir("graft_cdc_stream").toString
     val targetPath = s"$dir/target"
     Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v")
       .write.parquet(targetPath)
@@ -614,7 +614,7 @@ class StreamsMediaSpec extends SparkSpec {
     import graft.quality.DQ
     implicit val sqlCtx = spark.sqlContext
     val rules = Seq(DQ.NotNull("nn", "v"), DQ.ValueRange("rng", "x", 0, 100))
-    val base = Files.createTempDirectory("graft_qstream").toString
+    val base = scratchDir("graft_qstream").toString
     val input = MemoryStream[(Long, String, Double)]
     val cleanSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val q = Streams.quarantineStream(
@@ -653,7 +653,7 @@ class StreamsMediaSpec extends SparkSpec {
   test("nearDupScreenStream screens batches against seed + earlier survivors") {
     import java.nio.file.Files
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_ndstream").toString
+    val base = scratchDir("graft_ndstream").toString
     val historyRoot = s"$base/history"
     val textSeed = "the quick brown fox jumps over the lazy dog"
     val textA = "completely fresh crawl content about spark engines"
@@ -763,7 +763,7 @@ class StreamsMediaSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.llm.{Dedup, Ivf}
     // --- image root: 8-byte perceptual signatures ---------------------
-    val ibase = Files.createTempDirectory("graft_compact_img").toString
+    val ibase = scratchDir("graft_compact_img").toString
     val iroot = s"$ibase/history"
     graft.Recovery.idempotentWrite(
       Media.imageSignatures(
@@ -791,7 +791,7 @@ class StreamsMediaSpec extends SparkSpec {
       == Seq(-1L))
     assert(ihist.count() == 2L && iScreen() == iBefore)
     // --- semantic root: cell-assigned embeddings, VERSION-stamped -----
-    val sbase = Files.createTempDirectory("graft_compact_sem").toString
+    val sbase = scratchDir("graft_compact_sem").toString
     val sroot = s"$sbase/history"
     val idxDir = s"$sbase/idx"
     Ivf.saveIndex(Seq((0, Array(1f, 0f)), (1, Array(0f, 1f)))
@@ -840,7 +840,7 @@ class StreamsMediaSpec extends SparkSpec {
   test("imageScreenStream: multi-batch perceptual ingest; replay == batch imageAgainstHistory") {
     import java.nio.file.Files
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_imgstream").toString
+    val base = scratchDir("graft_imgstream").toString
     val historyRoot = s"$base/history"
     // a near-copy construction with a PINNED small nonzero hamming
     // (corner-block edit — a uniform jitter moves no dHash bits)
@@ -902,7 +902,7 @@ class StreamsMediaSpec extends SparkSpec {
   test("audioScreenStream: re-gained recordings drop across batches, fresh survive") {
     import java.nio.file.Files
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_audstream").toString
+    val base = scratchDir("graft_audstream").toString
     val historyRoot = s"$base/history"
     graft.Recovery.idempotentWrite(
       Media.audioSignatures(
@@ -935,7 +935,7 @@ class StreamsMediaSpec extends SparkSpec {
   test("semanticScreenStream: cell-assigned embedding ingest over a fixed quantizer") {
     import java.nio.file.Files
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_semstream").toString
+    val base = scratchDir("graft_semstream").toString
     val historyRoot = s"$base/history"
     val idxDir = s"$base/idx"
     graft.llm.Ivf.saveIndex(
@@ -977,7 +977,7 @@ class StreamsMediaSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.llm.{Dedup, Ivf}
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_semver_stream").toString
+    val base = scratchDir("graft_semver_stream").toString
     val historyRoot = s"$base/history"
     val idxDir = s"$base/idx"
     Ivf.saveIndex(

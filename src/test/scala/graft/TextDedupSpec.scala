@@ -549,7 +549,7 @@ class TextDedupSpec extends SparkSpec {
     assert(near == Seq(12L, 13L))
     // the stored table survives a parquet round-trip (the artifact IS
     // meant to be persisted and appended across crawl batches)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_hist")
+    val dir = scratchDir("graft_mh_hist")
       .toString + "/sigs"
     sigs.write.parquet(dir)
     val reloaded = spark.read.parquet(dir)
@@ -726,7 +726,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("semantic history version handshake: stamped pass, stale/unstamped refuse, reassign restores the exact v2 screen") {
     import graft.llm.Ivf
-    val base = java.nio.file.Files.createTempDirectory("graft_semver").toString
+    val base = scratchDir("graft_semver").toString
     val idxDir = s"$base/idx"
     val histDir = s"$base/history"
     // v1 quantizer: two axis cells, published through the atomic commit
